@@ -70,11 +70,9 @@ _FAMILY_CACHES: list[dict] = []
 
 # Per-prefix seconds spent INSIDE `shared_artifact` builds (round 15,
 # VERDICT r14 item 3): the memoized build runs once per (application,
-# corpus) and min-of-N bench timing then reports serve-only numbers,
-# so the cold build cost would otherwise appear in no artifact. The
-# bench copies this map into BENCH_FULL.json ("artifact_builds") so
-# the headline's excluded cold cost is a number anyone can audit.
-# Accumulates across applications in one process; keyed by prefix.
+# corpus), so later calls time serve-only and the cold build cost is
+# recorded here (and printed to stderr) instead. Accumulates across
+# applications in one process; keyed by prefix.
 ARTIFACT_BUILD_SECONDS: dict[str, float] = {}
 
 

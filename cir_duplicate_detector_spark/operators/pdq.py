@@ -109,8 +109,8 @@ def decoded_hashes(
     The chunk decoder left-pads to exactly 64 hex chars, which silently
     LEFT-TRUNCATES anything longer, so callers that skipped the
     detection scan on the strength of the 256-bit PDQ contract
-    (``find_pdq_hash_duplicates``'s ``max_hex_len=64`` default,
-    VERDICT r12 item 2) fail loudly if the contract is violated.
+    (``find_pdq_hash_duplicates``'s ``max_hex_len=64`` default, and
+    ``get_pdq_fuzzy_duplicates``) fail loudly if the contract is violated.
     """
     exploded = exploded_hashes(df)
     if assert_max_hex is not None:
@@ -127,8 +127,9 @@ def decoded_hashes(
                         ),
                         F.col("hash"),
                         F.lit(
-                            "; pass max_hex_len explicitly (or None to"
-                            " auto-detect) for longer hashes"
+                            "; pass find_pdq_hash_duplicates a"
+                            " max_hex_len (or None to auto-detect) for"
+                            " longer hashes"
                         ),
                     )
                 )
@@ -416,7 +417,8 @@ def get_pdq_fuzzy_duplicates(
     ``[{'index', 'dist'}]`` lists per probed row. A distributed engine
     returns the same information as a pair DataFrame; self-pairs are
     excluded (the reference's caller strips them immediately,
-    ``pdq_hash.py:33-40``).
+    ``pdq_hash.py:33-40``). Hashes must be at most 64 hex chars (256
+    bits); a longer one raises at row time instead of being truncated.
     """
     _check_pdq_column_type(df)
     n_bits = calculate_absolute_threshold(
@@ -428,7 +430,7 @@ def get_pdq_fuzzy_duplicates(
             f"unknown duplicate_detection_method {duplicate_detection_method!r};"
             f" expected one of {sorted(_METHOD_ALIASES)}"
         )
-    corpus = decoded_hashes(df)
+    corpus = decoded_hashes(df, assert_max_hex=HASH_BITS // 4)
     if isinstance(indexes_to_check, DataFrame):
         probe = corpus.join(
             F.broadcast(probe_column_frame(indexes_to_check)), "index", "semi"

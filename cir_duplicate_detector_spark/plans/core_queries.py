@@ -98,7 +98,7 @@ _DUCK_PROBE = (
 
 # Driver-canonicalizable projections. The driver's value-hash
 # canonicalizer sorts a pandas frame and cannot factorize array cells
-# (CORRECTNESS_r01: `unhashable type: numpy.ndarray`), so registered
+# (round 1: `unhashable type: numpy.ndarray`), so registered
 # queries emit sorted '|'-joined strings; the public API functions keep
 # returning real arrays. Similarities are exact multiples of 1/256
 # (similarity_from_distance), so s*256 round-trips to the integer

@@ -610,7 +610,7 @@ def q_knn_ivf_pq_served32(spark, sf_dir):
     2,000 at the 100× replica), so its growth ratio measures probe
     volume; this row is the one whose growth curve IS the serving
     claim — measured ~flat across 100× corpus growth (3.66 → 3.18 →
-    5.21 s, BENCH_100X.json / SCALE.md round 13). Per-probe cost is
+    5.21 s, SCALE.md round 13). Per-probe cost is
     bounded by nprobe × cell size; the fixed panel makes the row's
     total likewise bounded."""
     from ..functions.text import hash60

@@ -72,7 +72,7 @@ def q_dedup_minhash(spark, sf_dir):
     snapshot and every consumer — this row AND `minhash_recall`'s
     found side — reads the stored pair table). The first consumer in
     an application pays the full build inside its own clock (the cold
-    cost is published in BENCH_FULL.json `artifact_builds`); columns
+    cost is recorded in `cache.ARTIFACT_BUILD_SECONDS`); columns
     (a, b, jaccard) are exact bigints + one correctly-rounded division
     of exact integers — parquet round-trips them bit-exactly, so
     serving from the artifact is value-identical to the inline
@@ -444,8 +444,8 @@ def _containment_screen(shingles, prebuilt: bool = False):
     # (+1e6/+2e6). Selected MODULO the 10^7 replica id-block (VERDICT
     # r11 item 5): scripts/replica_bench.py offsets copy i by i*10^7,
     # so a plain `doc_id >= 1e6` promoted ~90% of a 10x replica into
-    # the probe set (probe growth ~45x — the 48x BENCH_10X artifact);
-    # the mod keeps the ~2% rate at every scale. Identity below 10^7,
+    # the probe set (probe growth ~45x); the mod keeps the ~2% rate
+    # at every scale. Identity below 10^7,
     # where all provided testdata (and its derived bands) live.
     probes = shingles.where(
         (F.col("doc_id") % 50 == 0)

@@ -4,10 +4,7 @@ The per-family modules (``ext_dedup``, ``ext_ann``, ``ext_text``,
 ``ext_pipeline``, ``ext_events``, ``ext_multimodal``,
 ``ext_analytics``, shared helpers in ``ext_common``) each export a
 ``*_QUERIES`` dict; this module merges them into
-``EXTENSION_QUERIES`` preserving the pre-split registration order
-(the rotation key is computed from driver artifacts, so order only
-breaks ties — but keeping it stable keeps the rotation identical
-to round 9).
+``EXTENSION_QUERIES`` in family order.
 
 Floating-point discipline (everything here is checked by
 value-hash):
@@ -44,206 +41,13 @@ from . import (
     ext_analytics,
 )
 
-_MERGED_EXT: dict[str, tuple] = {}
-_MERGED_EXT.update(ext_dedup.DEDUP_QUERIES)
-_MERGED_EXT.update(ext_ann.ANN_QUERIES)
-_MERGED_EXT.update(ext_ann_recall.ANN_RECALL_QUERIES)
-_MERGED_EXT.update(ext_text.TEXT_QUERIES)
-_MERGED_EXT.update(ext_pipeline.PIPELINE_QUERIES)
-_MERGED_EXT.update(ext_events.EVENTS_QUERIES)
-_MERGED_EXT.update(ext_multimodal.MULTIMODAL_QUERIES)
-_MERGED_EXT.update(ext_analytics.ANALYTICS_QUERIES)
-
-# Pre-split registration order (round-9 registry, frozen).
-_ORDER = [
-    "corpus_bucketed_join",
-    "sentence_dedup",
-    "quality_classifier",
-    "quality_classifier_streaming",
-    "image_near_dup",
-    "lsh_index_merge",
-    "events_anomaly",
-    "sentence_screen",
-    "sentence_screen_streaming",
-    "decontamination_report",
-    "dedup_exact",
-    "dedup_exact_normalized",
-    "dedup_exact_streaming",
-    "url_domain_stats",
-    "doc_chunks",
-    "docs_jsonl_roundtrip",
-    "dedup_minhash",
-    "dup_clusters",
-    "cluster_representatives",
-    "dedup_ngram_jaccard",
-    "doc_topk_similar",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_containment",
-    "dedup_containment_canonical",
-    "knn_cosine_bruteforce",
-    "knn_cosine_lsh",
-    "knn_cosine_ivf",
-    "knn_cosine_ivf_learned",
-    "knn_pq_adc",
-    "knn_ivf_pq",
-    "knn_ivf_pq_refined",
-    "pq_recall",
-    "pq_recall_skewed",
-    "pq_recall_skewed_opq",
-    "ann_recall_lsh",
-    "embedding_near_dup",
-    "text_quality",
-    "token_count",
-    "lang_id",
-    "doc_fingerprint",
-    "substring_dup",
-    "corpus_curation",
-    "pii_redact",
-    "ngram_topk",
-    "stratified_sample",
-    "dedup_incremental",
-    "multimodal_features",
-    "multimodal_frames",
-    "multimodal_resize",
-    "multimodal_audio",
-    "multimodal_image_ahash",
-    "events_window",
-    "events_window_streaming",
-    "events_sessionize",
-    "events_sessionize_stateful",
-    "events_asof",
-    "events_json",
-    "events_funnel",
-    "tpch_q1",
-    "tpch_q3",
-    "tpch_q5",
-    "tpch_q5_skewed",
-    "tpch_q6",
-    "tpch_q18",
-    "tpch_q10",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q22_like",
-    "tpch_q4_like",
-    "tpch_q7_like",
-    "tpch_q8_like",
-    "tpch_q12_like",
-    "tpch_q17_like",
-    "tpch_q19_like",
-    "tpch_q21_like",
-    "tpch_q2_like",
-    "tpch_q9_like",
-    "tpch_q11_like",
-    "tpch_q15_like",
-    "tpch_q16_like",
-    "tpch_q20_like",
-    "events_distinct_users",
-    "events_distinct_users_streaming",
-    "events_quantiles",
-    "doc_repetition",
-    "pack_sequences",
-    "chunk_dedup",
-    "token_budget_sample",
-    "quality_band",
-    "decontaminate",
-    "decontaminate_fuzzy",
-    "decontaminate_fuzzy_canonical",
-    "fuzzy_decon_recall",
-    "decontaminate_semantic",
-    "semantic_decon_recall",
-    "boilerplate_removal",
-    "boilerplate_screen",
-    "boilerplate_screen_streaming",
-    "dsir_weights",
-    "dsir_score",
-    "dsir_score_streaming",
-    "curation_pipeline",
-    "semantic_dedup",
-    "distinct_kmv",
-    "bloom_dedup",
-    "bloom_dedup_streaming",
-    "dedup_lsh_screen",
-    "dedup_lsh_screen_streaming",
-    "lsh_index_roundtrip",
-    "dup_overlap",
-    "rollup_orders",
-    "corpus_stats_cube",
-    "window_topn",
-    "bigram_novelty",
-    "domain_mixture",
-    "shard_assign",
-    "events_attribution",
-    "events_attribution_streaming",
-    "cms_heavy_hitters",
-    "tfidf_topterms",
-    "bm25_search",
-    "bm25_route",
-    "bm25_route_streaming",
-    "bm25_index_roundtrip",
-    "decontaminate_scrub",
-    "decontaminate_scrub_streaming",
-    "events_quantiles_hist",
-    "events_dedup_watermarked",
-    "dataset_split",
-    "dup_weighting",
-    "docs_csv_roundtrip",
-    "docs_orc_roundtrip",
-    "kmeans_embeddings",
-    "kmeans_ivf_assign",
-    "semantic_recall_learned",
-    "semantic_dedup_learned",
-    "corpus_drift",
-    "events_rolling",
-    "corpus_upsert",
-    "events_retention",
-    "corpus_upsert_streaming",
-    "ivf_upsert_assign",
-    "ivf_upsert_assign_streaming",
-    "ivf_upsert_drift",
-    "ivf_index_roundtrip",
-    "pq_codes_upsert",
-    "pq_codes_upsert_streaming",
-    "minhash_recall",
-    "events_pivot",
-    "ann_recall_ivf",
-    # round-10 additions (brand-new queries lead the rotation as
-    # never-verified regardless of position here):
-    "events_anomaly_streaming",
-    "quality_classifier_learned",
-    "quality_classifier_learned_streaming",
-    "quality_classifier_agreement",
-    "image_near_dup_capped",
-    "bloom_index_roundtrip",
-    # round-11 additions:
-    "image_screen",
-    "image_screen_streaming",
-    "semantic_cells_roundtrip",
-    "decon_cells_roundtrip",
-    "hybrid_search",
-    "hybrid_search_served",
-    "hybrid_recall",
-    "hybrid_search_fresh",
-    "hybrid_fresh_recall",
-    "image_index_roundtrip",
-    "opq_balance",
-    "dup_labels_upsert",
-    "dup_labels_upsert_streaming",
-    "upsert_labels_agreement",
-    "dup_labels_compact",
-    "dup_labels_roundtrip",
-    # round-13 additions:
-    "opq_auto_gate",
-    "knn_ivf_pq_served32",
-    # round-14 additions:
-    "image_pdq_hashes",
-    "image_pdq_near_dup",
-]
-
-assert set(_ORDER) == set(_MERGED_EXT), (
-    sorted(set(_ORDER) ^ set(_MERGED_EXT))
-)
-
 EXTENSION_QUERIES: dict[str, tuple] = {
-    k: _MERGED_EXT[k] for k in _ORDER
+    **ext_dedup.DEDUP_QUERIES,
+    **ext_ann.ANN_QUERIES,
+    **ext_ann_recall.ANN_RECALL_QUERIES,
+    **ext_text.TEXT_QUERIES,
+    **ext_pipeline.PIPELINE_QUERIES,
+    **ext_events.EVENTS_QUERIES,
+    **ext_multimodal.MULTIMODAL_QUERIES,
+    **ext_analytics.ANALYTICS_QUERIES,
 }

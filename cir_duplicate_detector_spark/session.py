@@ -40,6 +40,14 @@ RECOMMENDED_CONFS: dict[str, str] = {
 }
 
 
+def default_driver_memory() -> str:
+    """Three quarters of physical RAM (in MiB, Spark size syntax): the
+    local driver heap default, leaving room for the JVM's off-heap
+    areas, the Python workers and the OS."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{ram * 3 // 4 >> 20}m"
+
+
 def get_spark(
     app_name: str = "cir-duplicate-detector-spark",
     master: str | None = None,
@@ -60,10 +68,13 @@ def get_spark(
         # local[N] runs the whole engine in the driver JVM; Spark's 1g
         # default heap gives 32 concurrent tasks ~13MB of execution
         # memory each — constant GC pressure and OOM on array-heavy
-        # operators. On a real cluster executor sizing replaces this.
+        # operators. The default is sized to this host's RAM;
+        # SPARK_GRAFT_DRIVER_MEM overrides it. On a real cluster
+        # executor sizing replaces this.
         builder = builder.config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or default_driver_memory(),
         )
         # Whole-stage codegen emits a fresh class per query stage; a
         # session that runs many distinct queries (the bench: 69) blows

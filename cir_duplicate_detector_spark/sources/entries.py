@@ -40,10 +40,9 @@ def _base_hash_sql(i: str) -> str:
     return f"md5(cast({i} as string)) || md5(cast({i} as string) || 'x')"
 
 
-def entries_sql(dialect: str, source: str = "documents") -> str:
-    """CTE body producing entries(index, url, pdq_hash) from ``source``
-    (default the `documents` view; any relation with a ``doc_id``
-    column works — the generator depends on doc_id alone).
+def entries_sql(dialect: str) -> str:
+    """CTE body producing entries(index, url, pdq_hash) from the
+    `documents` view (the generator depends on ``doc_id`` alone).
 
     ``dialect`` is 'spark' or 'duckdb'; the only differences are list
     syntax (array() vs []) — everything else is shared ANSI SQL.
@@ -81,7 +80,7 @@ def entries_sql(dialect: str, source: str = "documents") -> str:
              WHEN i % 31 = 4 AND i >= 4 THEN {_base_hash_sql('i - 4')}
              ELSE {_base_hash_sql('i')}
         END AS h
-      FROM (SELECT doc_id AS i FROM {source})
+      FROM (SELECT doc_id AS i FROM documents)
     )
     """
 
@@ -100,19 +99,3 @@ def derive_entries(documents: DataFrame) -> DataFrame:
     width = spark.sparkContext.defaultParallelism
     documents.createOrReplaceTempView("documents")
     return spark.sql(entries_sql("spark")).repartition(width)
-
-
-def synthetic_entries(spark, n_docs: int) -> DataFrame:
-    """Entries table synthesized over doc_ids ``0..n_docs-1`` — the same
-    deterministic generator as :func:`derive_entries`, but parameterized
-    by scale instead of bound to the testdata ``documents`` table.
-
-    Used by the bench's reference-scale point: the reference benchmark
-    corpus holds 30,225 PDQ hashes (BASELINE.md); with the generator's
-    hash yield of (1 - 1/29)·(1 + 1/7) ≈ 1.103 hashes/doc,
-    ``n_docs=27_400`` lands ≈30.2k hashes — a same-scale comparison
-    instead of an extrapolated one.
-    """
-    width = spark.sparkContext.defaultParallelism
-    src = f"(SELECT id AS doc_id FROM range({int(n_docs)}))"
-    return spark.sql(entries_sql("spark", source=src)).repartition(width)

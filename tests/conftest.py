@@ -77,6 +77,11 @@ GOLDEN_EXPECTED = {
 
 BACKENDS = ["naive", "banded", "bk-tree", "auto"]
 
+# Key of the sha256-chosen default samples in the three parity modules.
+# Frozen so each default run checks the same ~15 queries; the full
+# sweeps (PARITY_FULL=1, PARITY_10X_FULL=1) still cover every query.
+PARITY_SAMPLE_KEY = 16
+
 
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:

@@ -134,8 +134,8 @@ def test_shared_artifact_sweeps_all_family_caches(spark):
 def test_shared_artifact_records_build_seconds(spark):
     # Round 15 (VERDICT r14 item 3): every shared_artifact build is
     # timed into cache.ARTIFACT_BUILD_SECONDS (keyed by prefix,
-    # accumulating) so the bench can publish the cold-build cost the
-    # min-of-N rows exclude. Serves (memoized hits) add nothing.
+    # accumulating), recording the cold-build cost that memoized serves
+    # hide. Serves (memoized hits) add nothing.
     from cir_duplicate_detector_spark import cache
 
     fam: dict = {}

@@ -5,21 +5,16 @@ parquet tables, then compares row counts and order-insensitive values —
 the same comparison shape the driver performs (row-count + schema +
 value-hash).
 
-Default profile vs full sweep (round 15 — VERDICT r14 item 2): the
-full 190-query sweep takes ~50 min and pushed ``pytest tests/`` past
-the driver's verify window (VERIFY_r14 ``tests_ok: false`` — the run
-was TRUNCATED mid-suite, not failing). The default run now checks a
-ROTATING ~15-query sample (chosen by ``sha256("parity:{round}:{name}")``
-— the `test_parity_sf01` rotation pattern, salted differently so the
-two samples cover different rows each round; every query is eventually
-re-proven as rounds advance), and the full sweep stays one env flag
-away:
+Default profile vs full sweep: the full 190-query sweep takes ~50 min,
+so the default run checks a fixed ~15-query sample (chosen by
+``sha256("parity:{PARITY_SAMPLE_KEY}:{name}")`` — the `test_parity_sf01`
+pattern, salted differently so the two samples cover different rows),
+and the full sweep stays one env flag away:
 
     PARITY_FULL=1 python -m pytest tests/test_oracle_parity.py -q
 
-The builder runs the full sweep (or the touched-family subset) after
-any query-affecting edit; the driver's default run keeps a live
-15-query gate instead of a truncated 190-query one.
+Run the full sweep (or the touched-family subset) after any
+query-affecting edit.
 
 Dtype-sensitive by design (VERDICT r3): the driver hashes a *pandas*
 frame of the oracle result, and duckdb→pandas widens HUGEINT (the result
@@ -43,6 +38,8 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
+
+from .conftest import PARITY_SAMPLE_KEY
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 
@@ -94,7 +91,7 @@ def _canon_cell(v):
         return ("s", v)
     if isinstance(v, (list, tuple, np.ndarray)):
         # The driver's canonicalizer sorts a pandas frame and cannot
-        # factorize array cells (CORRECTNESS_r01: unhashable
+        # factorize array cells (round 1: unhashable
         # numpy.ndarray) — registered queries must emit flat scalars.
         raise AssertionError(
             "array-typed result cell reached the parity gate; registered "
@@ -116,23 +113,15 @@ def _canon_rows(rows, colnames):
 
 
 def _rotating_parity_sample(size: int = 15) -> "list[str]":
-    """The default profile's rotating sample: `test_parity_sf01`'s
-    round-keyed sha256 rotation, salted with ``"parity:"`` so this
-    sample and the sf0.1 sample land on different queries in the same
-    round (more distinct rows re-proven per round)."""
+    """The default profile's sample: `test_parity_sf01`'s sha256 pick,
+    salted with ``"parity:"`` so this sample and the sf0.1 sample land
+    on different queries."""
     import hashlib
-    from pathlib import Path
 
-    from cir_duplicate_detector_spark import plans
-
-    rnd = (
-        plans._latest_tracked_round(Path(__file__).resolve().parents[1])
-        or 0
-    ) + 1
     return sorted(
         sorted(entry_mod.queries()),
         key=lambda n: hashlib.sha256(
-            f"parity:{rnd}:{n}".encode()
+            f"parity:{PARITY_SAMPLE_KEY}:{n}".encode()
         ).hexdigest(),
     )[:size]
 

@@ -2,9 +2,9 @@
 r11 item 6).
 
 Determinism is proven at sf0.001/sf0.01 every round (the local parity
-suite + the driver gate) and at sf0.1 by the rotating `PARITY_SF01`
-sample — but BENCH_10X's growth numbers run at a scale parity never
-touched. This module closes that gap: a ROTATING ~15-query sample of
+suite + the driver gate) and at sf0.1 by the `PARITY_SF01` sample —
+but not at the 10x replica. This module closes that gap: a fixed
+~15-query sample of
 the exact parity comparison runs against the 10x synthetic replica
 (`scripts/replica_bench.build_replica` — documents/embeddings/events
 replicated with per-copy id offsets; document copies per-copy
@@ -17,9 +17,8 @@ Sample universe: queries over the REPLICATED tables only, minus the
 vector-chain families whose DuckDB oracles are corpus x centroid
 cross joins (sqrt-N-scaled k means ~600k x ~775 x 64d at 10x — hours
 in a single-threaded oracle, and the point of the oracle is value
-checking, not oracle-side scale). Those families' 10x behavior is
-covered by BENCH_10X growth rows + their recall diagnostics; the
-exclusion is named here so the judge sees which. Everything else —
+checking, not oracle-side scale). Those families are covered by their
+recall diagnostics; the exclusion is named here. Everything else —
 the dedup/text/events families whose banded/bucketed joins are the
 engine's scale story — is eligible.
 
@@ -42,8 +41,8 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
-from cir_duplicate_detector_spark import plans
 
+from .conftest import PARITY_SAMPLE_KEY
 from .test_oracle_parity import TABLES, _canon_rows
 
 REPO = Path(__file__).resolve().parents[1]
@@ -54,7 +53,7 @@ SAMPLE_SIZE = 15
 
 # Vector-chain families: oracle cost is corpus x sqrt(N) centroids (or
 # corpus x corpus brute force) — DuckDB-side infeasible at 10x. Their
-# scale behavior is covered by BENCH_10X + recall rows instead.
+# recall rows cover them instead.
 _EXCLUDED_PREFIXES = (
     "knn_",
     "pq_",
@@ -115,13 +114,14 @@ def _eligible() -> list[str]:
 def _rotating_sample() -> list[str]:
     # PARITY_10X_FULL=1 runs the WHOLE eligible set — the one-time
     # full sweep (round 14, VERDICT r13 item 4); default stays the
-    # rotating 15-sample for per-round regression duty.
+    # fixed 15-sample for regression duty.
     if os.environ.get("PARITY_10X_FULL") == "1":
         return _eligible()
-    rnd = (plans._latest_tracked_round(REPO) or 0) + 1
     return sorted(
         _eligible(),
-        key=lambda n: hashlib.sha256(f"10x:{rnd}:{n}".encode()).hexdigest(),
+        key=lambda n: hashlib.sha256(
+            f"10x:{PARITY_SAMPLE_KEY}:{n}".encode()
+        ).hexdigest(),
     )[:SAMPLE_SIZE]
 
 

@@ -4,11 +4,9 @@ The determinism engineering (DECIMAL sums, fixed-order double folds —
 SCALE.md "floating-point discipline") is routinely *proven* only at
 sf0.001 (the local parity suite) and at the driver's own scale; a
 partitioning-dependent nondeterminism that only appears with more
-data/partitions would otherwise first surface when the driver window
-rotates onto it. This module re-runs a ROTATING ~15-query sample of
-the exact parity comparison at sf0.1: the sample is chosen by
-``sha256(f"{round}:{name}")`` so it changes every round and every
-query is eventually re-proven at the larger scale.
+data/partitions would otherwise go unseen. This module re-runs a fixed
+~15-query sample of the exact parity comparison at sf0.1, chosen by
+``sha256(f"{PARITY_SAMPLE_KEY}:{name}")``.
 
 Opt-in (minutes, DuckDB runs the oracles at sf0.1 too):
 
@@ -21,14 +19,13 @@ from __future__ import annotations
 
 import hashlib
 import os
-from pathlib import Path
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
-from cir_duplicate_detector_spark import plans
 
+from .conftest import PARITY_SAMPLE_KEY
 from .test_oracle_parity import TABLES, _canon_rows
 
 SF01 = "/root/testdata/sf0.1"
@@ -41,15 +38,13 @@ pytestmark = pytest.mark.skipif(
 
 
 def _rotating_sample() -> list[str]:
-    rnd = (
-        plans._latest_tracked_round(Path(__file__).resolve().parents[1])
-        or 0
-    ) + 1
     oracles = entry_mod.oracle_sql()
     named = sorted(n for n in entry_mod.queries() if n in oracles)
     return sorted(
         named,
-        key=lambda n: hashlib.sha256(f"{rnd}:{n}".encode()).hexdigest(),
+        key=lambda n: hashlib.sha256(
+            f"{PARITY_SAMPLE_KEY}:{n}".encode()
+        ).hexdigest(),
     )[:SAMPLE_SIZE]
 
 

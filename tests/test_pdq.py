@@ -9,6 +9,7 @@ import pytest
 from cir_duplicate_detector_spark.operators.pdq import (
     exploded_hashes,
     find_pdq_hash_duplicates,
+    get_pdq_fuzzy_duplicates,
 )
 
 from .conftest import BACKENDS, rows_by_index
@@ -145,11 +146,17 @@ def test_longer_hash_than_256_bits(spark):
     assert out["A"]["pdq_hash_similarities"] == [1.0 - 1 / 256]
 
 
-def test_longer_hash_raises_loudly_under_default(spark):
-    # The max_hex_len=64 default skips the detection scan on the
-    # strength of the 256-bit PDQ contract; a contract-violating longer
-    # hash must FAIL AT ROW TIME (decoded_hashes' length guard), never
-    # silently left-truncate through the chunk decoder's lpad.
+@pytest.mark.parametrize(
+    "detector",
+    [find_pdq_hash_duplicates, get_pdq_fuzzy_duplicates],
+    ids=lambda f: f.__name__,
+)
+def test_longer_hash_raises_loudly_under_default(spark, detector):
+    # The max_hex_len=64 default (and get_pdq_fuzzy_duplicates, which
+    # has no length option) skips the detection scan on the strength of
+    # the 256-bit PDQ contract; a contract-violating longer hash must
+    # FAIL AT ROW TIME (decoded_hashes' length guard), never silently
+    # left-truncate through the chunk decoder's lpad.
     import pytest
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import SparkRuntimeException
@@ -159,9 +166,7 @@ def test_longer_hash_raises_loudly_under_default(spark):
         "index string, pdq_hash array<string>",
     )
     with pytest.raises((SparkRuntimeException, Py4JJavaError)) as exc:
-        find_pdq_hash_duplicates(
-            df, pqd_hash_similarity_threshold=0.99
-        ).collect()
+        detector(df, pqd_hash_similarity_threshold=0.99).collect()
     assert "max_hex_len" in str(exc.value)
 
 
