@@ -9,16 +9,17 @@ similarity threshold — plus the large-scale training-data-pipeline
 extensions (dedup, similarity search, text analysis, multimodal columns)
 the reference does not have.
 
-Everything is lazy DataFrame transforms; the only eager steps are the
-optional input validations (`validate=True`), mirroring the reference's
-eager ValueError behavior.
+Each detector call is one lazy SQL statement (``operators/statement.py``);
+the only eager steps are the optional input validation (`validate=True`),
+mirroring the reference's eager ValueError behavior, and the documented
+auto-tuning scans.
 """
 
 from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .functions.hashes import (
     calculate_absolute_threshold,
@@ -42,11 +43,15 @@ from .operators import (  # noqa: F401 — public extension namespaces
     textops,
 )
 from .operators.pdq import (
+    add_pdq_duplicates,
     drop_literal_series_duplicates,
     find_pdq_hash_duplicates,
     get_pdq_fuzzy_duplicates,
+    resolve_plan,
 )
-from .operators.url_dedup import find_url_duplicates
+from .operators.probes import Probe
+from .operators.statement import Statement
+from .operators.url_dedup import add_url_groups, find_url_duplicates
 
 __version__ = "0.1.0"
 
@@ -102,18 +107,24 @@ def detect_duplicates(
     reference's ``pqd_`` misspelling) and defaults (t=0.8, "naive")
     replicate the reference API (SURVEY §2.6).
 
-    ``validate=True`` runs two eager guard jobs (index uniqueness,
-    emptiness) like the reference's ValueErrors/warnings; pass ``False``
-    to keep the plan fully lazy on very large inputs.
+    ``validate=True`` runs one eager guard action (a fused index-uniqueness
+    and emptiness aggregate) with the reference's ValueError/warning;
+    pass ``False`` to keep the plan fully lazy on very large inputs.
 
-    ``indexes_to_check`` may be a list (plan literal — the reference
-    shape, for small probe sets) or a DataFrame (broadcast semi-join —
-    for probe sets that are query outputs; no driver round-trip).
+    ``indexes_to_check`` may be a list (one bound array parameter — the
+    reference shape, for small probe sets) or a DataFrame (broadcast
+    semi-join — for probe sets that are query outputs; no driver
+    round-trip).
 
     ``max_hex_len`` defaults to ``64`` (standard 256-bit PDQ hashes) so
     no hash-length detection scan runs; longer hashes raise at row time
     under the default — pass their length, or ``None`` to auto-detect
     (see :func:`operators.pdq.find_pdq_hash_duplicates`).
+
+    The url and pdq layers compose into ONE SQL statement: the two
+    results meet in a full outer join on ``index`` (both emit at most
+    one row per index under the uniqueness the guard enforces), and a
+    DataFrame probe set is evaluated once for both layers.
     """
     cols = df.columns
     has_url = "url" in cols
@@ -125,39 +136,41 @@ def detect_duplicates(
     if "index" not in cols:
         raise ValueError("dataframe needs an `index` column (unique entry id)")
 
-    # D2 projection — explicit, though Catalyst column pruning would
-    # reach the scan anyway.
-    keep = ["index"] + [c for c in ("url", "pdq_hash") if c in cols]
-    work = df.select(*keep)
-
     if validate:
-        dup_keys = work.groupBy("index").count().where(F.col("count") > 1)
-        if not dup_keys.isEmpty():
+        top = Statement(views={"work": df}).run(_GUARD).head(1)
+        if top and top[0]["c"] > 1:
             raise ValueError("`index` values must be unique")
-        if work.isEmpty():
+        if not top:
             warnings.warn("input dataframe is empty; returning empty result")
 
-    out = work.select("index")
-    result_cols: list[str] = []
+    probe = Probe(indexes_to_check)
+    stmt = probe.statement(df)
     if has_url:
-        url_dups = find_url_duplicates(work, indexes_to_check)
-        out = out.join(url_dups, "index", "left")
-        result_cols.append("url_duplicates")
+        add_url_groups(stmt, probe)
     if has_pdq:
-        pdq_dups = find_pdq_hash_duplicates(
-            work,
-            indexes_to_check,
+        plan = resolve_plan(
+            df,
+            probe,
             pqd_hash_similarity_threshold,
             pdq_duplicate_detection_method,
-            max_hex_len=max_hex_len,
+            max_hex_len,
+            "detect_duplicates",
         )
-        out = out.join(pdq_dups, "index", "left")
-        result_cols += ["pdq_hash_duplicates", "pdq_hash_similarities"]
+        add_pdq_duplicates(stmt, probe, plan)
+    if has_url and has_pdq:
+        return stmt.run(
+            "SELECT coalesce(u.index, p.index) AS index, u.url_duplicates,"
+            " p.pdq_hash_duplicates, p.pdq_hash_similarities"
+            " FROM url_result u FULL OUTER JOIN pdq_result p ON u.index = p.index"
+        )
+    if has_url:
+        return stmt.run("SELECT index, url_duplicates FROM url_result")
+    return stmt.run("SELECT * FROM pdq_result")
 
-    # D6: keep rows with at least one non-null result column.
-    keep_pred = None
-    for c in ("url_duplicates", "pdq_hash_duplicates"):
-        if c in out.columns:
-            p = F.col(c).isNotNull()
-            keep_pred = p if keep_pred is None else (keep_pred | p)
-    return out.where(keep_pred).select("index", *result_cols)
+
+# The fused guard, one action: the largest row count under one index
+# (uniqueness; NULL counts as one key, like a groupBy), or no row at all
+# for an empty input. ORDER BY ... LIMIT 1 takes the top row of each
+# aggregated partition and merges them on the driver, so the action
+# runs two jobs (the aggregation's map stage and the result stage).
+_GUARD = "SELECT count(1) AS c FROM {work} GROUP BY index ORDER BY c DESC LIMIT 1"

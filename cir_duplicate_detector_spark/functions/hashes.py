@@ -69,9 +69,15 @@ def chunks_hamming(a: Column, b: Column) -> Column:
 
 NUM_CHUNKS64 = 4  # hot-path representation: 4 flat 64-bit columns
 
+# The ``*_sql`` functions below return Spark SQL text over the SQL
+# expression ``expr``: the duplicate detector builds each call as one SQL
+# statement (``operators/statement.py``), so its kernels are text. The
+# property tests check them against the same reference models as the
+# Column kernels.
 
-def hex_to_chunks64(hex_col: Column | str) -> list[Column]:
-    """Decode a 64-hex hash into FOUR flat signed-64-bit columns.
+
+def hex_to_chunks64_sql(expr: str) -> list[str]:
+    """SQL text decoding a 64-hex hash into FOUR flat signed-64-bit values.
 
     The hot-path representation: flat bigint columns keep the Hamming
     predicate entirely in whole-stage codegen with zero per-row array
@@ -81,28 +87,40 @@ def hex_to_chunks64(hex_col: Column | str) -> list[Column]:
     halves with a bit shift (shift/or are pure bit ops — no ANSI
     overflow).
     """
-    col = F.col(hex_col) if isinstance(hex_col, str) else hex_col
-    padded = F.lpad(F.lower(col), 64, "0")
-    out = []
-    for i in range(NUM_CHUNKS64):
-        hi = F.conv(F.substring(padded, i * 16 + 1, 8), 16, 10).cast("long")
-        lo = F.conv(F.substring(padded, i * 16 + 9, 8), 16, 10).cast("long")
-        out.append(F.shiftleft(hi, 32).bitwiseOR(lo))
-    return out
+    padded = f"lpad(lower({expr}), 64, '0')"
+
+    def half(start: int) -> str:
+        return f"CAST(conv(substring({padded}, {start}, 8), 16, 10) AS BIGINT)"
+
+    return [
+        f"(shiftleft({half(i * 16 + 1)}, 32) | {half(i * 16 + 9)})"
+        for i in range(NUM_CHUNKS64)
+    ]
 
 
-def hamming64(left_prefix: str, right_prefix: str) -> Column:
-    """Hamming distance over two sets of flat 64-bit chunk columns
-    (named ``{prefix}0..{prefix}3``) — a single codegen'd expression of
-    xor/bit_count/add, no arrays, no UDF.
-    """
-    total = None
-    for i in range(NUM_CHUNKS64):
-        term = F.bit_count(
-            F.col(f"{left_prefix}{i}").bitwiseXOR(F.col(f"{right_prefix}{i}"))
-        )
-        total = term if total is None else total + term
-    return total
+def hex_to_bits_sql(expr: str) -> str:
+    """SQL text of :func:`hex_to_bits`."""
+    n_chunks = (
+        f"CAST(floor(CAST(length(lower({expr})) + {CHUNK_HEX - 1} AS INT)"
+        f" / {CHUNK_HEX}) AS INT)"
+    )
+    padded = f"lpad(lower({expr}), {n_chunks} * {CHUNK_HEX}, '0')"
+    raw = (
+        f"array_join(transform(sequence(0, {n_chunks} - 1), i -> lpad(bin("
+        f"CAST(conv(substring({padded}, i * {CHUNK_HEX} + 1, {CHUNK_HEX}), 16, 10)"
+        f" AS BIGINT)), 32, '0')), '')"
+    )
+    stripped = f"regexp_replace({raw}, '^0+', '')"
+    return f"lpad({stripped}, greatest(length({stripped}), {HASH_BITS}), '0')"
+
+
+def bits_hamming_sql(a: str, b: str) -> str:
+    """SQL text of :func:`bits_hamming`."""
+    return (
+        f"aggregate(zip_with(split({a}, ''), split({b}, ''), (x, y) -> "
+        "CASE WHEN x IS NULL OR y IS NULL THEN 1 WHEN x != y THEN 1 ELSE 0 END),"
+        " 0, (acc, v) -> acc + v)"
+    )
 
 
 def hex_to_bits(hex_col: Column | str) -> Column:
@@ -182,11 +200,3 @@ def hamming_distance(item1: str, item2: str) -> int:
     """
     mismatches = sum(a != b for a, b in zip(item1, item2))
     return mismatches + abs(len(item1) - len(item2))
-
-
-def similarity_from_distance(dist: Column) -> Column:
-    """``1 - dist/256`` — always normalized by 256 regardless of hash
-    length (reference ``pdq_hash.py:45``, ``utils.py:16``). Exact in
-    binary floating point (256 = 2^8), so engine and oracle agree bitwise.
-    """
-    return F.lit(1.0) - dist.cast("double") / F.lit(256.0)

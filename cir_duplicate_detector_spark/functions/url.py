@@ -89,3 +89,25 @@ def normalize_url_sql(expr: str) -> str:
     out = f"regexp_replace({out}, '^([^?]*);\\?', '\\1?')"
     out = f"regexp_replace({out}, '^([^?]*);$', '\\1')"
     return f"regexp_replace({out}, '^([^?]*)\\?$', '\\1')"
+
+
+def _spark_sql_string(s: str) -> str:
+    """A Spark SQL string literal of ``s`` (backslash-escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def normalize_url_spark_sql(expr: str) -> str:
+    """Spark SQL text of :func:`normalize_url` over the SQL expression
+    ``expr`` (the operators build each call as one SQL statement)."""
+    out = (
+        f"regexp_replace(regexp_replace(lower({expr}), "
+        f"{_spark_sql_string(SCHEME_PATTERN)}, ''), "
+        f"{_spark_sql_string(FRAGMENT_PATTERN)}, '')"
+    )
+    for pattern, repl in (
+        (EMPTY_PARAMS_BEFORE_QUERY, "$1?"),
+        (EMPTY_PARAMS_AT_END, "$1"),
+        (EMPTY_QUERY_AT_END, "$1"),
+    ):
+        out = f"regexp_replace({out}, {_spark_sql_string(pattern)}, '{repl}')"
+    return out

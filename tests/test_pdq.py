@@ -186,3 +186,45 @@ def test_longer_hash_mixed_lengths_excess_counts(spark):
         df, pqd_hash_similarity_threshold=0.99, max_hex_len=None
     ).collect()
     assert out == []
+
+
+def _uses_bands(df) -> bool:
+    return "posexplode" in df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize(
+    "detector",
+    [find_pdq_hash_duplicates, get_pdq_fuzzy_duplicates],
+    ids=lambda f: f.__name__,
+)
+def test_auto_method_checks_band_selectivity(golden_df, detector):
+    # One dispatcher serves both functions: "auto" takes the banded join
+    # only where a band layout is selective. At t=0.8 (n=51) the only
+    # covering layout is 64 bands of one hex char — 16 values per band,
+    # every pair a candidate — so auto must scan naively; at t=0.98
+    # (n=5, 8 bands of 8 hex) it bands.
+    wide = detector(
+        golden_df,
+        pqd_hash_similarity_threshold=0.8,
+        duplicate_detection_method="auto",
+    )
+    assert not _uses_bands(wide)
+    tight = detector(
+        golden_df,
+        pqd_hash_similarity_threshold=0.98,
+        duplicate_detection_method="auto",
+    )
+    assert _uses_bands(tight)
+
+
+def test_fuzzy_pairs_empty_probe_list_warns(golden_df):
+    # Same contract as find_pdq_hash_duplicates: an empty list warns and
+    # returns no pairs.
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        out = get_pdq_fuzzy_duplicates(
+            golden_df, pqd_hash_similarity_threshold=0.9, indexes_to_check=[]
+        )
+        assert out.count() == 0
+    assert any("empty" in str(x.message) for x in w)
+    assert out.columns == ["index", "dup", "dist"]

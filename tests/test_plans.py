@@ -55,11 +55,12 @@ def test_pdq_naive_self_join_never_broadcasts_corpus(spark):
 def test_grid_join_covers_all_pairs(spark):
     from pyspark.sql import functions as F
 
-    from cir_duplicate_detector_spark.operators.pdq import _grid_joined
+    from cir_duplicate_detector_spark.operators.pdq import _grid_sql
 
     p = spark.range(37).select(F.col("id").cast("string").alias("p_index"))
     c = spark.range(41).select(F.col("id").cast("string").alias("c_index"))
-    got = _grid_joined(p, c, 4)
+    grid = _grid_sql("SELECT * FROM {p}", "SELECT * FROM {c}", 4, 8)
+    got = spark.sql(f"SELECT p_index, c_index FROM ({grid})", p=p, c=c)
     # Every (probe, corpus) pair exactly once — the BNL contract.
     assert got.count() == 37 * 41
     assert got.distinct().count() == 37 * 41

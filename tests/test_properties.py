@@ -14,15 +14,22 @@ from urllib.parse import urlparse
 import pytest
 from hypothesis import given, settings, strategies as st
 
+from pyspark.sql import functions as F
+
 from cir_duplicate_detector_spark.functions.hashes import (
     bits_hamming,
+    bits_hamming_sql,
     calculate_absolute_threshold,
     chunks_hamming,
     hex_to_bits,
+    hex_to_bits_sql,
     hex_to_chunks,
-    hex_to_chunks64,
+    hex_to_chunks64_sql,
 )
-from cir_duplicate_detector_spark.functions.url import normalize_url
+from cir_duplicate_detector_spark.functions.url import (
+    normalize_url,
+    normalize_url_spark_sql,
+)
 
 HEX = "0123456789abcdef"
 
@@ -104,10 +111,10 @@ def test_hex_to_chunks_reassembles_to_int(spark, hashes):
 @given(st.lists(hex_hash_256, min_size=1, max_size=32))
 def test_chunks64_equals_chunks32_value(spark, hashes):
     df = spark.createDataFrame([(v,) for v in hashes], "a string")
-    cols64 = hex_to_chunks64("a")
+    cols64 = hex_to_chunks64_sql("a")
     rows = df.select(
         hex_to_chunks("a").alias("c32"),
-        *[c.alias(f"h{i}") for i, c in enumerate(cols64)],
+        *[F.expr(c).alias(f"h{i}") for i, c in enumerate(cols64)],
     ).collect()
     for h, r in zip(hashes, rows):
         v32 = 0
@@ -140,9 +147,11 @@ def test_chunks_hamming_matches_popcount(spark, pairs):
 @SETTINGS
 @given(st.lists(hex_hash_long, min_size=1, max_size=32))
 def test_hex_to_bits_matches_reference_zfill(spark, hashes):
-    got = _run_batch(spark, hashes, hex_to_bits("a").alias("b"))
-    for h, bits in zip(hashes, got):
-        assert bits == model_hex_to_binary(h), h
+    # The Column kernel and its SQL text twin, against one model.
+    for expr in (hex_to_bits("a"), F.expr(hex_to_bits_sql("a"))):
+        got = _run_batch(spark, hashes, expr.alias("b"))
+        for h, bits in zip(hashes, got):
+            assert bits == model_hex_to_binary(h), h
 
 
 @SETTINGS
@@ -151,23 +160,25 @@ def test_hex_to_bits_matches_reference_zfill(spark, hashes):
 )
 def test_bits_hamming_matches_reference_padding(spark, pairs):
     df = spark.createDataFrame(list(pairs), "a string, b string")
-    got = [
-        r[0]
-        for r in df.select(
-            bits_hamming(hex_to_bits("a"), hex_to_bits("b")).alias("d")
-        ).collect()
-    ]
-    for (a, b), d in zip(pairs, got):
+    rows = df.select(
+        bits_hamming(hex_to_bits("a"), hex_to_bits("b")).alias("d"),
+        F.expr(
+            bits_hamming_sql(hex_to_bits_sql("a"), hex_to_bits_sql("b"))
+        ).alias("d_sql"),
+    ).collect()
+    for (a, b), r in zip(pairs, rows):
         want = model_hamming(model_hex_to_binary(a), model_hex_to_binary(b))
-        assert d == want, (a, b)
+        assert r["d"] == r["d_sql"] == want, (a, b)
 
 
 @SETTINGS
 @given(st.lists(urls, min_size=1, max_size=32))
 def test_normalize_url_matches_urlparse_model(spark, batch):
-    got = _run_batch(spark, batch, normalize_url("a").alias("u"))
-    for u, norm in zip(batch, got):
-        assert norm == model_extract_base_url(u), u
+    # The Column kernel and its SQL text twin, against one model.
+    for expr in (normalize_url("a"), F.expr(normalize_url_spark_sql("a"))):
+        got = _run_batch(spark, batch, expr.alias("u"))
+        for u, norm in zip(batch, got):
+            assert norm == model_extract_base_url(u), u
 
 
 @given(st.floats(min_value=0.0, max_value=1.0, allow_nan=False))
