@@ -7,7 +7,9 @@ table with (a) other entries whose normalized URL is identical and
 (b) other entries whose 256-bit PDQ perceptual hash is within a Hamming
 similarity threshold — plus the large-scale training-data-pipeline
 extensions (dedup, similarity search, text analysis, multimodal columns)
-the reference does not have.
+the reference does not have. The extension modules live under
+``cir_duplicate_detector_spark.operators`` and are imported on demand;
+importing the package loads only the detector.
 
 Each detector call is one lazy SQL statement (``operators/statement.py``);
 the only eager steps are the optional input validation (`validate=True`),
@@ -32,16 +34,6 @@ from .functions.hashes import (
 from .cache import materialize, release_cached
 from .compat import PDQHashTree, run_in_parallel
 from .functions.url import extract_base_url, normalize_url, url_domain
-from .operators import (  # noqa: F401 — public extension namespaces
-    dedup,
-    events,
-    multimodal,
-    pq,
-    similarity,
-    sketches,
-    skew,
-    textops,
-)
 from .operators.pdq import (
     add_pdq_duplicates,
     drop_literal_series_duplicates,
@@ -73,15 +65,6 @@ __all__ = [
     # reference execution-harness shims (raise with guidance)
     "PDQHashTree",
     "run_in_parallel",
-    # extension operator namespaces
-    "dedup",
-    "similarity",
-    "pq",
-    "sketches",
-    "textops",
-    "events",
-    "multimodal",
-    "skew",
     # lifetime control + crawl helpers
     "materialize",
     "release_cached",

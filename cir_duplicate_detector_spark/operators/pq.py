@@ -81,13 +81,6 @@ PQ_CODEWORDS = 256
 IVFPQ_M = 16
 IVFPQ_SUBDIM = 4
 IVFPQ_NPROBE = 16
-# `build_ivf_pq_index(opq="auto")` gate: permute iff the sample's
-# identity-layout max/min subspace energy ratio exceeds this. The
-# provided testdata measures ~1 (isotropic — `opq_balance`); the A/B
-# skewed corpus (dims 0-3 ×8) measures ≫ 4; 4× is the documented
-# middle ground where one subspace carrying 4× the energy of another
-# starts costing measurable ADC recall (the A/B row: 0.550 → 0.725).
-OPQ_AUTO_RATIO = 4.0
 
 
 def _sub(col, m: int, subdim: int = PQ_SUBDIM) -> Column:
@@ -660,19 +653,6 @@ class IvfPqIndex(NamedTuple):
     codes: DataFrame  # (vec_id, ca) — PACKED M-slot code array per vec
     m: int
     subdim: int
-    # OPQ-lite dimension permutation the index was built under, or None
-    # (the shipped isotropic config). A one-row (perm: array<bigint>)
-    # broadcastable frame; when present, probe vectors and upsert waves
-    # permute through it identically (`knn_ivf_pq_from_index`,
-    # `ivf_pq_upsert`) — exact refine stays in the ORIGINAL space (true
-    # L2 is permutation-invariant), so carrying the permutation inside
-    # the index never leaks into caller-visible vector layouts.
-    perm: "DataFrame | None" = None
-    # Full OPQ rotation (round 13 stretch): a one-row
-    # (rot: array<array<double>>) frame, same carry discipline as perm
-    # (probes/upserts project through it; refine stays original-space —
-    # orthogonal rotations preserve L2). Mutually exclusive with perm.
-    rot: "DataFrame | None" = None
 
 
 def build_ivf_pq_index(
@@ -686,7 +666,6 @@ def build_ivf_pq_index(
     sample_mod: int | None = None,
     cb_train_mod: int | None = None,
     coarse_cents: "DataFrame | None" = None,
-    opq: str = "never",
 ) -> IvfPqIndex:
     """Index-build phase of :func:`knn_ivf_pq` (see its docstring for
     the full recipe): learn the coarse quantizer, assign cells, form
@@ -700,26 +679,7 @@ def build_ivf_pq_index(
     round-trip exactly, so cells/residuals/codes are identical.
     Combining ``coarse_cents`` with explicit coarse-learn parameters is
     an error (ADVICE r11): the prebuilt table wins and the parameters
-    would be silently ignored, so the conflict raises instead. With
-    ``opq`` enabled, ``coarse_cents`` must be in the ORIGINAL layout;
-    the build projects it through the learned permutation/rotation
-    (round 14 — both transforms preserve L2, so the projected table
-    quantizes the transformed corpus identically).
-
-    ``opq`` (round 13, VERDICT r12 item 5): ``"never"`` (default — the
-    shipped config, measured correct for this corpus by `opq_balance`),
-    ``"always"`` (unconditionally learn and apply the OPQ-lite balanced
-    permutation, `operators.opq`), or ``"auto"`` — measure the sample's
-    identity-layout subspace energy imbalance
-    (`opq.opq_subspace_imbalance`, one small eager aggregate over the
-    ``vec_id % sample_mod`` sample — the same eager-gate posture as
-    `find_pdq_hash_duplicates`'s method="auto") and permute iff
-    ``max/min > OPQ_AUTO_RATIO``. The decision the recall sweeps
-    hand-encoded (`pq_recall_skewed` vs `_opq`) becomes measured code:
-    isotropic corpora build identically to ``"never"``, skew-regressed
-    corpora identically to ``"always"``. The applied permutation rides
-    IN the index (``IvfPqIndex.perm``), so probes and upsert waves
-    permute consistently and persist/read round-trips it."""
+    would be silently ignored, so the conflict raises instead."""
     if coarse_cents is not None and (
         coarse_k is not None
         or coarse_iters is not None
@@ -730,20 +690,6 @@ def build_ivf_pq_index(
             "coarse quantizer; coarse_k/coarse_iters/sample_mod would "
             "be ignored — pass one or the other"
         )
-    if opq not in ("never", "auto", "always", "rotate"):
-        raise ValueError(
-            "build_ivf_pq_index: opq must be "
-            f"'never'/'auto'/'always'/'rotate', got {opq!r}"
-        )
-    # coarse_cents + opq is supported (round 14, VERDICT r13 item 7):
-    # the provided centroids must be in the ORIGINAL dimension layout
-    # and are projected through whatever transform the build learns
-    # (permutations reorder coordinates; rotations are orthogonal —
-    # both leave L2 invariant, so the projected centroids quantize the
-    # transformed corpus exactly as they quantized the original one).
-    # This lets the OPQ A/B recall pair share ONE identity-layout
-    # coarse build while each side's codebook learn + encode stay on
-    # its own clock.
     from ..cache import materialize
     from .kmeans import (
         KM_ITERS,
@@ -754,74 +700,11 @@ def build_ivf_pq_index(
     )
 
     smod = KM_IVF_SAMPLE_MOD if sample_mod is None else sample_mod
-    perm = rot = None
-    if opq == "rotate":
-        # Full OPQ (stretch, round 13): sample-learned orthogonal
-        # rotation instead of the permutation — for corpora whose
-        # structure is cross-dimension CORRELATION, which no
-        # axis-aligned permutation can remove. Library path only (the
-        # Procrustes SVD is not oracle-expressible; see opq.py).
-        from . import opq as opq_mod
-
-        rot = materialize(
-            opq_mod.learn_rotation(vectors, m, subdim, sample_mod=smod)
-        )
-        vectors = opq_mod.apply_rotation(vectors, rot, d=m * subdim)
-    elif opq != "never":
-        # Lazy import: opq imports this module's layout constants.
-        from . import opq as opq_mod
-
-        permute = opq == "always"
-        energy = None
-        if opq == "auto":
-            # The gate statistic and the permutation learner both
-            # derive from the SAME per-dimension energy aggregation
-            # over the identical deterministic sample — materialize the
-            # 64-row energy frame once and feed both consumers (round
-            # 15, guide §1.2: the sample scan + two-level sorted-fold
-            # previously executed twice per auto build). Same folds,
-            # same frame ⇒ bit-identical gate decision and permutation.
-            energy = materialize(opq_mod.dim_energy(vectors, smod))
-            row = opq_mod.opq_subspace_imbalance(
-                vectors, m, subdim, smod, energy=energy
-            ).first()
-            # An empty learning sample yields one all-null row; the
-            # permutation learner would fail loudly downstream anyway
-            # (apply_permutation's length guard), so treat it as
-            # no-skew-evidence and build unpermuted.
-            permute = (
-                row is not None
-                and row["ratio"] is not None
-                and row["ratio"] > OPQ_AUTO_RATIO
-            )
-        if permute:
-            perm = materialize(
-                opq_mod.opq_permutation(
-                    vectors, m, subdim, smod, energy=energy
-                )
-            )
-            vectors = opq_mod.apply_permutation(vectors, perm, d=m * subdim)
     e = vectors.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     if coarse_cents is not None:
         cents = coarse_cents.select("coarse", "c")
-        if perm is not None or rot is not None:
-            from . import opq as opq_mod
-
-            project = (
-                opq_mod.apply_permutation
-                if perm is not None
-                else opq_mod.apply_rotation
-            )
-            cents = materialize(
-                project(
-                    cents,
-                    perm if perm is not None else rot,
-                    vec_col="c",
-                    d=m * subdim,
-                )
-            )
     else:
         sample = vectors.where(F.col("vec_id") % smod == 0)
         cents = materialize(
@@ -860,9 +743,7 @@ def build_ivf_pq_index(
     # production PQ stores (M bytes/vector) and the only shape the
     # packed ADC scorer reads. One extra N·M → N aggregate at build.
     codes = _pack_codes(pq_encode(resid, codebook, m, subdim), codebook)
-    return IvfPqIndex(
-        cents, assigned, codebook, codes, m, subdim, perm, rot
-    )
+    return IvfPqIndex(cents, assigned, codebook, codes, m, subdim)
 
 
 def ivf_pq_upsert(
@@ -877,22 +758,10 @@ def ivf_pq_upsert(
     :func:`build_ivf_pq_index` (`_coarse_assign` / `_residualize` /
     `_pack_codes(pq_encode(...))`), so a merged index equals a from-
     scratch build whose LEARN samples were restricted to the original
-    corpus structurally, not by convention — the property the
-    `hybrid_search_fresh` oracle checks."""
+    corpus structurally, not by convention."""
     from ..cache import materialize
 
     m, subdim = index.m, index.subdim
-    if index.perm is not None:
-        # Index built in OPQ-permuted space: the wave permutes through
-        # the SAME stored permutation before assign/encode, keeping
-        # merged == from-scratch in that space.
-        from .opq import apply_permutation
-
-        incoming = apply_permutation(incoming, index.perm, d=m * subdim)
-    if index.rot is not None:
-        from .opq import apply_rotation
-
-        incoming = apply_rotation(incoming, index.rot, d=m * subdim)
     e = incoming.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
@@ -919,8 +788,6 @@ def merge_ivf_pq_index(
         index.codes.unionByName(codes_new),
         index.m,
         index.subdim,
-        index.perm,
-        index.rot,
     )
 
 
@@ -938,28 +805,6 @@ def persist_ivf_pq_index(index: IvfPqIndex, out_dir: str) -> None:
         getattr(index, part).write.mode("overwrite").parquet(
             f"{out_dir}/{part}"
         )
-    # The optional projection parts are written when present and
-    # DELETED when absent (ADVICE r13, medium): ``mode("overwrite")``
-    # only replaces parts it writes, so persisting a projection-free
-    # index into a dir that previously held a perm/rot-built one would
-    # otherwise leave the stale projection behind for
-    # `read_ivf_pq_index` to attach — probes projected through a
-    # permutation the codes were not built under.
-    for name, part in (("perm", index.perm), ("rot", index.rot)):
-        path = f"{out_dir}/{name}"
-        if part is not None:
-            part.write.mode("overwrite").parquet(path)
-        elif "://" not in out_dir:
-            import shutil
-
-            shutil.rmtree(path, ignore_errors=True)
-        else:  # pragma: no cover - remote fs in a local test env
-            jvm = index.cents.sparkSession._jvm
-            jsc = index.cents.sparkSession.sparkContext._jsc
-            p = jvm.org.apache.hadoop.fs.Path(path)
-            fs = p.getFileSystem(jsc.hadoopConfiguration())
-            if fs.exists(p):
-                fs.delete(p, True)
 
 
 def read_ivf_pq_index(
@@ -969,49 +814,11 @@ def read_ivf_pq_index(
     subdim: int = IVFPQ_SUBDIM,
 ) -> IvfPqIndex:
     """Reopen a :func:`persist_ivf_pq_index` directory. ``m``/``subdim``
-    must match the build config (they are layout, not data). The OPQ
-    permutation/rotation parts are optional — present only for indexes
-    built under one. On a local path they gate on the `_SUCCESS`
-    marker (the committed write's atomicity token, so a partial write
-    is never half-read); on a remote filesystem (``scheme://`` paths —
-    hdfs/s3a/...), where ``os.path`` cannot see the marker, absence is
-    detected by the read itself so a permuted index can never silently
-    lose its projection."""
-    import os
-
-    from pyspark.errors import AnalysisException
-
+    must match the build config (they are layout, not data)."""
     parts = [
         spark.read.parquet(f"{out_dir}/{part}") for part in _IVFPQ_PARTS
     ]
-
-    def _optional(part: str) -> "DataFrame | None":
-        path = f"{out_dir}/{part}"
-        if "://" not in out_dir:
-            if not os.path.isdir(path):
-                return None
-            if not os.path.isfile(f"{path}/_SUCCESS"):
-                # Data without the commit marker is NOT absence
-                # (ADVICE r13): with marksuccessfuljobs disabled or
-                # the marker stripped by tooling, silently dropping a
-                # real projection would serve unprojected probes
-                # against projected codes — wrong neighbors, no error.
-                raise ValueError(
-                    f"read_ivf_pq_index: {path} exists but has no "
-                    "_SUCCESS marker — refusing to guess between a "
-                    "partial write and a stripped marker; delete the "
-                    "directory (projection-free index) or restore the "
-                    "marker"
-                )
-            return spark.read.parquet(path)
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException:
-            return None
-
-    return IvfPqIndex(
-        *parts, m, subdim, _optional("perm"), _optional("rot")
-    )
+    return IvfPqIndex(*parts, m, subdim)
 
 
 def knn_ivf_pq_from_index(
@@ -1031,19 +838,6 @@ def knn_ivf_pq_from_index(
     cents, assigned = index.cents, index.assigned
     codebook, codes = index.codebook, index.codes
     m, subdim = index.m, index.subdim
-    if index.perm is not None:
-        # The index lives in OPQ-permuted space; probe vectors enter it
-        # through the same stored permutation. Callers keep ORIGINAL
-        # vectors (exact refine is permutation-invariant L2).
-        from .opq import apply_permutation
-
-        vectors = apply_permutation(vectors, index.perm, d=m * subdim)
-    if index.rot is not None:
-        # Same carry discipline for the full OPQ rotation (orthogonal,
-        # so exact refine's L2 is likewise unaffected).
-        from .opq import apply_rotation
-
-        vectors = apply_rotation(vectors, index.rot, d=m * subdim)
     e = vectors.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )

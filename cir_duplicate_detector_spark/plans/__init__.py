@@ -47,9 +47,6 @@ for _batch, _streaming in [
     ("dup_labels_upsert", "dup_labels_roundtrip"),
     ("semantic_dedup_learned", "semantic_cells_roundtrip"),
     ("decontaminate_semantic", "decon_cells_roundtrip"),
-    # salted_join is a physical-plan rewrite only — same answer, same
-    # oracle string as the unsalted plan.
-    ("tpch_q5", "tpch_q5_skewed"),
 ]:
     if _batch in ALL_QUERIES and _streaming in ALL_QUERIES:
         assert ALL_QUERIES[_batch][1] == ALL_QUERIES[_streaming][1], (

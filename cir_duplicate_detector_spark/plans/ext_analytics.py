@@ -1,6 +1,5 @@
 """Analytics extension queries: TPC-H(-like) suite,
-rollup/cube/pivot, sketches (KMV, CMS), format round-trips,
-bucketed-join elimination.
+rollup/cube/pivot, sketches (KMV, CMS), the ORC round-trip.
 
 Split out of the monolithic ``extension_queries.py`` (round-10
 modularity; VERDICT r9 item 6) with NO behavior change: same
@@ -11,77 +10,28 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 from ..functions.text import hash60_sql
-from ..operators import dedup, sketches
-from ..operators.skew import salted_join
+from ..operators import sketches
 from ..sources.tables import load_table
 
-from .ext_common import (
-    _DUCK_SHINGLES,
-    _DUCK_WORDS,
-)
+from .ext_common import _DUCK_WORDS
 
 
-DOCS_JSONL_SCHEMA = (
+DOCS_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
 )
 
 
-def q_docs_jsonl_roundtrip(spark, sf_dir):
-    """Second source format end-to-end: stage the documents table as
-    JSONL (the training-data interchange format), read it back through
-    the schema-declared quarantine reader (`sources.jsonl`), return the
-    clean rows. The oracle is simply the documents table — equality IS
-    the round-trip guarantee (types, unicode, embedded newlines all
-    survive the JSON escape)."""
-    import hashlib
-
-    from ..sources.jsonl import read_documents_jsonl, write_documents_jsonl
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    stage = "/tmp/docs_jsonl_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    write_documents_jsonl(docs, stage)
-    clean, _quarantined = read_documents_jsonl(spark, stage, DOCS_JSONL_SCHEMA)
-    return clean
-
-
-SQL_DOCS_JSONL_ROUNDTRIP = """
+SQL_DOCS_ORC_ROUNDTRIP = """
 SELECT doc_id, text, lang, source, n_chars FROM documents
 """
 
 
-def q_docs_csv_roundtrip(spark, sf_dir):
-    """Third source format end-to-end: stage the documents table as
-    headerless CSV, read it back through the schema-declared quarantine
-    reader (`sources.csv`), return the clean rows. Oracle = the
-    documents table; equality IS the round-trip guarantee (quoting,
-    commas, unicode survive the CSV escape — embedded newlines are the
-    documented non-goal, see the module docstring)."""
-    import hashlib
-
-    from ..sources.csv import read_documents_csv, write_documents_csv
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    stage = "/tmp/docs_csv_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    write_documents_csv(docs, stage)
-    clean, _quarantined = read_documents_csv(spark, stage, DOCS_JSONL_SCHEMA)
-    return clean
-
-
-SQL_DOCS_CSV_ROUNDTRIP = SQL_DOCS_JSONL_ROUNDTRIP
-
-
 def q_docs_orc_roundtrip(spark, sf_dir):
-    """Third columnar interchange format end-to-end: stage the documents
+    """Columnar interchange format end-to-end: stage the documents
     table as ORC (Spark-native, predicate-pushdown-capable like parquet
     — the format a warehouse-adjacent pipeline exchanges with Hive/Trino
     estates), read it back with the declared schema, return the rows.
-    ORC is schema-carrying binary, so there is no corrupt-LINE
-    quarantine concept (that is the JSONL/CSV readers' job); schema is
-    still DECLARED on read — inference never runs. Oracle = the
+    Schema is DECLARED on read — inference never runs. Oracle = the
     documents table; equality IS the round-trip guarantee."""
     import hashlib
 
@@ -90,10 +40,7 @@ def q_docs_orc_roundtrip(spark, sf_dir):
     )
     stage = "/tmp/docs_orc_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     docs.write.mode("overwrite").orc(stage)
-    return spark.read.schema(DOCS_JSONL_SCHEMA).orc(stage)
-
-
-SQL_DOCS_ORC_ROUNDTRIP = SQL_DOCS_JSONL_ROUNDTRIP
+    return spark.read.schema(DOCS_SCHEMA).orc(stage)
 
 
 # Synthetic varied-domain URL over doc_id — ONE dialect-shared SQL
@@ -308,54 +255,6 @@ WHERE r_name = 'ASIA'
   AND o_orderdate < TIMESTAMP '1997-01-01'
 GROUP BY n_name
 """
-
-
-def q_tpch_q5_skewed(spark, sf_dir):
-    """tpch_q5 with the lineitem<-(orders x customer) join routed
-    through ``skew.salted_join``.
-
-    The physical-plan demonstration query for the explicit skew tool:
-    at 100 TB a handful of mega-orders can make ``l_orderkey`` hot
-    enough that one shuffle partition of the lineitem<-orders join
-    dominates the stage, and the build side (orders x customer in the
-    date window) is too big to broadcast — the exact case AQE skew
-    splitting cannot always fix and ``salted_join`` is for. The salt
-    scatters each hot l_orderkey over 8 sub-keys; results are
-    IDENTICAL to tpch_q5, so the two queries share one oracle string
-    (asserted in plans.__init__).
-    """
-    t = {n: load_table(spark, sf_dir, n) for n in
-         ("customer", "orders", "lineitem", "supplier", "nation", "region")}
-    dec = lambda c: F.col(c).cast("decimal(12,2)")
-    revenue = dec("l_extendedprice") * (
-        F.lit(1).cast("decimal(12,2)") - dec("l_discount")
-    )
-    ordc = (
-        t["customer"]
-        .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"))
-        .where(
-            (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-            & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
-        )
-        .select(F.col("o_orderkey").alias("okey"), "c_nationkey")
-    )
-    li = t["lineitem"].select(
-        F.col("l_orderkey").alias("okey"),
-        "l_suppkey", "l_extendedprice", "l_discount",
-    )
-    return (
-        salted_join(li, ordc, on="okey", num_salts=8)
-        .join(
-            t["supplier"],
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(t["nation"], F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(t["region"], F.col("n_regionkey") == F.col("r_regionkey"))
-        .where(F.col("r_name") == "ASIA")
-        .groupBy("n_name")
-        .agg(F.sum(revenue).cast("double").alias("revenue"))
-    )
 
 
 TPCH_Q18_QTY = 160
@@ -1319,76 +1218,11 @@ GROUP BY p.tok, p.rank, p.true_cnt
 """
 
 
-def q_corpus_bucketed_join(spark, sf_dir):
-    """Bucketed-table join elimination — the 100 TB posture for every
-    REPEATEDLY-joined relation (`sources.sinks.write_bucketed`): the
-    documents projection and the per-doc shingle statistics are both
-    written as parquet tables hash-bucketed (and sorted) by doc_id, so
-    the doc_id join between them reads co-located buckets and runs with
-    ZERO exchanges — the shuffle is paid once at write time instead of
-    once per downstream join (`tests/test_plans.py::
-    test_corpus_bucketed_join_is_shuffle_free` pins the executed plan).
-    Output one row per document: (doc_id, text_len, n_shingles). The
-    oracle computes the same statistics straight from the parquet view
-    — bucketing is a physical layout, never a semantic change."""
-    import os
-    import tempfile
-
-    from ..sources import sinks
-
-    docs = load_table(spark, sf_dir, "documents")
-    left = docs.select(
-        "doc_id", F.length("text").cast("bigint").alias("text_len")
-    )
-    right = dedup.hashed_shingle_arrays(docs).select(
-        "doc_id", F.size("hs").cast("bigint").alias("n_shingles")
-    )
-    # Per-invocation staging (ADVICE r9): a tag keyed only on sf_dir
-    # made two concurrent runs (parallel bench + correctness drivers)
-    # race on DROP TABLE/CTAS over one location and read each other's
-    # half-written buckets. mkdtemp gives each invocation its own
-    # directory (the lsh/ivf/bm25 index round-trip idiom), and the
-    # dir's unique suffix salts the catalog table names the same way.
-    stage = tempfile.mkdtemp(prefix="corpus_bucketed_")
-    # Hex tag derived from the unique staging dir: same per-invocation
-    # isolation, but a [0-9a-f] suffix the plan canonicalizer's
-    # hex-name rule normalizes — mkdtemp's raw suffix mixes in [g-z_]
-    # and left this query's fingerprint VOLATILE (unlintable).
-    import hashlib as _hl
-
-    tag = _hl.md5(stage.encode()).hexdigest()[:12]
-    tables = {f"corpus_docs_bkt_{tag}": left,
-              f"corpus_shingles_bkt_{tag}": right}
-    for name, df in tables.items():
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        sinks.write_bucketed(
-            df, name, f"{stage}/{name}", ("doc_id",), 16,
-            sort_cols=("doc_id",),
-        )
-    l, r = (sinks.read_table(spark, n) for n in tables)
-    return l.join(r, "doc_id").select("doc_id", "text_len", "n_shingles")
-
-
-SQL_CORPUS_BUCKETED_JOIN = f"""
-WITH sh AS (
-  SELECT DISTINCT doc_id, sh FROM (
-    SELECT doc_id, unnest({_DUCK_SHINGLES}) AS sh FROM documents
-  )
-),
-stats AS (SELECT doc_id, count(*)::BIGINT AS n_shingles FROM sh GROUP BY 1)
-SELECT d.doc_id, len(d.text)::BIGINT AS text_len, s.n_shingles
-FROM documents d JOIN stats s USING (doc_id)
-"""
-
-
 ANALYTICS_QUERIES: dict[str, tuple] = {
-    "corpus_bucketed_join": (q_corpus_bucketed_join, SQL_CORPUS_BUCKETED_JOIN),
     "url_domain_stats": (q_url_domain_stats, _sql_url_domain_stats()),
-    "docs_jsonl_roundtrip": (q_docs_jsonl_roundtrip, SQL_DOCS_JSONL_ROUNDTRIP),
     "tpch_q1": (q_tpch_q1, SQL_TPCH_Q1),
     "tpch_q3": (q_tpch_q3, SQL_TPCH_Q3),
     "tpch_q5": (q_tpch_q5, SQL_TPCH_Q5),
-    "tpch_q5_skewed": (q_tpch_q5_skewed, SQL_TPCH_Q5),
     "tpch_q6": (q_tpch_q6, SQL_TPCH_Q6),
     "tpch_q18": (q_tpch_q18, SQL_TPCH_Q18),
     "tpch_q10": (q_tpch_q10, SQL_TPCH_Q10),
@@ -1413,6 +1247,5 @@ ANALYTICS_QUERIES: dict[str, tuple] = {
     "corpus_stats_cube": (q_corpus_stats_cube, SQL_CORPUS_STATS_CUBE),
     "window_topn": (q_window_topn, SQL_WINDOW_TOPN),
     "cms_heavy_hitters": (q_cms_heavy_hitters, SQL_CMS_HEAVY_HITTERS),
-    "docs_csv_roundtrip": (q_docs_csv_roundtrip, SQL_DOCS_CSV_ROUNDTRIP),
     "docs_orc_roundtrip": (q_docs_orc_roundtrip, SQL_DOCS_ORC_ROUNDTRIP),
 }

@@ -120,8 +120,7 @@ SELECT query_id, neighbor_id, rank, cosine FROM (
 
 
 # Exact / LSH / IVF top-k (query_id, neighbor_id) pairs consumed by
-# the recall diagnostics, shared by the `_shared_hybrid_served`
-# contract (round 14, guide §1.2): each side of `ann_recall_lsh` /
+# the recall diagnostics (round 14, guide §1.2): each side of `ann_recall_lsh` /
 # `ann_recall_ivf` is byte-for-byte the stack of a registered serving
 # row (`knn_cosine_bruteforce` / `knn_cosine_lsh` / `knn_cosine_ivf`)
 # the bench already times end-to-end, so the diagnostics re-running
@@ -372,8 +371,6 @@ def _sql_ivf_pq_chain(
     probes_body: str = "SELECT vec_id AS query_id, e FROM n"
     " WHERE vec_id % 100 = 0",
     topk: int = 5,
-    train_pred: "str | None" = None,
-    coarse_body: "str | None" = None,
 ) -> str:
     """CTE chain (appends to an open WITH providing ``n``) ending in
     ``ivfpq`` = (query_id, neighbor_id, rank, adc_dist) — the SQL twin
@@ -383,11 +380,7 @@ def _sql_ivf_pq_chain(
     diagnostic so the recall row measures EXACTLY the index the search
     query ships. ``probes_body`` parametrizes the probe relation (the
     search query scales probes with the corpus; the recall diagnostic
-    pins a fixed-size panel). ``coarse_body`` (round 14) replaces the
-    in-chain coarse Lloyd learn with a caller-supplied ``(coarse, c)``
-    relation — the twin of ``build_ivf_pq_index(coarse_cents=...)``
-    (the OPQ B row supplies the A row's identity-layout centroids
-    projected through the learned permutation)."""
+    pins a fixed-size panel)."""
     from ..operators import kmeans, pq as _pq
 
     m, sd, kcw = _pq.IVFPQ_M, _pq.IVFPQ_SUBDIM, _pq.PQ_CODEWORDS
@@ -395,10 +388,7 @@ def _sql_ivf_pq_chain(
     cb_iters = _pq.PQ_LLOYD_ITERS
     iters, salts = kmeans.KM_ITERS, kmeans.KM_SALTS
     smod = kmeans.KM_IVF_SAMPLE_MOD
-    # Learn-sample predicate: default is the whole-corpus mod sample;
-    # hybrid_search_fresh restricts learning to the INDEXED half while
-    # assign/encode still cover all of n (the upsert-merge identity).
-    tp = train_pred or f"vec_id % {smod} = 0"
+    tp = f"vec_id % {smod} = 0"
     dim = m * sd
     k_sqrt = "(SELECT greatest(2, CAST(floor(sqrt(count(*))) AS BIGINT)) FROM s)"
     pd_pivots = ", ".join(
@@ -419,14 +409,10 @@ def _sql_ivf_pq_chain(
         f" j -> (q.e[c.subspace * {sd} + j] - c.csub[j])"
         f" * (q.e[c.subspace * {sd} + j] - c.csub[j])))"
     )
-    if coarse_body is None:
-        coarse_ctes = f"""
+    coarse_ctes = f"""
 s AS (SELECT vec_id, e FROM n WHERE {tp})
 {_sql_kmeans_lloyd('s', k_sqrt, iters, salts)},
 coarse AS (SELECT cluster AS coarse, c FROM cent{iters})"""
-    else:
-        coarse_ctes = f"""
-coarse AS ({coarse_body})"""
     return f""",{coarse_ctes},
 assigned AS (
   SELECT vec_id, coarse FROM (

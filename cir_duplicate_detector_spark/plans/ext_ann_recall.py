@@ -1,6 +1,5 @@
-"""ANN recall diagnostics + the OPQ A/B family: `pq_recall`,
-the skewed-corpus OPQ A/B pair, and the OPQ balance/auto-gate
-measurement rows.
+"""ANN recall diagnostic `pq_recall`: recall@5 of the shipped IVF-ADC
+index (raw ADC and refined) against exact squared-L2.
 
 Split out of ``ext_ann.py`` (round 14 — VERDICT r13 item 6: the
 module had grown past the <=1.5k registry-module discipline the
@@ -22,7 +21,6 @@ from .ext_ann import (
     _sql_ivf_pq_chain,
     _sql_refined,
 )
-from .ext_common import _sql_kmeans_lloyd
 
 
 def q_pq_recall(spark, sf_dir):
@@ -92,25 +90,6 @@ GROUP BY bf.query_id
 """
 
 
-
-
-
-def _skewed_embeddings(spark, sf_dir):
-    """Deterministically SKEWED embedding corpus: dimensions 0-3
-    scaled ×8 (exact in binary, so both engines multiply the same
-    double), concentrating ~64× of the per-subspace energy into
-    subspace 0 under PQ's identity dimension layout — the corpus shape
-    OPQ exists for. The `_ppm_media` fixture stance: the provided
-    testdata is ~isotropic (`opq_balance` measures before ≈ after), so
-    the skewed variant is derived, not synthesized."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    scaled = F.transform(
-        F.col("embedding").cast("array<double>"),
-        lambda x, i: F.when(i < 4, x * F.lit(8.0)).otherwise(x),
-    )
-    return emb.select("vec_id", scaled.alias("embedding"))
-
-
 def _pq_recall_panel(corpus):
     from ..functions.text import hash60
 
@@ -125,126 +104,24 @@ def _pq_recall_panel(corpus):
     )
 
 
-# Exact-L2 truth over the skewed corpus, shared by the OPQ A/B pair
-# (VERDICT r12 item 2): both rows probe the SAME corpus with the SAME
-# 32-probe panel, and exact L2 is permutation-invariant, so the truth
-# shortlist is computed ONCE per (application, corpus dir) and served
-# from parquet. The truth AND the identity-layout coarse centroids
-# (below) are memoized — each row's codebook learn + encode stay on
-# its own clock (that build cost is what the rows measure).
-_SKEWED_TRUTH_SHARED: dict[tuple, object] = {}
-
-# The skewed corpus itself, parquet-backed (round 14): the A/B pair
-# (and the shared truth/coarse builds) all derive the IDENTICAL frame —
-# `_skewed_embeddings` is a deterministic per-row projection, and
-# doubles round-trip parquet bit-exactly, so serving it from one
-# parquet write per (application, corpus dir) changes no value anywhere.
-# Each row previously paid its own eager localCheckpoint of the derived
-# corpus per run; the index build, probe and refine stay on-clock.
-_SKEWED_CORPUS_SHARED: dict[tuple, object] = {}
-
-# Identity-layout √-scaled coarse centroids over the SKEWED corpus,
-# shared by the A/B pair (round 14, VERDICT r13 item 7): both rows
-# previously re-learned this ~2-3 s Lloyd from the same corpus — A in
-# identity space, B in permuted space, which are the SAME quantizer up
-# to coordinate order (Lloyd seeds by vec_id hash and per-coordinate
-# means are coordinate-local, so the learn is permutation-equivariant).
-# The share builds ONCE in identity layout; the B build projects the
-# table through its learned permutation (`build_ivf_pq_index`'s
-# coarse_cents + opq path), and B's oracle mirrors that exactly
-# (identity-space Lloyd over n0, then `c[pm[i]]`).
-_SKEWED_COARSE_SHARED: dict[tuple, object] = {}
-
-
-def _shared_skewed_corpus(spark, sf_dir):
-    from ..cache import shared_artifact
-
-    def build(d):
-        _skewed_embeddings(spark, sf_dir).write.mode("overwrite").parquet(
-            f"{d}/corpus"
-        )
-        return spark.read.parquet(f"{d}/corpus")
-
-    return shared_artifact(
-        _SKEWED_CORPUS_SHARED, spark, sf_dir, "skew_corpus_", build
-    )
-
-
-def _shared_skewed_coarse(spark, sf_dir):
-    from ..cache import shared_artifact
-    from ..operators.kmeans import (
-        KM_ITERS,
-        KM_IVF_SAMPLE_MOD,
-        kmeans_centroids,
-        sqrt_sample_k,
-    )
-
-    def build(d):
-        emb = _shared_skewed_corpus(spark, sf_dir)
-        sample = emb.where(F.col("vec_id") % KM_IVF_SAMPLE_MOD == 0)
-        built = kmeans_centroids(
-            sample, k=sqrt_sample_k(sample), iters=KM_ITERS
-        ).select(F.col("cluster").alias("coarse"), "c")
-        built.write.mode("overwrite").parquet(f"{d}/cents")
-        return spark.read.parquet(f"{d}/cents")
-
-    return shared_artifact(
-        _SKEWED_COARSE_SHARED, spark, sf_dir, "skew_coarse_", build
-    )
-
-
-def _shared_skewed_truth(spark, sf_dir):
-    from ..cache import shared_artifact
-    from ..operators import pq
-
-    def build(d):
-        corpus = _shared_skewed_corpus(spark, sf_dir)
-        probe = _pq_recall_panel(corpus)
-        pq.knn_l2_bruteforce(corpus, probe, k=5).select(
-            "query_id", "neighbor_id"
-        ).write.parquet(f"{d}/truth.parquet")
-        return spark.read.parquet(f"{d}/truth.parquet")
-
-    return shared_artifact(
-        _SKEWED_TRUTH_SHARED, spark, sf_dir, "pq_skew_truth_", build
-    )
-
-
-def _pq_recall_over(corpus, index=None, truth=None, tag=None):
-    """`pq_recall`'s exact shape (fixed 32-probe panel, shared ADC
-    shortlist, brute-force L2 truth) over an arbitrary corpus — ONE
-    definition serving `pq_recall` (pass the family-shared persisted
-    index) and the skewed-corpus OPQ A/B rows (``index=None`` builds
-    from scratch; the build is deliberately on the clock there).
-    ``truth`` (optional) supplies a precomputed exact top-5 shortlist
-    ``(query_id, neighbor_id)`` — the A/B pair shares one
-    (`_shared_skewed_truth`); bigint ids round-trip parquet exactly,
-    so results are identical to the inline brute force."""
+def _pq_recall_over(corpus, index, tag):
+    """`pq_recall`'s shape: fixed 32-probe panel, one shared ADC
+    shortlist from ``index``, brute-force L2 truth over ``corpus``."""
     from ..cache import materialize
     from ..operators import pq
 
     probe = _pq_recall_panel(corpus)
-    bf = (
-        truth
-        if truth is not None
-        else pq.knn_l2_bruteforce(corpus, probe, k=5).select(
-            "query_id", "neighbor_id"
-        )
+    bf = pq.knn_l2_bruteforce(corpus, probe, k=5).select(
+        "query_id", "neighbor_id"
     )
-    if index is None:
-        index = pq.build_ivf_pq_index(corpus)
     short = materialize(
         pq.knn_ivf_pq_from_index(index, corpus, probe, k=PQ_REFINE)
     )
-    if tag is not None:
-        # Identity tag (round 15, ADVICE r14): the three recall rows'
-        # final plans are checkpoint/parquet scans whose differences
-        # (which index built the shortlist — shared, skewed-identity,
-        # skewed-OPQ) live in EAGER build jobs the analyzed plan never
-        # shows; the SubqueryAlias makes the consumed shortlist's
-        # provenance plan-visible so a cross-wired index would
-        # re-fingerprint.
-        short = short.alias(tag)
+    # Identity tag (round 15, ADVICE r14): the final plan is a
+    # checkpoint scan whose provenance (which index built the
+    # shortlist) lives in EAGER build jobs the analyzed plan never
+    # shows; the SubqueryAlias makes it plan-visible.
+    short = short.alias(tag)
     adc = short.where(F.col("rank") <= 5).select(
         "query_id", "neighbor_id", F.lit(1).alias("hit_adc")
     )
@@ -275,359 +152,6 @@ def _pq_recall_over(corpus, index=None, truth=None, tag=None):
     )
 
 
-def q_pq_recall_skewed(spark, sf_dir):
-    """IVF-PQ recall on the SKEWED corpus under the IDENTITY dimension
-    layout — the A side of the end-to-end OPQ A/B (VERDICT r11 item 7):
-    with dims 0-3 carrying ~64× energy, vanilla PQ spends ONE
-    256-codeword codebook on all four hot dimensions (subspace 0) and
-    fifteen codebooks on near-noise — the allocation failure
-    `opq_balance` quantifies and the B row (`pq_recall_skewed_opq`)
-    corrects. Same fixed 32-probe panel and shortlist shape as
-    `pq_recall`, so the three rows compare directly. Coarse centroids
-    come from the pair-shared identity-layout build
-    (`_shared_skewed_coarse` — round 14, VERDICT r13 item 7); codebook
-    learn + encode stay on this row's clock. The corpus itself is
-    served from the pair-shared parquet (`_shared_skewed_corpus`) —
-    the derivation is a deterministic projection both rows repeat
-    identically, not part of the build being measured."""
-    from ..operators import pq
-
-    emb = _shared_skewed_corpus(spark, sf_dir)
-    index = pq.build_ivf_pq_index(
-        emb, coarse_cents=_shared_skewed_coarse(spark, sf_dir)
-    )
-    return _pq_recall_over(
-        emb,
-        index=index,
-        truth=_shared_skewed_truth(spark, sf_dir),
-        tag="pqr_skewed_identity",
-    )
-
-
-def q_pq_recall_skewed_opq(spark, sf_dir):
-    """The B side of the OPQ A/B: the identical IVF-PQ recall harness
-    with the index built via ``build_ivf_pq_index(opq="auto")``
-    (round 13, VERDICT r12 item 5) — the gate measures the skewed
-    corpus's identity-layout subspace imbalance (≫ the 4× threshold;
-    see `opq_auto_gate`) and applies the sample-learned balanced
-    snake-deal permutation (`opq.opq_permutation`): the hot dims 0-3
-    rank top-4 by energy and deal onto FOUR different subspaces, so
-    each gets its own codebook's resolution. The permutation rides IN
-    the index (probes permute through it; exact refine stays in the
-    original space — true L2 is permutation-invariant), so this row's
-    UNCHANGED oracle is the end-to-end proof that auto-selection
-    reproduces the explicit permutation bit-for-bit. Exact-L2 truth is
-    shared with the A row (`_shared_skewed_truth`); the recall delta
-    vs `pq_recall_skewed` is exactly what the permutation buys on a
-    corpus that needs it (ADC 0.550 → 0.725 at sf0.1; floor pinned by
-    `test_opq_ab_recall_improves_on_skew`). The shipped isotropic
-    config stays unpermuted — the same auto gate measures ratio ≈ 1
-    there (`opq_auto_gate`'s isotropic row). Corpus served from the
-    pair-shared parquet (`_shared_skewed_corpus`), as on the A side."""
-    from ..operators import pq
-
-    emb = _shared_skewed_corpus(spark, sf_dir)
-    index = pq.build_ivf_pq_index(
-        emb,
-        opq="auto",
-        coarse_cents=_shared_skewed_coarse(spark, sf_dir),
-    )
-    return _pq_recall_over(
-        emb,
-        index=index,
-        truth=_shared_skewed_truth(spark, sf_dir),
-        tag="pqr_skewed_opq",
-    )
-
-
-def _sql_pq_recall_skewed(permuted: bool) -> str:
-    """DuckDB twin of the skewed-corpus recall rows: the skew scaling,
-    the (optional) learned permutation (the `opq_balance` oracle's
-    energy-rank + snake-deal chain), then the standard IVF-PQ chain +
-    refine + recall tail over the transformed corpus ``n``. The
-    permuted variant learns the coarse quantizer in IDENTITY space
-    over ``n0`` and projects the centroids through ``pm`` (round 14 —
-    the twin of the Spark side's pair-shared
-    ``coarse_cents=_shared_skewed_coarse(...)`` + in-index
-    projection); the unpermuted variant's in-chain learn is already
-    byte-identical to the shared build."""
-    from ..operators.kmeans import KM_ITERS, KM_IVF_SAMPLE_MOD, KM_SALTS
-    from ..operators.pq import IVFPQ_M, IVFPQ_SUBDIM
-
-    m, sd = IVFPQ_M, IVFPQ_SUBDIM
-    skew = (
-        "list_transform(range(1, 65),"
-        " j -> CASE WHEN j <= 4 THEN (embedding::DOUBLE[])[j] * 8.0"
-        " ELSE (embedding::DOUBLE[])[j] END)"
-    )
-    if permuted:
-        n_def = f""",
-op_s AS (SELECT vec_id, e FROM n0 WHERE vec_id % {KM_IVF_SAMPLE_MOD} = 0),
-op_pe AS (
-  SELECT vec_id, j.j - 1 AS pos, op_s.e[j.j] * op_s.e[j.j] AS v2
-  FROM op_s CROSS JOIN (SELECT unnest(range(1, 65)) AS j) j
-),
-op_p1 AS (
-  SELECT pos, vec_id % {KM_SALTS} AS salt,
-         list_sum(list(v2 ORDER BY vec_id)) AS psum
-  FROM op_pe GROUP BY 1, 2
-),
-op_en AS (
-  SELECT pos, list_sum(list(psum ORDER BY salt)) AS energy
-  FROM op_p1 GROUP BY pos
-),
-op_ranked AS (
-  SELECT pos, row_number() OVER (ORDER BY energy DESC, pos) - 1 AS r
-  FROM op_en
-),
-op_asg AS (
-  SELECT pos, r // {m} AS block,
-         CASE WHEN (r // {m}) % 2 = 0 THEN r % {m}
-              ELSE {m - 1} - (r % {m}) END AS subspace
-  FROM op_ranked
-),
-op_perm AS (
-  SELECT list(pos + 1 ORDER BY subspace * {sd} + block) AS pm FROM op_asg
-),
-cs AS (SELECT vec_id, e FROM n0 WHERE vec_id % {KM_IVF_SAMPLE_MOD} = 0)
-{_sql_kmeans_lloyd(
-    'cs',
-    '(SELECT greatest(2, CAST(floor(sqrt(count(*))) AS BIGINT)) FROM cs)',
-    KM_ITERS,
-    KM_SALTS,
-)},
-coarse0 AS (SELECT cluster AS coarse, c FROM cent{KM_ITERS}),
-n AS MATERIALIZED (
-  SELECT vec_id, list_transform(range(1, 65), i -> e[pm[i]]) AS e
-  FROM n0, op_perm
-)"""
-        coarse_body = (
-            "SELECT coarse, list_transform(range(1, 65), i -> c[pm[i]]) AS c"
-            " FROM coarse0, op_perm"
-        )
-    else:
-        n_def = ",\nn AS (SELECT vec_id, e FROM n0)"
-        coarse_body = None
-    h = hash60_sql("vec_id::VARCHAR", "'pqr'")
-    panel = f"SELECT vec_id, e FROM n ORDER BY {h}, vec_id LIMIT 32"
-    return f"""
-WITH n0 AS (SELECT vec_id, {skew} AS e FROM embeddings){n_def}
-{_sql_ivf_pq_chain(
-    probes_body=f"SELECT vec_id AS query_id, e FROM ({panel})",
-    topk=PQ_REFINE,
-    coarse_body=coarse_body,
-)}
-{_sql_refined(5)},
-adc AS (SELECT query_id, neighbor_id FROM ivfpq WHERE rank <= 5),
-bfs AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_SQL_L2_QC} AS l2sq
-  FROM ({panel}) q, n c
-  WHERE q.vec_id <> c.vec_id
-),
-bf AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY l2sq, neighbor_id
-    ) AS rank FROM bfs
-  ) WHERE rank <= 5
-)
-SELECT bf.query_id, count(*) AS n_true,
-       sum(CASE WHEN adc.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         AS n_hit_adc,
-       sum(CASE WHEN adc.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         / count(*) AS recall_adc,
-       sum(CASE WHEN refined.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         AS n_hit_refined,
-       sum(CASE WHEN refined.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         / count(*) AS recall_refined
-FROM bf
-LEFT JOIN adc
-  ON bf.query_id = adc.query_id AND bf.neighbor_id = adc.neighbor_id
-LEFT JOIN refined
-  ON bf.query_id = refined.query_id AND bf.neighbor_id = refined.neighbor_id
-GROUP BY bf.query_id
-"""
-
-
-
-
-def q_opq_balance(spark, sf_dir):
-    """The OPQ-lite diagnostic (round 11, the r9/r10 stretch item made
-    measurable): per-subspace ENERGY under the identity dimension
-    layout vs under the sample-learned balanced permutation
-    (`operators.opq`). On a corpus where a few dimensions dominate,
-    vanilla PQ's identity layout concentrates energy in few subspaces
-    (codebooks wasted on near-constant coordinates); the snake-deal
-    permutation balances it — and on THIS ~isotropic corpus the row
-    shows before ≈ after, which is the measured justification for NOT
-    wiring the permutation into the shipped IVF-PQ config (the recall
-    sweeps bind on the candidate ceiling instead; `pq.IVFPQ_M`). All
-    doubles are two-phase sorted folds; the subspace rollups fold in
-    pos/newpos order — value-hash exact."""
-    from ..operators import opq
-    from ..operators.kmeans import _sorted_fold as _kmeans_fold
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # One energy scan: the assignment already carries (pos, energy),
-    # so the identity-layout rollup derives from it instead of
-    # embedding a second dim_energy subtree (Spark recomputes uncached
-    # subtrees per reference).
-    asg = opq.opq_assignment(emb)
-    sub_b = (F.col("pos") / opq.IVFPQ_SUBDIM).cast("bigint")
-    before = (
-        asg.select("pos", "energy")
-        .withColumn("subspace", sub_b)
-        .groupBy("subspace")
-        .agg(
-            _kmeans_fold(
-                F.collect_list(F.struct("pos", "energy")), "energy"
-            ).alias("energy_before")
-        )
-    )
-    after = asg.groupBy("subspace").agg(
-        _kmeans_fold(
-            F.collect_list(F.struct("newpos", "energy")), "energy"
-        ).alias("energy_after")
-    )
-    return before.join(after, "subspace").select(
-        "subspace", "energy_before", "energy_after"
-    )
-
-
-def _sql_opq_balance() -> str:
-    from ..operators.kmeans import KM_IVF_SAMPLE_MOD, KM_SALTS
-    from ..operators.pq import IVFPQ_M, IVFPQ_SUBDIM
-
-    m, sd = IVFPQ_M, IVFPQ_SUBDIM
-    return f"""
-WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-s AS (SELECT vec_id, e FROM n WHERE vec_id % {KM_IVF_SAMPLE_MOD} = 0),
-pe AS (
-  SELECT vec_id, j.j - 1 AS pos, s.e[j.j] * s.e[j.j] AS v2
-  FROM s CROSS JOIN (SELECT unnest(range(1, 65)) AS j) j
-),
-p1 AS (
-  SELECT pos, vec_id % {KM_SALTS} AS salt,
-         list_sum(list(v2 ORDER BY vec_id)) AS psum
-  FROM pe GROUP BY 1, 2
-),
-en AS (
-  SELECT pos, list_sum(list(psum ORDER BY salt)) AS energy
-  FROM p1 GROUP BY pos
-),
-ranked AS (
-  SELECT pos, energy,
-         row_number() OVER (ORDER BY energy DESC, pos) - 1 AS r
-  FROM en
-),
-asg AS (
-  SELECT pos, energy, r // {m} AS block,
-         CASE WHEN (r // {m}) % 2 = 0 THEN r % {m}
-              ELSE {m - 1} - (r % {m}) END AS subspace
-  FROM ranked
-),
-eb AS (
-  SELECT (pos // {sd})::BIGINT AS subspace,
-         list_sum(list(energy ORDER BY pos)) AS energy_before
-  FROM en GROUP BY 1
-),
-ea AS (
-  SELECT subspace::BIGINT AS subspace,
-         list_sum(list(energy ORDER BY subspace * {sd} + block))
-           AS energy_after
-  FROM asg GROUP BY 1
-)
-SELECT eb.subspace, eb.energy_before, ea.energy_after
-FROM eb JOIN ea USING (subspace)
-"""
-
-
-def q_opq_auto_gate(spark, sf_dir):
-    """The `build_ivf_pq_index(opq="auto")` gate statistic, measured on
-    BOTH corpora the A/B story spans (round 13, VERDICT r12 item 5):
-    per-corpus identity-layout max/min subspace energy over the
-    deterministic learn sample (`opq.opq_subspace_imbalance` — the
-    EXACT function the build gate calls, so this row pins the decision
-    the builds take) and the resulting decision against
-    `pq.OPQ_AUTO_RATIO`. The provided testdata measures ratio ≈ 1 →
-    unpermuted (auto ≡ the shipped config — the hand note in
-    `operators/opq.py`'s docstring, now measured code); the skewed
-    A/B corpus measures ≫ 4 → permuted (auto ≡ `pq_recall_skewed_opq`,
-    whose unchanged oracle proves the equivalence end-to-end).
-    Sorted-fold doubles; value-hash exact."""
-    from ..operators import opq
-    from ..operators.pq import OPQ_AUTO_RATIO
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    iso = opq.opq_subspace_imbalance(emb).select(
-        F.lit("isotropic").alias("corpus"), "e_max", "e_min", "ratio"
-    )
-    skew = opq.opq_subspace_imbalance(
-        _skewed_embeddings(spark, sf_dir)
-    ).select(F.lit("skewed").alias("corpus"), "e_max", "e_min", "ratio")
-    return iso.unionByName(skew).withColumn(
-        "permuted", F.col("ratio") > F.lit(OPQ_AUTO_RATIO)
-    )
-
-
-def _sql_opq_auto_gate() -> str:
-    from ..operators.kmeans import KM_IVF_SAMPLE_MOD, KM_SALTS
-    from ..operators.pq import IVFPQ_SUBDIM, OPQ_AUTO_RATIO
-
-    sd = IVFPQ_SUBDIM
-
-    def one(label: str, e_expr: str) -> str:
-        return f"""
-SELECT '{label}' AS corpus, e_max, e_min, ratio,
-       ratio > {OPQ_AUTO_RATIO!r} AS permuted
-FROM (
-  WITH n AS (SELECT vec_id, {e_expr} AS e FROM embeddings),
-  s AS (SELECT vec_id, e FROM n WHERE vec_id % {KM_IVF_SAMPLE_MOD} = 0),
-  pe AS (
-    SELECT vec_id, j.j - 1 AS pos, s.e[j.j] * s.e[j.j] AS v2
-    FROM s CROSS JOIN (SELECT unnest(range(1, 65)) AS j) j
-  ),
-  p1 AS (
-    SELECT pos, vec_id % {KM_SALTS} AS salt,
-           list_sum(list(v2 ORDER BY vec_id)) AS psum
-    FROM pe GROUP BY 1, 2
-  ),
-  en AS (
-    SELECT pos, list_sum(list(psum ORDER BY salt)) AS energy
-    FROM p1 GROUP BY pos
-  ),
-  eb AS (
-    SELECT (pos // {sd})::BIGINT AS subspace,
-           list_sum(list(energy ORDER BY pos)) AS e_sub
-    FROM en GROUP BY 1
-  )
-  SELECT max(e_sub) AS e_max, min(e_sub) AS e_min,
-         max(e_sub) / min(e_sub) AS ratio
-  FROM eb
-)"""
-
-    skew = (
-        "list_transform(range(1, 65),"
-        " j -> CASE WHEN j <= 4 THEN (embedding::DOUBLE[])[j] * 8.0"
-        " ELSE (embedding::DOUBLE[])[j] END)"
-    )
-    return (
-        one("isotropic", "embedding::DOUBLE[]")
-        + "\nUNION ALL\n"
-        + one("skewed", skew)
-    )
-
-
-
-
-
 ANN_RECALL_QUERIES: dict[str, tuple] = {
-    "opq_balance": (q_opq_balance, _sql_opq_balance()),
-    "opq_auto_gate": (q_opq_auto_gate, _sql_opq_auto_gate()),
     "pq_recall": (q_pq_recall, _sql_pq_recall()),
-    "pq_recall_skewed": (q_pq_recall_skewed, _sql_pq_recall_skewed(False)),
-    "pq_recall_skewed_opq": (
-        q_pq_recall_skewed_opq,
-        _sql_pq_recall_skewed(True),
-    ),
 }

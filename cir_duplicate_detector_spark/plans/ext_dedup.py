@@ -266,7 +266,7 @@ def _shared_shingle_index(spark, sf_dir):
 # The full MinHash screen's verdict pairs and the SimHash signature
 # table, each consumed by a second row that previously re-ran the
 # identical stack its OWN registered row already times end-to-end
-# (round 14, guide §1.2 — the `_shared_hybrid_served` contract):
+# (round 14, guide §1.2):
 # `minhash_recall`'s found side is `dedup_minhash`'s output restricted
 # to probe-touching pairs, and `dedup_simhash_pairs` re-derived
 # `dedup_simhash`'s signatures before banding. The builders CALL the

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 from ..functions.text import hash60_sql
-from ..operators import dedup, retrieval, similarity, textops
+from ..operators import dedup, similarity, textops
 from ..sources.derived import (
     BLOOM_SPLIT_DUCK,
     BLOOM_SPLIT_SPARK,
@@ -234,452 +234,10 @@ SELECT query_id, doc_id, rank, n_terms_hit, score FROM (
 """
 
 
-def q_hybrid_search(spark, sf_dir):
-    """Hybrid retrieval (`retrieval.hybrid_search`): the BM25 panel's
-    lexical top-10 and each query's probe-vector cosine top-10, fused
-    by reciprocal-rank fusion (1/(60+rank), missing stage contributes
-    0) — the production corpus-search recipe: keyword recall and
-    semantic recall in ONE ranked list. Scores are fixed two-term
-    double sums of exact-integer reciprocals, bit-reproducible; ties
-    break by doc_id."""
-    panel = spark.createDataFrame(
-        textops.BM25_PANEL, "query_id bigint, term string"
-    )
-    probes = spark.createDataFrame(
-        retrieval.HYBRID_PROBES, "query_id bigint, vec_id bigint"
-    )
-    return retrieval.hybrid_search(
-        load_table(spark, sf_dir, "documents"),
-        load_table(spark, sf_dir, "embeddings"),
-        panel,
-        probes,
-    )
-
-
-def _sql_hybrid_search() -> str:
-    # The lexical CTE reuses the bm25_search oracle verbatim, so the
-    # two stay in lockstep by construction; the registered hybrid runs
-    # both stages at their default depths.
-    assert retrieval.HYBRID_K_EACH == textops.BM25_TOPK
-    from .ext_ann import _DUCK_VEC_N
-
-    probes_vals = ", ".join(
-        f"({q}, {v})" for q, v in retrieval.HYBRID_PROBES
-    )
-    rrf_k = retrieval.HYBRID_RRF_K
-    return f"""
-WITH lex AS ({_sql_bm25_search()}),
-n AS ({_DUCK_VEC_N}),
-probes(query_id, vec_id) AS (VALUES {probes_vals}),
-sem_scored AS (
-  SELECT p.query_id, c.vec_id AS doc_id,
-         list_sum(list_transform(range(1, 65), j -> q.e[j] * c.e[j]))
-           / (q.nrm * c.nrm) AS cosine
-  FROM probes p
-  JOIN n q ON q.vec_id = p.vec_id
-  CROSS JOIN n c
-  WHERE c.vec_id <> p.vec_id
-),
-sem AS (
-  SELECT query_id, doc_id, rank FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cosine DESC, doc_id
-    )::BIGINT AS rank FROM sem_scored
-  ) WHERE rank <= {retrieval.HYBRID_K_EACH}
-),
-fused AS (
-  SELECT coalesce(l.query_id, s.query_id) AS query_id,
-         coalesce(l.doc_id, s.doc_id) AS doc_id,
-         l.lex_rank, s.sem_rank
-  FROM (SELECT query_id, doc_id, rank AS lex_rank FROM lex) l
-  FULL JOIN (SELECT query_id, doc_id, rank AS sem_rank FROM sem) s
-    ON l.query_id = s.query_id AND l.doc_id = s.doc_id
-),
-scored AS (
-  SELECT query_id, doc_id, lex_rank, sem_rank,
-         coalesce(1.0::DOUBLE / ({rrf_k} + lex_rank), 0.0::DOUBLE)
-       + coalesce(1.0::DOUBLE / ({rrf_k} + sem_rank), 0.0::DOUBLE)
-           AS rrf_score
-  FROM fused
-)
-SELECT query_id, doc_id, lex_rank, sem_rank, rrf_score, rank FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY rrf_score DESC, doc_id
-  )::BIGINT AS rank FROM scored
-) WHERE rank <= {retrieval.HYBRID_TOPK}
-"""
-
-
-def q_hybrid_search_served(spark, sf_dir):
-    """Hybrid retrieval ON THE SERVING PATH: the same RRF fusion as
-    `hybrid_search`, with the semantic stage swapped from exact
-    brute-force to the production two-stage ANN — refined IVF-PQ
-    (`pq.knn_ivf_pq_from_index` + `pq.pq_refine`) served from the
-    family-shared PERSISTED index (`_shared_ivfpq_index`: parquet-
-    backed, corpus vectors touched only by the refine stage's
-    refine·|probes| rows). Proves the claim `hybrid_search` makes in
-    prose: rank-only fusion means the ANN serving path plugs into
-    `retrieval.rrf_fuse` without touching the fusion plan — fused
-    retrieval runs end to end from on-disk index artifacts."""
-    from ..operators import pq
-    from .ext_ann import PQ_REFINE, _shared_ivfpq_index
-
-    panel = spark.createDataFrame(
-        textops.BM25_PANEL, "query_id bigint, term string"
-    )
-    probes = spark.createDataFrame(
-        retrieval.HYBRID_PROBES, "query_id bigint, vec_id bigint"
-    )
-    from ..cache import materialize
-
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    lex = textops.bm25_search(
-        docs, panel, topk=retrieval.HYBRID_K_EACH
-    ).select("query_id", "doc_id", F.col("rank").alias("lex_rank"))
-    # `pq_refine` references its shortlist twice (pair resolve + the
-    # query-panel semi-join); materialize the narrow shortlist once so
-    # the ADC probe subtree executes once, not per reference (round 15,
-    # VERDICT r14 item 1 — the `_pq_recall_over` shortlist pattern;
-    # measured min-of-3: sem stage 3.80 → 3.33 s at sf0.1, and the
-    # declared plan drops the duplicated ADC subtree).
-    short = materialize(
-        pq.knn_ivf_pq_from_index(
-            _shared_ivfpq_index(spark, sf_dir),
-            emb,
-            probes.select("vec_id"),
-            k=PQ_REFINE,
-        )
-    )
-    sem = retrieval.map_probe_ranks(
-        pq.pq_refine(emb, short, k=retrieval.HYBRID_K_EACH), probes
-    )
-    return retrieval.rrf_fuse(lex, sem)
-
-
-def _sql_hybrid_search_served() -> str:
-    # Lexical CTE = the bm25_search oracle verbatim; semantic CTEs =
-    # the knn_ivf_pq_refined oracle chain verbatim (probe relation
-    # parametrized to the hybrid probe vectors), so the served hybrid
-    # is oracle-locked to exactly the stages it composes.
-    from .ext_ann import PQ_REFINE, _sql_ivf_pq_chain, _sql_refined
-
-    probe_ids = ", ".join(str(v) for _, v in retrieval.HYBRID_PROBES)
-    probes_vals = ", ".join(
-        f"({q}, {v})" for q, v in retrieval.HYBRID_PROBES
-    )
-    rrf_k = retrieval.HYBRID_RRF_K
-    chain = _sql_ivf_pq_chain(
-        probes_body=(
-            "SELECT vec_id AS query_id, e FROM n"
-            f" WHERE vec_id IN ({probe_ids})"
-        ),
-        topk=PQ_REFINE,
-    )
-    return f"""
-WITH lex AS ({_sql_bm25_search()}),
-n AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
-{chain}
-{_sql_refined(retrieval.HYBRID_K_EACH)},
-probemap(query_id, vec_id) AS (VALUES {probes_vals}),
-sem AS (
-  SELECT pm.query_id, r.neighbor_id AS doc_id, r.rank AS sem_rank
-  FROM refined r JOIN probemap pm ON r.query_id = pm.vec_id
-),
-fused AS (
-  SELECT coalesce(l.query_id, s.query_id) AS query_id,
-         coalesce(l.doc_id, s.doc_id) AS doc_id,
-         l.lex_rank, s.sem_rank
-  FROM (SELECT query_id, doc_id, rank AS lex_rank FROM lex) l
-  FULL JOIN sem s
-    ON l.query_id = s.query_id AND l.doc_id = s.doc_id
-),
-scored AS (
-  SELECT query_id, doc_id, lex_rank, sem_rank,
-         coalesce(1.0::DOUBLE / ({rrf_k} + lex_rank), 0.0::DOUBLE)
-       + coalesce(1.0::DOUBLE / ({rrf_k} + sem_rank), 0.0::DOUBLE)
-           AS rrf_score
-  FROM fused
-)
-SELECT query_id, doc_id, lex_rank, sem_rank, rrf_score, rank FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY rrf_score DESC, doc_id
-  )::BIGINT AS rank FROM scored
-) WHERE rank <= {retrieval.HYBRID_TOPK}
-"""
-
-
-# Build-once IVF-PQ index over the INDEXED (even-id) half — the base
-# index `hybrid_search_fresh` serves from while the odd-id wave arrives
-# through the upsert path. Same posture as `_shared_ivfpq_index` (which
-# indexes the FULL corpus and therefore cannot demo ingest).
-_IVFPQ_EVEN_SHARED: dict[tuple, object] = {}
-
-
-def _shared_ivfpq_even(spark, sf_dir):
-    from ..cache import shared_artifact
-    from ..operators import pq
-
-    def build(d):
-        emb = load_table(spark, sf_dir, "embeddings")
-        built = pq.build_ivf_pq_index(emb.where("vec_id % 2 = 0"))
-        pq.persist_ivf_pq_index(built, d)
-        return pq.read_ivf_pq_index(spark, d)
-
-    return shared_artifact(
-        _IVFPQ_EVEN_SHARED, spark, sf_dir, "ivfpq_even_", build
-    )
-
-
-def q_hybrid_search_fresh(spark, sf_dir):
-    """Hybrid retrieval OVER CONTINUOUS INGEST (round 12, VERDICT r11
-    stretch item 8): the serving posture a live corpus search needs —
-    both stages serve from STATIC persisted structures while a fresh
-    wave (the odd-id half) becomes searchable without any relearn.
-
-    * Lexical: every document (indexed + fresh) scores against the
-      INDEXED half's background statistics (`bm25_index_stats` → the
-      `bm25_route` single-aggregation expressions — the stale-idf
-      approximation every percolation service runs between stat
-      refreshes), then one per-query top-k window.
-    * Semantic: the even-half persisted IVF-PQ index
-      (`_shared_ivfpq_even`) plus the wave's `pq.ivf_pq_upsert`
-      (assign to existing cells, residual-encode against the existing
-      codebook — byte-identical expressions to the build tail) merged
-      by pure relation union (`pq.merge_ivf_pq_index`); the standard
-      probe path + exact refine run over the merged index, so fresh
-      vectors are immediately retrievable.
-    * Fusion: the same rank-only RRF as the rest of the family.
-
-    The oracle checks the merge identity: a merged index equals a
-    from-scratch build whose learn samples were restricted to the
-    indexed half (`_sql_ivf_pq_chain(train_pred=...)`). A literal
-    single-query streaming twin is impossible by construction (the
-    semantic stage chains argmin + ADC ranking aggregations); the
-    ingest-side pieces each ship one (`bm25_route_streaming`,
-    `pq_codes_upsert_streaming`, `ivf_upsert_assign_streaming`)."""
-    from pyspark.sql import Window
-
-    from ..operators import pq
-    from .ext_ann import PQ_REFINE
-
-    panel = spark.createDataFrame(
-        textops.BM25_PANEL, "query_id bigint, term string"
-    )
-    probes = spark.createDataFrame(
-        retrieval.HYBRID_PROBES, "query_id bigint, vec_id bigint"
-    )
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    stats, df_rel = textops.bm25_index_stats(
-        docs.where("doc_id % 2 = 0"), panel
-    )
-    scores = textops.bm25_route(docs, panel, stats, df_rel)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    lex = (
-        scores.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= retrieval.HYBRID_K_EACH)
-        .select("query_id", "doc_id", F.col("rank").alias("lex_rank"))
-    )
-    from ..cache import materialize
-
-    base = _shared_ivfpq_even(spark, sf_dir)
-    a_new, c_new = pq.ivf_pq_upsert(base, emb.where("vec_id % 2 = 1"))
-    merged = pq.merge_ivf_pq_index(base, a_new, c_new)
-    # Same shortlist materialize as the served row (round 15, VERDICT
-    # r14 item 1): here the de-duplicated subtree additionally carries
-    # the wave upsert + merge, so the lazy form re-ran the whole
-    # ingest path once per `pq_refine` reference.
-    short = materialize(
-        pq.knn_ivf_pq_from_index(
-            merged, emb, probes.select("vec_id"), k=PQ_REFINE
-        )
-    )
-    sem = retrieval.map_probe_ranks(
-        pq.pq_refine(emb, short, k=retrieval.HYBRID_K_EACH), probes
-    )
-    return retrieval.rrf_fuse(lex, sem)
-
-
-def _sql_hybrid_search_fresh() -> str:
-    """Oracle: the bm25_route chain over ALL documents (stats from the
-    even half) ranked per query, plus the IVF-PQ chain with its LEARN
-    samples restricted to the even half (train_pred) — the from-scratch
-    equivalent of base-build + upsert-merge — and the standard RRF
-    tail."""
-    from ..operators.kmeans import KM_IVF_SAMPLE_MOD
-    from .ext_ann import PQ_REFINE, _sql_ivf_pq_chain, _sql_refined
-
-    k1, b = textops.BM25_K1, textops.BM25_B
-    vals = ", ".join(f"({q}, '{t}')" for q, t in textops.BM25_PANEL)
-    idf = "(((n_docs - df) + 0.5::DOUBLE) / (df + 0.5::DOUBLE))"
-    tfnorm = (
-        f"((tf * {k1 + 1.0!r}::DOUBLE) / (tf + ({k1!r}::DOUBLE"
-        f" * ({1.0 - b!r}::DOUBLE + (({b!r}::DOUBLE"
-        " * dl) / (total_tokens / n_docs))))))"
-    )
-    probe_ids = ", ".join(str(v) for _, v in retrieval.HYBRID_PROBES)
-    probes_vals = ", ".join(
-        f"({q}, {v})" for q, v in retrieval.HYBRID_PROBES
-    )
-    rrf_k = retrieval.HYBRID_RRF_K
-    k_each = retrieval.HYBRID_K_EACH
-    chain = _sql_ivf_pq_chain(
-        probes_body=(
-            "SELECT vec_id AS query_id, e FROM n"
-            f" WHERE vec_id IN ({probe_ids})"
-        ),
-        topk=PQ_REFINE,
-        train_pred=f"vec_id % 2 = 0 AND vec_id % {KM_IVF_SAMPLE_MOD} = 0",
-    )
-    return f"""
-WITH panel(query_id, term) AS (VALUES {vals}),
-itk AS (
-  SELECT doc_id, unnest({_DUCK_WORDS}) AS term FROM documents
-  WHERE doc_id % 2 = 0
-),
-dli AS (SELECT doc_id, count(*)::BIGINT AS dl FROM itk GROUP BY 1),
-stats AS (
-  SELECT count(*)::BIGINT AS n_docs, sum(dl)::BIGINT AS total_tokens
-  FROM dli
-),
-dfr AS (
-  SELECT term, count(DISTINCT doc_id)::BIGINT AS df FROM itk
-  WHERE term IN (SELECT term FROM panel) GROUP BY 1
-),
-inc AS (SELECT doc_id, {_DUCK_WORDS} AS ws FROM documents),
-pt AS (
-  SELECT inc.doc_id, p.query_id, p.term,
-         coalesce(dfr.df, 0)::BIGINT AS df,
-         stats.n_docs, stats.total_tokens,
-         len(list_filter(inc.ws, t -> t = p.term))::BIGINT AS tf,
-         len(inc.ws)::BIGINT AS dl
-  FROM inc CROSS JOIN panel p
-  LEFT JOIN dfr ON dfr.term = p.term CROSS JOIN stats
-),
-lexsc AS (
-  SELECT doc_id, query_id, list_sum(list({idf} * {tfnorm} ORDER BY term))
-           AS score
-  FROM pt WHERE tf > 0 GROUP BY 1, 2
-),
-lex AS (
-  SELECT query_id, doc_id, rank FROM (
-    SELECT query_id, doc_id, row_number() OVER (
-      PARTITION BY query_id ORDER BY score DESC, doc_id
-    )::BIGINT AS rank FROM lexsc
-  ) WHERE rank <= {k_each}
-),
-n AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
-{chain}
-{_sql_refined(k_each)},
-probemap(query_id, vec_id) AS (VALUES {probes_vals}),
-sem AS (
-  SELECT pm.query_id, r.neighbor_id AS doc_id, r.rank AS sem_rank
-  FROM refined r JOIN probemap pm ON r.query_id = pm.vec_id
-),
-fused AS (
-  SELECT coalesce(l.query_id, s2.query_id) AS query_id,
-         coalesce(l.doc_id, s2.doc_id) AS doc_id,
-         l.lex_rank, s2.sem_rank
-  FROM (SELECT query_id, doc_id, rank AS lex_rank FROM lex) l
-  FULL JOIN sem s2
-    ON l.query_id = s2.query_id AND l.doc_id = s2.doc_id
-),
-rrf_scored AS (
-  SELECT query_id, doc_id, lex_rank, sem_rank,
-         coalesce(1.0::DOUBLE / ({rrf_k} + lex_rank), 0.0::DOUBLE)
-       + coalesce(1.0::DOUBLE / ({rrf_k} + sem_rank), 0.0::DOUBLE)
-           AS rrf_score
-  FROM fused
-)
-SELECT query_id, doc_id, lex_rank, sem_rank, rrf_score, rank FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY rrf_score DESC, doc_id
-  )::BIGINT AS rank FROM rrf_scored
-) WHERE rank <= {retrieval.HYBRID_TOPK}
-"""
-
-
-# All-exact hybrid truth (exact BM25 over the full corpus + exact
-# brute-force cosine, RRF-fused top-10), shared by `hybrid_recall` and
-# `hybrid_fresh_recall` (VERDICT r12 item 3): both rows measure a
-# serving variant against the SAME `q_hybrid_search` result, so the
-# truth is computed once per (application, corpus dir) and served from
-# parquet. The by-construction property is preserved — the builder
-# CALLS the registered `q_hybrid_search`, so an edit to it still
-# propagates to both diagnostics; bigint (query_id, doc_id) pairs
-# round-trip parquet exactly. Each row's SERVING side stays on its own
-# clock.
-_HYBRID_TRUTH_SHARED: dict[tuple, object] = {}
-
-
-def _shared_hybrid_truth(spark, sf_dir):
-    from ..cache import shared_artifact
-
-    def build(d):
-        q_hybrid_search(spark, sf_dir).select(
-            "query_id", "doc_id"
-        ).write.parquet(f"{d}/truth.parquet")
-        return spark.read.parquet(f"{d}/truth.parquet").alias(
-            "hybrid_truth_shared"
-        )
-
-    return shared_artifact(
-        _HYBRID_TRUTH_SHARED, spark, sf_dir, "hybrid_truth_", build
-    )
-
-
-# The SERVED/FRESH top-k consumed by the recall diagnostics, shared by
-# the same contract as `_shared_hybrid_truth` (round 14, guide §1.2):
-# each serving variant is ALREADY timed end-to-end by its own
-# registered row (`hybrid_search_served`, `hybrid_search_fresh`), so
-# the recall rows re-computing the identical serving stack measured
-# pure duplication (~5-9 s/row). The builders CALL the registered
-# query functions, so an edit to either variant still propagates to
-# its diagnostic by construction, and bigint (query_id, doc_id) pairs
-# round-trip parquet exactly — results identical to the inline form.
-_HYBRID_SERVED_SHARED: dict[tuple, object] = {}
-_HYBRID_FRESH_SHARED: dict[tuple, object] = {}
-
-
-def _shared_hybrid_served(spark, sf_dir):
-    from ..cache import shared_artifact
-
-    def build(d):
-        q_hybrid_search_served(spark, sf_dir).select(
-            "query_id", "doc_id"
-        ).write.parquet(f"{d}/served.parquet")
-        return spark.read.parquet(f"{d}/served.parquet").alias(
-            "hybrid_served_shared"
-        )
-
-    return shared_artifact(
-        _HYBRID_SERVED_SHARED, spark, sf_dir, "hybrid_served_", build
-    )
-
-
-def _shared_hybrid_fresh(spark, sf_dir):
-    from ..cache import shared_artifact
-
-    def build(d):
-        q_hybrid_search_fresh(spark, sf_dir).select(
-            "query_id", "doc_id"
-        ).write.parquet(f"{d}/fresh.parquet")
-        return spark.read.parquet(f"{d}/fresh.parquet").alias(
-            "hybrid_fresh_shared"
-        )
-
-    return shared_artifact(
-        _HYBRID_FRESH_SHARED, spark, sf_dir, "hybrid_fresh_", build
-    )
-
-
 # The fuzzy screen's verdict pairs and the scrub's token accounting,
 # each consumed by diagnostics that previously re-ran the full screen
 # their own registered row already times end-to-end (round 14, guide
-# §1.2 — the `_shared_hybrid_served` contract): the builders CALL the
+# §1.2): the builders CALL the
 # registered query functions, so an edit to either screen still
 # propagates to every consumer by construction, and the persisted
 # columns are exact integers (bigint id pairs / token counts) that
@@ -717,143 +275,6 @@ def _shared_decon_scrub(spark, sf_dir):
     return shared_artifact(
         _DECON_SCRUB_SHARED, spark, sf_dir, "decon_scrub_", build
     )
-
-
-def q_hybrid_recall(spark, sf_dir):
-    """Recall of the SERVED hybrid vs the exact hybrid, per query —
-    the self-measuring-diagnostic discipline (`pq_recall`,
-    `ann_recall_*`, `minhash_recall`, `semantic_recall_learned`)
-    applied to the new family: `hybrid_search_served`'s only
-    approximation is its IVF-PQ semantic stage, and this row measures
-    what that approximation costs THE FUSED RANKING (which is what a
-    user consumes — per-stage recall rows already exist). recall =
-    |exact top-10 ∩ served top-10| / |exact top-10|, one division of
-    exact integers.
-
-    Built by CALLING the two registered query functions, so the
-    diagnostic measures exactly what ships BY CONSTRUCTION — an edit
-    to either hybrid variant propagates here automatically (the
-    `pq_recall`/`_sql_refined` sharing stance). The lexical stage is
-    therefore computed on both sides; measured cost of that honesty:
-    ~0.3 s at sf0.1. The exact side serves from the shared truth
-    parquet (`_shared_hybrid_truth` — still built by calling
-    `q_hybrid_search`, so the by-construction coupling holds). The
-    SERVED side likewise serves from its shared parquet
-    (`_shared_hybrid_served` — round 14: the serving stack is timed by
-    the registered `hybrid_search_served` row itself; re-running it
-    here measured pure duplication, and the builder still calls the
-    registered function so the coupling holds)."""
-    exact = _shared_hybrid_truth(spark, sf_dir)
-    served = _shared_hybrid_served(spark, sf_dir)
-    ex = exact.groupBy("query_id").agg(
-        F.count("*").cast("bigint").alias("n_exact")
-    )
-    hit = (
-        exact.join(served, ["query_id", "doc_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").cast("bigint").alias("n_hit"))
-    )
-    return (
-        ex.join(hit, "query_id", "left")
-        .select(
-            "query_id",
-            "n_exact",
-            F.coalesce(F.col("n_hit"), F.lit(0).cast("bigint")).alias(
-                "n_hit"
-            ),
-            (
-                F.coalesce(F.col("n_hit"), F.lit(0).cast("bigint"))
-                / F.col("n_exact")
-            ).alias("recall"),
-        )
-    )
-
-
-def _sql_hybrid_recall() -> str:
-    # Both hybrid oracles embed as scoped nested-WITH CTEs, so the
-    # diagnostic measures exactly the two registered queries.
-    return f"""
-WITH exact_h AS ({_sql_hybrid_search()}),
-served_h AS ({_sql_hybrid_search_served()}),
-ex AS (
-  SELECT query_id, count(*)::BIGINT AS n_exact FROM exact_h GROUP BY 1
-),
-hit AS (
-  SELECT e.query_id, count(*)::BIGINT AS n_hit
-  FROM exact_h e JOIN served_h s USING (query_id, doc_id)
-  GROUP BY 1
-)
-SELECT ex.query_id, ex.n_exact,
-       coalesce(hit.n_hit, 0)::BIGINT AS n_hit,
-       coalesce(hit.n_hit, 0)::DOUBLE / ex.n_exact AS recall
-FROM ex LEFT JOIN hit USING (query_id)
-"""
-
-
-def q_hybrid_fresh_recall(spark, sf_dir):
-    """The self-measuring row for hybrid-over-ingest — the family
-    discipline (`hybrid_recall`, `pq_recall`, `minhash_recall`)
-    applied to `hybrid_search_fresh`'s TWO approximations at once:
-    fresh documents score against STALE background statistics (idf
-    from the indexed half) and fresh vectors carry residual codes from
-    the indexed half's codebook. recall = per-query |exact hybrid
-    top-10 ∩ fresh-serving hybrid top-10| / |exact top-10| against the
-    all-exact `hybrid_search` truth (exact BM25 over the full corpus +
-    exact brute-force cosine). Built by CALLING the two registered
-    query functions, so an edit to either propagates here
-    automatically (the exact side via the shared truth parquet —
-    `_shared_hybrid_truth` calls `q_hybrid_search`). One division of
-    exact integers per query. The FRESH side serves from its shared
-    parquet (`_shared_hybrid_fresh` — round 14: the fresh-serving
-    stack is timed end-to-end by the registered `hybrid_search_fresh`
-    row itself; the builder calls the registered function, so the
-    by-construction coupling holds)."""
-    exact = _shared_hybrid_truth(spark, sf_dir)
-    fresh = _shared_hybrid_fresh(spark, sf_dir)
-    ex = exact.groupBy("query_id").agg(
-        F.count("*").cast("bigint").alias("n_exact")
-    )
-    hit = (
-        exact.join(fresh, ["query_id", "doc_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").cast("bigint").alias("n_hit"))
-    )
-    return (
-        ex.join(hit, "query_id", "left")
-        .select(
-            "query_id",
-            "n_exact",
-            F.coalesce(F.col("n_hit"), F.lit(0).cast("bigint")).alias(
-                "n_hit"
-            ),
-            (
-                F.coalesce(F.col("n_hit"), F.lit(0).cast("bigint"))
-                / F.col("n_exact")
-            ).alias("recall"),
-        )
-    )
-
-
-def _sql_hybrid_fresh_recall() -> str:
-    # Both hybrid oracles embed as scoped nested-WITH CTEs (the
-    # hybrid_recall pattern), so the diagnostic measures exactly the
-    # two registered queries.
-    return f"""
-WITH exact_h AS ({_sql_hybrid_search()}),
-fresh_h AS ({_sql_hybrid_search_fresh()}),
-ex AS (
-  SELECT query_id, count(*)::BIGINT AS n_exact FROM exact_h GROUP BY 1
-),
-hit AS (
-  SELECT e.query_id, count(*)::BIGINT AS n_hit
-  FROM exact_h e JOIN fresh_h s USING (query_id, doc_id)
-  GROUP BY 1
-)
-SELECT ex.query_id, ex.n_exact,
-       coalesce(hit.n_hit, 0)::BIGINT AS n_hit,
-       coalesce(hit.n_hit, 0)::DOUBLE / ex.n_exact AS recall
-FROM ex LEFT JOIN hit USING (query_id)
-"""
 
 
 def q_bm25_route(spark, sf_dir):
@@ -1775,20 +1196,6 @@ PIPELINE_QUERIES: dict[str, tuple] = {
     "dsir_score": (q_dsir_score, _sql_dsir_score()),
     "dsir_score_streaming": (q_dsir_score_streaming, _sql_dsir_score()),
     "bm25_search": (q_bm25_search, _sql_bm25_search()),
-    "hybrid_search": (q_hybrid_search, _sql_hybrid_search()),
-    "hybrid_search_served": (
-        q_hybrid_search_served,
-        _sql_hybrid_search_served(),
-    ),
-    "hybrid_recall": (q_hybrid_recall, _sql_hybrid_recall()),
-    "hybrid_search_fresh": (
-        q_hybrid_search_fresh,
-        _sql_hybrid_search_fresh(),
-    ),
-    "hybrid_fresh_recall": (
-        q_hybrid_fresh_recall,
-        _sql_hybrid_fresh_recall(),
-    ),
     "bm25_route": (q_bm25_route, _sql_bm25_route()),
     "bm25_route_streaming": (q_bm25_route_streaming, _sql_bm25_route()),
     "bm25_index_roundtrip": (q_bm25_index_roundtrip, _sql_bm25_route()),

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import hashlib
 
-import pytest
 from pyspark.sql import functions as F
 
 from cir_duplicate_detector_spark.operators import (
@@ -470,7 +469,7 @@ def test_ivf_pq_index_roundtrip_identical(spark, tmp_path):
 
 
 def test_ivf_pq_upsert_merge_serves_fresh(spark):
-    # The continuous-ingest claim behind hybrid_search_fresh: a wave
+    # The continuous-ingest claim behind IVF-PQ upserts: a wave
     # upserted into a prebuilt index (assign to existing cells +
     # residual-encode against the existing codebook, pure relation
     # union) becomes retrievable through the unchanged probe path. The
@@ -1479,378 +1478,6 @@ def test_quality_classifier_agreement_floor(spark):
     )
 
 
-# ------------------------------------------------- OPQ-lite permutation
-
-def test_opq_permutation_is_bijection(spark):
-    from cir_duplicate_detector_spark.operators import opq
-
-    rows = [(i, [float((i * 7 + j * 13) % 29) for j in range(64)])
-            for i in range(40)]
-    embs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    perm = opq.opq_permutation(embs).collect()[0].perm
-    assert sorted(perm) == list(range(1, 65))
-    # apply ∘ perm touches every source slot exactly once: re-ordering
-    # preserves the multiset of values per row
-    out = opq.apply_permutation(embs, opq.opq_permutation(embs)).collect()
-    src = {r[0]: sorted(r[1]) for r in rows}
-    for r in out:
-        assert sorted(r.embedding) == src[r.vec_id]
-
-
-def test_opq_balances_planted_skew(spark):
-    # Dims 0..15 carry ~all the energy; the identity layout packs them
-    # into subspaces 0..3 (pos // 4), so max/min subspace energy is
-    # huge. The snake-deal permutation must spread them one per
-    # subspace — the balance OPQ exists to buy.
-    from cir_duplicate_detector_spark.operators import opq
-
-    rows = []
-    for i in range(64):
-        v = [10.0 + (i % 5) if j < 16 else 0.01 * ((i + j) % 3 + 1)
-             for j in range(64)]
-        rows.append((i, v))
-    embs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    asg = {r.pos: (r.subspace, r.energy)
-           for r in opq.opq_assignment(embs).collect()}
-    per_sub_before: dict[int, float] = {}
-    per_sub_after: dict[int, float] = {}
-    for pos, (sub, en) in asg.items():
-        per_sub_before[pos // 4] = per_sub_before.get(pos // 4, 0.0) + en
-        per_sub_after[sub] = per_sub_after.get(sub, 0.0) + en
-    ratio_before = max(per_sub_before.values()) / min(per_sub_before.values())
-    ratio_after = max(per_sub_after.values()) / min(per_sub_after.values())
-    assert ratio_before > 100, ratio_before  # the planted skew is real
-    assert ratio_after < 3, ratio_after      # and the deal removes it
-    # every subspace got exactly 4 dims (bijection at the slot level)
-    from collections import Counter
-    assert set(Counter(s for s, _ in asg.values()).values()) == {4}
-
-
-def test_opq_ab_recall_improves_on_skew(spark):
-    # The end-to-end claim behind the pq_recall_skewed A/B rows
-    # (VERDICT r11 item 7): on a corpus where a few dimensions carry
-    # the energy (dims 0-3 scaled x8), the sample-learned balanced
-    # permutation materially improves RAW ADC recall@5 — measured
-    # 0.581 -> 0.775 at sf0.001 and 0.550 -> 0.725 at sf0.1 — while
-    # the exact refine stage saturates both variants at 1.0 here (the
-    # 64-candidate shortlist covers the truth at this corpus size).
-    # Floor at +0.10 to allow corpus variation without letting the
-    # delta silently collapse.
-    from cir_duplicate_detector_spark.plans.ext_ann_recall import (
-        q_pq_recall_skewed,
-        q_pq_recall_skewed_opq,
-    )
-
-    def agg(rows):
-        return (
-            sum(r.n_hit_adc for r in rows) / sum(r.n_true for r in rows),
-            sum(r.n_hit_refined for r in rows)
-            / sum(r.n_true for r in rows),
-        )
-
-    adc_id, ref_id = agg(q_pq_recall_skewed(spark, SF_DIR).collect())
-    adc_opq, ref_opq = agg(q_pq_recall_skewed_opq(spark, SF_DIR).collect())
-    assert adc_opq >= adc_id + 0.10, (
-        f"OPQ permutation stopped helping ADC recall on the skewed "
-        f"corpus: identity={adc_id:.3f} opq={adc_opq:.3f}"
-    )
-    assert ref_opq >= ref_id - 1e-9
-
-
-def _opq_test_corpora(spark):
-    """(skewed, isotropic) small corpora for the auto-gate tests: the
-    planted-skew shape from test_opq_balances_planted_skew plus a flat
-    per-dimension-energy twin."""
-    skew_rows = [
-        (i, [10.0 + (i % 5) if j < 16 else 0.01 * ((i + j) % 3 + 1)
-             for j in range(64)])
-        for i in range(64)
-    ]
-    iso_rows = [
-        (i, [1.0 + 0.01 * ((i + j) % 3) for j in range(64)])
-        for i in range(64)
-    ]
-    schema = "vec_id long, embedding array<double>"
-    return (
-        spark.createDataFrame(skew_rows, schema),
-        spark.createDataFrame(iso_rows, schema),
-    )
-
-
-def test_opq_auto_gate_permutes_iff_skewed(spark):
-    # VERDICT r12 item 5: build_ivf_pq_index(opq="auto") measures the
-    # sample's identity-layout subspace imbalance and permutes iff it
-    # exceeds OPQ_AUTO_RATIO — identity with opq="never" on a balanced
-    # corpus, identity with opq="always" on a skew-regressed one.
-    from cir_duplicate_detector_spark.operators import pq
-
-    skewed, iso = _opq_test_corpora(spark)
-    idx_iso = pq.build_ivf_pq_index(iso, opq="auto")
-    assert idx_iso.perm is None  # auto == the shipped config
-    idx_auto = pq.build_ivf_pq_index(skewed, opq="auto")
-    assert idx_auto.perm is not None  # auto fired on the skew
-    idx_always = pq.build_ivf_pq_index(skewed, opq="always")
-    codes = lambda ix: sorted(  # noqa: E731
-        (r.vec_id, tuple(r.ca)) for r in ix.codes.collect()
-    )
-    assert codes(idx_auto) == codes(idx_always)
-    # ... and the permuted index differs from the unpermuted build
-    # (the gate decision is load-bearing, not a no-op)
-    idx_never = pq.build_ivf_pq_index(skewed, opq="never")
-    assert codes(idx_auto) != codes(idx_never)
-
-
-def test_opq_auto_index_roundtrips_perm_and_serves(spark, tmp_path):
-    # The permutation rides IN the index: persist/read round-trips it,
-    # and the probe path permutes queries through it — served results
-    # equal the in-session build's.
-    from cir_duplicate_detector_spark.operators import pq
-
-    skewed, _ = _opq_test_corpora(spark)
-    idx = pq.build_ivf_pq_index(skewed, opq="auto")
-    out = str(tmp_path / "opq_idx")
-    pq.persist_ivf_pq_index(idx, out)
-    reopened = pq.read_ivf_pq_index(spark, out)
-    assert reopened.perm is not None
-    assert (
-        reopened.perm.collect()[0].perm == idx.perm.collect()[0].perm
-    )
-    probe = [0, 7, 21]
-    served = pq.knn_ivf_pq_from_index(reopened, skewed, probe, k=3)
-    built = pq.knn_ivf_pq_from_index(idx, skewed, probe, k=3)
-    key = lambda r: (r.query_id, r.rank)  # noqa: E731
-    assert sorted(
-        (r.query_id, r.rank, r.neighbor_id) for r in served.collect()
-    ) == sorted(
-        (r.query_id, r.rank, r.neighbor_id) for r in built.collect()
-    ), key
-    # upsert against the permuted index encodes the wave in the SAME
-    # space: merged == from-scratch-on-union structurally (both sides
-    # permute through the identical stored perm)
-    wave = skewed.where("vec_id % 2 = 1")
-    base = pq.build_ivf_pq_index(skewed.where("vec_id % 2 = 0"), opq="always")
-    a_new, c_new = pq.ivf_pq_upsert(base, wave)
-    merged = pq.merge_ivf_pq_index(base, a_new, c_new)
-    assert merged.perm is not None
-    assert merged.codes.count() == skewed.count()
-
-
-def test_opq_composes_with_prebuilt_coarse(spark):
-    # Round 14 (VERDICT r13 item 7): coarse_cents + opq is now
-    # supported — the provided table must be in the ORIGINAL layout
-    # and the build projects it through the learned permutation, so
-    # the A/B recall pair can share one identity-layout coarse build.
-    from cir_duplicate_detector_spark.operators import pq
-
-    skewed, _ = _opq_test_corpora(spark)
-    cents = pq.build_ivf_pq_index(skewed).cents  # identity layout
-    idx = pq.build_ivf_pq_index(skewed, coarse_cents=cents, opq="auto")
-    assert idx.perm is not None  # the gate still fires on the skew
-    pm = idx.perm.collect()[0].perm
-    got = {r.coarse: list(r.c) for r in idx.cents.collect()}
-    for r in cents.collect():
-        want = [r.c[pm[i] - 1] for i in range(len(pm))]
-        assert got[r.coarse] == want  # cents = perm(provided cents)
-    # and the projected-cents index serves (probes permute through the
-    # same stored perm; cells are well-formed)
-    out = pq.knn_ivf_pq_from_index(idx, skewed, [0, 7], k=3)
-    assert out.count() > 0
-    with pytest.raises(ValueError, match="never"):
-        pq.build_ivf_pq_index(skewed, opq="sometimes")
-
-
-def _correlated_corpus(spark, n=256):
-    """Corpus whose structure is cross-dimension CORRELATION, not
-    axis-aligned skew: heavy dims 0-3 (x8) MIXED pairwise with dims
-    32-35 through a fixed 0.6/0.8 rotation (a 3-4-5 Givens — exact
-    double constants), so the energy spreads across subspaces but the
-    correlation remains. No permutation can undo a mix; the learned
-    rotation can. Values are integer-hash diverse (every (i, j) cell
-    distinct) so the learn's 32-codeword Lloyd cannot quantize the
-    sample exactly — the distortion being minimized is real."""
-    rows = []
-    for i in range(n):
-        v = [
-            (((i * 2654435761 + j * 40503 + 17) % 4093) / 4093.0) - 0.5
-            for j in range(64)
-        ]
-        for j in range(4):
-            v[j] *= 8.0
-        for j in range(4):
-            a, b = v[j], v[32 + j]
-            v[j], v[32 + j] = 0.6 * a + 0.8 * b, -0.8 * a + 0.6 * b
-        rows.append((i, v))
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-
-
-def test_opq_rotation_beats_permutation_on_correlated_corpus(spark):
-    # The full-OPQ stretch (VERDICT r12 item 8): the alternating
-    # Lloyd/Procrustes learn must reduce sample quantization distortion
-    # MONOTONICALLY from its permutation init (trace head = what the
-    # snake-deal permutation achieves; tail = the learned rotation) —
-    # the A/B evidence for the capability the registered permutation
-    # rows cannot provide (a correlated corpus defeats any axis-aligned
-    # re-ordering).
-    from cir_duplicate_detector_spark.operators import opq
-
-    emb = _correlated_corpus(spark)
-    rot, trace = opq.learn_rotation(emb, sample_mod=1, return_trace=True)
-    assert len(trace) == opq.OPQ_ROT_ITERS + 1
-    # each Procrustes+Lloyd round may plateau but never regresses much;
-    # the end-to-end claim is a material win over the permutation init
-    assert trace[-1] < 0.85 * trace[0], trace
-    # orthogonality: rotation preserves row norms (L2-invariant, the
-    # property that lets exact refine stay in the original space)
-    rotated = opq.apply_rotation(emb, rot).collect()
-    orig = {r[0]: r[1] for r in emb.collect()}
-    for r in rotated:
-        n_before = sum(x * x for x in orig[r.vec_id])
-        n_after = sum(x * x for x in r.embedding)
-        assert abs(n_before - n_after) < 1e-9 * max(n_before, 1.0)
-
-
-def _lowrank_mixed_corpus(spark, n=2048):
-    """Corpus where the PERMUTATION is structurally powerless: a
-    16-dim decaying-scale signal (8,8,8,8,4,...,1) + near-zero noise,
-    spread across all 64 dims by three exact-Givens mixing layers —
-    after mixing, per-dimension marginal energies are near-flat (so
-    any energy-ranked re-ordering is ~arbitrary) while the heavy
-    DIRECTIONS remain strongly cross-dimension correlated (so a
-    learned rotation can re-align them). All constants exact doubles;
-    fully deterministic."""
-    def u(i, j, salt):
-        return (((i * 2654435761 + j * 40503 + salt) % 4093) / 4093.0) - 0.5
-
-    scales = [8, 8, 8, 8, 4, 4, 4, 4, 2, 2, 2, 2, 1, 1, 1, 1] + [0.05] * 48
-    rows = []
-    for i in range(n):
-        v = [scales[j] * u(i, j, 17) for j in range(64)]
-        for off, salt in ((16, 1), (32, 2), (8, 3)):
-            for j in range(32):
-                a, b = v[j], v[(j + off) % 64]
-                if (j + salt) % 2 == 0:
-                    v[j], v[(j + off) % 64] = (
-                        0.6 * a + 0.8 * b,
-                        -0.8 * a + 0.6 * b,
-                    )
-                else:
-                    v[j], v[(j + off) % 64] = (
-                        0.8 * a + 0.6 * b,
-                        -0.6 * a + 0.8 * b,
-                    )
-        rows.append((i, v))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def _adc_recall(spark, emb, mode, n_codewords):
-    from cir_duplicate_detector_spark.operators import pq
-    from cir_duplicate_detector_spark.plans.ext_ann_recall import (
-        _pq_recall_over,
-    )
-
-    idx = pq.build_ivf_pq_index(
-        emb, opq=mode, sample_mod=1, n_codewords=n_codewords
-    )
-    rows = _pq_recall_over(emb, index=idx).collect()
-    return sum(r.n_hit_adc for r in rows) / sum(r.n_true for r in rows)
-
-
-def test_opq_rotation_recall_ab(spark):
-    """The rotation's RECALL-level A/B (round 14, VERDICT r13 item 2 —
-    the r13 evidence was distortion-only): the `_pq_recall_over`
-    harness (fixed 32-probe panel, exact-L2 truth) over identical
-    builds differing ONLY in opq mode, at n_codewords=16 so PQ
-    distortion (not cell coverage) binds ADC recall — at the shipped
-    256 codewords per 4-d subspace every layout quantizes a 2k corpus
-    near-exactly and all three modes measure ≈0.95 (recorded in
-    SCALE.md; that saturation is itself the measured justification for
-    the shipped config).
-
-    On `_lowrank_mixed_corpus` — flat marginal energies, strong
-    cross-dimension correlation — the permutation is structurally
-    powerless (measured 0.719, BELOW identity's 0.769: an arbitrary
-    re-ordering just scrambles subspace locality) while the learned
-    rotation re-aligns the heavy directions (measured 0.775): the
-    capability the permutation rows cannot provide, now measured at
-    recall level. The headline pin is rotation ≥ permutation + 0.04
-    (measured margin 0.056); against IDENTITY the pin is
-    non-inferiority only (measured +0.006 — identity's axis-aligned
-    subspaces partially capture this corpus's structure, so
-    the rotation's edge over identity is thin here; the corpus where
-    identity loses big is the skew A/B, next test). Floors leave
-    margin for cross-platform SVD wobble (the learn is
-    numpy-deterministic per platform)."""
-    emb = _lowrank_mixed_corpus(spark)
-    adc_id = _adc_recall(spark, emb, "never", 16)
-    adc_perm = _adc_recall(spark, emb, "always", 16)
-    adc_rot = _adc_recall(spark, emb, "rotate", 16)
-    assert adc_rot >= adc_perm + 0.04, (
-        f"rotation stopped beating the permutation where re-ordering "
-        f"cannot help: perm={adc_perm:.3f} rot={adc_rot:.3f}"
-    )
-    assert adc_rot >= adc_id - 0.01, (
-        f"rotation fell below identity: id={adc_id:.3f} "
-        f"rot={adc_rot:.3f}"
-    )
-
-
-def test_opq_rotation_recall_ab_on_correlated_corpus(spark):
-    """Same harness on the pairwise-mixed skew corpus (the r13
-    distortion test's construction, 2048 rows) at n_codewords=32:
-    monotone never < always < rotate (measured 0.844 / 0.881 /
-    0.900) — here the permutation recovers most of the axis-aligned
-    skew and the rotation's extra win is the unmixing margin."""
-    from cir_duplicate_detector_spark.operators import opq  # noqa: F401
-
-    emb = _correlated_corpus(spark, n=2048)
-    adc_id = _adc_recall(spark, emb, "never", 32)
-    adc_perm = _adc_recall(spark, emb, "always", 32)
-    adc_rot = _adc_recall(spark, emb, "rotate", 32)
-    assert adc_perm >= adc_id + 0.01
-    assert adc_rot >= adc_perm + 0.005, (
-        f"perm={adc_perm:.3f} rot={adc_rot:.3f}"
-    )
-
-
-def test_opq_rotate_index_roundtrips_and_serves(spark, tmp_path):
-    from cir_duplicate_detector_spark.operators import pq
-
-    emb = _correlated_corpus(spark)
-    idx = pq.build_ivf_pq_index(emb, opq="rotate", sample_mod=1)
-    assert idx.rot is not None and idx.perm is None
-    out = str(tmp_path / "rot_idx")
-    pq.persist_ivf_pq_index(idx, out)
-    reopened = pq.read_ivf_pq_index(spark, out)
-    assert reopened.rot is not None
-    probe = [0, 13, 47]
-    served = sorted(
-        (r.query_id, r.rank, r.neighbor_id)
-        for r in pq.knn_ivf_pq_from_index(
-            reopened, emb, probe, k=3
-        ).collect()
-    )
-    built = sorted(
-        (r.query_id, r.rank, r.neighbor_id)
-        for r in pq.knn_ivf_pq_from_index(idx, emb, probe, k=3).collect()
-    )
-    assert served == built
-    # upsert projects the wave through the stored rotation: merged
-    # index covers the full corpus and stays rotation-tagged
-    base = pq.build_ivf_pq_index(
-        emb.where("vec_id % 2 = 0"), opq="rotate", sample_mod=1
-    )
-    a_new, c_new = pq.ivf_pq_upsert(base, emb.where("vec_id % 2 = 1"))
-    merged = pq.merge_ivf_pq_index(base, a_new, c_new)
-    assert merged.rot is not None
-    assert merged.codes.count() == emb.count()
-
-
 def test_simhash_pairs_prebuilt_sigs_identical(spark, tmp_path):
     # Round-14 share contract: `dedup_simhash_pairs` bands over the
     # signature row's parquet instead of re-deriving signatures.
@@ -1902,37 +1529,6 @@ def test_pq_encode_against_parquet_codebook_identical(spark, tmp_path):
         ).collect()
     )
     assert served == inline and len(inline) > 0
-
-
-def test_opq_prebuilt_energy_identical_and_guarded(spark):
-    # Round 15 (guide §1.2): build_ivf_pq_index(opq="auto") evaluates
-    # the gate AND learns the permutation from ONE materialized
-    # dim_energy frame. Pin the share's identity — permutation and
-    # imbalance from a prebuilt energy frame equal the direct path —
-    # and the prebuilt-table schema guard (ADVICE r14).
-    import pytest as _pytest
-
-    from cir_duplicate_detector_spark.operators import opq
-
-    rows = []
-    for i in range(64):
-        v = [10.0 + (i % 5) if j < 16 else 0.01 * ((i + j) % 3 + 1)
-             for j in range(64)]
-        rows.append((i, v))
-    embs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    en = opq.dim_energy(embs)
-    direct = opq.opq_permutation(embs).collect()[0].perm
-    shared = opq.opq_permutation(embs, energy=en).collect()[0].perm
-    assert direct == shared
-    ri_direct = opq.opq_subspace_imbalance(embs).collect()[0]
-    ri_shared = opq.opq_subspace_imbalance(embs, energy=en).collect()[0]
-    assert ri_direct.ratio == ri_shared.ratio
-    with _pytest.raises(ValueError, match="pos"):
-        opq.opq_permutation(
-            embs, energy=embs.select("vec_id")
-        ).collect()
 
 
 def test_bm25_one_pass_relation_matches_two_pass(spark):

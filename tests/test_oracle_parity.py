@@ -5,8 +5,9 @@ parquet tables, then compares row counts and order-insensitive values —
 the same comparison shape the driver performs (row-count + schema +
 value-hash).
 
-Default profile vs full sweep: the full 190-query sweep takes ~50 min,
-so the default run checks a fixed ~15-query sample (chosen by
+Default profile vs full sweep: the full 182-query sweep takes ~50 min,
+so the default run checks every duplicate-detector row (the 13
+``CORE_QUERIES``) plus a fixed ~15-query extension sample (chosen by
 ``sha256("parity:{PARITY_SAMPLE_KEY}:{name}")`` — the `test_parity_sf01`
 pattern, salted differently so the two samples cover different rows),
 and the full sweep stays one env flag away:
@@ -38,6 +39,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
+from cir_duplicate_detector_spark.plans.core_queries import CORE_QUERIES
 
 from .conftest import PARITY_SAMPLE_KEY
 
@@ -129,7 +131,7 @@ def _rotating_parity_sample(size: int = 15) -> "list[str]":
 QUERY_NAMES = (
     sorted(entry_mod.queries())
     if os.environ.get("PARITY_FULL") == "1"
-    else _rotating_parity_sample()
+    else sorted(set(CORE_QUERIES) | set(_rotating_parity_sample()))
 )
 
 

@@ -59,8 +59,6 @@ _EXCLUDED_PREFIXES = (
     "pq_",
     "kmeans_",
     "ann_",
-    "opq_",
-    "hybrid_",
     "ivf_",
     "semantic_",
     "embedding_",
@@ -75,7 +73,6 @@ _EXCLUDED_NAMES = {
     "rollup_orders",
     "window_topn",
     "dup_overlap",
-    "corpus_bucketed_join",
     "semantic_decon_recall",
     "fuzzy_decon_recall",  # exact cross-Jaccard truth side is O(N^2)/50
     "minhash_recall",  # same exact-truth shape

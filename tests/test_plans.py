@@ -361,16 +361,6 @@ def test_chunk_dedup_digest_keyed_shuffles_only(spark):
     assert all("chunk_hash" in l for l in exchanges)
 
 
-def test_tpch_q5_skewed_salts_the_fact_join(spark):
-    # The skewed variant must actually scatter: the salt column appears
-    # in a join's keys (okey + __salt__), and the result still carries
-    # no salt column (dropped before the agg).
-    plan = _plan(spark, "tpch_q5_skewed")
-    assert "__salt__" in plan
-    fn, _ = ALL_QUERIES["tpch_q5_skewed"]
-    assert "__salt__" not in fn(spark, SF).columns
-
-
 def test_semantic_dedup_centroid_mod_is_corpus_scaled(spark):
     # The centroid sampling modulus must track the corpus (~sqrt(N)),
     # not a fixed literal: a fixed mod admits N/mod centroids and the
@@ -564,36 +554,6 @@ def test_quality_classifier_learned_scoring_is_broadcast_only(spark):
     plan = _plan(spark, "quality_classifier_learned")
     assert "BroadcastNestedLoopJoin" in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-
-
-def test_hybrid_fusion_inputs_are_bounded_ranked_lists(spark):
-    # The fusion layer must consume only the two per-query top-k
-    # ranked lists: both sides of the full-outer fusion join sit above
-    # a rank<=k window filter (lex, sem, plus the fused re-rank = 3
-    # row_number windows), and the semantic stage streams the corpus
-    # against the BROADCAST probe set — the corpus is never on the
-    # build side of anything.
-    plan = _plan(spark, "hybrid_search")
-    assert "FullOuter" in plan
-    assert plan.count("row_number()") >= 3
-    assert "BroadcastNestedLoopJoin" in plan
-
-
-def test_corpus_bucketed_join_is_shuffle_free(spark):
-    # The whole payoff of write_bucketed: both sides of the doc_id join
-    # are bucketed (and sorted) by doc_id with the same bucket count, so
-    # the executed plan must contain NO exchange at all — the shuffle
-    # was paid once at write time. With auto-broadcast disabled
-    # (emulating two 100 TB relations) the join must still be
-    # exchange-free, i.e. a sort-merge over co-located buckets.
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _plan(spark, "corpus_bucketed_join")
-        assert "Exchange" not in plan
-        assert "SortMergeJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
 
 
 def test_shared_artifacts_build_once_and_serve_from_parquet(spark):

@@ -13,7 +13,7 @@ REGISTERED = {
     "bm25_index_roundtrip", "bm25_route", "bm25_route_streaming",
     "bm25_search", "boilerplate_removal", "boilerplate_screen",
     "boilerplate_screen_streaming", "chunk_dedup",
-    "cluster_representatives", "cms_heavy_hitters", "corpus_bucketed_join",
+    "cluster_representatives", "cms_heavy_hitters",
     "corpus_curation", "corpus_drift", "corpus_stats_cube",
     "corpus_upsert", "corpus_upsert_streaming", "curation_pipeline",
     "dataset_split", "decon_cells_roundtrip", "decontaminate",
@@ -25,8 +25,8 @@ REGISTERED = {
     "dedup_lsh_screen", "dedup_lsh_screen_streaming", "dedup_minhash",
     "dedup_ngram_jaccard", "dedup_simhash", "dedup_simhash_pairs",
     "detect_duplicates", "distinct_kmv", "doc_chunks", "doc_fingerprint",
-    "doc_repetition", "doc_topk_similar", "docs_csv_roundtrip",
-    "docs_jsonl_roundtrip", "docs_orc_roundtrip", "domain_mixture",
+    "doc_repetition", "doc_topk_similar",
+    "docs_orc_roundtrip", "domain_mixture",
     "dsir_score", "dsir_score_streaming", "dsir_weights", "dup_clusters",
     "dup_labels_compact", "dup_labels_roundtrip", "dup_labels_upsert",
     "dup_labels_upsert_streaming", "dup_overlap", "dup_weighting",
@@ -38,8 +38,8 @@ REGISTERED = {
     "events_retention", "events_rolling", "events_sessionize",
     "events_sessionize_stateful", "events_window",
     "events_window_streaming", "fuzzy_decon_recall", "hash_decode",
-    "hash_explode_dedup", "hybrid_fresh_recall", "hybrid_recall",
-    "hybrid_search", "hybrid_search_fresh", "hybrid_search_served",
+    "hash_explode_dedup",
+   
     "image_index_roundtrip", "image_near_dup", "image_near_dup_capped",
     "image_pdq_hashes", "image_pdq_near_dup", "image_screen",
     "image_screen_streaming", "ivf_index_roundtrip", "ivf_upsert_assign",
@@ -50,12 +50,12 @@ REGISTERED = {
     "lsh_index_merge", "lsh_index_roundtrip", "minhash_recall",
     "multimodal_audio", "multimodal_features", "multimodal_frames",
     "multimodal_image_ahash", "multimodal_resize", "ngram_topk",
-    "opq_auto_gate", "opq_balance", "pack_sequences",
+    "pack_sequences",
     "pdq_duplicates_banded", "pdq_duplicates_naive",
     "pdq_duplicates_probed", "pdq_duplicates_t08_probe30",
     "pdq_duplicates_t08_probed", "pdq_pairs", "pii_redact",
     "pq_codes_upsert", "pq_codes_upsert_streaming", "pq_recall",
-    "pq_recall_skewed", "pq_recall_skewed_opq", "quality_band",
+    "quality_band",
     "quality_classifier", "quality_classifier_agreement",
     "quality_classifier_learned", "quality_classifier_learned_streaming",
     "quality_classifier_streaming", "rollup_orders",
@@ -67,7 +67,7 @@ REGISTERED = {
     "tpch_q11_like", "tpch_q12_like", "tpch_q13", "tpch_q14",
     "tpch_q15_like", "tpch_q16_like", "tpch_q17_like", "tpch_q18",
     "tpch_q19_like", "tpch_q20_like", "tpch_q21_like", "tpch_q22_like",
-    "tpch_q2_like", "tpch_q3", "tpch_q4_like", "tpch_q5", "tpch_q5_skewed",
+    "tpch_q2_like", "tpch_q3", "tpch_q4_like", "tpch_q5",
     "tpch_q6", "tpch_q7_like", "tpch_q8_like", "tpch_q9_like",
     "upsert_labels_agreement", "url_domain_stats", "url_duplicates",
     "url_duplicates_capped", "url_duplicates_probed", "url_normalize",
