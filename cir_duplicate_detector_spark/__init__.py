@@ -33,7 +33,7 @@ from .functions.hashes import (
 )
 from .cache import materialize, release_cached
 from .compat import PDQHashTree, run_in_parallel
-from .functions.url import extract_base_url, normalize_url, url_domain
+from .functions.url import extract_base_url, normalize_url
 from .operators.pdq import (
     add_pdq_duplicates,
     drop_literal_series_duplicates,
@@ -68,7 +68,6 @@ __all__ = [
     # lifetime control + crawl helpers
     "materialize",
     "release_cached",
-    "url_domain",
 ]
 
 

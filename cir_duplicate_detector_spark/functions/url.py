@@ -60,25 +60,6 @@ def normalize_url(url: Column | str) -> Column:
 extract_base_url = normalize_url
 
 
-def url_domain(url: Column | str) -> Column:
-    """Registrable domain-ish key from a raw url: the netloc of the
-    normalized base (text before the first ``/``), minus any ``:port``
-    and a leading ``www.``. The grouping key crawl curation aggregates
-    by (per-domain doc counts, dup rates, quality screens)."""
-    base = normalize_url(url)
-    netloc = F.regexp_extract(base, r"^([^/?;]+)", 1)
-    no_port = F.regexp_replace(netloc, r":[0-9]+$", "")
-    return F.regexp_replace(no_port, r"^www\.", "")
-
-
-def url_domain_sql(expr: str) -> str:
-    """DuckDB twin of :func:`url_domain`."""
-    base = normalize_url_sql(expr)
-    netloc = f"regexp_extract({base}, '^([^/?;]+)', 1)"
-    no_port = f"regexp_replace({netloc}, ':[0-9]+$', '')"
-    return f"regexp_replace({no_port}, '^www\\.', '')"
-
-
 # The same normalization for the DuckDB oracle (ANSI SQL, RE2 regex;
 # DuckDB's replacement syntax is \1 where Java's is $1).
 def normalize_url_sql(expr: str) -> str:

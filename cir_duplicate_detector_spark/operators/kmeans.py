@@ -19,11 +19,11 @@ an iterative float algorithm behind a value-hash oracle:
   its values in vec_id order, then the per-salt partials fold in salt
   order — a fixed association tree, so the double result is identical
   on every engine and every partitioning, and per-task list state is
-  bounded by members/(k·KM_SALTS), not by corpus size. (Same pattern
-  as the KMV phase-1 bottom-k.) With the recommended k ≈ √N scaling
-  the per-cell fold stays ~√N/KM_SALTS — bounded growth; a pipeline
-  that does not need bit-reproducibility can swap phase 1 for a plain
-  ``sum`` and keep the identical plan shape minus the sorts.
+  bounded by members/(k·KM_SALTS), not by corpus size. With the
+  recommended k ≈ √N scaling the per-cell fold stays ~√N/KM_SALTS —
+  bounded growth; a pipeline that does not need bit-reproducibility
+  can swap phase 1 for a plain ``sum`` and keep the identical plan
+  shape minus the sorts.
 
 Iterations are a fixed, unrolled count (default 3): each round is one
 broadcast-join assignment pass + one two-shuffle mean — no driver-side

@@ -373,9 +373,15 @@ def _banded_sql(
 
     Shuffle-hash-join shaped: band rows hash-partition by
     (band_id, band_val), so the candidate join scales out with the
-    cluster; AQE's skew handling covers pathological bands (e.g. the
-    all-zero band of near-black images). With a restricted probe set
-    the probe's band rows broadcast and the corpus's stream. Candidates
+    cluster. Pathological bands are NOT handled: a cluster of K
+    near-duplicates (or the all-zero band of near-black images) puts
+    K×K candidates per shared band value in one task. AQE's skew split
+    cannot help, because it splits partitions by input bytes and the
+    band rows are tiny. On a 4-vCPU host, t=0.94 over 4,000 random
+    hashes plus one cluster of K=1,000 within 2 bits took 74 s banded
+    and 6.9 s naive (ROADMAP.md item 4, near-duplicate clusters).
+    With a restricted probe set the probe's band rows broadcast and the
+    corpus's stream. Candidates
     are verified inline with the flat codegen Hamming predicate —
     duplicate candidates from multi-band collisions are NOT deduped
     here; symmetrize's min-distance step collapses them.

@@ -1784,8 +1784,7 @@ def _quality_lda_features(docs: DataFrame) -> DataFrame:
     f1 = stopword hits per million tokens, f2 = token count,
     f3 = punctuation per million chars. Integer features keep every
     TRAINING aggregate an order-free bigint sum (a double sum's value
-    depends on partial-aggregation order — the reason money sums here
-    accumulate in DECIMAL)."""
+    depends on partial-aggregation order)."""
     ws = tokens("text")
     n_words = F.size(ws).cast("bigint")
     stop = _count_matches(F.col("text"), lang_pattern(STOPWORDS_EN))

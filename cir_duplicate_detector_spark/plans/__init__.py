@@ -11,16 +11,15 @@ from .extension_queries import EXTENSION_QUERIES
 
 ALL_QUERIES: dict[str, tuple] = {**CORE_QUERIES, **EXTENSION_QUERIES}
 
-# Guard: the streaming sessionize/window/distinct queries must answer
-# the SAME question as their batch twins — they share one oracle string
-# by construction, and an edit that decouples them should fail loudly
-# here, not silently weaken the streaming check (VERDICT r2 item 8).
+# Guard: each streaming / round-trip query must answer the SAME
+# question as its batch twin — they share one oracle string by
+# construction, and an edit that decouples them should fail loudly
+# here, not silently weaken the streaming check. A pair naming an
+# unregistered query fails too, so deleting a query cannot leave a
+# stale pair that checks nothing.
 for _batch, _streaming in [
-    ("events_sessionize", "events_sessionize_stateful"),
-    ("events_window", "events_window_streaming"),
     ("bloom_dedup", "bloom_dedup_streaming"),
     ("dedup_lsh_screen", "dedup_lsh_screen_streaming"),
-    ("events_attribution", "events_attribution_streaming"),
     ("corpus_upsert", "corpus_upsert_streaming"),
     ("ivf_upsert_assign", "ivf_upsert_assign_streaming"),
     # index round-trip is identity: the persisted-and-reread quantizer
@@ -39,7 +38,6 @@ for _batch, _streaming in [
     ("bm25_route", "bm25_index_roundtrip"),
     ("decontaminate_scrub", "decontaminate_scrub_streaming"),
     ("decontaminate_fuzzy", "decontaminate_fuzzy_canonical"),
-    ("events_anomaly", "events_anomaly_streaming"),
     ("quality_classifier_learned", "quality_classifier_learned_streaming"),
     ("image_screen", "image_screen_streaming"),
     ("image_screen", "image_index_roundtrip"),
@@ -48,8 +46,10 @@ for _batch, _streaming in [
     ("semantic_dedup_learned", "semantic_cells_roundtrip"),
     ("decontaminate_semantic", "decon_cells_roundtrip"),
 ]:
-    if _batch in ALL_QUERIES and _streaming in ALL_QUERIES:
-        assert ALL_QUERIES[_batch][1] == ALL_QUERIES[_streaming][1], (
-            f"{_streaming} oracle diverged from {_batch}; batch and "
-            "streaming twins must share one oracle string"
-        )
+    assert _batch in ALL_QUERIES and _streaming in ALL_QUERIES, (
+        f"twin pair ({_batch}, {_streaming}) names an unregistered query"
+    )
+    assert ALL_QUERIES[_batch][1] == ALL_QUERIES[_streaming][1], (
+        f"{_streaming} oracle diverged from {_batch}; batch and "
+        "streaming twins must share one oracle string"
+    )

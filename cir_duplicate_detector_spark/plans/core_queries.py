@@ -182,7 +182,7 @@ def q_url_duplicates_capped(spark, sf_dir):
     """`find_url_duplicates(max_group_size=...)` against a PLANTED
     mega-group (every document contributes one row with the same viral
     URL — the link-shortener/platform-root pathology the cap exists
-    for, mirroring `tpch_q5_skewed`'s planted-skew pattern): the viral
+    for): the viral
     group is dropped by the count pre-pass before the member-list
     window can materialize a corpus-sized array per row; the organic
     duplicate groups pass through untouched."""

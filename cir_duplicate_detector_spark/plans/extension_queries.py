@@ -1,15 +1,12 @@
 """Extension query registry aggregator.
 
-The per-family modules (``ext_dedup``, ``ext_ann``, ``ext_text``,
-``ext_pipeline``, ``ext_events``, ``ext_multimodal``,
-``ext_analytics``, shared helpers in ``ext_common``) each export a
-``*_QUERIES`` dict; this module merges them into
-``EXTENSION_QUERIES`` in family order.
+The per-family modules (``ext_dedup``, ``ext_ann``, ``ext_ann_recall``,
+``ext_text``, ``ext_pipeline``, ``ext_multimodal``, shared helpers in
+``ext_common``) each export a ``*_QUERIES`` dict; this module merges
+them into ``EXTENSION_QUERIES`` in family order.
 
 Floating-point discipline (everything here is checked by
 value-hash):
-* money-like sums accumulate in DECIMAL (exact, order-independent)
-  and cast to double at the end;
 * ratios/similarities are single divisions of exact integers;
 * cosine scores are sequential double folds, which Spark's
   aggregate() and DuckDB's list_sum() evaluate in the same order
@@ -26,9 +23,7 @@ from .ext_ann import *  # noqa: F401,F403
 from .ext_ann_recall import *  # noqa: F401,F403
 from .ext_text import *  # noqa: F401,F403
 from .ext_pipeline import *  # noqa: F401,F403
-from .ext_events import *  # noqa: F401,F403
 from .ext_multimodal import *  # noqa: F401,F403
-from .ext_analytics import *  # noqa: F401,F403
 
 from . import (
     ext_dedup,
@@ -36,9 +31,7 @@ from . import (
     ext_ann_recall,
     ext_text,
     ext_pipeline,
-    ext_events,
     ext_multimodal,
-    ext_analytics,
 )
 
 EXTENSION_QUERIES: dict[str, tuple] = {
@@ -47,7 +40,5 @@ EXTENSION_QUERIES: dict[str, tuple] = {
     **ext_ann_recall.ANN_RECALL_QUERIES,
     **ext_text.TEXT_QUERIES,
     **ext_pipeline.PIPELINE_QUERIES,
-    **ext_events.EVENTS_QUERIES,
     **ext_multimodal.MULTIMODAL_QUERIES,
-    **ext_analytics.ANALYTICS_QUERIES,
 }

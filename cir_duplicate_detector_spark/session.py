@@ -3,9 +3,7 @@
 The engine targets large clusters (100 TB-scale inputs); the configs here
 are the ones that matter identically on local[N] and on a real cluster:
 AQE (runtime re-planning, skew-join handling), sane shuffle partitioning,
-Arrow for the few Pandas-UDF paths, and nanosecond-parquet compatibility
-(the driver testdata writes TIMESTAMP(NANOS), which vanilla Spark refuses
-to read).
+a pinned UTC session zone, and Arrow for the few Pandas-UDF paths.
 """
 
 from __future__ import annotations
@@ -27,13 +25,8 @@ RECOMMENDED_CONFS: dict[str, str] = {
     # 8MB keeps those stages wide without fragmenting IO-bound stages.
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8MB",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Some driver testdata generations carry INT64 TIMESTAMP(NANOS);
-    # read those as raw nanos (long) and convert explicitly
-    # (sources.tables.with_event_time handles both encodings).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Pin the session zone so TIMESTAMP_NTZ→epoch conversions are
-    # deterministic and equal to DuckDB's epoch_us(naive ts) regardless
-    # of host zone.
+    # Pin the session zone so timestamp→epoch conversions are
+    # deterministic regardless of host zone.
     "spark.sql.session.timeZone": "UTC",
     # Arrow for pandas_udf / mapInPandas paths (multimodal stubs).
     "spark.sql.execution.arrow.pyspark.enabled": "true",

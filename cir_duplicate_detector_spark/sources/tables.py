@@ -1,62 +1,9 @@
-"""Parquet sources for the driver testdata star schema (TESTDATA.md).
-
-The testdata's ``events.ts`` has shipped in two physical encodings
-across driver generations: INT64 TIMESTAMP(NANOS) (arrives as a raw
-nanos long under ``spark.sql.legacy.parquet.nanosAsLong=true``, set by
-:mod:`..session`) and TIMESTAMP(MICROS) (arrives as
-timestamp/timestamp_ntz). :func:`with_event_time` normalizes either to
-an explicit epoch-microsecond ``ts_us`` column plus a ``ts_ts``
-timestamp, so every event-time operator sees one canonical form that
-matches DuckDB's ``epoch_us(ts)``.
-"""
+"""Parquet sources for the driver testdata tables (TESTDATA.md)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def with_event_time(df: DataFrame) -> DataFrame:
-    """Add ``ts_us`` (epoch microseconds, bigint) and ``ts_ts``
-    (TIMESTAMP) derived from the raw ``ts`` column, whichever physical
-    type the parquet delivered. Works on batch and streaming frames.
-    """
-    kind = df.schema["ts"].dataType.simpleString()
-    if kind == "bigint":
-        # Raw nanos. Integer div, NOT `/`: double division loses
-        # precision on epoch-nano magnitudes (> 2^53) and lands a
-        # microsecond off.
-        ts_us = F.expr("ts div 1000")
-    else:
-        # timestamp or timestamp_ntz. The NTZ→TZ cast interprets the
-        # value in the session time zone, which session.py pins to UTC,
-        # so unix_micros equals DuckDB's epoch_us over the same naive
-        # timestamp.
-        ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    return df.withColumn("ts_us", ts_us).withColumn(
-        "ts_ts", F.timestamp_micros(F.col("ts_us"))
-    )
-
-TABLE_NAMES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+from pyspark.sql import DataFrame, SparkSession
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        df = with_event_time(df)
-    return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

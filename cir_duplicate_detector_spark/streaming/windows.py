@@ -1,14 +1,13 @@
-"""Structured Streaming twins of the batch event operators.
+"""Structured Streaming twins of the batch extension operators.
 
-The tumbling-window aggregation runs as a real streaming query —
-file-source ``readStream`` → event-time window with watermark →
-memory sink — driven to completion with an availableNow trigger, so a
-batch caller gets back an ordinary DataFrame whose contents match the
-batch operator (and the same DuckDB oracle) exactly.
+Each function runs a real streaming query — file-source ``readStream``
+over a staged parquet directory → memory sink — driven to completion
+with an availableNow trigger, so a batch caller gets back an ordinary
+DataFrame whose contents match the batch operator (and the same DuckDB
+oracle) exactly.
 
 On a live cluster the same plan runs continuously: swap the trigger for
-a processing-time one and the memory sink for kafka/delta; the watermark
-(1 hour) bounds state for late data.
+a processing-time one and the memory sink for kafka/delta.
 """
 
 from __future__ import annotations
@@ -19,20 +18,14 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.events import HOUR_US
-from ..sources.tables import with_event_time
 
-
-
-def stage_source(path: str, prefix: str, name: str | None = None) -> str:
+def stage_source(path: str, prefix: str) -> str:
     """Stage a parquet source for the file-stream source (which needs a
     DIRECTORY of data files): symlink the single file, or — when the
     source is itself a directory of part files (replica corpora, real
-    table directories) — symlink each data file. Zero-copy either way.
-    ``name`` sets the staged file-name stem (the stateful harness needs
-    data files to list lexically before its sentinel files)."""
+    table directories) — symlink each data file. Zero-copy either way."""
     stage = tempfile.mkdtemp(prefix=prefix)
-    stem = name or os.path.splitext(os.path.basename(path))[0]
+    stem = os.path.splitext(os.path.basename(path))[0]
     if os.path.isdir(path):
         n = 0
         for f in sorted(os.listdir(path)):
@@ -47,87 +40,6 @@ def stage_source(path: str, prefix: str, name: str | None = None) -> str:
     else:
         os.symlink(path, os.path.join(stage, f"{stem}.parquet"))
     return stage
-
-
-def streaming_tumbling_window(
-    spark: SparkSession, sf_dir: str, width_us: int = HOUR_US
-) -> DataFrame:
-    """Run the tumbling-window aggregation as a streaming query over the
-    events parquet and return the final result table.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    # The file stream source requires a DIRECTORY; stage the single
-    # parquet file into a temp dir via symlink (zero-copy).
-    stage = stage_source(path, "events_stream_")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-    )
-    stream = with_event_time(stream)
-    seconds = width_us // 1_000_000
-    agg = (
-        stream.withWatermark("ts_ts", "1 hour")
-        .groupBy(F.window("ts_ts", f"{seconds} seconds"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            F.unix_micros(F.col("window.start")).alias("window_start_us"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    name = f"stream_win_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
-
-
-def streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exact-distinct: per-type distinct user counts computed
-    on a stream.
-
-    Distinct aggregates are unsupported in Structured Streaming, so this
-    uses the canonical decomposition: keyed ``dropDuplicates`` state on
-    ``(event_type, user_id)`` feeding a running count in complete mode.
-    State is one entry per distinct key — the bounded-state shape; a
-    live pipeline would add a watermark via ``dropDuplicatesWithinWatermark``
-    to expire keys (the drain job here sees bounded input instead).
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    stage = stage_source(path, "events_distinct_")
-    counts = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-        .select("event_type", "user_id")
-        .dropDuplicates(["event_type", "user_id"])
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n_users"))
-    )
-    name = f"stream_distinct_{uuid.uuid4().hex[:8]}"
-    query = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
 
 
 def _stream_near_dup_corpus(
@@ -562,186 +474,6 @@ def streaming_pq_encode(
     return spark.table(name)
 
 
-def streaming_dedup_to_parquet(
-    spark: SparkSession, sf_dir: str, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Streaming ingest with an exactly-once file sink: events stream →
-    per-key dedup (``dropDuplicates`` on event_id, state bounded by the
-    watermark) → parquet append with a checkpoint.
-
-    The checkpoint carries source offsets + sink commit log, so
-    re-running over the same input is a no-op — the restart-resume
-    guarantee a 100 TB ingest pipeline depends on
-    (``tests/test_streaming_sink.py`` restarts the query and asserts
-    zero duplicate output).
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    stage = stage_source(path, "events_sink_")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-    )
-    stream = (
-        with_event_time(stream)
-        .withWatermark("ts_ts", "1 hour")
-        .dropDuplicates(["event_id"])
-        .select("event_id", "user_id", "event_type", "value", "ts_us")
-    )
-    query = (
-        stream.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
-def streaming_purchase_attribution(
-    spark: SparkSession, sf_dir: str, lookback_us: int = HOUR_US
-) -> DataFrame:
-    """Last-touch attribution AS A STREAM: the stream-static form of
-    ``operators.events.purchase_attribution``. Non-purchase TOUCH
-    events arrive on a file stream and join the STATIC purchase-window
-    table through the same bucketed ``(user_id, bucket)`` equi-key +
-    inline interval predicate as the batch ``range_join`` — a
-    stream-static inner join, the supported continuous-ingest shape
-    (each micro-batch pays one hash join against the window table; on
-    a live pipeline the windows relation would be a compacted Delta
-    table). Per-purchase counts/value accumulate in complete-mode
-    aggregation state keyed by purchase_id — bounded by the number of
-    purchases with in-window traffic, not by the stream. The
-    zero-preserving purchase left join runs batch-side on the drained
-    result, so the query shares the batch twin's DuckDB oracle by
-    construction.
-    """
-    from ..operators.events import _sum_value_exact
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    stage = stage_source(path, "events_attr_stream_")
-    touches = (
-        with_event_time(spark.readStream.schema(schema).parquet(stage))
-        .where(F.col("event_type") != "purchase")
-        .select("user_id", "ts_us", "value")
-        .withColumn("bucket", F.expr(f"ts_us div {int(lookback_us)}"))
-    )
-    wins = (
-        with_event_time(spark.read.parquet(path))
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts_us").alias("purchase_ts_us"),
-            (F.col("ts_us") - lookback_us).alias("start_us"),
-            F.col("ts_us").alias("end_us"),
-        )
-    )
-    spans = wins.withColumn(
-        "bucket",
-        F.explode(
-            F.sequence(
-                F.expr(f"start_us div {int(lookback_us)}"),
-                F.expr(f"(end_us - 1) div {int(lookback_us)}"),
-            )
-        ),
-    ).select("purchase_id", "user_id", "bucket", "start_us", "end_us")
-    agg = (
-        touches.join(spans, ["user_id", "bucket"])
-        .where(
-            (F.col("ts_us") >= F.col("start_us"))
-            & (F.col("ts_us") < F.col("end_us"))
-        )
-        .groupBy("purchase_id")
-        .agg(
-            F.count("*").alias("n_attributed"),
-            _sum_value_exact().alias("attributed_value"),
-        )
-    )
-    name = f"stream_attr_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    matched = spark.table(name)
-    return (
-        wins.select("purchase_id", "user_id", "purchase_ts_us")
-        .join(matched, "purchase_id", "left")
-        .select(
-            "purchase_id",
-            "user_id",
-            "purchase_ts_us",
-            F.coalesce(F.col("n_attributed"), F.lit(0))
-            .cast("bigint")
-            .alias("n_attributed"),
-            F.coalesce(F.col("attributed_value"), F.lit(0.0)).alias(
-                "attributed_value"
-            ),
-        )
-    )
-
-
-def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly-once ingest from an at-least-once source — the
-    watermark-BOUNDED form of per-key dedup state.
-
-    ``streaming_distinct_users`` / ``streaming_dedup_to_parquet`` hold
-    one state entry per distinct key for the lifetime of the query:
-    fine for a drain job, unbounded on a continuous 100 TB ingest. This
-    is the shape a live pipeline runs instead: events arrive on a file
-    stream with planted retransmissions (every 7th event is delivered
-    twice — the at-least-once contract of any replayable bus), the
-    stream carries an event-time watermark, and
-    ``dropDuplicatesWithinWatermark`` on the delivery key keeps the
-    FIRST copy while holding per-key state only until the watermark
-    passes that key's event time plus the delay — state is bounded by
-    event-rate × delay window, independent of corpus cardinality. The
-    guarantee is correspondingly scoped: duplicates separated by more
-    than the delay can both pass (the documented at-most-one-per-window
-    semantics); retransmissions in real buses arrive seconds apart, so
-    a 1 h delay covers them with margin.
-
-    Retained deliveries are emitted append-mode; the batch-side rollup
-    counts them per type. Oracle: distinct event_id per type over the
-    duplicated delivery relation — each event counted once despite
-    double delivery.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    stage = stage_source(path, "events_wm_dedup_")
-    raw = spark.readStream.schema(schema).parquet(stage)
-    deliveries = raw.unionAll(raw.where("event_id % 7 = 0"))
-    retained = (
-        with_event_time(deliveries)
-        .withWatermark("ts_ts", "1 hour")
-        .dropDuplicatesWithinWatermark(["event_id"])
-        .select("event_id", "event_type")
-    )
-    name = f"stream_wm_dedup_{uuid.uuid4().hex[:8]}"
-    query = (
-        retained.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return (
-        spark.table(name)
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n_events"))
-    )
-
-
 def streaming_boilerplate_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The boilerplate span screen AS A STREAM — the span-level sibling
     of :func:`streaming_lsh_screen`: the existing split's boilerplate
@@ -956,68 +688,6 @@ def streaming_sentence_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     query.awaitTermination()
     return spark.table(name)
-
-
-def streaming_rate_anomalies(
-    spark: SparkSession, sf_dir: str, width_us: int = HOUR_US
-) -> DataFrame:
-    """Event-rate anomaly ALERTING as a stream — the deployment
-    `operators.events.rate_anomalies` actually ships (a batch anomaly
-    report is a post-mortem; alerting is inherently continuous).
-
-    Split along the state boundary the batch docstring already names:
-
-    * the per-(type, window) COUNTS are stream-native — event-time
-      tumbling window + watermark, complete-mode aggregation state
-      bounded by #types × #open-windows (the same shape as
-      `streaming_tumbling_window`);
-    * the per-type mean/σ baseline is SLOWER-MOVING STATE evaluated
-      batch-side on the drained counts (on a live pipeline it would be
-      a periodically-refreshed static table, exactly like
-      `streaming_sentence_screen`'s digest index) — a #types-row
-      aggregate, broadcast back onto the counts, then the exact-integer
-      two-sigma rule ``(cnt·n − Σcnt)² > 4·(n·Σcnt² − (Σcnt)²)``.
-
-    Drained counts equal the batch bucketing (epoch-aligned windows:
-    ``unix_micros(window.start) == (ts_us div w)·w``), so the twin
-    shares the batch `SQL_EVENTS_ANOMALY` oracle by construction — the
-    same drain-then-stateless-postjoin contract as
-    `streaming_purchase_attribution`.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    stage = stage_source(path, "events_anom_stream_")
-    stream = with_event_time(spark.readStream.schema(schema).parquet(stage))
-    seconds = width_us // 1_000_000
-    counts = (
-        stream.withWatermark("ts_ts", "1 hour")
-        .groupBy(F.window("ts_ts", f"{seconds} seconds"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "event_type",
-            F.unix_micros(F.col("window.start")).alias("window_start_us"),
-            "n_events",
-        )
-    )
-    name = f"stream_anom_{uuid.uuid4().hex[:8]}"
-    query = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    from ..cache import materialize
-    from ..operators.events import anomaly_flag
-
-    # anomaly_flag self-joins its input (counts ⋈ stats-over-counts);
-    # two scans of one memory-sink table fail analysis (duplicate
-    # attribute ids from the shared streaming relation), so snapshot
-    # the drained counts first — also the honest serving shape: the
-    # baseline reads a materialized counts table, not the live stream.
-    return anomaly_flag(materialize(spark.table(name)))
 
 
 def streaming_quality_classifier_learned(

@@ -56,7 +56,6 @@ def perturb_text(text_col, rep_col):
 DEFAULT_QUERIES = [
     "decontaminate",
     "semantic_dedup",
-    "distinct_kmv",
     "bloom_dedup",
     "chunk_dedup",
     "token_budget_sample",
@@ -74,7 +73,6 @@ def build_replica(spark, n: int, perturb: bool = True) -> str:
     for table, key in [
         ("documents", "doc_id"),
         ("embeddings", "vec_id"),
-        ("events", "event_id"),
     ]:
         src = spark.read.parquet(f"{SRC}/{table}.parquet")
         parts = []

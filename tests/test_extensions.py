@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from cir_duplicate_detector_spark.operators import (
     dedup,
-    events,
     multimodal,
     similarity,
     textops,
@@ -82,30 +81,6 @@ def test_knn_lsh_subset_of_bruteforce_space(spark):
     for q in {r["query_id"] for r in lsh}:
         ranks = sorted(r["rank"] for r in lsh if r["query_id"] == q)
         assert ranks == list(range(1, len(ranks) + 1))
-
-
-def test_sessionize_gap_semantics(spark):
-    us = 1_000_000
-    rows = [
-        # user 1: two events 10 min apart (one session), then 40 min gap
-        (1, 1, 0 * us, 10.0),
-        (2, 1, 600 * us, 10.0),
-        (3, 1, 3000 * us, 5.0),
-        # user 2: single event
-        (4, 2, 0 * us, 1.0),
-    ]
-    ev = spark.createDataFrame(
-        rows, "event_id bigint, user_id bigint, ts_us bigint, value double"
-    )
-    got = {
-        (r["user_id"], r["session_id"]): r
-        for r in events.sessionize(ev, gap_us=events.SESSION_GAP_US).collect()
-    }
-    assert len(got) == 3
-    assert got[(1, 0)]["n_events"] == 2
-    assert got[(1, 1)]["n_events"] == 1
-    assert got[(2, 0)]["n_events"] == 1
-    assert got[(1, 0)]["sum_value"] == 20.0
 
 
 def test_multimodal_features_match_hashlib(spark):
@@ -208,41 +183,6 @@ def test_knn_ivf_ranked_and_self_excluded(spark):
         assert all(r["neighbor_id"] != q for r in rows)
 
 
-def test_asof_join_prior_purchase(spark):
-    # Replicates the registered as-of operator on a hand-built frame.
-    from pyspark.sql import Window
-
-    us = 1_000_000
-    rows = [
-        (1, 1, 0 * us, "purchase"),
-        (2, 1, 10 * us, "click"),     # after purchase @0
-        (3, 1, 20 * us, "purchase"),
-        (4, 1, 30 * us, "click"),     # after purchase @20
-        (5, 2, 5 * us, "click"),      # user 2 never purchased -> null
-    ]
-    ev = spark.createDataFrame(
-        rows, "event_id bigint, user_id bigint, ts_us bigint, event_type string"
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_us", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    last_p = F.last(
-        F.when(F.col("event_type") == "purchase", F.col("ts_us")),
-        ignorenulls=True,
-    ).over(w)
-    got = {
-        r["event_id"]: r["lp"]
-        for r in ev.withColumn("lp", last_p)
-        .where(F.col("event_type") == "click")
-        .collect()
-    }
-    assert got[2] == 0 * us
-    assert got[4] == 20 * us
-    assert got[5] is None
-
-
 def test_connected_components_transitive_closure(spark):
     # chain 1-2-3 (1,3 never directly paired) + isolated pair 10-11;
     # node 4 appears in no pair and must not appear in the output.
@@ -323,20 +263,6 @@ def test_normalized_exact_dedup_merges_reformatted(spark):
     assert sorted(got[0]["members"]) == [1, 2, 3]
     # Byte-exact dedup sees nothing to merge on the same input.
     assert dedup.exact_duplicates(docs).count() == 0
-
-
-def test_url_domain_extraction(spark):
-    from cir_duplicate_detector_spark.functions.url import url_domain
-
-    rows = spark.createDataFrame(
-        [("https://WWW.Example.com:8080/path?q=1#frag",),
-         ("example.com/path",),
-         ("http://sub.example.org;",),
-         ("www.plain.net",)],
-        "url string",
-    )
-    got = [r[0] for r in rows.select(url_domain("url")).collect()]
-    assert got == ["example.com", "example.com", "sub.example.org", "plain.net"]
 
 
 def test_pq_codes_compress_and_adc_ranks_near_vector_first(spark):
@@ -550,28 +476,6 @@ def test_image_index_roundtrip_identical(spark, tmp_path):
     assert rows(composed) == rows(direct)
 
 
-def test_retention_cohorts_ages_and_sizes(spark):
-    DAY = events.DAY_US
-    rows = [
-        # user 1: cohort day 0, active days 0/1/3 (two events day 0 —
-        # distinct-day dedup must count them once)
-        (1, 0), (1, DAY // 2), (1, DAY + 1), (1, 3 * DAY),
-        # user 2: cohort day 0, active days 0/1
-        (2, 5), (2, DAY + 7),
-        # user 3: first seen day 1 — a DIFFERENT cohort, age 0 only
-        (3, DAY + 9),
-    ]
-    ev = spark.createDataFrame(rows, "user_id long, ts_us long")
-    got = {
-        (r.cohort_start_us, r.age_days): r.n_users
-        for r in events.retention_cohorts(ev).collect()
-    }
-    assert got == {
-        (0, 0): 2, (0, 1): 2, (0, 3): 1,
-        (DAY, 0): 1,
-    }
-
-
 def test_ivf_assign_incoming_uses_base_structure_only(spark):
     # Incoming vectors must land in the BASE corpus's cell structure:
     # every fine id comes from the base (or -1), and an incoming vector
@@ -656,36 +560,6 @@ def test_chunk_documents_windows_and_overlap(spark):
     assert got[(3, 0)]["n_chunk_tokens"] == 0 and (3, 1) not in got
 
 
-def test_events_funnel_order_sensitivity(spark):
-    us = 1_000_000
-    rows = [
-        # user 1 completes the funnel in order
-        (1, 1, 0 * us, "view"), (2, 1, 10 * us, "click"), (3, 1, 20 * us, "purchase"),
-        # user 2 clicks BEFORE viewing: click doesn't count, purchase
-        # requires a qualifying click -> stops at stage 1
-        (4, 2, 10 * us, "click"), (5, 2, 20 * us, "view"), (6, 2, 5 * us, "purchase"),
-        # user 3 views only
-        (7, 3, 0 * us, "view"),
-        # user 4 purchases with no view at all -> appears nowhere
-        (8, 4, 0 * us, "purchase"),
-    ]
-    ev = spark.createDataFrame(
-        rows, "event_id bigint, user_id bigint, ts_us bigint, event_type string"
-    )
-    # Replicate the operator's stage chain on the hand-built frame
-    # (the registered query is pinned to the events table).
-    v = ev.where("event_type = 'view'").groupBy("user_id").agg(F.min("ts_us").alias("v_ts"))
-    c = (ev.where("event_type = 'click'").join(v, "user_id")
-         .where(F.col("ts_us") >= F.col("v_ts"))
-         .groupBy("user_id").agg(F.min("ts_us").alias("c_ts")))
-    p = (ev.where("event_type = 'purchase'").join(c, "user_id")
-         .where(F.col("ts_us") >= F.col("c_ts"))
-         .groupBy("user_id").agg(F.min("ts_us").alias("p_ts")))
-    assert {r["user_id"] for r in v.collect()} == {1, 2, 3}
-    assert {r["user_id"] for r in c.collect()} == {1}
-    assert {r["user_id"] for r in p.collect()} == {1}
-
-
 def test_df_cap_drops_only_hot_keys(spark):
     from cir_duplicate_detector_spark.operators.dedup import df_capped
 
@@ -709,63 +583,6 @@ def test_substring_dup_hot_key_bounded(spark):
     )
     assert textops.substring_duplicates(docs, max_df=100).count() == 40 * 39 // 2
     assert textops.substring_duplicates(docs, max_df=10).count() == 0
-
-
-def test_range_join_bucketed_interval_semantics(spark):
-    # Window [100, 200) for user 1 with bucket 60: covers buckets 1-3.
-    # Events at 99 (out), 100 (in), 150 (in), 200 (out, half-open),
-    # and user 2 at 150 (wrong key).
-    ev = spark.createDataFrame(
-        [(1, 99), (2, 100), (3, 150), (4, 200), (5, 150)],
-        "event_id bigint, ts_us bigint",
-    ).withColumn("user_id", F.when(F.col("event_id") == 5, 2).otherwise(1))
-    wins = spark.createDataFrame(
-        [(1, 100, 200)], "user_id bigint, start_us bigint, end_us bigint"
-    )
-    got = sorted(
-        r["event_id"]
-        for r in events.range_join(ev, wins, bucket_us=60).collect()
-    )
-    assert got == [2, 3]
-
-
-def test_range_join_empty_interval_dropped(spark):
-    ev = spark.createDataFrame(
-        [(1, 1, 100)], "event_id bigint, user_id bigint, ts_us bigint"
-    )
-    wins = spark.createDataFrame(
-        [(1, 100, 100), (1, 200, 100)],
-        "user_id bigint, start_us bigint, end_us bigint",
-    )
-    assert events.range_join(ev, wins, bucket_us=60).count() == 0
-
-
-def test_purchase_attribution_lookback(spark):
-    H = 3_600_000_000
-    rows = [
-        # user 1: view 30 min before purchase (attributed), click 2h
-        # before (not), view at the purchase instant (not, half-open)
-        (1, 1, 0, "click", 1.0),
-        (2, 1, H + H // 2, "view", 2.0),
-        (3, 1, 2 * H, "purchase", 50.0),
-        (4, 1, 2 * H, "view", 4.0),
-        # user 2: purchase with nothing before -> kept at zero
-        (5, 2, H, "purchase", 9.0),
-    ]
-    ev = spark.createDataFrame(
-        rows,
-        "event_id bigint, user_id bigint, ts_us bigint,"
-        " event_type string, value double",
-    )
-    got = {
-        r["purchase_id"]: r
-        for r in events.purchase_attribution(ev, lookback_us=H).collect()
-    }
-    assert set(got) == {3, 5}
-    assert got[3]["n_attributed"] == 1
-    assert got[3]["attributed_value"] == 2.0
-    assert got[5]["n_attributed"] == 0
-    assert got[5]["attributed_value"] == 0.0
 
 
 def test_multimodal_audio_window_math(spark):
@@ -1403,55 +1220,6 @@ def test_image_near_duplicates_viral_group_cap(spark):
 
     with _pytest.raises(ValueError, match="max_group_size"):
         multimodal.image_near_duplicates(media, max_group_size=0)
-
-
-def test_rate_anomalies_integer_two_sigma_rule(spark):
-    from cir_duplicate_detector_spark.operators import events as ev_ops
-
-    h = ev_ops.HOUR_US
-    rows = []
-    eid = 0
-    # type "a": counts 1,1,1,1,1,10 over six hours -> hour 5 is an
-    # outlier. (Six, not five: one spike over an equal baseline sits at
-    # EXACTLY (n-1)/2 sigmas, so n=5 lands precisely ON the 2-sigma
-    # boundary and the strict > must NOT flag it — the integer rule
-    # makes that boundary exact instead of rounding-dependent.)
-    for hour, cnt in enumerate([1, 1, 1, 1, 1, 10]):
-        for _ in range(cnt):
-            rows.append((eid, 1, hour * h, "a", 1.0))
-            eid += 1
-    # type "b": flat counts -> no outlier
-    for hour in range(6):
-        for _ in range(3):
-            rows.append((eid, 2, hour * h, "b", 1.0))
-            eid += 1
-    ev = spark.createDataFrame(
-        rows,
-        "event_id long, user_id long, ts_us long, event_type string,"
-        " value double",
-    )
-    got = ev_ops.rate_anomalies(ev).collect()
-    flagged = {(r.event_type, r.window_start_us) for r in got}
-    assert ("a", 5 * h) in flagged
-    assert not [r for r in got if r.event_type == "b"]
-    r = [x for x in got if x.event_type == "a" and x.window_start_us == 5 * h][0]
-    # hand-check the integer rule: n=6, sum=15, sumsq=105
-    assert r.n_windows == 6 and r.sum_cnt == 15
-    assert r.dev_sq == (10 * 6 - 15) ** 2
-    assert r.var4 == 4 * (6 * 105 - 15 * 15)
-    assert r.dev_sq > r.var4
-    # the exact-2-sigma boundary case must NOT flag (strict >)
-    b_rows = [(9000 + i, 3, hr * h, "c", 1.0)
-              for hr, c in enumerate([1, 1, 1, 1, 10]) for i in range(c)]
-    # re-index event ids uniquely
-    b_rows = [(10_000 + i, u, t, ty, v)
-              for i, (_, u, t, ty, v) in enumerate(b_rows)]
-    ev_c = spark.createDataFrame(
-        b_rows,
-        "event_id long, user_id long, ts_us long, event_type string,"
-        " value double",
-    )
-    assert ev_ops.rate_anomalies(ev_c).count() == 0
 
 
 def test_quality_classifier_agreement_floor(spark):

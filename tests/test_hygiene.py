@@ -22,10 +22,18 @@ justified in place; an unexplained hit still fails.
 
 The package import must also stay light: importing it may not pull in
 pandas (about half a second of import time on its own).
+
+Every ``from .x import y`` in the package must resolve, function-level
+ones included: those run only when their function is called, so a
+deleted module or name would otherwise surface as an ImportError at
+call time.
 """
 
 from __future__ import annotations
 
+import ast
+import importlib
+import importlib.util
 import re
 import subprocess
 import sys
@@ -122,3 +130,35 @@ def test_package_import_does_not_load_pandas():
         check=True,
     )
     assert out.stdout.strip() == "False", out.stdout + out.stderr
+
+
+def test_every_package_import_resolves():
+    dangling = []
+    for path in sorted(PKG.rglob("*.py")):
+        parts = path.relative_to(PKG.parent).with_suffix("").parts
+        package = ".".join(parts[:-1])
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.ImportFrom) or (
+                node.level == 0
+                and (node.module or "").split(".")[0] != PKG.name
+            ):
+                continue
+            target = importlib.util.resolve_name(
+                "." * node.level + (node.module or ""), package
+            )
+            where = f"{path.relative_to(PKG.parent)}:{node.lineno}"
+            try:
+                module = importlib.import_module(target)
+            except ImportError as exc:
+                dangling.append(f"{where}: {exc}")
+                continue
+            for alias in node.names:
+                if alias.name == "*" or hasattr(module, alias.name):
+                    continue
+                try:
+                    importlib.import_module(f"{target}.{alias.name}")
+                except ImportError:
+                    dangling.append(f"{where}: {target} has no {alias.name}")
+    assert not dangling, "unresolved package imports:\n" + "\n".join(
+        dangling
+    )

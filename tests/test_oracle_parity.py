@@ -45,18 +45,7 @@ from .conftest import PARITY_SAMPLE_KEY
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+TABLES = ["documents", "embeddings"]
 
 
 @pytest.fixture(scope="module")

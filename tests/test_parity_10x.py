@@ -6,7 +6,7 @@ suite + the driver gate) and at sf0.1 by the `PARITY_SF01` sample —
 but not at the 10x replica. This module closes that gap: a fixed
 ~15-query sample of
 the exact parity comparison runs against the 10x synthetic replica
-(`scripts/replica_bench.build_replica` — documents/embeddings/events
+(`scripts/replica_bench.build_replica` — documents/embeddings
 replicated with per-copy id offsets; document copies per-copy
 PERTURBED since round 14 so duplicate families stay within-copy),
 with DuckDB executing the same oracle over the same replica parquet.
@@ -19,8 +19,8 @@ cross joins (sqrt-N-scaled k means ~600k x ~775 x 64d at 10x — hours
 in a single-threaded oracle, and the point of the oracle is value
 checking, not oracle-side scale). Those families are covered by their
 recall diagnostics; the exclusion is named here. Everything else —
-the dedup/text/events families whose banded/bucketed joins are the
-engine's scale story — is eligible.
+the dedup/text families whose banded/bucketed joins are the engine's
+scale story — is eligible.
 
 Opt-in (tens of minutes: DuckDB runs recursive-CTE closures over a
 600k-doc corpus):
@@ -48,7 +48,7 @@ from .test_oracle_parity import TABLES, _canon_rows
 REPO = Path(__file__).resolve().parents[1]
 SF01 = "/root/testdata/sf0.1"
 REPLICA = "/tmp/scale_replica_10x"
-REPLICATED = {"documents", "embeddings", "events"}
+REPLICATED = {"documents", "embeddings"}
 SAMPLE_SIZE = 15
 
 # Vector-chain families: oracle cost is corpus x sqrt(N) centroids (or
@@ -64,14 +64,8 @@ _EXCLUDED_PREFIXES = (
     "embedding_",
     "decon_cells",
     "decontaminate_semantic",
-    # tables the replica does not scale (flat timing, unscaled inputs)
-    "tpch_",
-    "ref30k_",
-    "ref300k_",
 )
 _EXCLUDED_NAMES = {
-    "rollup_orders",
-    "window_topn",
     "dup_overlap",
     "semantic_decon_recall",
     "fuzzy_decon_recall",  # exact cross-Jaccard truth side is O(N^2)/50
@@ -125,11 +119,10 @@ def _rotating_sample() -> list[str]:
 @pytest.fixture(scope="module")
 def replica_dir(spark):
     # Gate on the LAST-written table's _SUCCESS marker (build order in
-    # replica_bench: documents, embeddings, events) so a partially
-    # built replica is repaired instead of half-trusted — a crash
-    # DURING the events write leaves the directory present without the
-    # marker (ADVICE r12 tightening the review-r12 directory gate).
-    if not os.path.isfile(f"{REPLICA}/events.parquet/_SUCCESS"):
+    # replica_bench: documents, embeddings) so a partially built
+    # replica is repaired instead of half-trusted — a crash DURING the
+    # embeddings write leaves the directory present without the marker.
+    if not os.path.isfile(f"{REPLICA}/embeddings.parquet/_SUCCESS"):
         sys.path.insert(0, str(REPO / "scripts"))
         from replica_bench import build_replica
 

@@ -1,5 +1,5 @@
-"""Planted-input tests for the round-4 pipeline operators: KMV
-distinct sketch, decontamination screen, semantic dedup, Bloom screen.
+"""Planted-input tests for the pipeline operators: decontamination
+screen, semantic dedup, Bloom screen.
 
 Each test constructs an input where the correct answer is computable by
 hand, so these pin SEMANTICS; engine parity with DuckDB is pinned
@@ -10,46 +10,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cir_duplicate_detector_spark.operators import dedup, similarity, sketches, textops
+from cir_duplicate_detector_spark.operators import dedup, similarity, textops
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-# --------------------------------------------------------------- KMV
-
-def test_kmv_exact_below_k(spark):
-    # 3 distinct tokens < k: the sketch must be EXACT.
-    df = _docs(spark, [(1, "a b c a"), (2, "b c")])
-    out = sketches.kmv_distinct_tokens(
-        df.withColumn("lang", F.lit("en")), k=64
-    ).collect()
-    assert len(out) == 1
-    row = out[0]
-    assert row.n_kept == 3
-    assert row.est_distinct == 3.0
-
-
-def test_kmv_estimates_above_k(spark):
-    # 500 distinct tokens, k=32: estimate within 30% of truth (the
-    # estimator's relative error is ~1/sqrt(k-2) ≈ 18%).
-    text = " ".join(f"tok{i}" for i in range(500))
-    df = _docs(spark, [(1, text)]).withColumn("lang", F.lit("en"))
-    row = sketches.kmv_distinct_tokens(df, k=32).collect()[0]
-    assert row.n_kept == 32
-    assert 350 <= row.est_distinct <= 650
-
-
-def test_kmv_groups_independent(spark):
-    # Groups sketch independently: same tokens -> same estimate per group.
-    df = spark.createDataFrame(
-        [(1, "x y z", "en"), (2, "x y z", "de")],
-        "doc_id long, text string, lang string",
-    )
-    rows = {r.lang: r for r in sketches.kmv_distinct_tokens(df, k=8).collect()}
-    assert rows["en"].est_distinct == rows["de"].est_distinct == 3.0
-    assert rows["en"].kth_hash == rows["de"].kth_hash
 
 
 # ----------------------------------------------------- decontamination
@@ -386,33 +351,6 @@ def test_assign_shards_deterministic_and_dense(spark):
         assert sorted(ps) == list(range(1, len(ps) + 1))
 
 
-# ------------------------------------------------- Count-Min sketch
-
-def test_cms_estimate_one_sided_and_exact_heavy(spark):
-    # "hot" appears 30x, others once: with 4x512 cells vs ~4 distinct
-    # tokens, collisions are essentially impossible, so estimates are
-    # exact; the CMS guarantee we pin structurally is est >= truth.
-    text = " ".join(["hot"] * 30 + ["a", "b", "c"])
-    out = {
-        r.tok: r
-        for r in sketches.cms_topk_diagnostic(
-            _docs(spark, [(1, text)]), k=4
-        ).collect()
-    }
-    assert out["hot"].rank == 1 and out["hot"].true_cnt == 30
-    for r in out.values():
-        assert r.est_cnt >= r.true_cnt
-    assert out["hot"].est_cnt == 30
-
-
-def test_cms_sketch_bounded_cells(spark):
-    toks = _docs(spark, [(1, " ".join(f"t{i}" for i in range(2000)))]).select(
-        F.explode(F.split("text", " ")).alias("tok")
-    )
-    sk = sketches.cms_sketch(toks, "tok", depth=2, width=16)
-    assert sk.count() <= 2 * 16  # counter table bounded, not stream-sized
-
-
 # ------------------------------------------------- TF-IDF top terms
 
 def test_tfidf_linear_idf_ranking(spark):
@@ -434,54 +372,6 @@ def test_tfidf_k_limits_per_doc(spark):
     out = textops.tfidf_top_terms(df, k=3)
     per_doc = out.groupBy("doc_id").count().collect()
     assert {r.doc_id: r["count"] for r in per_doc} == {1: 3, 2: 2}
-
-
-# ------------------------------------- histogram quantile sketch
-
-def test_histogram_quantiles_one_sided_bounded_error(spark):
-    vals = [(float(i), "t") for i in range(1, 101)]
-    ev = spark.createDataFrame(vals, "value double, event_type string")
-    row = sketches.histogram_quantiles(ev).collect()[0]
-    width = (100.0 - 1.0) / 64
-    # thr(p) = ceil(100*p/100); exact thr-th smallest value is thr itself.
-    for p in (50, 90, 99):
-        exact = float(p)
-        est = row[f"est_p{p}"]
-        assert exact <= est <= exact + width + 1e-9, (p, est)
-
-
-def test_histogram_quantiles_degenerate_group_exact(spark):
-    ev = spark.createDataFrame(
-        [(7.5, "t")] * 5, "value double, event_type string"
-    )
-    row = sketches.histogram_quantiles(ev).collect()[0]
-    assert row.est_p50 == row.est_p90 == row.est_p99 == 7.5
-
-
-# ------------------------------ watermark-bounded streaming dedup
-
-def test_streaming_dedup_watermarked_one_per_delivery_key(spark):
-    from cir_duplicate_detector_spark.sources.tables import load_table
-    from cir_duplicate_detector_spark.streaming.windows import (
-        streaming_dedup_watermarked,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        r.event_type: r.n_events
-        for r in streaming_dedup_watermarked(spark, sf).collect()
-    }
-    # event_ids are unique in the raw table, so despite every 7th event
-    # being delivered twice the retained count per type must equal the
-    # plain per-type row count.
-    want = {
-        r.event_type: r.n
-        for r in load_table(spark, sf, "events")
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert got == want
 
 
 # --------------------------------- leakage-safe dataset split

@@ -232,78 +232,6 @@ def test_chunk_documents_matches_model(spark, batch):
         assert last_start - 1 + last_len == max(n, 0) or n == 0
 
 
-# --- bucketed range join vs the naive BETWEEN model ----------------------
-
-ts_val = st.integers(min_value=0, max_value=500)
-interval = st.tuples(
-    st.integers(min_value=0, max_value=500),
-    st.integers(min_value=0, max_value=500),
-)
-
-
-@SETTINGS
-@given(
-    events=st.lists(ts_val, min_size=0, max_size=12),
-    wins=st.lists(interval, min_size=0, max_size=6),
-    bucket=st.sampled_from([1, 7, 60, 1000]),
-)
-def test_range_join_matches_between_model(spark, events, wins, bucket):
-    # Model: plain nested-loop over the half-open BETWEEN predicate.
-    expect = sorted(
-        (ei, wi)
-        for ei, ts in enumerate(events)
-        for wi, (s, e) in enumerate(wins)
-        if s <= ts < e
-    )
-    from cir_duplicate_detector_spark.operators.events import range_join
-
-    ev = spark.createDataFrame(
-        [(i, 1, ts) for i, ts in enumerate(events)],
-        "event_id bigint, user_id bigint, ts_us bigint",
-    )
-    wn = spark.createDataFrame(
-        [(i, 1, s, e) for i, (s, e) in enumerate(wins)],
-        "win_id bigint, user_id bigint, start_us bigint, end_us bigint",
-    )
-    got = sorted(
-        (r["event_id"], r["win_id"])
-        for r in range_join(ev, wn, bucket_us=bucket).collect()
-    )
-    assert got == expect
-
-
-# --- histogram quantile sketch vs exact-percentile model ----------------
-
-@SETTINGS
-@given(
-    st.lists(
-        st.floats(
-            min_value=-1e6, max_value=1e6,
-            allow_nan=False, allow_infinity=False,
-        ),
-        min_size=1, max_size=60,
-    )
-)
-def test_histogram_quantiles_bracket_exact(spark, vals):
-    """One-sided bound with one-bucket-width error: for each p, the
-    estimate is >= the value at rank ceil(n*p/100) (1-indexed ascending)
-    and <= it + (max-min)/nbins."""
-    from cir_duplicate_detector_spark.operators.sketches import (
-        histogram_quantiles,
-    )
-
-    ev = spark.createDataFrame(
-        [(float(v), "g") for v in vals], "value double, event_type string"
-    )
-    row = histogram_quantiles(ev).collect()[0]
-    s = sorted(vals)
-    width = (s[-1] - s[0]) / 64
-    for p in (50, 90, 99):
-        exact = s[(len(s) * p + 99) // 100 - 1]
-        est = row[f"est_p{p}"]
-        assert exact - 1e-9 <= est <= exact + width + 1e-6, (p, est, exact)
-
-
 # --------------------------------------------- PPM codec round-trip
 
 @given(

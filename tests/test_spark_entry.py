@@ -13,65 +13,50 @@ REGISTERED = {
     "bm25_index_roundtrip", "bm25_route", "bm25_route_streaming",
     "bm25_search", "boilerplate_removal", "boilerplate_screen",
     "boilerplate_screen_streaming", "chunk_dedup",
-    "cluster_representatives", "cms_heavy_hitters",
-    "corpus_curation", "corpus_drift", "corpus_stats_cube",
+    "cluster_representatives", "corpus_curation", "corpus_drift",
     "corpus_upsert", "corpus_upsert_streaming", "curation_pipeline",
     "dataset_split", "decon_cells_roundtrip", "decontaminate",
     "decontaminate_fuzzy", "decontaminate_fuzzy_canonical",
     "decontaminate_scrub", "decontaminate_scrub_streaming",
     "decontaminate_semantic", "decontamination_report",
     "dedup_containment", "dedup_containment_canonical", "dedup_exact",
-    "dedup_exact_normalized", "dedup_exact_streaming", "dedup_incremental",
-    "dedup_lsh_screen", "dedup_lsh_screen_streaming", "dedup_minhash",
+    "dedup_exact_normalized", "dedup_exact_streaming",
+    "dedup_incremental", "dedup_lsh_screen",
+    "dedup_lsh_screen_streaming", "dedup_minhash",
     "dedup_ngram_jaccard", "dedup_simhash", "dedup_simhash_pairs",
-    "detect_duplicates", "distinct_kmv", "doc_chunks", "doc_fingerprint",
-    "doc_repetition", "doc_topk_similar",
-    "docs_orc_roundtrip", "domain_mixture",
-    "dsir_score", "dsir_score_streaming", "dsir_weights", "dup_clusters",
-    "dup_labels_compact", "dup_labels_roundtrip", "dup_labels_upsert",
-    "dup_labels_upsert_streaming", "dup_overlap", "dup_weighting",
-    "embedding_near_dup", "events_anomaly", "events_anomaly_streaming",
-    "events_asof", "events_attribution", "events_attribution_streaming",
-    "events_dedup_watermarked", "events_distinct_users",
-    "events_distinct_users_streaming", "events_funnel", "events_json",
-    "events_pivot", "events_quantiles", "events_quantiles_hist",
-    "events_retention", "events_rolling", "events_sessionize",
-    "events_sessionize_stateful", "events_window",
-    "events_window_streaming", "fuzzy_decon_recall", "hash_decode",
-    "hash_explode_dedup",
-   
-    "image_index_roundtrip", "image_near_dup", "image_near_dup_capped",
-    "image_pdq_hashes", "image_pdq_near_dup", "image_screen",
-    "image_screen_streaming", "ivf_index_roundtrip", "ivf_upsert_assign",
-    "ivf_upsert_assign_streaming", "ivf_upsert_drift", "kmeans_embeddings",
-    "kmeans_ivf_assign", "knn_cosine_bruteforce", "knn_cosine_ivf",
-    "knn_cosine_ivf_learned", "knn_cosine_lsh", "knn_ivf_pq",
-    "knn_ivf_pq_refined", "knn_ivf_pq_served32", "knn_pq_adc", "lang_id",
-    "lsh_index_merge", "lsh_index_roundtrip", "minhash_recall",
-    "multimodal_audio", "multimodal_features", "multimodal_frames",
-    "multimodal_image_ahash", "multimodal_resize", "ngram_topk",
-    "pack_sequences",
-    "pdq_duplicates_banded", "pdq_duplicates_naive",
-    "pdq_duplicates_probed", "pdq_duplicates_t08_probe30",
-    "pdq_duplicates_t08_probed", "pdq_pairs", "pii_redact",
-    "pq_codes_upsert", "pq_codes_upsert_streaming", "pq_recall",
-    "quality_band",
+    "detect_duplicates", "doc_chunks", "doc_fingerprint",
+    "doc_repetition", "doc_topk_similar", "domain_mixture",
+    "dsir_score", "dsir_score_streaming", "dsir_weights",
+    "dup_clusters", "dup_labels_compact", "dup_labels_roundtrip",
+    "dup_labels_upsert", "dup_labels_upsert_streaming", "dup_overlap",
+    "dup_weighting", "embedding_near_dup", "fuzzy_decon_recall",
+    "hash_decode", "hash_explode_dedup", "image_index_roundtrip",
+    "image_near_dup", "image_near_dup_capped", "image_pdq_hashes",
+    "image_pdq_near_dup", "image_screen", "image_screen_streaming",
+    "ivf_index_roundtrip", "ivf_upsert_assign",
+    "ivf_upsert_assign_streaming", "ivf_upsert_drift",
+    "kmeans_embeddings", "kmeans_ivf_assign", "knn_cosine_bruteforce",
+    "knn_cosine_ivf", "knn_cosine_ivf_learned", "knn_cosine_lsh",
+    "knn_ivf_pq", "knn_ivf_pq_refined", "knn_ivf_pq_served32",
+    "knn_pq_adc", "lang_id", "lsh_index_merge", "lsh_index_roundtrip",
+    "minhash_recall", "multimodal_audio", "multimodal_features",
+    "multimodal_frames", "multimodal_image_ahash", "multimodal_resize",
+    "ngram_topk", "pack_sequences", "pdq_duplicates_banded",
+    "pdq_duplicates_naive", "pdq_duplicates_probed",
+    "pdq_duplicates_t08_probe30", "pdq_duplicates_t08_probed",
+    "pdq_pairs", "pii_redact", "pq_codes_upsert",
+    "pq_codes_upsert_streaming", "pq_recall", "quality_band",
     "quality_classifier", "quality_classifier_agreement",
-    "quality_classifier_learned", "quality_classifier_learned_streaming",
-    "quality_classifier_streaming", "rollup_orders",
-    "semantic_cells_roundtrip", "semantic_decon_recall", "semantic_dedup",
-    "semantic_dedup_learned", "semantic_recall_learned", "sentence_dedup",
-    "sentence_screen", "sentence_screen_streaming", "shard_assign",
-    "stratified_sample", "substring_dup", "text_quality", "tfidf_topterms",
-    "token_budget_sample", "token_count", "tpch_q1", "tpch_q10",
-    "tpch_q11_like", "tpch_q12_like", "tpch_q13", "tpch_q14",
-    "tpch_q15_like", "tpch_q16_like", "tpch_q17_like", "tpch_q18",
-    "tpch_q19_like", "tpch_q20_like", "tpch_q21_like", "tpch_q22_like",
-    "tpch_q2_like", "tpch_q3", "tpch_q4_like", "tpch_q5",
-    "tpch_q6", "tpch_q7_like", "tpch_q8_like", "tpch_q9_like",
-    "upsert_labels_agreement", "url_domain_stats", "url_duplicates",
-    "url_duplicates_capped", "url_duplicates_probed", "url_normalize",
-    "window_topn",
+    "quality_classifier_learned",
+    "quality_classifier_learned_streaming",
+    "quality_classifier_streaming", "semantic_cells_roundtrip",
+    "semantic_decon_recall", "semantic_dedup", "semantic_dedup_learned",
+    "semantic_recall_learned", "sentence_dedup", "sentence_screen",
+    "sentence_screen_streaming", "shard_assign", "stratified_sample",
+    "substring_dup", "text_quality", "tfidf_topterms",
+    "token_budget_sample", "token_count", "upsert_labels_agreement",
+    "url_duplicates", "url_duplicates_capped", "url_duplicates_probed",
+    "url_normalize",
 }
 
 
