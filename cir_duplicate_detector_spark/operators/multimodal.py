@@ -30,8 +30,6 @@ FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes bigint, content_md5 string, feature60 bigint"
 )
 
-MEDIA_SCHEMA = "doc_id bigint, media_type string, payload binary, n_bytes bigint"
-
 
 def to_media(docs: DataFrame) -> DataFrame:
     """Wrap documents as a media table: payload = utf-8 bytes standing in

@@ -28,7 +28,7 @@ quantized at scale ``2**11`` (coefficient error < 0.025%), no
 intermediate rescale (max |B| ≈ 1.4e14, safely inside int64), and the
 median defined as the 128th-smallest value (sorted index 127). This
 makes the hash bit-reproducible across numpy and ANSI SQL — the same
-discipline as the fold-order-pinned kmeans/PQ chains — at the price of
+discipline as the fold-order-pinned kmeans chains — at the price of
 not being bit-compatible with Meta's float implementation (which is
 itself not bit-stable across compilers; the spec's own conformance
 norm is Hamming-distance tolerance, not equality).

@@ -1,22 +1,16 @@
-"""Vector similarity search over an embedding column (array<float>).
+"""Embedding cosine helpers and the semantic decontamination screen.
 
-* brute-force cosine top-k — the exactness baseline: probe×corpus
-  cross join with a codegen'd dot product (broadcast probes,
-  repartitioned corpus — same shape as the naive Hamming join)
-* sign-random-projection LSH top-k — the scale path: 16-bit hyperplane
-  sketch buckets candidates through an equi-join, then exact re-rank
-  within buckets
-
-All arithmetic is float→double widened and sequentially folded, which
-both Spark and DuckDB evaluate identically, so brute-force results have
-a bit-exact oracle. Hyperplane weights are ±1 derived from the md5-based
-hash60 family — deterministic, seedless, reproducible on any engine.
+* ``dot64`` / ``norm64`` — float→double widened, sequentially folded
+  dot product and norm, which Spark's aggregate() and DuckDB's
+  list_sum() evaluate identically, so cosine scores have a bit-exact
+  oracle
+* ``semantic_cross_decontaminate`` — TRAIN/EVAL cosine pairs within
+  the cells of a train-side two-level quantizer (`operators.kmeans`)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
-
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def dot64(a: Column, b: Column) -> Column:
@@ -35,646 +29,6 @@ def norm64(a: Column) -> Column:
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
-    )
-
-
-def _probe_restrict(df: DataFrame, probe, id_col: str = "vec_id") -> DataFrame:
-    """Restrict ``df`` to probe ids. A list embeds as an ``isin`` plan
-    literal (interactive probe sizes); a DataFrame rides the plan as a
-    broadcast semi-join — no driver round-trip, probe set can itself be
-    a query output of any size (same contract as `operators/probes.py`).
-    """
-    if isinstance(probe, DataFrame):
-        p = (
-            probe.select(F.col(probe.columns[0]).alias(id_col))
-            .dropDuplicates([id_col])
-        )
-        return df.join(F.broadcast(p), id_col, "semi")
-    return df.where(F.col(id_col).isin(probe))
-
-
-def knn_bruteforce(
-    vectors: DataFrame,
-    probe_ids: "list[int] | DataFrame",
-    k: int = 5,
-) -> DataFrame:
-    """Exact cosine top-k: (query_id, neighbor_id, rank, cosine).
-
-    Ties broken by neighbor_id so ranking is total and deterministic.
-    """
-    spark = vectors.sparkSession
-    slices = spark.sparkContext.defaultParallelism * 2
-    base = vectors.select(
-        "vec_id", "embedding", norm64(F.col("embedding")).alias("nrm")
-    )
-    probes = _probe_restrict(base, probe_ids).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    corpus = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    cos = dot64(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_nrm") * F.col("c_nrm")
-    )
-    scored = (
-        corpus.repartition(slices)
-        .crossJoin(F.broadcast(probes))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cos)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
-N_PLANES = 16
-
-
-def srp_weight(p: int, d: int) -> int:
-    """Deterministic ±1 hyperplane weight: parity of md5(f"{p}:{d}")."""
-    import hashlib
-
-    h = hashlib.md5(f"{p}:{d}".encode()).hexdigest()
-    return 1 if int(h[:15], 16) & 1 else -1
-
-
-def _weight_table(n_planes: int, dim: int) -> Column:
-    """All plane weights as ONE nested array literal — a single Literal
-    node. Building the sketch plane-by-plane out of per-weight ``F.lit``
-    columns made a ~2000-node expression tree: thousands of py4j round
-    trips at build time and seconds of analyzer time PER PLAN."""
-    return F.lit(
-        [
-            [float(srp_weight(p, d)) for d in range(dim)]
-            for p in range(n_planes)
-        ]
-    )
-
-
-def _bits_from_planes(emb: str, weights: Column, offset, bits: int) -> Column:
-    """Bucket key from ``bits`` consecutive planes starting at ``offset``
-    (0-based): bit i = [dot(emb, W[offset+i]) > 0]. The inner fold is
-    left-to-right over zip_with — exactly the oracle's
-    ``list_sum(list_transform(...))`` order, so signs match bitwise.
-    """
-    emb_col = F.col(emb)
-    # Fold planes DESCENDING with acc*2 + bit: plane offset+i-1 lands on
-    # bit position i-1, identical to a shiftleft sum (shiftleft itself
-    # takes only a literal bit count in the Column API).
-    return F.aggregate(
-        F.sequence(F.lit(bits), F.lit(1), F.lit(-1)),
-        F.lit(0).cast("long"),
-        lambda acc, i: acc * F.lit(2)
-        + F.when(
-            F.aggregate(
-                F.zip_with(
-                    emb_col,
-                    F.element_at(weights, offset + i),
-                    lambda x, wd: x.cast("double") * wd,
-                ),
-                F.lit(0.0),
-                lambda a2, v: a2 + v,
-            )
-            > 0,
-            F.lit(1).cast("long"),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-
-
-def srp_sketch(emb: str = "embedding", n_planes: int = N_PLANES, dim: int = 64) -> Column:
-    """Sign-random-projection sketch: bit p = [sum_d w(p,d)·emb[d] > 0]
-    with deterministic ±1 weights (:func:`srp_weight`), returned as a
-    bigint bucket key. ``emb`` is the embedding COLUMN NAME.
-
-    Weights ship as one nested literal (:func:`_weight_table`) and the
-    planes fold through generic nested higher-order functions — compact
-    tree (fast build/analysis), tight interpreted loop (an unrolled
-    64-term-per-plane tree exceeded JIT budgets and ran as interpreted
-    bytecode).
-    """
-    return _bits_from_planes(emb, _weight_table(n_planes, dim), F.lit(0), n_planes)
-
-
-LSH_BANDS = 4
-LSH_BAND_BITS = 8
-
-
-def srp_band_buckets(
-    emb: str = "embedding",
-    bands: int = LSH_BANDS,
-    bits: int = LSH_BAND_BITS,
-    dim: int = 64,
-) -> Column:
-    """Per-band SRP bucket keys as ``array<bigint>``: band ``b`` sketches
-    planes ``b*bits .. b*bits+bits-1`` into a ``bits``-bit key. ``emb``
-    is the embedding COLUMN NAME (the sketch is one ``F.expr`` SQL
-    string — see :func:`srp_sketch` for why).
-
-    Multi-table banding is what makes SRP usable for recall: a single
-    wide sketch (e.g. 16 bits over a small corpus) has ~2^-16 collision
-    probability and returns nothing; k tables of w bits each give k
-    independent chances at a 2^-w collision — candidates are the UNION
-    across tables, then exactly re-ranked. (Round-1 `knn_cosine_lsh` was
-    vacuously green — 0 rows on both engines — for exactly this reason.)
-    """
-    weights = _weight_table(bands * bits, dim)
-    return F.array(
-        *[
-            _bits_from_planes(emb, weights, F.lit(b * bits), bits)
-            for b in range(bands)
-        ]
-    )
-
-
-def knn_lsh(
-    vectors: DataFrame,
-    probe_ids: "list[int] | DataFrame",
-    k: int = 5,
-    bands: int = LSH_BANDS,
-    bits: int = LSH_BAND_BITS,
-) -> DataFrame:
-    """Approximate cosine top-k: banded SRP candidate generation
-    (:func:`srp_band_buckets`), candidates unioned across bands, exact
-    re-rank. Scale path — every join is an equi-join on
-    ``(band_id, bucket)``, shuffle-partitioned; candidate volume is
-    bucket-local. Recall < 1 by construction (a probe ranks fewer than
-    ``k`` neighbors if its buckets are sparse).
-    """
-    base = vectors.select(
-        "vec_id",
-        "embedding",
-        norm64(F.col("embedding")).alias("nrm"),
-        srp_band_buckets("embedding", bands, bits).alias("buckets"),
-    )
-    banded = base.select(
-        "vec_id",
-        "embedding",
-        "nrm",
-        F.posexplode("buckets").alias("band_id", "bucket"),
-    )
-    probes = _probe_restrict(banded, probe_ids).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        "band_id",
-        "bucket",
-    )
-    corpus = banded.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-        "band_id",
-        "bucket",
-    )
-    cos = dot64(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_nrm") * F.col("c_nrm")
-    )
-    scored = (
-        probes.join(corpus, ["band_id", "bucket"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        # Union the band tables: a pair colliding in several bands is one
-        # candidate. Dedup BEFORE the dot product so it runs once per pair.
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("cosine", cos)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
-def sqrt_centroid_mod(vectors: DataFrame) -> int:
-    """Corpus-aware centroid sampling modulus: ``max(2, isqrt(N))``.
-
-    ``vec_id % mod == 0`` yields ~N/mod centroids, so a FIXED mod m
-    gives N/m centroids and the broadcast-centroid scoring pass does
-    N·(N/m) = O(N²/m) dot products — quadratic at 100 TB (round-4
-    verdict's one ``weak`` mark). mod = √N balances the two sides:
-    ~√N centroids, O(N·√N) scoring work, √N expected cluster size, so
-    the cluster-local pair join is O(N·√N) too — the standard balanced
-    choice for coarse-quantized search.
-
-    Costs one small ``count()`` job at plan build; pass ``centroid_mod``
-    explicitly to keep plan construction fully lazy (same bypass
-    contract as ``find_pdq_hash_duplicates``'s eager probes).
-    ``isqrt`` == ``floor(sqrt(·))`` exactly for any corpus Spark can
-    count, matching the DuckDB oracle's ``floor(sqrt(count(*)))``.
-    """
-    import math
-
-    return max(2, math.isqrt(max(vectors.count(), 1)))
-
-
-def knn_ivf(
-    vectors: DataFrame,
-    probe_ids: "list[int] | DataFrame",
-    k: int = 5,
-    centroid_mod: "int | None" = 40,
-    nprobe: int = 3,
-) -> DataFrame:
-    """IVF-style approximate cosine top-k: partition the corpus into
-    inverted lists by nearest centroid, search only the ``nprobe``
-    lists nearest each query, exact re-rank inside them.
-
-    Centroids are the deterministic sample ``vec_id % centroid_mod == 0``
-    (a real deployment would k-means them; selection strategy is
-    orthogonal to the join shape). The build pass — score every vector
-    against the broadcast centroid set and keep the argmax — is one
-    map-side cross join plus a ``max_by`` aggregate; the probe pass is
-    an equi-join on centroid id. Both are the canonical scale-out
-    shapes: no all-pairs work anywhere.
-
-    ``centroid_mod=None`` derives the √N-scaled modulus from the corpus
-    (:func:`sqrt_centroid_mod`); the fixed default keeps this function's
-    registered oracle stable.
-    """
-    if centroid_mod is None:
-        centroid_mod = sqrt_centroid_mod(vectors)
-    return _ivf_search(
-        _centroid_scores(vectors, centroid_mod), probe_ids, k, nprobe
-    )
-
-
-def _ivf_search(
-    scored_c: DataFrame,
-    probe_ids: "list[int] | DataFrame",
-    k: int,
-    nprobe: int,
-) -> DataFrame:
-    """The IVF probe path over a pre-scored centroid frame
-    (``(vec_id, embedding, nrm, cid, ccos)`` — every vector × every
-    centroid): argmax member assignment, top-``nprobe`` lists per
-    probe, exact cosine re-rank inside them. Shared by :func:`knn_ivf`
-    (deterministic mod-sample centroids) and :func:`knn_ivf_learned`
-    (Lloyd centroids) so the join shape cannot drift between them."""
-    # Ties broken toward the smallest centroid id (shared rule).
-    member = _centroid_assign(scored_c).select(
-        "cid",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    probes = _probe_restrict(scored_c, probe_ids)
-    w_probe = Window.partitionBy("vec_id").orderBy(
-        F.col("ccos").desc(), F.col("cid").asc()
-    )
-    probe_lists = (
-        probes.withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= nprobe)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            "cid",
-        )
-    )
-    cos = dot64(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_nrm") * F.col("c_nrm")
-    )
-    cand = (
-        probe_lists.join(member, "cid")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cos)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
-def knn_ivf_learned(
-    vectors: DataFrame,
-    probe_ids: "list[int] | DataFrame",
-    k: int = 5,
-    coarse_k: int | None = None,
-    iters: int | None = None,
-    sample_mod: int | None = None,
-    nprobe: int = 3,
-    centroids: "DataFrame | None" = None,
-) -> DataFrame:
-    """:func:`knn_ivf` with LEARNED centroids — the upgrade its
-    docstring defers ("a real deployment would k-means them"):
-    inverted lists are keyed by Lloyd centroids learned on the
-    deterministic sample ``vec_id % sample_mod == 0``
-    (`kmeans.kmeans_centroids` — engine-reproducible seeds and folds,
-    so the oracle stays value-hash exact), then the identical
-    :func:`_ivf_search` probe path runs. Centroid selection is the only
-    difference; the join shape — broadcast centroid scoring, argmax
-    member assignment, ``cid`` equi-join probe — is shared code.
-
-    ``centroids`` (optional) supplies a prebuilt ``(cluster, c)``
-    table — e.g. read back from parquet — and skips the sample-Lloyd
-    learn; parquet doubles round-trip exactly, so the inverted lists
-    (and therefore the search result) are identical to an in-session
-    build with the same parameters. Combining ``centroids`` with
-    explicit learn parameters raises (ADVICE r11) — the prebuilt table
-    would silently win otherwise."""
-    if centroids is not None and (
-        coarse_k is not None or iters is not None or sample_mod is not None
-    ):
-        raise ValueError(
-            "knn_ivf_learned: centroids supplies a prebuilt table; "
-            "coarse_k/iters/sample_mod would be ignored — pass one or "
-            "the other"
-        )
-    from .kmeans import (
-        KM_ITERS,
-        KM_IVF_SAMPLE_MOD,
-        kmeans_centroids,
-        sqrt_sample_k,
-    )
-
-    if centroids is not None:
-        cents = centroids
-    else:
-        smod = KM_IVF_SAMPLE_MOD if sample_mod is None else sample_mod
-        sample = vectors.where(F.col("vec_id") % smod == 0)
-        # √-scaled coarse k by default (one eager count; pass coarse_k
-        # to stay lazy): with a FIXED k, inverted lists grow linearly
-        # with the corpus and the probe re-rank turns quadratic —
-        # measured 8× time at 10× data with k=8 before this default.
-        cents = kmeans_centroids(
-            sample,
-            k=sqrt_sample_k(sample) if coarse_k is None else coarse_k,
-            iters=KM_ITERS if iters is None else iters,
-        )
-    cent = cents.select(
-        F.col("cluster").alias("cid"),
-        F.col("c").alias("c_emb"),
-        norm64(F.col("c")).alias("c_nrm"),
-    )
-    base = vectors.select(
-        "vec_id", "embedding", norm64(F.col("embedding")).alias("nrm")
-    )
-    cos_c = dot64(F.col("embedding"), F.col("c_emb")) / (
-        F.col("nrm") * F.col("c_nrm")
-    )
-    scored_c = base.crossJoin(F.broadcast(cent)).withColumn("ccos", cos_c)
-    return _ivf_search(scored_c, probe_ids, k, nprobe)
-
-
-def _centroid_scores(vectors: DataFrame, centroid_mod: int) -> DataFrame:
-    """Every vector scored against the broadcast deterministic centroid
-    sample (``vec_id % centroid_mod == 0``):
-    ``(vec_id, embedding, nrm, cid, c_emb, c_nrm, ccos)``. Shared by
-    :func:`knn_ivf` (build + probe passes) and
-    :func:`semantic_near_duplicates` so the assignment rule cannot
-    drift between them."""
-    base = vectors.select(
-        "vec_id", "embedding", norm64(F.col("embedding")).alias("nrm")
-    )
-    cents = F.broadcast(
-        base.where(F.col("vec_id") % centroid_mod == 0).select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("c_emb"),
-            F.col("nrm").alias("c_nrm"),
-        )
-    )
-    cos_c = dot64(F.col("embedding"), F.col("c_emb")) / (
-        F.col("nrm") * F.col("c_nrm")
-    )
-    return base.crossJoin(cents).withColumn("ccos", cos_c)
-
-
-def _centroid_assign(scored: DataFrame) -> DataFrame:
-    """Argmax cluster assignment over :func:`_centroid_scores` output,
-    ties toward the smallest centroid id: ``(vec_id, cid, embedding,
-    nrm)``."""
-    return (
-        scored.groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("cid", "embedding", "nrm"),
-                F.struct(F.col("ccos"), (-F.col("cid")).alias("neg_cid")),
-            ).alias("m")
-        )
-        .select(
-            "vec_id",
-            F.col("m.cid").alias("cid"),
-            F.col("m.embedding").alias("embedding"),
-            F.col("m.nrm").alias("nrm"),
-        )
-    )
-
-
-def semantic_near_duplicates(
-    vectors: DataFrame,
-    threshold: float = 0.9,
-    centroid_mod: "int | None" = None,
-) -> DataFrame:
-    """SemDeDup-style semantic deduplication (Abbas et al. 2023):
-    cluster the corpus by nearest coarse centroid, then emit exact
-    cosine pairs >= ``threshold`` WITHIN each cluster (a < b). Pairs
-    that land in different clusters are unseen by construction — that
-    blindness is the trade the paper makes to avoid the all-pairs join.
-
-    ``centroid_mod`` defaults to the √N-scaled modulus
-    (:func:`sqrt_centroid_mod`): ~√N centroids keep BOTH the scoring
-    pass and the worst-expected cluster-local pair join at O(N·√N); a
-    fixed mod would pin scoring at O(N²/mod). Deriving the modulus runs
-    one ``count()`` at plan build — pass ``centroid_mod`` explicitly to
-    stay fully lazy.
-
-    Centroids are the same deterministic sample :func:`knn_ivf` uses
-    (``vec_id % centroid_mod == 0``; a production run would k-means
-    them — selection is orthogonal to the join shape). Physical shape:
-    one broadcast-centroid cross join + ``max_by`` argmax to assign
-    members (map-side, no corpus shuffle), then a self equi-join on
-    ``cid`` — pair work is cluster-local, so the join scales with the
-    largest cluster, not the corpus. The assignment result is
-    MATERIALIZED once (`cache.materialize`): it feeds both sides of the
-    self-join, and without the lineage cut Spark recomputes the whole
-    broadcast-scan-argmax subtree per side (observed in the executed
-    plan — exchange reuse does not fire across the two alias
-    projections). Complements :func:`embedding_near_duplicates` (SRP
-    sketch buckets): centroid clustering catches moderate-similarity
-    semantic pairs that 16-bit sketch identity misses.
-
-    Returns ``(a, b, cid, cosine)``.
-    """
-    from ..cache import materialize
-
-    if centroid_mod is None:
-        centroid_mod = sqrt_centroid_mod(vectors)
-    member = materialize(
-        _centroid_assign(_centroid_scores(vectors, centroid_mod))
-    )
-    a = member.select(
-        F.col("vec_id").alias("a"),
-        F.col("embedding").alias("a_emb"),
-        F.col("nrm").alias("a_nrm"),
-        "cid",
-    )
-    b = member.select(
-        F.col("vec_id").alias("b"),
-        F.col("embedding").alias("b_emb"),
-        F.col("nrm").alias("b_nrm"),
-        "cid",
-    )
-    cos = dot64(F.col("a_emb"), F.col("b_emb")) / (
-        F.col("a_nrm") * F.col("b_nrm")
-    )
-    return (
-        a.join(b, "cid")
-        .where(F.col("a") < F.col("b"))
-        .withColumn("cosine", cos)
-        .where(F.col("cosine") >= threshold)
-        .select("a", "b", "cid", "cosine")
-    )
-
-
-def semantic_near_duplicates_learned(
-    vectors: DataFrame,
-    threshold: float = 0.9,
-    k: int | None = None,
-    iters: int | None = None,
-    sample_mod: int | None = None,
-    fine_mod: int | None = None,
-    probe_pred=None,
-    cells: DataFrame | None = None,
-) -> DataFrame:
-    """:func:`semantic_near_duplicates` with LEARNED two-level clusters
-    — the upgrade its docstring defers ("a production run would k-means
-    them"): cluster keys come from `kmeans.kmeans_ivf_assign` (Lloyd
-    coarse centroids learned on a deterministic sample, fine cells
-    resolved through the IVF bucketed equi-join), and exact cosine
-    pairs >= ``threshold`` are emitted WITHIN each (coarse, fine) cell.
-
-    This is the SemDeDup composition that scales past the flat
-    centroid-sample form: total fine-cell count is bounded by shuffle
-    capacity (never broadcast), so cluster granularity can track √N at
-    corpus sizes where a broadcast centroid table stops fitting. Cells
-    with no fine sample (fine = -1) pair at the coarse level — small
-    cells pair whole, exactly the intent.
-
-    ``probe_pred`` (a vec_id Column predicate) restricts output to
-    pairs TOUCHING the probe set — semantically identical to filtering
-    the full output with ``pred(a) | pred(b)``, but pushed INTO the
-    join as the disjoint union of two one-side-restricted cell joins,
-    so per-cell pair work drops from |cell|² to |probes∩cell|·|cell|
-    (the `semantic_recall_learned` diagnostic's scale lever; replica
-    measurement in SCALE.md round-6 table).
-
-    ``cells`` (vec_id, coarse, fine) lets the caller supply a
-    pre-built (possibly parquet-reread) assignment — the build-once
-    serving posture `_shared_ivfpq_index` established for IVF-ADC; the
-    build is deterministic so a shared assignment answers identically
-    to the default in-query `kmeans_ivf_assign` (omit it to build
-    in-query with the k/iters/sample_mod/fine_mod knobs).
-
-    Returns ``(a, b, coarse, fine, cosine)``.
-    """
-    from ..cache import materialize
-    from .kmeans import kmeans_ivf_assign
-
-    if cells is None:
-        kwargs = {}
-        if k is not None:
-            kwargs["k"] = k
-        if iters is not None:
-            kwargs["iters"] = iters
-        if sample_mod is not None:
-            kwargs["sample_mod"] = sample_mod
-        if fine_mod is not None:
-            kwargs["fine_mod"] = fine_mod
-        cells = kmeans_ivf_assign(vectors, **kwargs).select(
-            "vec_id", "coarse", "fine"
-        )
-    else:
-        cells = cells.select("vec_id", "coarse", "fine")
-    base = vectors.select(
-        "vec_id", "embedding", norm64(F.col("embedding")).alias("nrm")
-    )
-    # kmeans_ivf_assign already materialized its assignment; this join
-    # feeds both sides of the pair join, so cut lineage once more.
-    member = materialize(base.join(cells, "vec_id"))
-    a = member.select(
-        F.col("vec_id").alias("a"),
-        F.col("embedding").alias("a_emb"),
-        F.col("nrm").alias("a_nrm"),
-        "coarse",
-        "fine",
-    )
-    b = member.select(
-        F.col("vec_id").alias("b"),
-        F.col("embedding").alias("b_emb"),
-        F.col("nrm").alias("b_nrm"),
-        "coarse",
-        "fine",
-    )
-    cos = dot64(F.col("a_emb"), F.col("b_emb")) / (
-        F.col("a_nrm") * F.col("b_nrm")
-    )
-    if probe_pred is None:
-        joined = a.join(b, ["coarse", "fine"])
-    else:
-        # Disjoint union of one-side-restricted joins == pred(a)|pred(b)
-        # on the full join, with the restriction pushed below the join.
-        joined = a.where(probe_pred(F.col("a"))).join(
-            b, ["coarse", "fine"]
-        ).unionByName(
-            a.where(~probe_pred(F.col("a"))).join(
-                b.where(probe_pred(F.col("b"))), ["coarse", "fine"]
-            )
-        )
-    return (
-        joined.where(F.col("a") < F.col("b"))
-        .withColumn("cosine", cos)
-        .where(F.col("cosine") >= threshold)
-        .select("a", "b", "coarse", "fine", "cosine")
-    )
-
-
-def embedding_near_duplicates(
-    vectors: DataFrame, threshold: float = 0.95
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs (a < b, cosine >= threshold) via
-    the SRP bucket join — near-identical vectors share all sketch bits.
-    """
-    base = vectors.select(
-        "vec_id",
-        "embedding",
-        norm64(F.col("embedding")).alias("nrm"),
-        srp_sketch("embedding").alias("bucket"),
-    )
-    a = base.select(
-        F.col("vec_id").alias("a"),
-        F.col("embedding").alias("a_emb"),
-        F.col("nrm").alias("a_nrm"),
-        "bucket",
-    )
-    b = base.select(
-        F.col("vec_id").alias("b"),
-        F.col("embedding").alias("b_emb"),
-        F.col("nrm").alias("b_nrm"),
-        "bucket",
-    )
-    cos = dot64(F.col("a_emb"), F.col("b_emb")) / (
-        F.col("a_nrm") * F.col("b_nrm")
-    )
-    return (
-        a.join(b, "bucket")
-        .where(F.col("a") < F.col("b"))
-        .withColumn("cosine", cos)
-        .where(F.col("cosine") >= threshold)
-        .select("a", "b", "cosine")
     )
 
 
@@ -708,7 +62,7 @@ def semantic_cross_decontaminate(
     work is |cell∩train|·|cell∩eval|, never |cell|². Like every
     cell-restricted screen, a cross-cell near-pair is invisible by
     construction; the blindness is the SemDeDup trade
-    `semantic_recall_learned` measures on the same cell machinery.
+    `semantic_decon_recall` measures.
     """
     from ..cache import materialize
     from .kmeans import ivf_assign_from_index, ivf_quantizer
@@ -716,7 +70,7 @@ def semantic_cross_decontaminate(
     # `cells` lets the caller share one built (possibly parquet-reread)
     # train-side quantizer assignment across the screen and its recall
     # diagnostic — deterministic build, so results are identical to
-    # the in-query form (the `_shared_ivfpq_index` posture).
+    # the in-query form.
     if cells is None:
         kwargs = {}
         if k is not None:

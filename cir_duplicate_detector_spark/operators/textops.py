@@ -1902,7 +1902,7 @@ def quality_classifier_agreement(
 ) -> DataFrame:
     """Held-out agreement diagnostic for the learned classifier — the
     self-measuring row every learned structure in this repo ships
-    (`pq_recall` / `minhash_recall` discipline): on the documents the
+    (`minhash_recall` discipline): on the documents the
     training pass never saw (``doc_id % QCL_TRAIN_MOD != 0``), compare
     the classifier's sign prediction against the heuristic band label
     it was distilled from. Output is the exact confusion matrix

@@ -31,7 +31,6 @@ for _batch, _streaming in [
     ("dedup_lsh_screen", "lsh_index_merge"),
     ("quality_classifier", "quality_classifier_streaming"),
     ("sentence_screen", "sentence_screen_streaming"),
-    ("pq_codes_upsert", "pq_codes_upsert_streaming"),
     ("boilerplate_screen", "boilerplate_screen_streaming"),
     ("dsir_score", "dsir_score_streaming"),
     ("bm25_route", "bm25_route_streaming"),
@@ -43,7 +42,6 @@ for _batch, _streaming in [
     ("image_screen", "image_index_roundtrip"),
     ("dup_labels_upsert", "dup_labels_upsert_streaming"),
     ("dup_labels_upsert", "dup_labels_roundtrip"),
-    ("semantic_dedup_learned", "semantic_cells_roundtrip"),
     ("decontaminate_semantic", "decon_cells_roundtrip"),
 ]:
     assert _batch in ALL_QUERIES and _streaming in ALL_QUERIES, (

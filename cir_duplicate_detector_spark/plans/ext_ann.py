@@ -1,7 +1,6 @@
-"""Similarity-search / ANN extension queries: brute-force
-kNN, SRP-LSH, IVF (fixed + learned), residual IVF-PQ/ADC,
-k-means, semantic dedup, index upsert/round-trip/drift,
-recall diagnostics.
+"""k-means / IVF index extension queries: Lloyd k-means, the
+two-level (coarse, fine) quantizer and its upsert, persisted
+round-trip and drift rows, plus the corpus upsert and drift text ops.
 
 Split out of the monolithic ``extension_queries.py`` (round-10
 modularity; VERDICT r9 item 6) with NO behavior change: same
@@ -11,510 +10,23 @@ callables, same oracle strings, same registry names.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from ..functions.text import hash60_sql
-from ..operators import dedup, similarity, textops
-from ..sources.derived import derive_near_dup_embeddings
+from ..operators import dedup, textops
 from ..sources.tables import load_table
 
 from .ext_common import (
     _KM_DIST,
-    _ND_EMB,
     _sql_kmeans_ivf_cells,
     _sql_kmeans_lloyd,
-    _srp_planes_values,
 )
 
-
-def _knn_probe_df(spark, sf_dir):
-    """Probe set as a DataFrame (every 20th vec_id) — rides the plan as
-    a broadcast semi-join (`similarity._probe_restrict`), no driver-side
-    ``collect()`` / ``isin`` literal that grows with scale factor.
-    """
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select("vec_id").where("vec_id % 20 = 0")
-
-
-def q_knn_bruteforce(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.knn_bruteforce(emb, _knn_probe_df(spark, sf_dir), k=5)
-
-
-_DUCK_VEC_N = """
-  SELECT vec_id, embedding::DOUBLE[] AS e,
-         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-  FROM embeddings
-"""
-
-
-_DUCK_BF_SCORED = """
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_sum(list_transform(range(1, 65), j -> q.e[j] * c.e[j]))
-           / (q.nrm * c.nrm) AS cosine
-  FROM n q, n c
-  WHERE q.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-"""
-
-
-SQL_KNN_BRUTEFORCE = f"""
-WITH n AS ({_DUCK_VEC_N}),
-scored AS ({_DUCK_BF_SCORED})
-SELECT query_id, neighbor_id, rank, cosine FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-  )::BIGINT AS rank FROM scored
-) WHERE rank <= 5
-"""
-
-
-def q_knn_lsh(spark, sf_dir):
-    # Approximate by construction (bucket-local candidates), but fully
-    # deterministic: the oracle replicates the SRP sketch bit-for-bit,
-    # so even the approximate path is value-hash-checked.
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.knn_lsh(emb, _knn_probe_df(spark, sf_dir), k=5)
-
-
-# Banded twin of similarity.srp_band_buckets: plane p belongs to band
-# p // BITS and contributes bit 1 << (p % BITS) to that band's bucket.
-_LSH_N_PLANES = similarity.LSH_BANDS * similarity.LSH_BAND_BITS
-
-
-_LSH_BITS = similarity.LSH_BAND_BITS
-
-
-# Banded-SRP candidate generation + exact re-scoring, as a reusable
-# CTE chain ending in `lsh_scored` (expects an `n` CTE in scope).
-_DUCK_LSH_CANDS = f"""
-planes AS (SELECT * FROM (VALUES {_srp_planes_values(_LSH_N_PLANES)}) t(p, w)),
-nb AS (
-  SELECT vec_id, e, nrm, p // {_LSH_BITS} AS band_id,
-         sum(CASE WHEN list_sum(list_transform(range(1, 65), j -> e[j] * w[j])) > 0
-                  THEN 1 << (p % {_LSH_BITS}) ELSE 0 END)::BIGINT AS bucket
-  FROM n CROSS JOIN planes
-  GROUP BY vec_id, e, nrm, p // {_LSH_BITS}
-),
-cand AS (
-  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-  FROM nb q JOIN nb c ON q.band_id = c.band_id AND q.bucket = c.bucket
-  WHERE q.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-),
-lsh_scored AS (
-  SELECT cand.query_id, cand.neighbor_id,
-         list_sum(list_transform(range(1, 65), j -> q.e[j] * c.e[j]))
-           / (q.nrm * c.nrm) AS cosine
-  FROM cand
-  JOIN n q ON q.vec_id = cand.query_id
-  JOIN n c ON c.vec_id = cand.neighbor_id
-)"""
-
-
-SQL_KNN_LSH = f"""
-WITH n AS ({_DUCK_VEC_N}),
-{_DUCK_LSH_CANDS}
-SELECT query_id, neighbor_id, rank, cosine FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-  )::BIGINT AS rank FROM lsh_scored
-) WHERE rank <= 5
-"""
-
-
-# Exact / LSH / IVF top-k (query_id, neighbor_id) pairs consumed by
-# the recall diagnostics (round 14, guide §1.2): each side of `ann_recall_lsh` /
-# `ann_recall_ivf` is byte-for-byte the stack of a registered serving
-# row (`knn_cosine_bruteforce` / `knn_cosine_lsh` / `knn_cosine_ivf`)
-# the bench already times end-to-end, so the diagnostics re-running
-# those stacks measured pure duplication. The builders CALL the
-# registered query functions (edits propagate by construction); bigint
-# id pairs round-trip parquet exactly. The serving rows themselves
-# stay fully on their own clocks, and the brute-force truth is ONE
-# artifact feeding both diagnostics. Memoization is per Spark
-# application — every bench invocation recomputes from the parquet
-# inputs.
-_KNN_BF_SHARED: dict[tuple, object] = {}
-_KNN_LSH_SHARED: dict[tuple, object] = {}
-_KNN_IVF_SHARED: dict[tuple, object] = {}
-
-
-def _shared_knn_topk(cache, prefix, fn, spark, sf_dir):
-    from ..cache import shared_artifact
-
-    def build(d):
-        fn(spark, sf_dir).select("query_id", "neighbor_id").write.parquet(
-            f"{d}/topk.parquet"
-        )
-        # Family-tag the served scan (round 15, ADVICE r14 medium):
-        # analyzed logical plans do not print parquet locations, so
-        # without the SubqueryAlias the two ANN recall rows' plans were
-        # textually IDENTICAL and a cross-wired shared cache would have
-        # produced no fingerprint change for the lint to catch.
-        return spark.read.parquet(f"{d}/topk.parquet").alias(
-            prefix + "shared"
-        )
-
-    return shared_artifact(cache, spark, sf_dir, prefix, build)
-
-
-def q_ann_recall_lsh(spark, sf_dir):
-    """Self-measuring ANN quality: recall@5 of the banded SRP-LSH path
-    against the exact brute-force ranking, per probe — the "measure,
-    don't guess" diagnostic a pipeline runs before trusting an
-    approximate index (pytest pins recall FLOORS in
-    `tests/test_ann_recall.py`; this exposes the same measurement as a
-    driver-checked query). Both sides are deterministic, so per-probe
-    recall is value-hash-checkable like any exact query. Both sides
-    serve from the pair-shared parquet of their OWN registered rows
-    (`_shared_knn_topk` — round 14, guide §1.2: the stacks are timed
-    end-to-end by `knn_cosine_bruteforce` / `knn_cosine_lsh`
-    themselves; the builders call the registered functions, so the
-    by-construction coupling holds).
-    """
-    bf = _shared_knn_topk(
-        _KNN_BF_SHARED, "knn_bf_", q_knn_bruteforce, spark, sf_dir
-    )
-    lsh = _shared_knn_topk(
-        _KNN_LSH_SHARED, "knn_lsh_", q_knn_lsh, spark, sf_dir
-    ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    return (
-        bf.join(lsh, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("*").alias("n_true"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            "n_true",
-            "n_hit",
-            (F.col("n_hit") / F.col("n_true")).alias("recall"),
-        )
-    )
-
-
-SQL_ANN_RECALL_LSH = f"""
-WITH n AS ({_DUCK_VEC_N}),
-bf_scored AS ({_DUCK_BF_SCORED}),
-bf AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-    ) AS rank FROM bf_scored
-  ) WHERE rank <= 5
-),
-{_DUCK_LSH_CANDS},
-lsh AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-    ) AS rank FROM lsh_scored
-  ) WHERE rank <= 5
-)
-SELECT bf.query_id, count(*) AS n_true,
-       sum(CASE WHEN lsh.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         AS n_hit,
-       sum(CASE WHEN lsh.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         / count(*) AS recall
-FROM bf LEFT JOIN lsh
-  ON bf.query_id = lsh.query_id AND bf.neighbor_id = lsh.neighbor_id
-GROUP BY bf.query_id
-"""
-
-
-def q_knn_pq_adc(spark, sf_dir):
-    """PQ-ADC approximate kNN (`operators.pq`): 8×8-dim product
-    quantization with a FIXED 256-codeword codebook per subspace
-    (smallest vec_ids — corpus-size-independent, the property that
-    keeps encode O(N·256) instead of the O(N²) a corpus-fraction sample
-    degenerates to), ADC scoring via the (subspace, code) equi-join.
-    Probe set = every 100th vec_id as a DataFrame (the ADC lookup table
-    is Q·M·K rows and ships as a broadcast — scale the probe side by
-    sharding queries, not by widening this table)."""
-    from ..operators import pq
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = emb.select("vec_id").where("vec_id % 100 = 0")
-    return pq.knn_pq_adc(emb, probe, k=5)
-
-
-def _sql_knn_pq_adc() -> str:
-    from ..operators import pq as _pq
-
-    m, sd, kcw = _pq.PQ_M, _pq.PQ_SUBDIM, _pq.PQ_CODEWORDS
-    pd_pivots = ", ".join(
-        f"sum(CASE WHEN p.subspace = {i} THEN p.pd END) AS pd{i}"
-        for i in range(m)
-    )
-    adc_sum = " + ".join(f"pd{i}" for i in range(m))
-    l2 = (
-        "list_sum(list_transform(range(1, {n}), "
-        "j -> ({a}[s.m * {sd} + j] - {b}[s.m * {sd} + j]) "
-        "* ({a}[s.m * {sd} + j] - {b}[s.m * {sd} + j])))"
-    )
-    return f"""
-WITH n AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-),
-subspaces AS (SELECT unnest(range(0, {m})) AS m),
-cw AS (SELECT vec_id, e FROM n ORDER BY vec_id LIMIT {kcw}),
-cdist AS (
-  SELECT v.vec_id, s.m AS subspace, c.vec_id AS cid,
-         {l2.format(n=sd + 1, sd=sd, a="v.e", b="c.e")} AS d
-  FROM n v, subspaces s, cw c
-),
-codes AS (
-  SELECT vec_id, subspace, cid AS code FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY vec_id, subspace ORDER BY d, cid
-    ) AS rn FROM cdist
-  ) WHERE rn = 1
-),
-partials AS (
-  SELECT q.vec_id AS query_id, s.m AS subspace, c.vec_id AS code,
-         {l2.format(n=sd + 1, sd=sd, a="q.e", b="c.e")} AS pd
-  FROM n q, subspaces s, cw c
-  WHERE q.vec_id % 100 = 0
-),
-pairs AS (
-  SELECT p.query_id, k.vec_id AS neighbor_id, {pd_pivots}
-  FROM codes k
-  JOIN partials p ON p.subspace = k.subspace AND p.code = k.code
-  WHERE p.query_id <> k.vec_id
-  GROUP BY 1, 2
-),
-adc AS (SELECT query_id, neighbor_id, {adc_sum} AS adc_dist FROM pairs)
-SELECT query_id, neighbor_id, rank, adc_dist FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY adc_dist, neighbor_id
-  )::BIGINT AS rank FROM adc
-) WHERE rank <= 5
-"""
-
-
-def _sql_pq_lloyd(
-    iters: int,
-    salts: int,
-    subdim: int,
-    kcw: int,
-    sub_src: str = "sub",
-    seed_src: str = "n",
-) -> str:
-    """CTE chain ``pcent0 .. pcent{iters}`` learning per-subspace PQ
-    codewords with ``iters`` GROUPED Lloyd rounds — the SQL twin of
-    `operators.pq.pq_codebook_learned`. Expects open CTEs
-    ``subspaces`` (m), ``{sub_src}`` (vec_id, subspace, sub — the
-    TRAINING subvectors) and ``{seed_src}`` (vec_id, e — the seed
-    relation; the operator's `train_mod` sampling maps to passing the
-    sample CTE for both). Seeds = the deterministic smallest-``kcw``
-    vec_ids (`pq_codebook`'s sample, cluster id = seed vec_id); every
-    stage keys on (subspace, cid) — one aggregation tree for all M
-    subspaces, mirroring the operator's single grouped job. Fold
-    discipline is `_sql_kmeans_lloyd`'s: sequential list_sum
-    distances, argmin ties to the smallest cid, two-phase sorted-fold
-    means. Returned string starts with a comma (appends to an open
-    WITH)."""
-    l2 = (
-        f"list_sum(list_transform(range(1, {subdim + 1}), "
-        "j -> (v.sub[j] - c.csub[j]) * (v.sub[j] - c.csub[j])))"
-    )
-    parts = [
-        f""",
-pcent0 AS (
-  SELECT sp.m AS subspace, c.vec_id AS cid,
-         list_transform(range(1, {subdim + 1}),
-                        j -> c.e[sp.m * {subdim} + j]) AS csub
-  FROM (SELECT vec_id, e FROM {seed_src} ORDER BY vec_id LIMIT {kcw}) c,
-       subspaces sp
-)"""
-    ]
-    for i in range(iters):
-        parts.append(
-            f""",
-pscore{i} AS (
-  SELECT v.vec_id, v.subspace, c.cid, {l2} AS d
-  FROM {sub_src} v JOIN pcent{i} c USING (subspace)
-),
-pbest{i} AS (
-  SELECT vec_id, subspace, cid FROM (
-    SELECT vec_id, subspace, cid,
-           row_number() OVER (
-             PARTITION BY vec_id, subspace ORDER BY d, cid
-           ) AS rn
-    FROM pscore{i}
-  ) WHERE rn = 1
-),
-ppe{i} AS (
-  SELECT s.vec_id, s.subspace, b.cid, j.j AS pos, s.sub[j.j] AS val
-  FROM {sub_src} s JOIN pbest{i} b USING (vec_id, subspace)
-  CROSS JOIN (SELECT unnest(range(1, {subdim + 1})) AS j) j
-),
-pp1_{i} AS (
-  SELECT subspace, cid, pos, vec_id % {salts} AS salt,
-         list_sum(list(val ORDER BY vec_id)) AS psum,
-         count(*)::BIGINT AS pn
-  FROM ppe{i} GROUP BY 1, 2, 3, 4
-),
-pp2_{i} AS (
-  SELECT subspace, cid, pos,
-         list_sum(list(psum ORDER BY salt)) AS sm,
-         sum(pn)::BIGINT AS cnt
-  FROM pp1_{i} GROUP BY 1, 2, 3
-),
-pcent{i + 1} AS (
-  SELECT subspace, cid, list(sm / cnt ORDER BY pos) AS csub
-  FROM pp2_{i} GROUP BY 1, 2
-)"""
-        )
-    return "".join(parts)
-
-
-def _sql_ivf_pq_chain(
-    probes_body: str = "SELECT vec_id AS query_id, e FROM n"
-    " WHERE vec_id % 100 = 0",
-    topk: int = 5,
-) -> str:
-    """CTE chain (appends to an open WITH providing ``n``) ending in
-    ``ivfpq`` = (query_id, neighbor_id, rank, adc_dist) — the SQL twin
-    of `operators.pq.knn_ivf_pq` (RESIDUAL encoding: PQ quantizes
-    ``v − centroid(cell(v))``, the query's ADC table is per probed
-    cell), shared by the `knn_ivf_pq` oracle and the `pq_recall`
-    diagnostic so the recall row measures EXACTLY the index the search
-    query ships. ``probes_body`` parametrizes the probe relation (the
-    search query scales probes with the corpus; the recall diagnostic
-    pins a fixed-size panel)."""
-    from ..operators import kmeans, pq as _pq
-
-    m, sd, kcw = _pq.IVFPQ_M, _pq.IVFPQ_SUBDIM, _pq.PQ_CODEWORDS
-    nprobe = _pq.IVFPQ_NPROBE
-    cb_iters = _pq.PQ_LLOYD_ITERS
-    iters, salts = kmeans.KM_ITERS, kmeans.KM_SALTS
-    smod = kmeans.KM_IVF_SAMPLE_MOD
-    tp = f"vec_id % {smod} = 0"
-    dim = m * sd
-    k_sqrt = "(SELECT greatest(2, CAST(floor(sqrt(count(*))) AS BIGINT)) FROM s)"
-    pd_pivots = ", ".join(
-        f"sum(CASE WHEN subspace = {i} THEN pd END) AS pd{i}"
-        for i in range(m)
-    )
-    adc_sum = " + ".join(f"pd{i}" for i in range(m))
-    probe_cell_dist = (
-        f"list_sum(list_transform(range(1, {dim + 1}),"
-        " j -> (p.e[j] - coarse.c[j]) * (p.e[j] - coarse.c[j])))"
-    )
-    code_l2 = (
-        f"list_sum(list_transform(range(1, {sd + 1}),"
-        " j -> (v.sub[j] - c.csub[j]) * (v.sub[j] - c.csub[j])))"
-    )
-    partial_l2 = (
-        f"list_sum(list_transform(range(1, {sd + 1}),"
-        f" j -> (q.e[c.subspace * {sd} + j] - c.csub[j])"
-        f" * (q.e[c.subspace * {sd} + j] - c.csub[j])))"
-    )
-    coarse_ctes = f"""
-s AS (SELECT vec_id, e FROM n WHERE {tp})
-{_sql_kmeans_lloyd('s', k_sqrt, iters, salts)},
-coarse AS (SELECT cluster AS coarse, c FROM cent{iters})"""
-    return f""",{coarse_ctes},
-assigned AS (
-  SELECT vec_id, coarse FROM (
-    SELECT n.vec_id, coarse.coarse,
-           row_number() OVER (
-             PARTITION BY n.vec_id ORDER BY {_KM_DIST}, coarse.coarse
-           ) AS rn
-    FROM n, coarse
-  ) WHERE rn = 1
-),
-resid AS (
-  SELECT n.vec_id,
-         list_transform(range(1, {dim + 1}), j -> n.e[j] - co.c[j]) AS e
-  FROM n JOIN assigned a USING (vec_id) JOIN coarse co USING (coarse)
-),
-rs AS (SELECT vec_id, e FROM resid WHERE {tp}),
-probes AS ({probes_body}),
-pcells AS (
-  SELECT query_id, coarse FROM (
-    SELECT p.query_id, coarse.coarse,
-           row_number() OVER (
-             PARTITION BY p.query_id
-             ORDER BY {probe_cell_dist}, coarse.coarse
-           ) AS rn
-    FROM probes p, coarse
-  ) WHERE rn <= {nprobe}
-),
-qresid AS (
-  SELECT pc.query_id, pc.coarse,
-         list_transform(range(1, {dim + 1}), j -> p.e[j] - co.c[j]) AS e
-  FROM pcells pc JOIN probes p USING (query_id)
-  JOIN coarse co USING (coarse)
-),
-subspaces AS (SELECT unnest(range(0, {m})) AS m),
-sub AS (
-  SELECT vec_id, sp.m AS subspace,
-         list_transform(range(1, {sd + 1}), j -> e[sp.m * {sd} + j]) AS sub
-  FROM resid, subspaces sp
-),
-tsub AS (SELECT * FROM sub WHERE {tp})
-{_sql_pq_lloyd(cb_iters, salts, sd, kcw, sub_src='tsub', seed_src='rs')},
-codes AS (
-  SELECT vec_id, subspace, cid AS code FROM (
-    SELECT v.vec_id, v.subspace, c.cid,
-           row_number() OVER (
-             PARTITION BY v.vec_id, v.subspace ORDER BY {code_l2}, c.cid
-           ) AS rn
-    FROM sub v JOIN pcent{cb_iters} c USING (subspace)
-  ) WHERE rn = 1
-),
-partials AS (
-  SELECT q.query_id, q.coarse, c.subspace, c.cid AS code, {partial_l2} AS pd
-  FROM qresid q, pcent{cb_iters} c
-),
-cand AS (
-  SELECT pc.query_id, pc.coarse, a.vec_id AS neighbor_id
-  FROM pcells pc JOIN assigned a USING (coarse)
-  WHERE pc.query_id <> a.vec_id
-),
-prows AS (
-  SELECT cd.query_id, cd.neighbor_id, k.subspace, pt.pd
-  FROM cand cd
-  JOIN codes k ON k.vec_id = cd.neighbor_id
-  JOIN partials pt ON pt.query_id = cd.query_id AND pt.coarse = cd.coarse
-    AND pt.subspace = k.subspace AND pt.code = k.code
-),
-ppairs AS (
-  SELECT query_id, neighbor_id, {pd_pivots} FROM prows GROUP BY 1, 2
-),
-padc AS (
-  SELECT query_id, neighbor_id, {adc_sum} AS adc_dist FROM ppairs
-),
-ivfpq AS (
-  SELECT query_id, neighbor_id, rank, adc_dist FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY adc_dist, neighbor_id
-    )::BIGINT AS rank FROM padc
-  ) WHERE rank <= {topk}
-)"""
-
-
-# Build-once IVF-PQ index shared by the knn_ivf_pq / knn_ivf_pq_refined
-# / pq_recall diagnostic family (VERDICT r9 item 2: each re-learned an
-# identical ~8 s quantizer+codebook). Keyed by (Spark application,
-# sf_dir); parquet-backed via persist_ivf_pq_index so the index
-# survives `cache.release_cached` between bench-loop queries (an
-# in-session localCheckpoint index would lose its blocks there). The
-# build is deterministic, so serving from the persisted copy is
-# result-identical to a per-query build — the property
-# `ivf_index_roundtrip` pins for the IVF quantizer and
-# `tests/test_pq.py::test_ivf_pq_index_roundtrip_identical` pins for
-# this composed index.
-_IVFPQ_SHARED: dict[tuple, object] = {}
 
 # Build-once √-scaled coarse centroid table over the RAW embeddings
 # corpus (kmeans_centroids on the deterministic vec_id % 4 sample,
-# sqrt_sample_k, KM_ITERS): kmeans_ivf_assign, knn_ivf_learned and
-# build_ivf_pq_index each learned this IDENTICAL table from scratch —
-# three ~3 s sample-Lloyd runs per bench sweep. Parquet-backed per
-# (application, sf_dir) like every other shared artifact; doubles
-# round-trip exactly, so every consumer's result is identical to an
-# in-session learn (pinned by test_kmeans_ivf_assign_prebuilt_coarse).
+# sqrt_sample_k, KM_ITERS) served to kmeans_ivf_assign, instead of a
+# ~3 s sample-Lloyd run per call. Parquet-backed per (application,
+# sf_dir) like every other shared artifact; doubles round-trip
+# exactly, so the result is identical to an in-session learn (pinned
+# by test_kmeans_ivf_assign_prebuilt_coarse).
 _COARSE_CENTS_SHARED: dict[tuple, object] = {}
 
 
@@ -539,465 +51,6 @@ def _shared_coarse_centroids(spark, sf_dir):
     return shared_artifact(
         _COARSE_CENTS_SHARED, spark, sf_dir, "coarse_cents_", build
     )
-
-
-def _shared_ivfpq_index(spark, sf_dir):
-    from ..cache import shared_artifact
-    from ..operators import pq
-
-    def build(d):
-        emb = load_table(spark, sf_dir, "embeddings")
-        built = pq.build_ivf_pq_index(
-            emb, coarse_cents=_shared_coarse_centroids(spark, sf_dir)
-        )
-        pq.persist_ivf_pq_index(built, d)
-        return pq.read_ivf_pq_index(spark, d)
-
-    return shared_artifact(
-        _IVFPQ_SHARED, spark, sf_dir, "ivfpq_shared_", build
-    )
-
-
-def q_knn_ivf_pq(spark, sf_dir):
-    """IVF-ADC in one query (`operators.pq.knn_ivf_pq`): Lloyd coarse
-    quantizer (√-scaled k on the deterministic 1/4 sample) restricts
-    candidates to the 16 nearest inverted lists per probe; a Lloyd-
-    LEARNED per-subspace PQ codebook (16 subspaces × 256 codewords, 2
-    grouped Lloyd rounds over the `pq_codebook` seeds) scores them by
-    asymmetric distance over RESIDUALS (v − cell centroid — the
-    standard IVF-ADC formulation; round 8) — the composed learned
-    index real 100 TB ANN ships, with its measured recall registered
-    alongside as `pq_recall` (config chosen by the measured sweeps in
-    `pq.IVFPQ_M`'s comment: ADC recall 0.19 → 0.46). Served from the
-    family-shared built-once index (`_shared_ivfpq_index`)."""
-    from ..operators import pq
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = emb.select("vec_id").where("vec_id % 100 = 0")
-    return pq.knn_ivf_pq_from_index(
-        _shared_ivfpq_index(spark, sf_dir), emb, probe, k=5
-    )
-
-
-def _sql_knn_ivf_pq() -> str:
-    return f"""
-WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
-{_sql_ivf_pq_chain()}
-SELECT query_id, neighbor_id, rank, adc_dist FROM ivfpq
-"""
-
-
-def q_knn_ivf_pq_served32(spark, sf_dir):
-    """The SERVING-posture twin of `knn_ivf_pq` (round 13): the same
-    persisted family-shared index probed by a FIXED hash-selected
-    32-probe panel — the panel a retrieval service runs, where probe
-    volume is set by traffic, not corpus size. `knn_ivf_pq`'s
-    ``vec_id % 100`` panel GROWS with the corpus (20 probes at sf0.1 →
-    2,000 at the 100× replica), so its growth ratio measures probe
-    volume; this row is the one whose growth curve IS the serving
-    claim — measured ~flat across 100× corpus growth (3.66 → 3.18 →
-    5.21 s, SCALE.md round 13). Per-probe cost is
-    bounded by nprobe × cell size; the fixed panel makes the row's
-    total likewise bounded."""
-    from ..functions.text import hash60
-    from ..operators import pq
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = (
-        emb.select(
-            "vec_id",
-            hash60(F.col("vec_id").cast("string"), seed="srv").alias("h"),
-        )
-        .orderBy("h", "vec_id")
-        .limit(32)
-        .select("vec_id")
-    )
-    return pq.knn_ivf_pq_from_index(
-        _shared_ivfpq_index(spark, sf_dir), emb, probe, k=5
-    )
-
-
-def _sql_knn_ivf_pq_served32() -> str:
-    h = hash60_sql("vec_id::VARCHAR", "'srv'")
-    panel = f"SELECT vec_id, e FROM n ORDER BY {h}, vec_id LIMIT 32"
-    return f"""
-WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
-{_sql_ivf_pq_chain(
-    probes_body=f"SELECT vec_id AS query_id, e FROM ({panel})"
-)}
-SELECT query_id, neighbor_id, rank, adc_dist FROM ivfpq
-"""
-
-
-# ADC shortlist size feeding the exact re-rank. 20 → 64 in round 9: the
-# r8 verdict's sweep showed the candidate ceiling (not the encoding)
-# bound refined recall at 0.62; with nprobe=16 the (16, 64) point
-# measures refined recall@5 = 0.91 at flat latency (curve in
-# `pq.IVFPQ_M`'s comment and COVERAGE.md).
-PQ_REFINE = 64
-
-
-def q_knn_ivf_pq_refined(spark, sf_dir):
-    """Two-stage IVF-ADC retrieval (`operators.pq.knn_ivf_pq_refined`):
-    the composed learned index shortlists 64 candidates per probe by
-    asymmetric distance (codes only), then an exact re-rank over just
-    those refine·|probes| original vectors keeps the final 5 — the
-    production recipe that recovers most quantization loss without
-    touching vectors at scan time (measured refined recall@5 0.91 vs
-    0.46 raw ADC at the shipped nprobe=16/refine=64 point). Same
-    corpus-scaled probes as `knn_ivf_pq`; `pq_recall` measures both
-    stages. Served from the family-shared built-once index."""
-    from ..operators import pq
-
-    from ..cache import materialize
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = emb.select("vec_id").where("vec_id % 100 = 0")
-    # `pq_refine` references its shortlist twice (pair resolve + the
-    # query-panel semi-join); materialize the narrow (query_id,
-    # neighbor_id, rank, adc_dist) rows once so the whole ADC probe
-    # subtree executes once, not per reference (round 15, guide
-    # §1.2/§5 — the `_pq_recall_over` shortlist pattern).
-    short = materialize(
-        pq.knn_ivf_pq_from_index(
-            _shared_ivfpq_index(spark, sf_dir), emb, probe, k=PQ_REFINE
-        )
-    )
-    return pq.pq_refine(emb, short, k=5)
-
-
-_SQL_L2_QC = (
-    "list_sum(list_transform(range(1, 65),"
-    " j -> (q.e[j] - c.e[j]) * (q.e[j] - c.e[j])))"
-)
-
-
-def _sql_refined(topk: int) -> str:
-    """CTE chain appending the exact re-rank to an open WITH that ends
-    in ``ivfpq`` (the ADC shortlist): ``refined`` = final top-``topk``
-    by true squared-L2. Shared by the `knn_ivf_pq_refined` oracle and
-    `pq_recall` so the recall row measures exactly the shipped query."""
-    return f""",
-rr AS (
-  SELECT s.query_id, s.neighbor_id, {_SQL_L2_QC} AS l2sq
-  FROM ivfpq s
-  JOIN n q ON q.vec_id = s.query_id
-  JOIN n c ON c.vec_id = s.neighbor_id
-),
-refined AS (
-  SELECT query_id, neighbor_id, rank, l2sq FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY l2sq, neighbor_id
-    )::BIGINT AS rank FROM rr
-  ) WHERE rank <= {topk}
-)"""
-
-
-def _sql_knn_ivf_pq_refined() -> str:
-    return f"""
-WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
-{_sql_ivf_pq_chain(topk=PQ_REFINE)}
-{_sql_refined(5)}
-SELECT query_id, neighbor_id, rank, l2sq FROM refined
-"""
-
-
-
-def q_knn_ivf(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.knn_ivf(emb, _knn_probe_df(spark, sf_dir), k=5)
-
-
-def q_knn_ivf_learned(spark, sf_dir):
-    """IVF search over LEARNED (Lloyd) centroids — `similarity.
-    knn_ivf_learned`: same probe path as knn_cosine_ivf, centroids
-    learned on the deterministic 1/4 sample instead of mod-sampled.
-    Served from the family-shared persisted coarse-centroid build
-    (`_shared_coarse_centroids`)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.knn_ivf_learned(
-        emb,
-        _knn_probe_df(spark, sf_dir),
-        k=5,
-        centroids=_shared_coarse_centroids(spark, sf_dir).select(
-            F.col("coarse").alias("cluster"), "c"
-        ),
-    )
-
-
-def _sql_knn_ivf_learned() -> str:
-    from ..operators import kmeans
-
-    iters, salts = kmeans.KM_ITERS, kmeans.KM_SALTS
-    # sqrt-scaled coarse k derived from the sample (kmeans.sqrt_sample_k twin)
-    k = "(SELECT greatest(2, CAST(floor(sqrt(count(*))) AS BIGINT)) FROM s)"
-    smod = kmeans.KM_IVF_SAMPLE_MOD
-    return f"""
-WITH nn AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e,
-         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-  FROM embeddings
-),
-n AS (SELECT vec_id, e FROM nn),
-s AS (SELECT vec_id, e FROM n WHERE vec_id % {smod} = 0)
-{_sql_kmeans_lloyd('s', k, iters, salts)},
-cent AS (
-  SELECT cluster AS cid, c AS ce,
-         sqrt(list_sum(list_transform(c, x -> x * x))) AS cnrm
-  FROM cent{iters}
-),
-sc AS (
-  SELECT nn.vec_id, nn.e, nn.nrm, cent.cid,
-         list_sum(list_transform(range(1, 65), j -> nn.e[j] * cent.ce[j]))
-           / (nn.nrm * cent.cnrm) AS ccos
-  FROM nn CROSS JOIN cent
-),
-member AS (
-  SELECT vec_id AS neighbor_id, e, nrm, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid)
-              AS rn FROM sc
-  ) WHERE rn = 1
-),
-probe_lists AS (
-  SELECT vec_id AS query_id, e AS qe, nrm AS qnrm, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid)
-              AS rn
-    FROM sc WHERE vec_id % 20 = 0
-  ) WHERE rn <= 3
-),
-scored AS (
-  SELECT p.query_id, m.neighbor_id,
-         list_sum(list_transform(range(1, 65), j -> p.qe[j] * m.e[j]))
-           / (p.qnrm * m.nrm) AS cosine
-  FROM probe_lists p JOIN member m USING (cid)
-  WHERE p.query_id <> m.neighbor_id
-)
-SELECT query_id, neighbor_id, rank, cosine FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-  )::BIGINT AS rank FROM scored
-) WHERE rank <= 5
-"""
-
-
-SQL_KNN_IVF = """
-WITH n AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e,
-         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-  FROM embeddings
-),
-cent AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm FROM n WHERE vec_id % 40 = 0),
-sc AS (
-  SELECT n.vec_id, n.e, n.nrm, c.cid,
-         list_sum(list_transform(range(1, 65), j -> n.e[j] * c.ce[j]))
-           / (n.nrm * c.cnrm) AS ccos
-  FROM n CROSS JOIN cent c
-),
-member AS (
-  SELECT vec_id AS neighbor_id, e, nrm, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid)
-              AS rn FROM sc
-  ) WHERE rn = 1
-),
-probe_lists AS (
-  SELECT vec_id AS query_id, e AS qe, nrm AS qnrm, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid)
-              AS rn
-    FROM sc WHERE vec_id % 20 = 0
-  ) WHERE rn <= 3
-),
-scored AS (
-  SELECT p.query_id, m.neighbor_id,
-         list_sum(list_transform(range(1, 65), j -> p.qe[j] * m.e[j]))
-           / (p.qnrm * m.nrm) AS cosine
-  FROM probe_lists p JOIN member m USING (cid)
-  WHERE p.query_id <> m.neighbor_id
-)
-SELECT query_id, neighbor_id, rank, cosine FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-  )::BIGINT AS rank FROM scored
-) WHERE rank <= 5
-"""
-
-
-def q_embedding_near_dup(spark, sf_dir):
-    corpus = derive_near_dup_embeddings(load_table(spark, sf_dir, "embeddings"))
-    return similarity.embedding_near_duplicates(corpus, threshold=0.95)
-
-
-SQL_EMBEDDING_NEAR_DUP = f"""
-WITH emb_nd AS ({_ND_EMB}),
-n AS (
-  SELECT vec_id, embedding AS e,
-         sqrt(list_sum(list_transform(embedding, x -> x * x))) AS nrm
-  FROM emb_nd
-),
-planes AS (SELECT * FROM (VALUES {_srp_planes_values()}) t(p, w)),
-nb AS (
-  SELECT vec_id, e, nrm,
-         sum(CASE WHEN list_sum(list_transform(range(1, 65), j -> e[j] * w[j])) > 0
-                  THEN 1 << p ELSE 0 END)::BIGINT AS bucket
-  FROM n CROSS JOIN planes
-  GROUP BY vec_id, e, nrm
-)
-SELECT a.vec_id AS a, b.vec_id AS b,
-       list_sum(list_transform(range(1, 65), j -> a.e[j] * b.e[j]))
-         / (a.nrm * b.nrm) AS cosine
-FROM nb a JOIN nb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE list_sum(list_transform(range(1, 65), j -> a.e[j] * b.e[j]))
-        / (a.nrm * b.nrm) >= 0.95
-"""
-
-
-def q_semantic_dedup(spark, sf_dir):
-    corpus = derive_near_dup_embeddings(load_table(spark, sf_dir, "embeddings"))
-    return similarity.semantic_near_duplicates(corpus, threshold=0.9)
-
-
-SQL_SEMANTIC_DEDUP = f"""
-WITH emb_nd AS ({_ND_EMB}),
-n AS (
-  SELECT vec_id, embedding AS e,
-         sqrt(list_sum(list_transform(embedding, x -> x * x))) AS nrm
-  FROM emb_nd
-),
--- sqrt-scaled centroid sampling: greatest(2, floor(sqrt(N))) is the
--- oracle twin of similarity.sqrt_centroid_mod (isqrt == floor(sqrt)
--- at any testable N).
-cmod AS (
-  SELECT greatest(2, CAST(floor(sqrt(count(*))) AS BIGINT)) AS m FROM n
-),
-cent AS (
-  SELECT vec_id AS cid, e AS ce, nrm AS cnrm FROM n
-  WHERE vec_id % (SELECT m FROM cmod) = 0
-),
-sc AS (
-  SELECT n.vec_id, n.e, n.nrm, c.cid,
-         list_sum(list_transform(range(1, 65), j -> n.e[j] * c.ce[j]))
-           / (n.nrm * c.cnrm) AS ccos
-  FROM n CROSS JOIN cent c
-),
-member AS (
-  SELECT vec_id, e, nrm, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid)
-              AS rn FROM sc
-  ) WHERE rn = 1
-)
-SELECT a.vec_id AS a, b.vec_id AS b, a.cid AS cid,
-       list_sum(list_transform(range(1, 65), j -> a.e[j] * b.e[j]))
-         / (a.nrm * b.nrm) AS cosine
-FROM member a JOIN member b ON a.cid = b.cid AND a.vec_id < b.vec_id
-WHERE list_sum(list_transform(range(1, 65), j -> a.e[j] * b.e[j]))
-        / (a.nrm * b.nrm) >= 0.9
-"""
-
-
-def _sem_probe_pred(col):
-    """Deterministic 5% probe sample of ORIGINAL vectors for
-    `semantic_recall_learned` (< 1e6 excludes the derived copy bands)."""
-    return (col % 20 == 0) & (col < 1_000_000)
-
-
-def q_semantic_recall_learned(spark, sf_dir):
-    """Per-probe recall of `semantic_dedup_learned` vs EXACT cosine
-    truth (cos ≥ 0.9 over the same corpus) — the learned quantizer's
-    own entry in the self-measuring diagnostic matrix (`ann_recall_lsh`
-    / `ann_recall_ivf` / `minhash_recall`): a miss is a pair split
-    across (coarse, fine) cells, isolating exactly the blindness the
-    SemDeDup trade accepts. Truth is probe-restricted (every 20th
-    original vector) with the probe side broadcast against the
-    streaming corpus — the bounded asymmetric scan, same posture as the
-    other recall diagnostics; production uses a fixed probe sample."""
-    corpus = derive_near_dup_embeddings(load_table(spark, sf_dir, "embeddings"))
-    nn = corpus.select(
-        "vec_id",
-        "embedding",
-        similarity.norm64(F.col("embedding")).alias("nrm"),
-    )
-    probes = nn.where(_sem_probe_pred(F.col("vec_id"))).select(
-        F.col("vec_id").alias("p"),
-        F.col("embedding").alias("p_emb"),
-        F.col("nrm").alias("p_nrm"),
-    )
-    cos = similarity.dot64(F.col("p_emb"), F.col("embedding")) / (
-        F.col("p_nrm") * F.col("nrm")
-    )
-    truth = (
-        nn.crossJoin(F.broadcast(probes))
-        .where(F.col("p") != F.col("vec_id"))
-        .withColumn("cosine", cos)
-        .where(F.col("cosine") >= 0.9)
-        .select("p", F.col("vec_id").alias("o"))
-    )
-    found = similarity.semantic_near_duplicates_learned(
-        corpus,
-        threshold=0.9,
-        probe_pred=_sem_probe_pred,
-        cells=_shared_semantic_cells(spark, sf_dir),
-    ).select("a", "b", F.lit(1).alias("hit"))
-    keyed = truth.select(
-        "p", F.least("p", "o").alias("a"), F.greatest("p", "o").alias("b")
-    )
-    return (
-        keyed.join(found, ["a", "b"], "left")
-        .groupBy("p")
-        .agg(
-            F.count("*").alias("n_true"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_found"),
-        )
-        .select(
-            F.col("p").alias("probe_id"),
-            "n_true",
-            "n_found",
-            (F.col("n_found") / F.col("n_true")).alias("recall"),
-        )
-    )
-
-
-def _sql_semantic_recall_learned() -> str:
-    cos_ab = (
-        "list_sum(list_transform(range(1, 65), j -> a.e[j] * b.e[j]))"
-        " / (a.nrm * b.nrm)"
-    )
-    cos_pc = (
-        "list_sum(list_transform(range(1, 65), j -> p.e[j] * c.e[j]))"
-        " / (p.nrm * c.nrm)"
-    )
-    return f"""
-WITH emb_nd AS ({_ND_EMB}),
-n AS (SELECT vec_id, embedding AS e FROM emb_nd)
-{_sql_kmeans_ivf_cells()},
-m AS (
-  SELECT n.vec_id, n.e,
-         sqrt(list_sum(list_transform(n.e, x -> x * x))) AS nrm,
-         c.coarse, c.fine
-  FROM n JOIN cells c USING (vec_id)
-),
-found AS (
-  SELECT a.vec_id AS a, b.vec_id AS b
-  FROM m a JOIN m b
-    ON a.coarse = b.coarse AND a.fine = b.fine AND a.vec_id < b.vec_id
-  WHERE {cos_ab} >= 0.9
-),
-nn AS (
-  SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-  FROM n
-),
-truth AS (
-  SELECT p.vec_id AS p, c.vec_id AS o
-  FROM nn p, nn c
-  WHERE p.vec_id % 20 = 0 AND p.vec_id < 1000000
-    AND p.vec_id <> c.vec_id AND {cos_pc} >= 0.9
-)
-SELECT t.p AS probe_id, count(*) AS n_true,
-       sum(CASE WHEN f.a IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_found,
-       sum(CASE WHEN f.a IS NOT NULL THEN 1 ELSE 0 END)::BIGINT / count(*)
-         AS recall
-FROM truth t LEFT JOIN found f
-  ON f.a = least(t.p, t.o) AND f.b = greatest(t.p, t.o)
-GROUP BY t.p
-"""
 
 
 def q_corpus_upsert(spark, sf_dir):
@@ -1040,8 +93,7 @@ SELECT doc_id, version, text_hash FROM (
 
 # Build-once STATIC quantizer (coarse + fine tables over the even-id
 # indexed half), shared by the four upsert-family queries — each
-# previously re-learned the identical base quantizer (the re-learn
-# pattern _shared_ivfpq_index closed for IVF-ADC). Persisted to parquet
+# previously re-learned the identical base quantizer. Persisted to parquet
 # (the very form ivf_index_roundtrip proves sound) so it survives
 # `release_cached`; deterministic build → identical results.
 _UPSERT_Q_SHARED: dict[tuple, object] = {}
@@ -1204,109 +256,6 @@ def q_ivf_index_roundtrip(spark, sf_dir):
     ).alias("ivf_index_rt")
 
 
-# The upsert family's per-subspace PQ codebook (Lloyd-learned once
-# from the indexed half's deterministic sample), shared by the batch
-# and streaming twins exactly like `_shared_upsert_quantizer` shares
-# the IVF quantizer (round 14): both rows previously re-learned the
-# IDENTICAL deterministic codebook per run. M·K rows of doubles
-# round-trip parquet bit-exactly, so encodes against the parquet copy
-# equal encodes against the in-session build
-# (tests/test_extensions.py pins the identity).
-_PQ_UPSERT_CB_SHARED: dict[tuple, object] = {}
-
-
-def _shared_pq_upsert_codebook(spark, sf_dir):
-    from ..cache import shared_artifact
-    from ..operators import pq
-
-    def build(d):
-        emb = load_table(spark, sf_dir, "embeddings")
-        pq.pq_codebook_learned(
-            emb.where("vec_id % 2 = 0"), train_mod=4
-        ).write.mode("overwrite").parquet(f"{d}/codebook")
-        return spark.read.parquet(f"{d}/codebook")
-
-    return shared_artifact(
-        _PQ_UPSERT_CB_SHARED, spark, sf_dir, "pq_upsert_cb_", build
-    )
-
-
-def q_pq_codes_upsert(spark, sf_dir):
-    """PQ code-index maintenance, batch form: the per-subspace codebook
-    is Lloyd-learned once from the indexed (even-id) half's
-    deterministic sample (`pq.pq_codebook_learned(train_mod=4)`), and
-    the incoming (odd-id) half is ENCODED against it (`pq.pq_encode` —
-    one broadcast join + one argmin aggregate, M small ints per
-    vector). Together with `ivf_upsert_assign` this appends everything
-    IVF-ADC needs for new vectors without touching the learned
-    structures. Output (vec_id, subspace, code). The codebook serves
-    from the family-shared parquet build (`_shared_pq_upsert_codebook`
-    — round 14: the batch and streaming twins each re-learned the
-    IDENTICAL deterministic Lloyd codebook per run; production
-    persists the learned structure once and every upsert wave encodes
-    against the stored copy)."""
-    from ..operators import pq
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    codebook = _shared_pq_upsert_codebook(spark, sf_dir)
-    return pq.pq_encode(emb.where("vec_id % 2 = 1"), codebook).select(
-        "vec_id",
-        F.col("subspace").cast("bigint").alias("subspace"),
-        "code",
-    )
-
-
-def q_pq_codes_upsert_streaming(spark, sf_dir):
-    """The same encoding as a stream (`streaming.windows.
-    streaming_pq_encode`): incoming vectors explode to subvectors
-    stream-side, score against the static broadcast codebook, and hold
-    only per-(vec_id, subspace) argmin state. Shares the batch oracle
-    by the registry twin guard. Codebook from the family-shared
-    parquet build (`_shared_pq_upsert_codebook`), as on the batch
-    side."""
-    from ..streaming.windows import streaming_pq_encode
-
-    return streaming_pq_encode(
-        spark, sf_dir, codebook=_shared_pq_upsert_codebook(spark, sf_dir)
-    )
-
-
-def _sql_pq_codes_upsert() -> str:
-    from ..operators import kmeans, pq as _pq
-
-    m, sd, kcw = _pq.PQ_M, _pq.PQ_SUBDIM, _pq.PQ_CODEWORDS
-    cb_iters = _pq.PQ_LLOYD_ITERS
-    salts = kmeans.KM_SALTS
-    code_l2 = (
-        f"list_sum(list_transform(range(1, {sd + 1}),"
-        " j -> (v.sub[j] - c.csub[j]) * (v.sub[j] - c.csub[j])))"
-    )
-    return f"""
-WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-s AS (SELECT vec_id, e FROM n WHERE vec_id % 2 = 0 AND vec_id % 4 = 0),
-subspaces AS (SELECT unnest(range(0, {m})) AS m),
-tsub AS (
-  SELECT vec_id, sp.m AS subspace,
-         list_transform(range(1, {sd + 1}), j -> e[sp.m * {sd} + j]) AS sub
-  FROM s, subspaces sp
-)
-{_sql_pq_lloyd(cb_iters, salts, sd, kcw, sub_src='tsub', seed_src='s')},
-isub AS (
-  SELECT vec_id, sp.m AS subspace,
-         list_transform(range(1, {sd + 1}), j -> e[sp.m * {sd} + j]) AS sub
-  FROM n, subspaces sp
-  WHERE vec_id % 2 = 1
-)
-SELECT vec_id, subspace, cid AS code FROM (
-  SELECT v.vec_id, v.subspace, c.cid,
-         row_number() OVER (
-           PARTITION BY v.vec_id, v.subspace ORDER BY {code_l2}, c.cid
-         ) AS rn
-  FROM isub v JOIN pcent{cb_iters} c USING (subspace)
-) WHERE rn = 1
-"""
-
-
 def q_ivf_upsert_drift(spark, sf_dir):
     """Index-staleness diagnostic for the upsert path
     (`kmeans.ivf_upsert_drift`): per incoming vector, the fine-level
@@ -1347,95 +296,6 @@ def q_corpus_upsert_streaming(spark, sf_dir):
     from ..streaming.windows import streaming_corpus_upsert
 
     return streaming_corpus_upsert(spark, sf_dir)
-
-
-def q_ann_recall_ivf(spark, sf_dir):
-    """Recall@5 of the IVF path vs the exact brute-force ranking —
-    completes the self-measuring diagnostic matrix alongside
-    `ann_recall_lsh` and `minhash_recall`: every approximate index the
-    engine ships reports its own measured recall as an oracle-checked
-    query. Misses here isolate the coarse-quantizer knobs (centroid
-    sample density, nprobe), the knobs `semantic_dedup`'s √N scaling
-    note tunes. Both sides serve from the pair-shared parquet of
-    their OWN registered rows (`_shared_knn_topk` — round 14, guide
-    §1.2: the stacks are timed end-to-end by `knn_cosine_bruteforce`
-    / `knn_cosine_ivf` themselves, and the brute-force truth artifact
-    is shared with `ann_recall_lsh`)."""
-    bf = _shared_knn_topk(
-        _KNN_BF_SHARED, "knn_bf_", q_knn_bruteforce, spark, sf_dir
-    )
-    ivf = _shared_knn_topk(
-        _KNN_IVF_SHARED, "knn_ivf_", q_knn_ivf, spark, sf_dir
-    ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    return (
-        bf.join(ivf, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("*").alias("n_true"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            "n_true",
-            "n_hit",
-            (F.col("n_hit") / F.col("n_true")).alias("recall"),
-        )
-    )
-
-
-SQL_ANN_RECALL_IVF = f"""
-WITH n AS ({_DUCK_VEC_N}),
-bf_scored AS ({_DUCK_BF_SCORED}),
-bf AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-    ) AS rank FROM bf_scored
-  ) WHERE rank <= 5
-),
-cent AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm FROM n WHERE vec_id % 40 = 0),
-sc AS (
-  SELECT n.vec_id, n.e, n.nrm, c.cid,
-         list_sum(list_transform(range(1, 65), j -> n.e[j] * c.ce[j]))
-           / (n.nrm * c.cnrm) AS ccos
-  FROM n CROSS JOIN cent c
-),
-member AS (
-  SELECT vec_id AS neighbor_id, e, nrm, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid)
-              AS rn FROM sc
-  ) WHERE rn = 1
-),
-probe_lists AS (
-  SELECT vec_id AS query_id, e AS qe, nrm AS qnrm, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid)
-              AS rn
-    FROM sc WHERE vec_id % 20 = 0
-  ) WHERE rn <= 3
-),
-iscored AS (
-  SELECT p.query_id, m.neighbor_id,
-         list_sum(list_transform(range(1, 65), j -> p.qe[j] * m.e[j]))
-           / (p.qnrm * m.nrm) AS cosine
-  FROM probe_lists p JOIN member m USING (cid)
-  WHERE p.query_id <> m.neighbor_id
-),
-ivf AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-    ) AS rank FROM iscored
-  ) WHERE rank <= 5
-)
-SELECT bf.query_id, count(*) AS n_true,
-       sum(CASE WHEN ivf.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         AS n_hit,
-       sum(CASE WHEN ivf.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         / count(*) AS recall
-FROM bf LEFT JOIN ivf
-  ON bf.query_id = ivf.query_id AND bf.neighbor_id = ivf.neighbor_id
-GROUP BY bf.query_id
-"""
 
 
 def q_corpus_drift(spark, sf_dir):
@@ -1519,131 +379,9 @@ SELECT vec_id, coarse, fine, d FROM cells
 """
 
 
-# Build-once two-level cell assignment over the nd-embedding corpus,
-# shared by semantic_dedup_learned and its recall diagnostic (each
-# previously re-ran the identical sample-Lloyd + assign, the same
-# re-learn pattern _shared_ivfpq_index closed for IVF-ADC).
-# Parquet-backed so it survives `release_cached` between bench-loop
-# queries; the build is deterministic, so results are identical.
-_SEM_CELLS_SHARED: dict[tuple, object] = {}
-
-
-def _shared_semantic_cells(spark, sf_dir):
-    from ..cache import shared_artifact
-    from ..operators.kmeans import kmeans_ivf_assign
-
-    def build(d):
-        corpus = derive_near_dup_embeddings(
-            load_table(spark, sf_dir, "embeddings")
-        )
-        built = kmeans_ivf_assign(corpus).select(
-            "vec_id", "coarse", "fine"
-        )
-        built.write.mode("overwrite").parquet(f"{d}/cells")
-        return spark.read.parquet(f"{d}/cells")
-
-    return shared_artifact(
-        _SEM_CELLS_SHARED, spark, sf_dir, "sem_cells_", build
-    )
-
-
-def q_semantic_dedup_learned(spark, sf_dir):
-    """SemDeDup over LEARNED two-level clusters (`similarity.semantic_
-    near_duplicates_learned`): Lloyd coarse centroids on a deterministic
-    sample, fine cells through the IVF bucketed equi-join, exact cosine
-    pairs within each (coarse, fine) cell — the learned-centroid
-    upgrade `semantic_dedup`'s docstring defers, as a first-class
-    oracle-checked query over the planted near-dup embedding corpus.
-    Served from the pair-shared built-once cell assignment
-    (`_shared_semantic_cells`)."""
-    corpus = derive_near_dup_embeddings(load_table(spark, sf_dir, "embeddings"))
-    return similarity.semantic_near_duplicates_learned(
-        corpus, threshold=0.9, cells=_shared_semantic_cells(spark, sf_dir)
-    )
-
-
-def _sql_semantic_dedup_learned() -> str:
-    cos = (
-        "list_sum(list_transform(range(1, 65), j -> a.e[j] * b.e[j]))"
-        " / (a.nrm * b.nrm)"
-    )
-    return f"""
-WITH emb_nd AS ({_ND_EMB}),
-n AS (SELECT vec_id, embedding AS e FROM emb_nd)
-{_sql_kmeans_ivf_cells()},
-m AS (
-  SELECT n.vec_id, n.e,
-         sqrt(list_sum(list_transform(n.e, x -> x * x))) AS nrm,
-         c.coarse, c.fine
-  FROM n JOIN cells c USING (vec_id)
-)
-SELECT a.vec_id AS a, b.vec_id AS b, a.coarse AS coarse, a.fine AS fine,
-       {cos} AS cosine
-FROM m a JOIN m b
-  ON a.coarse = b.coarse AND a.fine = b.fine AND a.vec_id < b.vec_id
-WHERE {cos} >= 0.9
-"""
-
-
-def q_semantic_cells_roundtrip(spark, sf_dir):
-    """The semantic-cell assignment AS A PERSISTED INDEX (round 11,
-    VERDICT r10 item 5 — the one built-once artifact family without a
-    round-trip row; IVF, IVF-PQ, LSH bands, Bloom and BM25 already
-    persist): take the family-shared (vec_id, coarse, fine) cell
-    relation (`_shared_semantic_cells`), WRITE it to parquet (three
-    small integer columns, lossless), READ it back, and run the
-    SemDeDup pair join purely from the on-disk relation. Proof the
-    learned cell structure is DATA, not session state: a 100 TB
-    semantic-dedup fleet assigns cells once per corpus snapshot and
-    every later pass joins the parquet. Output identical to
-    `semantic_dedup_learned` (round-trip identity) — one oracle
-    string by the registry guard."""
-    from ..cache import tracked_mkdtemp
-
-    corpus = derive_near_dup_embeddings(load_table(spark, sf_dir, "embeddings"))
-    cells = _shared_semantic_cells(spark, sf_dir)
-    d = tracked_mkdtemp("sem_cells_rt_")
-    cells.write.mode("overwrite").parquet(f"{d}/cells")
-    # Identity tag (round 15, ADVICE r14): the operator materializes
-    # the member join, so a read-level alias would vanish behind the
-    # checkpoint scan — tag the row's OUTPUT instead, keeping the
-    # roundtrip's fingerprint distinct from the serving twin's.
-    return similarity.semantic_near_duplicates_learned(
-        corpus,
-        threshold=0.9,
-        cells=spark.read.parquet(f"{d}/cells"),
-    ).alias("sem_cells_rt")
-
-
 ANN_QUERIES: dict[str, tuple] = {
-    "knn_cosine_bruteforce": (q_knn_bruteforce, SQL_KNN_BRUTEFORCE),
-    "knn_cosine_lsh": (q_knn_lsh, SQL_KNN_LSH),
-    "knn_cosine_ivf": (q_knn_ivf, SQL_KNN_IVF),
-    "knn_cosine_ivf_learned": (q_knn_ivf_learned, _sql_knn_ivf_learned()),
-    "knn_pq_adc": (q_knn_pq_adc, _sql_knn_pq_adc()),
-    "knn_ivf_pq": (q_knn_ivf_pq, _sql_knn_ivf_pq()),
-    "knn_ivf_pq_served32": (
-        q_knn_ivf_pq_served32,
-        _sql_knn_ivf_pq_served32(),
-    ),
-    "knn_ivf_pq_refined": (q_knn_ivf_pq_refined, _sql_knn_ivf_pq_refined()),
-    "ann_recall_lsh": (q_ann_recall_lsh, SQL_ANN_RECALL_LSH),
-    "embedding_near_dup": (q_embedding_near_dup, SQL_EMBEDDING_NEAR_DUP),
-    "semantic_dedup": (q_semantic_dedup, SQL_SEMANTIC_DEDUP),
     "kmeans_embeddings": (q_kmeans_embeddings, _sql_kmeans()),
     "kmeans_ivf_assign": (q_kmeans_ivf_assign, _sql_kmeans_ivf()),
-    "semantic_recall_learned": (
-        q_semantic_recall_learned,
-        _sql_semantic_recall_learned(),
-    ),
-    "semantic_dedup_learned": (
-        q_semantic_dedup_learned,
-        _sql_semantic_dedup_learned(),
-    ),
-    "semantic_cells_roundtrip": (
-        q_semantic_cells_roundtrip,
-        _sql_semantic_dedup_learned(),
-    ),
     "corpus_drift": (q_corpus_drift, SQL_CORPUS_DRIFT),
     "corpus_upsert": (q_corpus_upsert, SQL_CORPUS_UPSERT),
     "corpus_upsert_streaming": (q_corpus_upsert_streaming, SQL_CORPUS_UPSERT),
@@ -1654,10 +392,4 @@ ANN_QUERIES: dict[str, tuple] = {
     ),
     "ivf_upsert_drift": (q_ivf_upsert_drift, _sql_ivf_upsert_drift()),
     "ivf_index_roundtrip": (q_ivf_index_roundtrip, _sql_ivf_upsert_assign()),
-    "pq_codes_upsert": (q_pq_codes_upsert, _sql_pq_codes_upsert()),
-    "pq_codes_upsert_streaming": (
-        q_pq_codes_upsert_streaming,
-        _sql_pq_codes_upsert(),
-    ),
-    "ann_recall_ivf": (q_ann_recall_ivf, SQL_ANN_RECALL_IVF),
 }

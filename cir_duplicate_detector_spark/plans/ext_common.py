@@ -11,7 +11,7 @@ callables, same oracle strings, same registry names.
 from __future__ import annotations
 
 from ..functions.text import hash60_sql
-from ..operators import dedup, similarity, textops
+from ..operators import dedup, textops
 from ..sources.derived import (
     derive_near_dup_corpus,
     near_dup_corpus_sql,
@@ -110,35 +110,6 @@ walk(node, label) AS (
   SELECT e.b, w.label FROM walk w JOIN dedges e ON e.a = w.node
 ),
 cc AS (SELECT node AS doc_id, min(label) AS cluster_id FROM walk GROUP BY node)"""
-
-
-def _srp_planes_values(n_planes: int = similarity.N_PLANES) -> str:
-    rows = []
-    for p in range(n_planes):
-        w = ", ".join(
-            str(float(similarity.srp_weight(p, d))) for d in range(64)
-        )
-        rows.append(f"({p}, [{w}])")
-    return ", ".join(rows)
-
-
-# Shared CTE: per-vector SRP bucket, same fold order as the Spark side
-# (list_sum over list_transform == aggregate over zip_with).
-_DUCK_SRP_BUCKETED = f"""
-n AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e,
-         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-  FROM embeddings
-),
-planes AS (SELECT * FROM (VALUES {_srp_planes_values()}) t(p, w)),
-nb AS (
-  SELECT vec_id, e, nrm,
-         sum(CASE WHEN list_sum(list_transform(range(1, 65), j -> e[j] * w[j])) > 0
-                  THEN 1 << p ELSE 0 END)::BIGINT AS bucket
-  FROM n CROSS JOIN planes
-  GROUP BY vec_id, e, nrm
-)
-"""
 
 
 _ND_EMB = near_dup_embeddings_sql("duckdb")
@@ -240,7 +211,7 @@ def _sql_kmeans_ivf_cells(idx_pred: str = "TRUE") -> str:
     ``n`` CTE provides ``vec_id, e`` double arrays) ending in ``cells``
     = ``(vec_id, coarse, fine, d)`` — the SQL twin of
     `operators.kmeans.kmeans_ivf_assign`, shared by the plain
-    `kmeans_ivf_assign` oracle and `semantic_dedup_learned`.
+    `kmeans_ivf_assign` oracle and `ivf_upsert_drift`.
 
     ``idx_pred`` restricts the INDEX-BUILD inputs (the Lloyd sample
     and the fine table) to a sub-corpus while still assigning ALL of

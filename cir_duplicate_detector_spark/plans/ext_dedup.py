@@ -237,11 +237,11 @@ FROM r WHERE rn = 1
 # doc_topk_similar) and the containment screen (dedup_containment).
 # Each previously rebuilt the identical explode + df-cap tree — three
 # full-corpus shingle explosions per query (probe side, size agg, join
-# side) times three queries. Same posture as `_shared_ivfpq_index` /
-# `_shared_semantic_cells`: keyed by (Spark application, sf_dir),
-# parquet-backed so it survives `cache.release_cached` between
-# bench-loop queries, and production-shaped — a real corpus builds its
-# inverted index once and serves every screen from the persisted copy.
+# side) times three queries. Same posture as every other shared
+# artifact: keyed by (Spark application, sf_dir), parquet-backed so it
+# survives `cache.release_cached` between bench-loop queries, and
+# production-shaped — a real corpus builds its inverted index once and
+# serves every screen from the persisted copy.
 # The build is deterministic (hash explode + exact count cap), so
 # serving from parquet is result-identical to the inline tree.
 _SHINGLE_IDX_SHARED: dict[tuple, object] = {}
@@ -1039,7 +1039,7 @@ def _shared_wave_labels(spark, sf_dir):
 def q_upsert_labels_agreement(spark, sf_dir):
     """The self-measuring row for the incremental labeler — every
     approximation in this engine ships one (`minhash_recall`,
-    `pq_recall`, `hybrid_recall`, ...): per incoming doc, compare the
+    `semantic_decon_recall`, ...): per incoming doc, compare the
     per-wave adoption (`dup_labels_upsert`) against the FULL closure
     over existing ∪ incoming (`_shared_dup_labels` — the compaction the
     contract defers to). Output (doc_id, matched, label_equals_full,
@@ -1439,13 +1439,12 @@ def _mhr_probe_pred(col):
 
 
 def q_minhash_recall(spark, sf_dir):
-    """Self-measuring dedup-index quality, the text twin of
-    `ann_recall_lsh`: per probe document, what fraction of its TRUE
-    near-duplicates (exact Jaccard ≥ 0.5 over the same uncapped
-    shingle universe the MinHash path uses) does the banded LSH
-    pipeline recover? The found side runs the same signatures → banded
-    candidates → exact-verify pipeline as `dedup.minhash_near_
-    duplicates`, with the candidate set probe-restricted BEFORE the
+    """Self-measuring dedup-index quality: per probe document, what
+    fraction of its TRUE near-duplicates (exact Jaccard ≥ 0.5 over the
+    same uncapped shingle universe the MinHash path uses) does the
+    banded LSH pipeline recover? The found side runs the same
+    signatures → banded candidates → exact-verify pipeline as
+    `dedup.minhash_near_duplicates`, with the candidate set probe-restricted BEFORE the
     verify join (recall only scores probe-touching pairs, and a
     banding miss is decided at candidate generation — restricting
     later stages cannot change any probe's verdict). Probes are a

@@ -659,8 +659,7 @@ _SEM_EVAL_MOD, _SEM_EVAL_REM = 11, 3
 
 # Build-once TRAIN-side quantizer assignment shared by the semantic
 # decontamination screen and its recall diagnostic (each previously
-# re-learned the identical train-side quantizer — the re-learn pattern
-# `_shared_ivfpq_index` closed for IVF-ADC). Parquet-backed so it
+# re-learned the identical train-side quantizer). Parquet-backed so it
 # survives `release_cached`; deterministic build → identical results.
 _DECON_CELLS_SHARED: dict[tuple, object] = {}
 
@@ -735,7 +734,7 @@ def q_semantic_decon_recall(spark, sf_dir):
     (coarse, fine) cells, the SemDeDup blindness, now measured for the
     cross-corpus direction. Truth is exact cosine >= 0.9 over train ×
     a FIXED 32-doc eval panel (smallest seeded-hash eval vec_ids —
-    the `pq_recall` discipline; truth over the full eval side would
+    the bounded-panel discipline; truth over the full eval side would
     grow |train|·|eval|, quadratic at scale). One row per panel doc
     with >= 1 true contaminating pair: (eval_id, n_true, n_found,
     recall); found ⊆ truth by construction (the screen computes the
@@ -855,11 +854,11 @@ def q_fuzzy_decon_recall(spark, sf_dir):
     """Recall of the `decontaminate_fuzzy` banded screen vs EXACT
     cross-corpus Jaccard truth — the self-measuring diagnostic every
     approximate index in this repo ships (`minhash_recall` /
-    `ann_recall_*` / `pq_recall` pattern): truth = exact 3-gram
+    `semantic_decon_recall` pattern): truth = exact 3-gram
     Jaccard >= 0.5 pairs via the shingle inverted-index join (pairs
     sharing zero shingles have J = 0 and exit naturally) over train ×
     a FIXED 32-doc eval panel (smallest seeded-hash eval doc_ids —
-    the `semantic_decon_recall` / `pq_recall` discipline, round 9:
+    the `semantic_decon_recall` discipline, round 9:
     truth over the FULL eval side grew with |eval|, measured 3.2× at
     the 10× replica; the panel bounds the exact side to a constant
     number of probe documents at any corpus size). The found side is
@@ -1132,8 +1131,8 @@ WHERE NOT ({ev})
 
 def q_decon_cells_roundtrip(spark, sf_dir):
     """The TRAIN-side decontamination cell assignment AS A PERSISTED
-    INDEX (round 11 — the companion row to `semantic_cells_roundtrip`,
-    closing VERDICT r10 item 5 for the whole semantic-cell family):
+    INDEX (round 11, VERDICT r10 item 5: every built-once artifact
+    family gets a round-trip row):
     take the pair-shared (vec_id, coarse, fine) relation
     (`_shared_decon_cells` — quantizer learned from the train side
     only), WRITE it to parquet, READ it back, and run the semantic

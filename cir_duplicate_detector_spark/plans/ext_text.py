@@ -658,8 +658,8 @@ def q_quality_classifier_agreement(spark, sf_dir):
     """Held-out confusion matrix of the learned scorer vs the
     heuristic band labels it distilled (`textops.
     quality_classifier_agreement`) — the agreement diagnostic VERDICT
-    r9 item 4 requires, in the `pq_recall` self-measuring discipline:
-    ≤4 exact bigint rows (label, predicted, n) over the docs training
+    r9 item 4 requires, in the `minhash_recall` self-measuring
+    discipline: ≤4 exact bigint rows (label, predicted, n) over the docs training
     never saw. Measured agreement 0.96–0.98 against a 0.56–0.58
     majority base rate."""
     docs = load_table(spark, sf_dir, "documents")

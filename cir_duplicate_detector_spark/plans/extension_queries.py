@@ -1,8 +1,8 @@
 """Extension query registry aggregator.
 
-The per-family modules (``ext_dedup``, ``ext_ann``, ``ext_ann_recall``,
-``ext_text``, ``ext_pipeline``, ``ext_multimodal``, shared helpers in
-``ext_common``) each export a ``*_QUERIES`` dict; this module merges
+The per-family modules (``ext_dedup``, ``ext_ann``, ``ext_text``,
+``ext_pipeline``, ``ext_multimodal``, shared helpers in ``ext_common``)
+each export a ``*_QUERIES`` dict; this module merges
 them into ``EXTENSION_QUERIES`` in family order.
 
 Floating-point discipline (everything here is checked by
@@ -20,7 +20,6 @@ from __future__ import annotations
 from .ext_common import *  # noqa: F401,F403
 from .ext_dedup import *  # noqa: F401,F403
 from .ext_ann import *  # noqa: F401,F403
-from .ext_ann_recall import *  # noqa: F401,F403
 from .ext_text import *  # noqa: F401,F403
 from .ext_pipeline import *  # noqa: F401,F403
 from .ext_multimodal import *  # noqa: F401,F403
@@ -28,7 +27,6 @@ from .ext_multimodal import *  # noqa: F401,F403
 from . import (
     ext_dedup,
     ext_ann,
-    ext_ann_recall,
     ext_text,
     ext_pipeline,
     ext_multimodal,
@@ -37,7 +35,6 @@ from . import (
 EXTENSION_QUERIES: dict[str, tuple] = {
     **ext_dedup.DEDUP_QUERIES,
     **ext_ann.ANN_QUERIES,
-    **ext_ann_recall.ANN_RECALL_QUERIES,
     **ext_text.TEXT_QUERIES,
     **ext_pipeline.PIPELINE_QUERIES,
     **ext_multimodal.MULTIMODAL_QUERIES,

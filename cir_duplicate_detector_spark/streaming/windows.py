@@ -383,97 +383,6 @@ def streaming_ivf_upsert_assign(
     return _fine_resolve(assigned, fine)
 
 
-def streaming_pq_encode(
-    spark: SparkSession, sf_dir: str, codebook: "DataFrame | None" = None
-) -> DataFrame:
-    """PQ encoding AS A STREAM — the code-index half of continuous ANN
-    ingest (the cell half is :func:`streaming_ivf_upsert_assign`): the
-    per-subspace codebook is Lloyd-LEARNED ONCE batch-side from the
-    indexed half of the embeddings table (`pq.pq_codebook_learned` on
-    its deterministic sample, materialized); incoming vectors arrive on
-    a file stream, explode to (vec_id, subspace, subvector) rows
-    stream-side (stateless projection), score against the BROADCAST
-    M·K-row codebook through a stream-static equi-join on subspace, and
-    keep the per-(vec_id, subspace) argmin in complete-mode state —
-    (pair → best (d, code)), never the subvector. The drained rows ARE
-    the index append: M small ints per vector. Output identical to the
-    batch `pq_codes_upsert`; one oracle string by the registry guard.
-
-    ``codebook`` (optional) supplies a prebuilt ``(subspace, cid,
-    csub)`` table — e.g. the family-shared parquet build the batch twin
-    encodes against (round 14, the `streaming_ivf_upsert_assign`
-    ``quantizer`` contract): doubles round-trip parquet bit-exactly,
-    so encodes against the stored copy equal encodes against the
-    in-session learn. Default ``None`` learns it here.
-    """
-    from ..cache import materialize
-    from ..operators import pq
-
-    path = f"{sf_dir}/embeddings.parquet"
-    schema = spark.read.parquet(path).schema
-    emb = spark.read.parquet(path)
-    if codebook is None:
-        codebook = materialize(
-            pq.pq_codebook_learned(emb.where("vec_id % 2 = 0"), train_mod=4)
-        )
-    else:
-        # Prebuilt-table boundary guard (ADVICE r14): a mismatched
-        # artifact fails loudly at the call boundary instead of
-        # encoding silently wrong codes downstream.
-        missing = {"subspace", "cid", "csub"} - set(codebook.columns)
-        if missing:
-            raise ValueError(
-                "prebuilt codebook must carry (subspace, cid, csub); "
-                f"missing {sorted(missing)} in {codebook.columns}"
-            )
-
-    stage = stage_source(path, "emb_pq_stream_")
-    subs = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("subspace"),
-                pq._sub(F.col("e"), i).alias("sub"),
-            )
-            for i in range(pq.PQ_M)
-        ]
-    )
-    inc = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-        .where("vec_id % 2 = 1")
-        .select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        )
-        .select("vec_id", F.explode(subs).alias("s"))
-        .select("vec_id", "s.subspace", "s.sub")
-    )
-    scored = inc.join(F.broadcast(codebook), "subspace").select(
-        "vec_id",
-        "subspace",
-        "cid",
-        pq._l2sq(F.col("sub"), F.col("csub")).alias("d"),
-    )
-    codes = (
-        scored.groupBy("vec_id", "subspace")
-        .agg(F.min(F.struct("d", "cid")).alias("m"))
-        .select(
-            "vec_id",
-            F.col("subspace").cast("bigint").alias("subspace"),
-            F.col("m.cid").alias("code"),
-        )
-    )
-    name = f"stream_pq_{uuid.uuid4().hex[:8]}"
-    query = (
-        codes.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
-
-
 def streaming_boilerplate_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The boilerplate span screen AS A STREAM — the span-level sibling
     of :func:`streaming_lsh_screen`: the existing split's boilerplate

@@ -55,14 +55,12 @@ def perturb_text(text_col, rep_col):
 
 DEFAULT_QUERIES = [
     "decontaminate",
-    "semantic_dedup",
     "bloom_dedup",
     "chunk_dedup",
     "token_budget_sample",
     "quality_band",
     "doc_repetition",
     "pack_sequences",
-    "ann_recall_lsh",
 ]
 
 

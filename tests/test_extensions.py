@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from cir_duplicate_detector_spark.operators import (
     dedup,
     multimodal,
-    similarity,
     textops,
 )
 from cir_duplicate_detector_spark.sources.derived import derive_near_dup_corpus
@@ -57,30 +56,6 @@ def test_simhash_identical_for_copies(spark):
     assert sig[1] == sig[2]
     assert sig[1] != sig[3]
     assert 0 <= sig[1] < (1 << 60)
-
-
-def test_knn_self_similarity_excluded_and_ranked(spark):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    out = similarity.knn_bruteforce(emb, [0, 20], k=3).collect()
-    by_query = {}
-    for r in out:
-        by_query.setdefault(r["query_id"], []).append(r)
-    for q, rows in by_query.items():
-        rows.sort(key=lambda r: r["rank"])
-        assert [r["rank"] for r in rows] == [1, 2, 3]
-        sims = [r["cosine"] for r in rows]
-        assert sims == sorted(sims, reverse=True)
-        assert all(r["neighbor_id"] != q for r in rows)
-
-
-def test_knn_lsh_subset_of_bruteforce_space(spark):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    lsh = similarity.knn_lsh(emb, [0, 20, 40], k=5).collect()
-    # bucket-local: every returned neighbor shares the probe's sketch,
-    # ranks are contiguous from 1
-    for q in {r["query_id"] for r in lsh}:
-        ranks = sorted(r["rank"] for r in lsh if r["query_id"] == q)
-        assert ranks == list(range(1, len(ranks) + 1))
 
 
 def test_multimodal_features_match_hashlib(spark):
@@ -170,19 +145,6 @@ def test_video_frame_ahash_parses_and_strides(spark):
     assert got[2].ahash_bits == "0011"
 
 
-def test_knn_ivf_ranked_and_self_excluded(spark):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    out = similarity.knn_ivf(emb, [0, 40], k=3).collect()
-    by_query = {}
-    for r in out:
-        by_query.setdefault(r["query_id"], []).append(r)
-    assert set(by_query) == {0, 40}
-    for q, rows in by_query.items():
-        ranks = sorted(r["rank"] for r in rows)
-        assert ranks == list(range(1, len(ranks) + 1))
-        assert all(r["neighbor_id"] != q for r in rows)
-
-
 def test_connected_components_transitive_closure(spark):
     # chain 1-2-3 (1,3 never directly paired) + isolated pair 10-11;
     # node 4 appears in no pair and must not appear in the output.
@@ -263,170 +225,6 @@ def test_normalized_exact_dedup_merges_reformatted(spark):
     assert sorted(got[0]["members"]) == [1, 2, 3]
     # Byte-exact dedup sees nothing to merge on the same input.
     assert dedup.exact_duplicates(docs).count() == 0
-
-
-def test_pq_codes_compress_and_adc_ranks_near_vector_first(spark):
-    from cir_duplicate_detector_spark.operators import pq
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    codebook = pq.pq_codebook(emb)
-    # Codebook is BOUNDED: at most M * n_codewords rows no matter the
-    # corpus size (the scale property; a corpus-fraction sample
-    # degenerated encode to O(N^2) — measured 66x on a 10x corpus).
-    assert codebook.count() <= pq.PQ_M * pq.PQ_CODEWORDS
-    codes = pq.pq_encode(emb, codebook)
-    n = emb.count()
-    # Every vector gets exactly M codes.
-    assert codes.count() == n * pq.PQ_M
-    # A codeword vector encodes to itself in every subspace (its own
-    # subvector is at distance 0; ties break to the smallest cid).
-    cw_ids = {r[0] for r in codebook.select("cid").distinct().collect()}
-    own = (
-        codes.where(F.col("vec_id").isin(list(cw_ids)))
-        .where(F.col("vec_id") != F.col("code"))
-        .count()
-    )
-    assert own == 0
-
-
-def test_pq_codebook_learned_converges_to_blob_means(spark):
-    # Two far blobs; seeds (smallest-2 vec_ids) land one in each blob,
-    # so a Lloyd round must move each codeword to its blob's per-
-    # subspace mean — proof the codebook is LEARNED from member
-    # geometry, not the raw seed sample pq_codebook returns.
-    from cir_duplicate_detector_spark.operators import pq
-
-    lo = [(i, [0.0 + i * 0.01] * 64) for i in range(0, 8, 2)]   # ids 0,2,4,6
-    hi = [(i, [10.0 + i * 0.01] * 64) for i in range(1, 8, 2)]  # ids 1,3,5,7
-    emb = spark.createDataFrame(
-        lo + hi, "vec_id long, embedding array<double>"
-    )
-    cb = pq.pq_codebook_learned(emb, n_codewords=2, iters=2)
-    rows = cb.collect()
-    # Bounded: exactly M rows per codeword, cluster ids = seed vec_ids.
-    assert len(rows) == pq.PQ_M * 2
-    assert {r.cid for r in rows} == {0, 1}
-    lo_mean = sum(v for _, vec in lo for v in vec[:1]) / len(lo)
-    hi_mean = sum(vec[0] for _, vec in hi) / len(hi)
-    for r in rows:
-        want = lo_mean if r.cid == 0 else hi_mean
-        assert len(r.csub) == pq.PQ_SUBDIM
-        for v in r.csub:
-            assert abs(v - want) < 0.2  # blob spread is ±0.07
-    # Still bounded by M*K on the real table regardless of corpus size.
-    emb_t = load_table(spark, SF_DIR, "embeddings")
-    assert (
-        pq.pq_codebook_learned(emb_t).count()
-        <= pq.PQ_M * pq.PQ_CODEWORDS
-    )
-
-
-def test_knn_ivf_pq_contract_and_l2_bruteforce_exact(spark):
-    from cir_duplicate_detector_spark.operators import pq
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    probe = emb.select("vec_id").where("vec_id % 100 = 0")
-    out = pq.knn_ivf_pq(emb, probe, k=5, n_codewords=32).collect()
-    by_q: dict = {}
-    for r in out:
-        assert r.query_id != r.neighbor_id
-        by_q.setdefault(r.query_id, []).append(r)
-    assert set(by_q) == {0, 100, 200, 300, 400}
-    for rows in by_q.values():
-        rows.sort(key=lambda r: r.rank)
-        assert [r.rank for r in rows] == list(range(1, len(rows) + 1))
-        assert len(rows) <= 5
-        dists = [r.adc_dist for r in rows]
-        assert dists == sorted(dists)  # rank follows ADC distance
-
-    # Exact-L2 ground truth: rank 1 for a planted twin pair must be
-    # each other, distances exact.
-    twin = spark.createDataFrame(
-        [
-            (1, [1.0] * 64),
-            (2, [1.0] * 63 + [1.5]),
-            (3, [5.0] * 64),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    bf = {
-        (r.query_id, r.rank): r
-        for r in pq.knn_l2_bruteforce(twin, [1, 2], k=2).collect()
-    }
-    assert bf[(1, 1)].neighbor_id == 2 and bf[(1, 1)].l2sq == 0.25
-    assert bf[(2, 1)].neighbor_id == 1 and bf[(2, 1)].l2sq == 0.25
-    assert bf[(1, 2)].neighbor_id == 3
-
-    # Exact re-rank: hand the refine stage a shortlist whose ADC order
-    # is wrong-by-construction (3 before 2); true L2 must flip it.
-    short = spark.createDataFrame(
-        [(1, 3), (1, 2)], "query_id long, neighbor_id long"
-    )
-    ref = {r.rank: r for r in pq.pq_refine(twin, short, k=2).collect()}
-    assert ref[1].neighbor_id == 2 and ref[1].l2sq == 0.25
-    assert ref[2].neighbor_id == 3
-
-
-def test_ivf_pq_index_roundtrip_identical(spark, tmp_path):
-    # The build-once shared index (plans.ext_ann._shared_ivfpq_index)
-    # is sound only if persist→read answers EXACTLY like the in-session
-    # build — same rows, same ranks, same distances. Small config keeps
-    # the double arithmetic identical through the parquet round-trip
-    # (doubles serialize exactly).
-    from cir_duplicate_detector_spark.operators import pq
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    probe = emb.select("vec_id").where("vec_id % 100 = 0")
-    built = pq.build_ivf_pq_index(emb, n_codewords=32)
-    direct = pq.knn_ivf_pq_from_index(built, emb, probe, k=5).collect()
-    pq.persist_ivf_pq_index(built, str(tmp_path / "idx"))
-    reopened = pq.read_ivf_pq_index(spark, str(tmp_path / "idx"))
-    served = pq.knn_ivf_pq_from_index(reopened, emb, probe, k=5).collect()
-
-    def rows(rs):
-        return sorted(
-            (r.query_id, r.rank, r.neighbor_id, r.adc_dist) for r in rs
-        )
-
-    assert rows(direct) == rows(served)
-    # And the composed knn_ivf_pq (build+probe in one call) agrees too.
-    composed = pq.knn_ivf_pq(emb, probe, k=5, n_codewords=32).collect()
-    assert rows(composed) == rows(direct)
-
-
-def test_ivf_pq_upsert_merge_serves_fresh(spark):
-    # The continuous-ingest claim behind IVF-PQ upserts: a wave
-    # upserted into a prebuilt index (assign to existing cells +
-    # residual-encode against the existing codebook, pure relation
-    # union) becomes retrievable through the unchanged probe path. The
-    # base index alone can only ever answer with indexed (even-id)
-    # neighbors; the merged index surfaces fresh (odd-id) ones. The
-    # full merged-equals-rebuilt identity is pinned by the registered
-    # query's oracle (train_pred-restricted chain).
-    from cir_duplicate_detector_spark.operators import pq
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    base = pq.build_ivf_pq_index(
-        emb.where("vec_id % 2 = 0"), n_codewords=32
-    )
-    a_new, c_new = pq.ivf_pq_upsert(base, emb.where("vec_id % 2 = 1"))
-    merged = pq.merge_ivf_pq_index(base, a_new, c_new)
-    probe = emb.select("vec_id").where("vec_id % 100 = 0")
-    res_base = pq.knn_ivf_pq_from_index(base, emb, probe, k=5).collect()
-    res_merged = pq.knn_ivf_pq_from_index(
-        merged, emb, probe, k=5
-    ).collect()
-    assert res_base and all(r.neighbor_id % 2 == 0 for r in res_base)
-    assert any(r.neighbor_id % 2 == 1 for r in res_merged)
-    # Upsert is deterministic (broadcast argmin + tie-to-smaller-cid
-    # encode): a second pass produces identical relations.
-    a2, c2 = pq.ivf_pq_upsert(base, emb.where("vec_id % 2 = 1"))
-    assert sorted(map(tuple, a_new.collect())) == sorted(
-        map(tuple, a2.collect())
-    )
-    assert sorted((r.vec_id, tuple(r.ca)) for r in c_new.collect()) == (
-        sorted((r.vec_id, tuple(r.ca)) for r in c2.collect())
-    )
 
 
 def test_image_index_roundtrip_identical(spark, tmp_path):
@@ -511,7 +309,7 @@ def test_learned_float_ops_partitioning_invariant(spark):
     # float learning (Lloyd means) must produce BIT-IDENTICAL doubles
     # no matter how the input is partitioned or ordered — shuffle
     # reordering is exactly what breaks naive double accumulation.
-    from cir_duplicate_detector_spark.operators import kmeans, pq
+    from cir_duplicate_detector_spark.operators import kmeans
 
     emb = load_table(spark, SF_DIR, "embeddings")
     variants = [
@@ -526,19 +324,10 @@ def test_learned_float_ops_partitioning_invariant(spark):
             for r in kmeans.kmeans_centroids(df, k=4, iters=2).collect()
         )
 
-    def cb(df):
-        return sorted(
-            (r.subspace, r.cid, tuple(r.csub))
-            for r in pq.pq_codebook_learned(
-                df, n_codewords=8, iters=2
-            ).collect()
-        )
-
-    base_km, base_cb = km(emb), cb(emb)
-    assert len(base_km) == 4 and len(base_cb) == pq.PQ_M * 8
+    base_km = km(emb)
+    assert len(base_km) == 4
     for v in variants:
         assert km(v) == base_km  # exact double equality, no tolerance
-        assert cb(v) == base_cb
 
 
 def test_chunk_documents_windows_and_overlap(spark):
@@ -744,27 +533,6 @@ def test_ahash_raises_named_error_for_images_smaller_than_grid(spark):
     )
     with _pytest.raises(Exception, match="doc_id 7 image 2x2 is smaller"):
         multimodal.image_ahash_features(media, grid=8).collect()
-
-
-def test_semantic_dedup_learned_pairs_are_cell_local(spark):
-    from cir_duplicate_detector_spark.operators import similarity
-
-    # two far blobs of near-identical vectors: every emitted pair must
-    # be within one blob (cells cannot span blobs) and above threshold
-    rows = []
-    for i in range(8):
-        rows.append((i, [10.0 + 0.001 * i] * 64))
-        rows.append((100 + i, [-10.0 - 0.001 * i] * 64))
-    embs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    out = similarity.semantic_near_duplicates_learned(
-        embs, threshold=0.9, k=2, iters=2, sample_mod=1, fine_mod=4
-    ).collect()
-    assert out, "near-identical in-blob vectors must pair"
-    for r in out:
-        assert (r.a < 100) == (r.b < 100), "pair spans blobs"
-        assert r.cosine >= 0.9
 
 
 def test_lsh_screen_flags_copies_not_novel(spark):
@@ -1270,30 +1038,6 @@ def test_simhash_pairs_prebuilt_sigs_identical(spark, tmp_path):
         (r.a, r.b, r.dist)
         for r in dedup.simhash_near_duplicates(
             docs, max_bits=3, sigs=spark.read.parquet(d)
-        ).collect()
-    )
-    assert served == inline and len(inline) > 0
-
-
-def test_pq_encode_against_parquet_codebook_identical(spark, tmp_path):
-    # Round-14 share contract: the upsert twins encode against ONE
-    # parquet-backed codebook build (`_shared_pq_upsert_codebook`).
-    # Doubles round-trip parquet bit-exactly, so codes against the
-    # stored copy must equal codes against the in-session learn.
-    from cir_duplicate_detector_spark.operators import pq
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    cb = pq.pq_codebook_learned(emb.where("vec_id % 2 = 0"), train_mod=4)
-    inline = sorted(
-        (r.vec_id, r.subspace, r.code)
-        for r in pq.pq_encode(emb.where("vec_id % 2 = 1"), cb).collect()
-    )
-    d = str(tmp_path / "codebook")
-    cb.write.parquet(d)
-    served = sorted(
-        (r.vec_id, r.subspace, r.code)
-        for r in pq.pq_encode(
-            emb.where("vec_id % 2 = 1"), spark.read.parquet(d)
         ).collect()
     )
     assert served == inline and len(inline) > 0

@@ -27,6 +27,10 @@ Every ``from .x import y`` in the package must resolve, function-level
 ones included: those run only when their function is called, so a
 deleted module or name would otherwise surface as an ImportError at
 call time.
+
+Every top-level name a package module defines must be referenced by
+some other code, so deleting a feature cannot leave its helpers
+behind.
 """
 
 from __future__ import annotations
@@ -37,9 +41,11 @@ import importlib.util
 import re
 import subprocess
 import sys
+from collections import Counter
 from pathlib import Path
 
-PKG = Path(__file__).resolve().parents[1] / "cir_duplicate_detector_spark"
+REPO = Path(__file__).resolve().parents[1]
+PKG = REPO / "cir_duplicate_detector_spark"
 
 BANNED = [
     (re.compile(r"\.collect\("), ".collect( — driver-side materialization"),
@@ -161,4 +167,68 @@ def test_every_package_import_resolves():
                     dangling.append(f"{where}: {target} has no {alias.name}")
     assert not dangling, "unresolved package imports:\n" + "\n".join(
         dangling
+    )
+
+
+def _referenced_name(node: ast.AST) -> "str | None":
+    if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, ast.alias):
+        return node.name.rpartition(".")[2]
+    return None
+
+
+def _defined_names(node: ast.stmt) -> "list[str]":
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+
+
+def test_every_module_name_is_referenced():
+    """Each top-level ``def``/``class``/assignment in a package module
+    must be referenced (as a name, an attribute or an import) by code
+    outside its own definition: in the package, ``tests/``,
+    ``scripts/``, ``perfbench/`` or ``__spark_entry__.py``. Dunders
+    (``__version__``) are exempt. A family's ``*_QUERIES`` dict is not:
+    one the registry aggregator does not merge is a bug.
+
+    Blind spot: names are matched by name alone, so two modules that
+    define the same name hide each other — a reference to either one
+    keeps both alive.
+    """
+    sources = [
+        *PKG.rglob("*.py"),
+        *(REPO / "tests").rglob("*.py"),
+        *(REPO / "scripts").rglob("*.py"),
+        *(REPO / "perfbench").rglob("*.py"),
+        REPO / "__spark_entry__.py",
+    ]
+    trees = {path: ast.parse(path.read_text()) for path in sources}
+    refs = Counter(
+        name
+        for tree in trees.values()
+        for name in map(_referenced_name, ast.walk(tree))
+        if name
+    )
+    unreferenced = []
+    for path in sorted(PKG.rglob("*.py")):
+        for node in trees[path].body:
+            for name in _defined_names(node):
+                if re.fullmatch(r"__\w+__", name):
+                    continue
+                own = sum(_referenced_name(n) == name for n in ast.walk(node))
+                if refs[name] == own:
+                    unreferenced.append(
+                        f"{path.relative_to(REPO)}:{node.lineno}: {name}"
+                    )
+    assert not unreferenced, "unreferenced top-level names:\n" + "\n".join(
+        unreferenced
     )

@@ -13,12 +13,12 @@ with DuckDB executing the same oracle over the same replica parquet.
 ``PARITY_10X_FULL=1`` widens the sample to the WHOLE eligible set —
 the one-time full sweep of VERDICT r13 item 4.
 
-Sample universe: queries over the REPLICATED tables only, minus the
+Sample universe: every registered query (the replica holds both
+tables the queries read, documents and embeddings), minus the
 vector-chain families whose DuckDB oracles are corpus x centroid
 cross joins (sqrt-N-scaled k means ~600k x ~775 x 64d at 10x — hours
 in a single-threaded oracle, and the point of the oracle is value
-checking, not oracle-side scale). Those families are covered by their
-recall diagnostics; the exclusion is named here. Everything else —
+checking, not oracle-side scale). The exclusion is named below. Everything else —
 the dedup/text families whose banded/bucketed joins are the engine's
 scale story — is eligible.
 
@@ -46,22 +46,15 @@ from .conftest import PARITY_SAMPLE_KEY
 from .test_oracle_parity import TABLES, _canon_rows
 
 REPO = Path(__file__).resolve().parents[1]
-SF01 = "/root/testdata/sf0.1"
 REPLICA = "/tmp/scale_replica_10x"
-REPLICATED = {"documents", "embeddings"}
 SAMPLE_SIZE = 15
 
-# Vector-chain families: oracle cost is corpus x sqrt(N) centroids (or
-# corpus x corpus brute force) — DuckDB-side infeasible at 10x. Their
-# recall rows cover them instead.
+# Vector-chain families: oracle cost is corpus x sqrt(N) centroids —
+# DuckDB-side infeasible at 10x, so they stay out of this sample.
 _EXCLUDED_PREFIXES = (
-    "knn_",
-    "pq_",
     "kmeans_",
-    "ann_",
     "ivf_",
     "semantic_",
-    "embedding_",
     "decon_cells",
     "decontaminate_semantic",
 )
@@ -134,11 +127,7 @@ def replica_dir(spark):
 def duck10(replica_dir):
     con = duckdb.connect()
     for t in TABLES:
-        src = (
-            f"{replica_dir}/{t}.parquet/*.parquet"
-            if t in REPLICATED
-            else f"{SF01}/{t}.parquet"
-        )
+        src = f"{replica_dir}/{t}.parquet/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
     yield con
     con.close()

@@ -1,5 +1,5 @@
 """Planted-input tests for the pipeline operators: decontamination
-screen, semantic dedup, Bloom screen.
+screen, semantic decontamination, Bloom screen.
 
 Each test constructs an input where the correct answer is computable by
 hand, so these pin SEMANTICS; engine parity with DuckDB is pinned
@@ -55,53 +55,6 @@ def test_decontaminate_df_cap_drops_boilerplate_gram(spark):
     ev = _docs(spark, [(100, boiler), (101, boiler)])
     assert textops.decontaminate(train, ev, max_df=1).count() == 0
     assert textops.decontaminate(train, ev, max_df=2).count() == 1
-
-
-# ----------------------------------------------------- semantic dedup
-
-def _vecs(spark, rows, dim=4):
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    return df
-
-
-def test_semantic_dedup_within_cluster(spark):
-    # centroid_mod pinned to 40: vec 0 is the only centroid, all
-    # vectors join its cluster (the default is √N-scaled, which at N=4
-    # would promote vec 2 to a centroid and split the cluster). 1 and 2
-    # are identical (cosine 1), 3 is orthogonal.
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [0.9, 0.1, 0.0, 0.0]),
-        (2, [0.9, 0.1, 0.0, 0.0]),
-        (3, [0.0, 0.0, 0.0, 1.0]),
-    ]
-    out = similarity.semantic_near_duplicates(
-        _vecs(spark, rows), threshold=0.999, centroid_mod=40
-    ).collect()
-    pairs = {(r.a, r.b): r for r in out}
-    assert (1, 2) in pairs
-    assert abs(pairs[(1, 2)].cosine - 1.0) < 1e-12
-    assert all(r.cid == 0 for r in out)
-    assert not any(3 in (a, b) for (a, b) in pairs)
-
-
-def test_semantic_dedup_blind_across_clusters(spark):
-    # Two well-separated centroids (0 and 40): identical vectors
-    # assigned to DIFFERENT clusters are never paired — the documented
-    # SemDeDup trade.
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (40, [0.0, 1.0, 0.0, 0.0]),
-        # 1 leans to centroid 0; 41 leans to centroid 40; the pair
-        # (1, 41) has cosine 1.0 but straddles clusters.
-        (1, [0.8, 0.6, 0.0, 0.0]),
-        (41, [0.6, 0.8, 0.0, 0.0]),
-    ]
-    out = similarity.semantic_near_duplicates(
-        _vecs(spark, rows), threshold=0.5, centroid_mod=40
-    ).collect()
-    ids = {(r.a, r.b) for r in out}
-    assert (1, 41) not in ids
 
 
 # ------------------------------------------------ exact canonicalization
@@ -510,11 +463,10 @@ def test_kmeans_ivf_assign_prebuilt_coarse_identical(spark, tmp_path):
     # The family-shared persisted coarse-centroid table
     # (plans.ext_ann._shared_coarse_centroids) is sound only if
     # assigning against a parquet round-trip of the learned table gives
-    # EXACTLY the in-session result (doubles serialize exactly), for
-    # both kmeans_ivf_assign and knn_ivf_learned.
+    # EXACTLY the in-session result (doubles serialize exactly).
     from pyspark.sql import functions as F
 
-    from cir_duplicate_detector_spark.operators import kmeans, similarity
+    from cir_duplicate_detector_spark.operators import kmeans
 
     rows = []
     for i in range(16):
@@ -540,24 +492,6 @@ def test_kmeans_ivf_assign_prebuilt_coarse_identical(spark, tmp_path):
         return sorted((r.vec_id, r.coarse, r.fine, r.d) for r in rs)
 
     assert rows_of(direct) == rows_of(served)
-
-    probe = embs.select("vec_id").where("vec_id % 8 = 0")
-    knn_direct = similarity.knn_ivf_learned(
-        embs, probe, k=3, coarse_k=2, iters=2, sample_mod=2
-    ).collect()
-    knn_served = similarity.knn_ivf_learned(
-        embs,
-        probe,
-        k=3,
-        centroids=reread.select(F.col("coarse").alias("cluster"), "c"),
-    ).collect()
-
-    def knn_rows(rs):
-        return sorted(
-            (r.query_id, r.rank, r.neighbor_id, r.cosine) for r in rs
-        )
-
-    assert knn_rows(knn_direct) == knn_rows(knn_served)
 
 
 def test_kmeans_ivf_assign_marks_fine_less_cells(spark):

@@ -134,9 +134,6 @@ def test_probed_queries_have_no_driver_collect(spark):
         "url_duplicates_probed",
         "pdq_duplicates_probed",
         "pdq_duplicates_t08_probed",
-        "knn_cosine_bruteforce",
-        "knn_cosine_lsh",
-        "knn_cosine_ivf",
     ):
         plan = _plan(spark, name)
         assert "LocalTableScan" not in plan, name
@@ -176,28 +173,6 @@ def test_doc_chunks_shuffle_free(spark):
     # zero exchanges at any corpus size.
     plan = _plan(spark, "doc_chunks")
     assert "Exchange" not in plan
-
-
-def test_pq_adc_is_equijoin_with_broadcast_tables(spark):
-    # Codebook and ADC partial-distance tables ride as broadcasts; the
-    # scoring join is an equi-join on (subspace, code) — never an
-    # all-pairs scan of raw vectors.
-    plan = _plan(spark, "knn_pq_adc")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastExchange" in plan
-
-
-def test_knn_ivf_pq_no_allpairs_scan(spark):
-    # The composed IVF-ADC query: candidate generation is the coarse-
-    # cell EQUI-join, scoring is the (query, subspace, code) equi-join
-    # against the broadcast partials table. The only nested-loop joins
-    # are the broadcast centroid/codebook scorings (bounded √N / M·K
-    # build sides); an unhinted CartesianProduct anywhere means an
-    # all-pairs scan leaked in.
-    plan = _plan(spark, "knn_ivf_pq")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastExchange" in plan
 
 
 def test_doc_fingerprint_shuffle_free_before_explode(spark):
@@ -293,15 +268,6 @@ def test_decontaminate_is_equijoin(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_semantic_dedup_pairs_cluster_local(spark):
-    # Centroids broadcast; the pair join is an equi-join on cid (the
-    # cluster-local shape) — no all-pairs cross join outside the
-    # bounded centroid assignment.
-    plan = _plan(spark, "semantic_dedup")
-    assert plan.count("BroadcastNestedLoopJoin") <= 1  # centroid assign only
-    assert "CartesianProduct" not in plan
-
-
 def test_chunk_dedup_digest_keyed_shuffles_only(spark):
     # Chunking is a pure scan; the dedup aggregation shuffles exactly
     # twice — the two-phase count-distinct: once on (chunk_hash,
@@ -323,49 +289,6 @@ def test_chunk_dedup_digest_keyed_shuffles_only(spark):
     ]
     assert len(exchanges) == 2
     assert all("chunk_hash" in l for l in exchanges)
-
-
-def test_semantic_dedup_centroid_mod_is_corpus_scaled(spark):
-    # The centroid sampling modulus must track the corpus (~sqrt(N)),
-    # not a fixed literal: a fixed mod admits N/mod centroids and the
-    # broadcast scoring pass degrades to O(N^2/mod) (round-4 verdict's
-    # one `weak`). The sqrt-scaled literal must appear in the executed
-    # plan, and the centroid count it induces must sit at ~sqrt(N).
-    import math
-
-    from cir_duplicate_detector_spark.operators.similarity import (
-        sqrt_centroid_mod,
-    )
-    from cir_duplicate_detector_spark.sources.derived import (
-        derive_near_dup_embeddings,
-    )
-
-    emb = derive_near_dup_embeddings(
-        spark.read.parquet(f"{SF}/embeddings.parquet")
-    )
-    n = emb.count()
-    mod = sqrt_centroid_mod(emb)
-    assert mod == max(2, math.isqrt(n))
-    n_cents = emb.where(f"vec_id % {mod} = 0").count()
-    root = math.isqrt(n)
-    assert root // 2 <= n_cents <= 3 * root
-    # The final executed plan starts from the materialized member
-    # assignment (lineage cut), so pin the modulus on the scoring
-    # subplan and on the API default instead.
-    import inspect
-
-    from cir_duplicate_detector_spark.operators import similarity
-
-    sig = inspect.signature(similarity.semantic_near_duplicates)
-    assert sig.parameters["centroid_mod"].default is None
-    splan = (
-        similarity._centroid_scores(emb, mod)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert f"% {mod})" in splan
-    assert "% 40)" not in splan
 
 
 def test_composed_dag_builds_with_zero_jobs(spark):
