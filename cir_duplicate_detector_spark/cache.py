@@ -123,8 +123,8 @@ def shared_artifact(
     build: Callable[[str], Any],
 ) -> Any:
     """Memoized parquet-backed shared artifact — the single definition
-    of the build-once pattern every index family uses (`_shared_
-    ivfpq_index`, `_shared_dup_labels`, ...): build once per (Spark
+    of the build-once pattern every index family uses
+    (`_shared_dup_labels`, ...): build once per (Spark
     application, corpus dir), persist to a temp dir, serve the
     parquet-backed handle to every consumer in the application.
 

@@ -46,7 +46,7 @@ def hex_to_chunks(hex_col: Column | str, num_chunks: int = NUM_CHUNKS) -> Column
     Hashes shorter than ``num_chunks*8`` hex chars are left-padded with
     zeros, matching the reference's ``zfill`` (``utils.py:32-52``); this is
     the fast path and assumes hashes fit ``num_chunks`` (the general
-    variable-length path is :func:`bits_hamming` over binary strings).
+    variable-length path is :func:`bits_hamming_sql` over binary strings).
     """
     col = F.col(hex_col) if isinstance(hex_col, str) else hex_col
     padded = F.lpad(F.lower(col), num_chunks * CHUNK_HEX, "0")
@@ -115,7 +115,14 @@ def hex_to_bits_sql(expr: str) -> str:
 
 
 def bits_hamming_sql(a: str, b: str) -> str:
-    """SQL text of :func:`bits_hamming`."""
+    """SQL text of the Hamming distance between binary strings of
+    possibly different length.
+
+    Matches the reference's padded comparison (``utils.py:90-105``):
+    left-aligned character mismatches, plus one per excess position of the
+    longer string. ``zip_with`` pads the shorter array with NULLs, which
+    count as mismatches here.
+    """
     return (
         f"aggregate(zip_with(split({a}, ''), split({b}, ''), (x, y) -> "
         "CASE WHEN x IS NULL OR y IS NULL THEN 1 WHEN x != y THEN 1 ELSE 0 END),"
@@ -156,24 +163,6 @@ def hex_to_bits(hex_col: Column | str) -> Column:
     return F.lpad(stripped, F.greatest(F.length(stripped), F.lit(HASH_BITS)), "0")
 
 
-def bits_hamming(a: Column, b: Column) -> Column:
-    """Hamming distance between binary strings of possibly different length.
-
-    Matches the reference's padded comparison (``utils.py:90-105``):
-    left-aligned character mismatches, plus one per excess position of the
-    longer string. ``zip_with`` pads the shorter array with NULLs, which
-    count as mismatches here.
-    """
-    mismatch = F.zip_with(
-        F.split(a, ""),
-        F.split(b, ""),
-        lambda x, y: F.when(x.isNull() | y.isNull(), 1)
-        .when(x != y, 1)
-        .otherwise(0),
-    )
-    return F.aggregate(mismatch, F.lit(0), lambda acc, v: acc + v)
-
-
 def hex_to_binary(hex_string: str, length: int | None = None) -> str:
     """Driver-side scalar twin of the reference's ``hex_to_binary``
     (``pdq_dup_detect_algorithms/utils.py:32-52``): ``''`` stays ``''``;
@@ -195,8 +184,8 @@ def hamming_distance(item1: str, item2: str) -> int:
     (``utils.py:90-105``, rapidfuzz-backed): left-aligned character
     mismatches plus one per excess position of the longer string.
 
-    The distributed kernel is :func:`bits_hamming` /
-    :func:`chunks_hamming` (Column forms).
+    The distributed kernels are :func:`bits_hamming_sql` (SQL text) and
+    :func:`chunks_hamming` (Column form).
     """
     mismatches = sum(a != b for a, b in zip(item1, item2))
     return mismatches + abs(len(item1) - len(item2))

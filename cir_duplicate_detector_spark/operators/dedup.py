@@ -768,7 +768,7 @@ def bloom_index(
 ) -> "tuple[DataFrame, DataFrame]":
     """The two persistable relations of the Bloom screen — what a
     pipeline actually writes between crawl waves (the `lsh_band_index`
-    / `ivf_quantizer` posture): ``bits`` (bit,) — the ≤ m set bit
+    posture): ``bits`` (bit,) — the ≤ m set bit
     positions of the bitset, corpus-size-independent — and ``seen``
     (key,) — the exact digest index that confirms hits. Both are
     deterministic functions of the corpus, so the persisted-and-reread
@@ -1028,8 +1028,8 @@ def simhash_near_duplicates(
         "band_val",
     )
     dist = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    # Verify BEFORE the pair-distinct (the `pdq._banded_pairs` /
-    # `image_near_duplicates` discipline): the xor/bit_count check is
+    # Verify BEFORE the pair-distinct (as the banded strategy of
+    # `operators/pdq.py` does): the xor/bit_count check is
     # whole-stage codegen on the join's output stream, while distinct
     # is a shuffle of every candidate row — on a duplicate-heavy
     # corpus the band collisions dwarf the qualifying pairs, so

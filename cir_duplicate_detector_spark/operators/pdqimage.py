@@ -27,9 +27,8 @@ non-negative so floor == truncate on both engines), the DCT matrix
 quantized at scale ``2**11`` (coefficient error < 0.025%), no
 intermediate rescale (max |B| ≈ 1.4e14, safely inside int64), and the
 median defined as the 128th-smallest value (sorted index 127). This
-makes the hash bit-reproducible across numpy and ANSI SQL — the same
-discipline as the fold-order-pinned kmeans chains — at the price of
-not being bit-compatible with Meta's float implementation (which is
+makes the hash bit-reproducible across numpy and ANSI SQL at the
+price of not being bit-compatible with Meta's float implementation (which is
 itself not bit-stable across compilers; the spec's own conformance
 norm is Hamming-distance tolerance, not equality).
 
@@ -50,7 +49,83 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from .multimodal import decode_image
+
+# Binary PPM (P6) is a complete, standardized image container decodable
+# with numpy alone, so the hash runs on a real codec with no image
+# library installed. `decode_image` is the swap point: PIL, when the
+# optional extra is installed, extends it to any PIL-readable format.
+PPM_MAGIC = b"P6"
+
+
+def _parse_ppm_at(payload: bytes, pos: int):
+    """Parse one binary PPM (P6, maxval ≤ 255) starting at ``pos``;
+    returns ``(pixels, next_pos)`` with pixels (h, w, 3) uint8 and
+    ``next_pos`` the first byte past this image's raster, so a caller
+    can walk a stream of concatenated images. Supports the full header
+    grammar: ``P6``, whitespace-separated width/height/maxval, ``#``
+    comments, single whitespace before the raster."""
+    import numpy as np
+
+    if payload[pos : pos + len(PPM_MAGIC)] != PPM_MAGIC:
+        raise ValueError("not a P6 PPM payload")
+    pos += len(PPM_MAGIC)
+    fields: list[int] = []
+    while len(fields) < 3:
+        # skip whitespace and comments
+        while pos < len(payload) and payload[pos : pos + 1].isspace():
+            pos += 1
+        if payload[pos : pos + 1] == b"#":
+            nl = payload.index(b"\n", pos)
+            pos = nl + 1
+            continue
+        start = pos
+        while pos < len(payload) and not payload[pos : pos + 1].isspace():
+            pos += 1
+        fields.append(int(payload[start:pos]))
+    w, h, maxval = fields
+    if maxval > 255:
+        raise ValueError("16-bit PPM not supported by the pure decoder")
+    pos += 1  # exactly one whitespace byte before the raster
+    raster = payload[pos : pos + w * h * 3]
+    if len(raster) != w * h * 3:
+        raise ValueError(
+            f"truncated PPM raster: need {w * h * 3} bytes, got {len(raster)}"
+        )
+    return (
+        np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3),
+        pos + w * h * 3,
+    )
+
+
+def decode_ppm(payload: bytes):
+    """Decode a binary PPM (P6, maxval ≤ 255) into an (h, w, 3) uint8
+    numpy array. Pure numpy — no image library."""
+    arr, _ = _parse_ppm_at(payload, 0)
+    return arr
+
+
+def decode_image(payload: bytes):
+    """Decode ``payload`` to an (h, w, 3) uint8 array. P6 PPM payloads
+    ALWAYS take the pure-numpy decoder — PIL rescales maxval<255
+    rasters to 8-bit while the pure decoder returns raw bytes, so
+    routing by environment would make hashes depend on whether the
+    optional extra is installed (round-6 advice). Non-PPM payloads use
+    PIL when installed (any PIL-readable format)."""
+    if payload.startswith(PPM_MAGIC):
+        return decode_ppm(payload)
+    try:
+        import io
+
+        import numpy as np
+        from PIL import Image  # optional extra
+
+        return np.asarray(Image.open(io.BytesIO(payload)).convert("RGB"))
+    except ImportError:
+        raise ValueError(
+            "decode_image: non-PPM payload and the optional PIL extra "
+            "is not installed"
+        ) from None
+
 
 # Fixed-point scales (see module docstring). LUMA_SCALE is the Rec.601
 # weight denominator; DCT_SCALE trades coefficient precision against
@@ -151,7 +226,7 @@ def pdq_hash_from_pixels(px, doc_id=None) -> "tuple[str, int]":
 
 def image_pdq_hashes(media: DataFrame) -> DataFrame:
     """The north star's "UDF for PDQ hash computation": decode each
-    binary payload (:func:`multimodal.decode_image` — pure-numpy P6
+    binary payload (:func:`decode_image` — pure-numpy P6
     PPM, PIL for other formats when installed) and compute the
     fixed-point PDQ hash + quality per image. One Arrow boundary
     (``mapInPandas``), numpy-vectorized per image; output is

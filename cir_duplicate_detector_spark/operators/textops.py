@@ -10,7 +10,7 @@ double bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.text import char_shingles, hash60, tokens
 
@@ -19,6 +19,14 @@ from ..functions.text import char_shingles, hash60, tokens
 BPE_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 
 PUNCT_PATTERN = "[.,;:!?]"
+
+
+def _sorted_fold(items: Column, field: str) -> Column:
+    """Fold ``struct`` array ``items`` (pre-sorted) summing ``field``
+    sequentially — the deterministic double accumulator."""
+    return F.aggregate(
+        F.array_sort(items), F.lit(0.0), lambda acc, s: acc + s[field]
+    )
 
 # Tiny per-language stopword lexicons for the n-gram/stopword heuristic.
 # Deterministic tie-break: first language in this order wins ties.
@@ -1000,11 +1008,9 @@ def dsir_weights(
     counts are one hash aggregation; bucket-level raw/target counts
     REUSE that relation (two ``buckets``-row aggregates — broadcast);
     the final score is one per-document fold over its own buckets,
-    sorted-fold pinned (`kmeans._sorted_fold`) so the double sum is
+    sorted-fold pinned (`_sorted_fold`) so the double sum is
     order-deterministic under any partitioning.
     """
-    from .kmeans import _sorted_fold
-
     toks = docs.select(
         "doc_id",
         target.alias("is_target"),
@@ -1147,8 +1153,6 @@ def dsir_score(
     twin, and the position-ordered fold keeps the double sum
     order-deterministic on both engines. Only documents with ≥ 1 token
     appear (raw corpus has none without)."""
-    from .kmeans import _sorted_fold
-
     toks = docs_incoming.select(
         "doc_id",
         F.posexplode(tokens(F.lower(F.col("text")))).alias("pos", "term"),
@@ -1206,9 +1210,8 @@ def bm25_search(
     b: float = BM25_B,
 ) -> DataFrame:
     """Keyword retrieval over the corpus — BM25-shaped scoring of an
-    inverted index, the search capability that sits NEXT TO the
-    similarity family (ANN answers "documents like this vector"; this
-    answers "documents matching these terms"). ``queries`` carries
+    inverted index, answering "documents matching these terms".
+    ``queries`` carries
     ``(query_id, term)`` rows; output is the per-query top-``topk``
     ``(query_id, doc_id, rank, n_terms_hit, score)``, rank by
     (score desc, doc_id asc).
@@ -1225,7 +1228,7 @@ def bm25_search(
     deliberate. Every other float in the score is a fixed expression
     tree of correctly-rounded ops over exact integers
     (tf, dl, N, Σdl), and the per-(query, doc) sum folds in term
-    order (`kmeans._sorted_fold`), so scores hash identically on both
+    order (`_sorted_fold`), so scores hash identically on both
     engines.
 
     SCALE SHAPE (round 14, guide §2.3/§2.4 — the :func:`bm25_route`
@@ -1247,8 +1250,6 @@ def bm25_search(
     both), and the score fold is unchanged — value-hash identical.
     """
     from pyspark.sql import Window
-
-    from .kmeans import _sorted_fold
 
     k1p1 = k1 + 1.0
     one_minus_b = 1.0 - b
@@ -1456,8 +1457,6 @@ def bm25_route(
     index takes df = 0 (maximum-rarity idf (N+0.5)/0.5 — still one
     exact division). Score expression tree and fold order are
     byte-identical to :func:`bm25_search`'s."""
-    from .kmeans import _sorted_fold
-
     k1p1 = k1 + 1.0
     one_minus_b = 1.0 - b
     panel = (
@@ -1568,8 +1567,8 @@ def decontaminate_scrub(
     window: int = BOILER_TOKENS,
 ) -> DataFrame:
     """SURGICAL decontamination — remove the contaminated SPANS and
-    keep the document, where `decontaminate`/`decontaminate_fuzzy`/
-    `decontaminate_semantic` only DETECT: each train document splits
+    keep the document, where `decontaminate`/`decontaminate_fuzzy`
+    only DETECT: each train document splits
     into non-overlapping ``window``-token spans (`_doc_spans` — the
     boilerplate-removal span unit), a span whose exact content occurs
     ANYWHERE in the eval corpus (any alignment — the eval side indexes
@@ -1806,10 +1805,9 @@ def _quality_lda_features(docs: DataFrame) -> DataFrame:
 
 
 def quality_classifier_model(docs: DataFrame) -> DataFrame:
-    """ONE-row LEARNED linear model (w1..w3, m1..m3) — the
-    hash-stand-in → learned upgrade path `kmeans_embeddings` took for
-    IVF (VERDICT r9 item 4), in CLOSED FORM so training is a single
-    aggregation pass, no gradient loop.
+    """ONE-row LEARNED linear model (w1..w3, m1..m3) — the learned
+    upgrade of the hash stand-in (VERDICT r9 item 4), in CLOSED FORM so
+    training is a single aggregation pass, no gradient loop.
 
     Model: diagonal linear discriminant (Fisher LDA with a diagonal
     pooled covariance — Hastie, Tibshirani & Friedman, ESL §4.3;

@@ -21,10 +21,8 @@ for _batch, _streaming in [
     ("bloom_dedup", "bloom_dedup_streaming"),
     ("dedup_lsh_screen", "dedup_lsh_screen_streaming"),
     ("corpus_upsert", "corpus_upsert_streaming"),
-    ("ivf_upsert_assign", "ivf_upsert_assign_streaming"),
-    # index round-trip is identity: the persisted-and-reread quantizer
+    # index round-trip is identity: the persisted-and-reread index
     # must answer the same question as the in-session one.
-    ("ivf_upsert_assign", "ivf_index_roundtrip"),
     ("dedup_lsh_screen", "lsh_index_roundtrip"),
     ("bloom_dedup", "bloom_index_roundtrip"),
     # merged index shards == the one-shot index (distinct-of-union):
@@ -38,11 +36,8 @@ for _batch, _streaming in [
     ("decontaminate_scrub", "decontaminate_scrub_streaming"),
     ("decontaminate_fuzzy", "decontaminate_fuzzy_canonical"),
     ("quality_classifier_learned", "quality_classifier_learned_streaming"),
-    ("image_screen", "image_screen_streaming"),
-    ("image_screen", "image_index_roundtrip"),
     ("dup_labels_upsert", "dup_labels_upsert_streaming"),
     ("dup_labels_upsert", "dup_labels_roundtrip"),
-    ("decontaminate_semantic", "decon_cells_roundtrip"),
 ]:
     assert _batch in ALL_QUERIES and _streaming in ALL_QUERIES, (
         f"twin pair ({_batch}, {_streaming}) names an unregistered query"

@@ -1039,7 +1039,7 @@ def _shared_wave_labels(spark, sf_dir):
 def q_upsert_labels_agreement(spark, sf_dir):
     """The self-measuring row for the incremental labeler — every
     approximation in this engine ships one (`minhash_recall`,
-    `semantic_decon_recall`, ...): per incoming doc, compare the
+    `fuzzy_decon_recall`, ...): per incoming doc, compare the
     per-wave adoption (`dup_labels_upsert`) against the FULL closure
     over existing ∪ incoming (`_shared_dup_labels` — the compaction the
     contract defers to). Output (doc_id, matched, label_equals_full,
@@ -1270,8 +1270,7 @@ def q_dup_labels_roundtrip(spark, sf_dir):
 
 def q_lsh_index_roundtrip(spark, sf_dir):
     """The LSH band index AS A PERSISTED INDEX — the near-dup serving
-    path, completing the persisted-index story `ivf_index_roundtrip`
-    tells for the vector family: build the existing split's distinct
+    path: build the existing split's distinct
     ``(band_id, band_key)`` relation (`dedup.lsh_band_index`), WRITE it
     to parquet (two small deterministic columns, lossless), READ it
     back, and screen the incoming split purely from the on-disk
@@ -1294,7 +1293,7 @@ def q_lsh_index_roundtrip(spark, sf_dir):
 
 def q_bloom_index_roundtrip(spark, sf_dir):
     """The Bloom screen AS A PERSISTED INDEX — the last index family
-    without a round-trip row (IVF, LSH bands and BM25 stats already
+    without a round-trip row (LSH bands and BM25 stats already
     persist): build the existing split's two servable relations
     (`dedup.bloom_index` — the ≤ m set-bit positions and the exact
     digest keys that confirm hits), WRITE both to parquet, READ them
@@ -1739,6 +1738,55 @@ def q_lsh_index_merge(spark, sf_dir):
     )
 
 
+def q_corpus_upsert(spark, sf_dir):
+    """Latest-wins snapshot merge: the base corpus (version 1) merged
+    with an update batch (every 5th doc re-crawled as version 2 with
+    edited text) — one surviving row per doc_id."""
+    docs = load_table(spark, sf_dir, "documents")
+    base = docs.select(
+        "doc_id", "text", F.lit(1).cast("bigint").alias("version")
+    )
+    updates = docs.where(F.col("doc_id") % 5 == 0).select(
+        "doc_id",
+        F.concat(F.col("text"), F.lit(" [recrawled]")).alias("text"),
+        F.lit(2).cast("bigint").alias("version"),
+    )
+    return dedup.corpus_upsert(base, updates)
+
+
+SQL_CORPUS_UPSERT = """
+WITH base AS (
+  SELECT doc_id, text, 1::BIGINT AS version FROM documents
+),
+updates AS (
+  SELECT doc_id, text || ' [recrawled]' AS text, 2::BIGINT AS version
+  FROM documents WHERE doc_id % 5 = 0
+),
+merged AS (
+  SELECT doc_id, version, md5(text) AS text_hash FROM base
+  UNION ALL
+  SELECT doc_id, version, md5(text) AS text_hash FROM updates
+)
+SELECT doc_id, version, text_hash FROM (
+  SELECT *, row_number() OVER (
+    PARTITION BY doc_id ORDER BY version DESC, text_hash DESC
+  ) AS rn
+  FROM merged
+) WHERE rn = 1
+"""
+
+
+def q_corpus_upsert_streaming(spark, sf_dir):
+    """The latest-wins upsert as a stream (`streaming.windows.
+    streaming_corpus_upsert`): re-crawls arrive on a file stream,
+    per-key winner state stays (version, digest)-sized, the drained
+    delta resolves against the static snapshot batch-side. Shares the
+    batch `corpus_upsert` oracle by the registry twin guard."""
+    from ..streaming.windows import streaming_corpus_upsert
+
+    return streaming_corpus_upsert(spark, sf_dir)
+
+
 DEDUP_QUERIES: dict[str, tuple] = {
     "sentence_dedup": (q_sentence_dedup, SQL_SENTENCE_DEDUP),
     "lsh_index_merge": (q_lsh_index_merge, SQL_DEDUP_LSH_SCREEN),
@@ -1800,4 +1848,6 @@ DEDUP_QUERIES: dict[str, tuple] = {
     "dup_overlap": (q_dup_overlap, _sql_dup_overlap()),
     "dup_weighting": (q_dup_weighting, _sql_dup_weighting()),
     "minhash_recall": (q_minhash_recall, SQL_MINHASH_RECALL),
+    "corpus_upsert": (q_corpus_upsert, SQL_CORPUS_UPSERT),
+    "corpus_upsert_streaming": (q_corpus_upsert_streaming, SQL_CORPUS_UPSERT),
 }

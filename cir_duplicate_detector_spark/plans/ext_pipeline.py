@@ -1,5 +1,5 @@
 """Training-data pipeline extension queries:
-decontamination (exact/fuzzy/semantic + report), boilerplate
+decontamination (exact/fuzzy + report), boilerplate
 removal/screen, DSIR weighting, BM25 search/route/index.
 
 Split out of the monolithic ``extension_queries.py`` (round-10
@@ -11,12 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 from ..functions.text import hash60_sql
-from ..operators import dedup, similarity, textops
-from ..sources.derived import (
-    BLOOM_SPLIT_DUCK,
-    BLOOM_SPLIT_SPARK,
-    derive_near_dup_embeddings,
-)
+from ..operators import dedup, textops
+from ..sources.derived import BLOOM_SPLIT_DUCK, BLOOM_SPLIT_SPARK
 from ..sources.tables import load_table
 
 from .ext_common import (
@@ -26,9 +22,7 @@ from .ext_common import (
     _DUCK_WORDS,
     _LANES,
     _ND,
-    _ND_EMB,
     _docs_nd,
-    _sql_kmeans_ivf_cells,
 )
 
 
@@ -182,9 +176,8 @@ def q_bm25_search(spark, sf_dir):
     term panel against the documents corpus, BM25-shaped scoring with
     the RATIONAL idf ``(N - df + 0.5)/(df + 0.5)`` (the log dropped
     for cross-engine bit-reproducibility — the tfidf linear-idf
-    stance), per-query top-10 by (score desc, doc_id). The search
-    capability next to the ANN family: terms in, ranked documents
-    out."""
+    stance), per-query top-10 by (score desc, doc_id): terms in,
+    ranked documents out."""
     panel = spark.createDataFrame(
         textops.BM25_PANEL, "query_id bigint, term string"
     )
@@ -359,7 +352,7 @@ def q_bm25_index_roundtrip(spark, sf_dir):
     frame (N, Σdl) and the per-term document frequencies write to
     parquet and the incoming half routes purely from the re-read
     relations — the percolation service's restart path, completing the
-    persisted-index rule (`ivf_index_roundtrip`, `lsh_index_roundtrip`)
+    persisted-index rule (`lsh_index_roundtrip`)
     for the retrieval family. Output identical to `bm25_route`
     (round-trip identity) — one oracle string by the registry guard."""
     from ..cache import tracked_mkdtemp
@@ -649,217 +642,15 @@ GROUP BY otk.doc_id
 """
 
 
-# Eval slice for the SEMANTIC decontamination screen, on the nd
-# embedding corpus. Modulus 11 (not the fuzzy screen's 13): the
-# planted offsets are +1000000 (≡1 mod 11) for exact copies and
-# +2000000 (≡2 mod 11) for perturbations, so BOTH planted pair kinds
-# straddle this split (under mod 13 the +2000000 offset is ≡2 with
-# originals ≡0 — perturbed pairs would never cross).
-_SEM_EVAL_MOD, _SEM_EVAL_REM = 11, 3
-
-# Build-once TRAIN-side quantizer assignment shared by the semantic
-# decontamination screen and its recall diagnostic (each previously
-# re-learned the identical train-side quantizer). Parquet-backed so it
-# survives `release_cached`; deterministic build → identical results.
-_DECON_CELLS_SHARED: dict[tuple, object] = {}
-
-
-def _shared_decon_cells(spark, sf_dir):
-    from ..cache import shared_artifact
-    from ..operators.kmeans import ivf_assign_from_index, ivf_quantizer
-
-    def build(d):
-        corpus = derive_near_dup_embeddings(
-            load_table(spark, sf_dir, "embeddings")
-        )
-        pred = F.col("vec_id") % _SEM_EVAL_MOD == _SEM_EVAL_REM
-        coarse, fine = ivf_quantizer(corpus.where(~pred))
-        built = ivf_assign_from_index(coarse, fine, corpus).select(
-            "vec_id", "coarse", "fine"
-        )
-        built.write.mode("overwrite").parquet(f"{d}/cells")
-        return spark.read.parquet(f"{d}/cells")
-
-    return shared_artifact(
-        _DECON_CELLS_SHARED, spark, sf_dir, "decon_cells_", build
-    )
-
-
-def q_decontaminate_semantic(spark, sf_dir):
-    """SEMANTIC decontamination (`similarity.semantic_cross_
-    decontaminate`): train docs whose EMBEDDING is near an eval doc's
-    (cosine >= 0.9 within the learned (coarse, fine) cells), closing
-    the decontamination matrix — exact 8-grams (`decontaminate`),
-    fuzzy Jaccard (`decontaminate_fuzzy`), and now meaning-level
-    similarity for reworded contamination. The quantizer learns from
-    the TRAIN side only and eval probes it through the serving path —
-    the realistic index direction. Split: vec_id % 11 == 3 is eval."""
-    corpus = derive_near_dup_embeddings(load_table(spark, sf_dir, "embeddings"))
-    pred = F.col("vec_id") % _SEM_EVAL_MOD == _SEM_EVAL_REM
-    return similarity.semantic_cross_decontaminate(
-        corpus, pred, threshold=0.9,
-        cells=_shared_decon_cells(spark, sf_dir),
-    )
-
-
-def _sql_decontaminate_semantic() -> str:
-    not_eval = f"vec_id % {_SEM_EVAL_MOD} <> {_SEM_EVAL_REM}"
-    cos = (
-        "list_sum(list_transform(range(1, 65), j -> t.e[j] * v.e[j]))"
-        " / (t.nrm * v.nrm)"
-    )
-    return f"""
-WITH emb_nd AS ({_ND_EMB}),
-n AS (SELECT vec_id, embedding AS e FROM emb_nd)
-{_sql_kmeans_ivf_cells(not_eval)},
-m AS (
-  SELECT n.vec_id, n.e,
-         sqrt(list_sum(list_transform(n.e, x -> x * x))) AS nrm,
-         c.coarse, c.fine
-  FROM n JOIN cells c USING (vec_id)
-)
-SELECT t.vec_id AS train_id, v.vec_id AS eval_id, t.coarse, t.fine,
-       {cos} AS cosine
-FROM m t JOIN m v ON t.coarse = v.coarse AND t.fine = v.fine
-WHERE t.vec_id % {_SEM_EVAL_MOD} <> {_SEM_EVAL_REM}
-  AND v.vec_id % {_SEM_EVAL_MOD} = {_SEM_EVAL_REM}
-  AND {cos} >= 0.9
-"""
-
-
-def q_semantic_decon_recall(spark, sf_dir):
-    """Recall of the `decontaminate_semantic` cell-restricted screen vs
-    EXACT cross-corpus cosine truth — the same self-measuring rule as
-    `fuzzy_decon_recall`: a miss is a (train, eval) pair split across
-    (coarse, fine) cells, the SemDeDup blindness, now measured for the
-    cross-corpus direction. Truth is exact cosine >= 0.9 over train ×
-    a FIXED 32-doc eval panel (smallest seeded-hash eval vec_ids —
-    the bounded-panel discipline; truth over the full eval side would
-    grow |train|·|eval|, quadratic at scale). One row per panel doc
-    with >= 1 true contaminating pair: (eval_id, n_true, n_found,
-    recall); found ⊆ truth by construction (the screen computes the
-    same cosine, within cells), so recall is the only loss axis."""
-    from ..functions.text import hash60
-    from ..operators.similarity import dot64, norm64
-
-    corpus = derive_near_dup_embeddings(load_table(spark, sf_dir, "embeddings"))
-    pred = F.col("vec_id") % _SEM_EVAL_MOD == _SEM_EVAL_REM
-    nn = corpus.select(
-        "vec_id", "embedding", norm64(F.col("embedding")).alias("nrm")
-    )
-    panel = (
-        nn.where(pred)
-        .select(
-            "vec_id",
-            hash60(F.col("vec_id").cast("string"), seed="sdr").alias("h"),
-        )
-        .orderBy("h", "vec_id")
-        .limit(32)
-        .select("vec_id")
-    )
-    pv = nn.join(panel, "vec_id").select(
-        F.col("vec_id").alias("eval_id"),
-        F.col("embedding").alias("v_emb"),
-        F.col("nrm").alias("v_nrm"),
-    )
-    t = nn.where(~pred).select(
-        F.col("vec_id").alias("train_id"),
-        F.col("embedding").alias("t_emb"),
-        F.col("nrm").alias("t_nrm"),
-    )
-    cos = dot64(F.col("t_emb"), F.col("v_emb")) / (
-        F.col("t_nrm") * F.col("v_nrm")
-    )
-    truth = (
-        t.crossJoin(F.broadcast(pv))
-        .where(cos >= 0.9)
-        .select("train_id", "eval_id")
-    )
-    found = (
-        similarity.semantic_cross_decontaminate(
-            corpus, pred, threshold=0.9,
-            cells=_shared_decon_cells(spark, sf_dir),
-        )
-        .join(panel.withColumnRenamed("vec_id", "eval_id"), "eval_id", "semi")
-        .select("train_id", "eval_id", F.lit(1).alias("hit"))
-    )
-    return (
-        truth.join(found, ["train_id", "eval_id"], "left")
-        .groupBy("eval_id")
-        .agg(
-            F.count("*").alias("n_true"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_found"),
-        )
-        .select(
-            "eval_id",
-            "n_true",
-            "n_found",
-            (F.col("n_found") / F.col("n_true")).alias("recall"),
-        )
-    )
-
-
-def _sql_semantic_decon_recall() -> str:
-    not_eval = f"vec_id % {_SEM_EVAL_MOD} <> {_SEM_EVAL_REM}"
-    h = hash60_sql("vec_id::VARCHAR", "'sdr'")
-    cell_cos = (
-        "list_sum(list_transform(range(1, 65), j -> t.e[j] * v.e[j]))"
-        " / (t.nrm * v.nrm)"
-    )
-    return f"""
-WITH emb_nd AS ({_ND_EMB}),
-n AS (SELECT vec_id, embedding AS e FROM emb_nd)
-{_sql_kmeans_ivf_cells(not_eval)},
-nn AS (
-  SELECT vec_id, e,
-         sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-  FROM n
-),
-m AS (
-  SELECT nn.vec_id, nn.e, nn.nrm, c.coarse, c.fine
-  FROM nn JOIN cells c USING (vec_id)
-),
-found AS (
-  SELECT t.vec_id AS train_id, v.vec_id AS eval_id
-  FROM m t JOIN m v ON t.coarse = v.coarse AND t.fine = v.fine
-  WHERE t.vec_id % {_SEM_EVAL_MOD} <> {_SEM_EVAL_REM}
-    AND v.vec_id % {_SEM_EVAL_MOD} = {_SEM_EVAL_REM}
-    AND {cell_cos} >= 0.9
-),
-panel AS (
-  SELECT vec_id FROM n
-  WHERE vec_id % {_SEM_EVAL_MOD} = {_SEM_EVAL_REM}
-  ORDER BY {h}, vec_id LIMIT 32
-),
-truth AS (
-  SELECT t.vec_id AS train_id, v.vec_id AS eval_id
-  FROM nn t, nn v
-  WHERE t.vec_id % {_SEM_EVAL_MOD} <> {_SEM_EVAL_REM}
-    AND v.vec_id IN (SELECT vec_id FROM panel)
-    AND {cell_cos} >= 0.9
-)
-SELECT truth.eval_id, count(*)::BIGINT AS n_true,
-       sum(CASE WHEN found.train_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         AS n_found,
-       sum(CASE WHEN found.train_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         / count(*) AS recall
-FROM truth LEFT JOIN found USING (train_id, eval_id)
-GROUP BY truth.eval_id
-"""
-
-
 def q_fuzzy_decon_recall(spark, sf_dir):
     """Recall of the `decontaminate_fuzzy` banded screen vs EXACT
     cross-corpus Jaccard truth — the self-measuring diagnostic every
-    approximate index in this repo ships (`minhash_recall` /
-    `semantic_decon_recall` pattern): truth = exact 3-gram
+    approximate index in this repo ships (`minhash_recall`
+    pattern): truth = exact 3-gram
     Jaccard >= 0.5 pairs via the shingle inverted-index join (pairs
     sharing zero shingles have J = 0 and exit naturally) over train ×
-    a FIXED 32-doc eval panel (smallest seeded-hash eval doc_ids —
-    the `semantic_decon_recall` discipline, round 9:
-    truth over the FULL eval side grew with |eval|, measured 3.2× at
+    a FIXED 32-doc eval panel (smallest seeded-hash eval doc_ids,
+    round 9: truth over the FULL eval side grew with |eval|, measured 3.2× at
     the 10× replica; the panel bounds the exact side to a constant
     number of probe documents at any corpus size). The found side is
     the SHIPPED full screen, restricted to the panel after the fact,
@@ -1129,35 +920,6 @@ WHERE NOT ({ev})
 """
 
 
-def q_decon_cells_roundtrip(spark, sf_dir):
-    """The TRAIN-side decontamination cell assignment AS A PERSISTED
-    INDEX (round 11, VERDICT r10 item 5: every built-once artifact
-    family gets a round-trip row):
-    take the pair-shared (vec_id, coarse, fine) relation
-    (`_shared_decon_cells` — quantizer learned from the train side
-    only), WRITE it to parquet, READ it back, and run the semantic
-    decontamination screen purely from the on-disk relation. Output
-    identical to `decontaminate_semantic` (round-trip identity) — one
-    oracle string by the registry guard."""
-    from ..cache import tracked_mkdtemp
-
-    corpus = derive_near_dup_embeddings(load_table(spark, sf_dir, "embeddings"))
-    pred = F.col("vec_id") % _SEM_EVAL_MOD == _SEM_EVAL_REM
-    cells = _shared_decon_cells(spark, sf_dir)
-    d = tracked_mkdtemp("decon_cells_rt_")
-    cells.write.mode("overwrite").parquet(f"{d}/cells")
-    # Identity tag (round 15, ADVICE r14): the operator materializes
-    # the member join, so a read-level alias would vanish behind the
-    # checkpoint scan — tag the row's OUTPUT instead, keeping the
-    # roundtrip's fingerprint distinct from the serving twin's.
-    return similarity.semantic_cross_decontaminate(
-        corpus,
-        pred,
-        threshold=0.9,
-        cells=spark.read.parquet(f"{d}/cells"),
-    ).alias("decon_cells_rt")
-
-
 PIPELINE_QUERIES: dict[str, tuple] = {
     "decontamination_report": (
         q_decontamination_report,
@@ -1170,18 +932,6 @@ PIPELINE_QUERIES: dict[str, tuple] = {
         SQL_DECONTAMINATE_FUZZY,
     ),
     "fuzzy_decon_recall": (q_fuzzy_decon_recall, SQL_FUZZY_DECON_RECALL),
-    "decontaminate_semantic": (
-        q_decontaminate_semantic,
-        _sql_decontaminate_semantic(),
-    ),
-    "decon_cells_roundtrip": (
-        q_decon_cells_roundtrip,
-        _sql_decontaminate_semantic(),
-    ),
-    "semantic_decon_recall": (
-        q_semantic_decon_recall,
-        _sql_semantic_decon_recall(),
-    ),
     "boilerplate_removal": (
         q_boilerplate_removal,
         _sql_boilerplate_removal(),

@@ -626,8 +626,8 @@ def q_quality_classifier_learned(spark, sf_dir):
     `quality_classifier_learned`): a closed-form diagonal linear
     discriminant trained in ONE aggregation pass on the deterministic
     `doc_id % 4 == 0` split, labels distilled from the heuristic
-    quality band — the hash-stand-in → learned upgrade path
-    `kmeans_embeddings` took for IVF (VERDICT r9 item 4). Training
+    quality band — the learned upgrade of the hash stand-in
+    (VERDICT r9 item 4). Training
     aggregates are order-free bigint sums over exact ppm-integer
     features; scoring is a PURE PROJECTION after a broadcast one-row
     model join (zero shuffles — the same shape as the hashed
@@ -737,6 +737,37 @@ FROM sc GROUP BY 1, 2
 """
 
 
+def q_corpus_drift(spark, sf_dir):
+    """Token-distribution drift between the doc_id-parity cohorts —
+    integer-exact cross-product divergence, top-20 tokens."""
+    return textops.corpus_drift(load_table(spark, sf_dir, "documents"))
+
+
+SQL_CORPUS_DRIFT = f"""
+WITH toks AS (
+  SELECT doc_id % 2 = 0 AS in_a,
+         unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                            t -> t <> '')) AS term
+  FROM documents
+),
+counts AS (
+  SELECT term,
+         sum(CASE WHEN in_a THEN 1 ELSE 0 END)::BIGINT AS cnt_a,
+         sum(CASE WHEN NOT in_a THEN 1 ELSE 0 END)::BIGINT AS cnt_b
+  FROM toks GROUP BY term
+),
+tot AS (SELECT sum(cnt_a)::BIGINT AS na, sum(cnt_b)::BIGINT AS nb FROM counts),
+scored AS (
+  SELECT term, cnt_a, cnt_b,
+         abs(cnt_a * nb - cnt_b * na)::BIGINT AS score
+  FROM counts, tot
+)
+SELECT term, cnt_a, cnt_b, score,
+       row_number() OVER (ORDER BY score DESC, term)::BIGINT AS rank
+FROM scored ORDER BY score DESC, term LIMIT 20
+"""
+
+
 TEXT_QUERIES: dict[str, tuple] = {
     "quality_classifier": (q_quality_classifier, _sql_quality_classifier()),
     "quality_classifier_learned": (
@@ -774,4 +805,5 @@ TEXT_QUERIES: dict[str, tuple] = {
     "shard_assign": (q_shard_assign, _sql_shard_assign()),
     "tfidf_topterms": (q_tfidf_topterms, SQL_TFIDF_TOPTERMS),
     "dataset_split": (q_dataset_split, _sql_dataset_split()),
+    "corpus_drift": (q_corpus_drift, SQL_CORPUS_DRIFT),
 }

@@ -1,6 +1,6 @@
 """Extension query registry aggregator.
 
-The per-family modules (``ext_dedup``, ``ext_ann``, ``ext_text``,
+The per-family modules (``ext_dedup``, ``ext_text``,
 ``ext_pipeline``, ``ext_multimodal``, shared helpers in ``ext_common``)
 each export a ``*_QUERIES`` dict; this module merges
 them into ``EXTENSION_QUERIES`` in family order.
@@ -8,8 +8,8 @@ them into ``EXTENSION_QUERIES`` in family order.
 Floating-point discipline (everything here is checked by
 value-hash):
 * ratios/similarities are single divisions of exact integers;
-* cosine scores are sequential double folds, which Spark's
-  aggregate() and DuckDB's list_sum() evaluate in the same order
+* double sums are sequential folds in a pinned order, which Spark's
+  aggregate() and DuckDB's list_sum() evaluate identically
   (verified).
 """
 
@@ -19,14 +19,12 @@ from __future__ import annotations
 # pre-split imports (tests, notebooks) keep working unchanged.
 from .ext_common import *  # noqa: F401,F403
 from .ext_dedup import *  # noqa: F401,F403
-from .ext_ann import *  # noqa: F401,F403
 from .ext_text import *  # noqa: F401,F403
 from .ext_pipeline import *  # noqa: F401,F403
 from .ext_multimodal import *  # noqa: F401,F403
 
 from . import (
     ext_dedup,
-    ext_ann,
     ext_text,
     ext_pipeline,
     ext_multimodal,
@@ -34,7 +32,6 @@ from . import (
 
 EXTENSION_QUERIES: dict[str, tuple] = {
     **ext_dedup.DEDUP_QUERIES,
-    **ext_ann.ANN_QUERIES,
     **ext_text.TEXT_QUERIES,
     **ext_pipeline.PIPELINE_QUERIES,
     **ext_multimodal.MULTIMODAL_QUERIES,

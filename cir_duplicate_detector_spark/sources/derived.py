@@ -39,42 +39,6 @@ def near_dup_corpus_sql(dialect: str) -> str:
     """
 
 
-def near_dup_embeddings_sql(dialect: str) -> str:
-    """Embedding corpus with planted near-duplicates over `embeddings`:
-    originals (double-widened), exact copies (vec_id % 7 == 0 →
-    +1_000_000), and one-dimension perturbations (+1/64 on dim 1,
-    vec_id % 13 == 0 → +2_000_000; cosine stays ≈0.999 ≫ threshold).
-    1/64 is exact in binary so both engines add the same double.
-    """
-    if dialect == "spark":
-        widen = "transform(embedding, x -> cast(x AS double))"
-        perturbed = (
-            "concat(array(cast(embedding[0] AS double) + 0.015625), "
-            "transform(slice(embedding, 2, 63), x -> cast(x AS double)))"
-        )
-    elif dialect == "duckdb":
-        widen = "embedding::DOUBLE[]"
-        perturbed = "[embedding[1]::DOUBLE + 0.015625] || (embedding::DOUBLE[])[2:]"
-    else:
-        raise ValueError(f"unknown dialect {dialect!r}")
-    return f"""
-    SELECT vec_id, {widen} AS embedding FROM embeddings
-    UNION ALL
-    SELECT vec_id + 1000000 AS vec_id, {widen} AS embedding
-    FROM embeddings WHERE vec_id % 7 = 0
-    UNION ALL
-    SELECT vec_id + 2000000 AS vec_id, {perturbed} AS embedding
-    FROM embeddings WHERE vec_id % 13 = 0
-    """
-
-
-def derive_near_dup_embeddings(embeddings: DataFrame) -> DataFrame:
-    spark = embeddings.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    embeddings.createOrReplaceTempView("embeddings")
-    return spark.sql(near_dup_embeddings_sql("spark")).repartition(width)
-
-
 def derive_near_dup_corpus(documents: DataFrame) -> DataFrame:
     # Widen the scan before the CPU-dense shingle/hash pipelines that
     # consume this corpus: a tiny single-file parquet input otherwise
@@ -131,7 +95,7 @@ def derive_sentenced_corpus(docs: DataFrame) -> DataFrame:
     synthetic testdata carries no sentence terminators at all (measured:
     0 of 500 sf0.01 docs contain '.'), which would make every document
     one giant "sentence" and the sentence-granularity operators
-    vacuously exact-dedup. Same fixture stance as `_ppm_media` framing
+    vacuously exact-dedup. Same fixture stance as `_pdq_media` framing
     docs as images: derive the structure the operator family needs,
     deterministically, on BOTH engines. Pure per-row projection
     (tokenize → fixed-size slices → rejoin), zero shuffles; truncation

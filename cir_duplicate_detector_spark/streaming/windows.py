@@ -304,85 +304,6 @@ def streaming_corpus_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def streaming_ivf_upsert_assign(
-    spark: SparkSession, sf_dir: str, quantizer=None
-) -> DataFrame:
-    """Continuous ANN index maintenance AS A STREAM — the streaming
-    twin of `operators.kmeans.kmeans_ivf_assign_incoming`: the
-    two-level quantizer (coarse Lloyd centroids + the base corpus's
-    fine table) is built ONCE batch-side from the indexed half of the
-    embeddings table (`ivf_quantizer`, both tables materialized);
-    incoming vectors (the other half) arrive on a file stream and
-    resolve their coarse cell through a stream-static join against the
-    broadcast centroid table (constant-key equi-join — the supported
-    stream-static shape for a bounded scoring table) with per-vector
-    argmin state holding only (vec_id → (dist, cell)), never the
-    embedding. The drained coarse assignment then resolves fine cells
-    batch-side through the static fine table's coarse-cell equi-join
-    (`_fine_resolve` — shared code with the batch twin), re-joining
-    the embedding from the source relation instead of carrying it
-    through stream state. Output identical to the batch twin; one
-    oracle string by the registry guard.
-    """
-    from ..operators.kmeans import (
-        _fine_resolve,
-        _sq_dist,
-        ivf_quantizer,
-    )
-
-    path = f"{sf_dir}/embeddings.parquet"
-    schema = spark.read.parquet(path).schema
-    emb = spark.read.parquet(path)
-    # ``quantizer`` shares the batch-built (possibly parquet-reread)
-    # static pair with the batch twin; deterministic build, identical
-    # results either way.
-    coarse, fine = (
-        quantizer
-        if quantizer is not None
-        else ivf_quantizer(emb.where("vec_id % 2 = 0"))
-    )
-
-    stage = stage_source(path, "emb_ivf_stream_")
-    inc = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-        .where("vec_id % 2 = 1")
-        .select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("e"),
-        )
-        .withColumn("jk", F.lit(0))
-    )
-    scored = inc.join(
-        F.broadcast(coarse.withColumn("jk", F.lit(0))), "jk"
-    ).select(
-        "vec_id",
-        "coarse",
-        _sq_dist(F.col("e"), F.col("c")).alias("dc"),
-    )
-    best = (
-        scored.groupBy("vec_id")
-        .agg(F.min(F.struct("dc", "coarse")).alias("m"))
-        .select("vec_id", F.col("m.coarse").alias("coarse"))
-    )
-    name = f"stream_ivf_{uuid.uuid4().hex[:8]}"
-    query = (
-        best.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    assigned = spark.table(name).join(
-        emb.where("vec_id % 2 = 1").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        ),
-        "vec_id",
-    )
-    return _fine_resolve(assigned, fine)
-
-
 def streaming_boilerplate_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The boilerplate span screen AS A STREAM — the span-level sibling
     of :func:`streaming_lsh_screen`: the existing split's boilerplate
@@ -657,8 +578,8 @@ def streaming_label_upsert(
     aggregation. Duplicate (a, b) band collisions need no distinct —
     the min fold absorbs them. Unmatched docs never reach the
     aggregation, so the self-label fill joins the drained table against
-    the source relation batch-side (the `streaming_ivf_upsert_assign`
-    post-drain convention). Output identical to the batch
+    the source relation batch-side, after the drain. Output identical
+    to the batch
     `dup_labels_upsert` entry — one oracle string by the twin guard."""
     from ..operators.dedup import (
         banded_keys,
@@ -745,61 +666,3 @@ def streaming_label_upsert(
             F.col("m").isNotNull().alias("matched"),
         )
     )
-
-
-def streaming_image_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The image-ingest membership screen AS A STREAM — the image
-    analogue of :func:`streaming_lsh_screen` and the production shape
-    of `multimodal.image_screen`: the existing split's distinct ahash
-    ``(band_id, band_key)`` index is built batch-side ONCE
-    (`multimodal.image_band_index` — persistable parquet, the
-    `lsh_index_roundtrip` posture); new images arrive on a file
-    stream, decode + 8×8 average-hash per row (the one Arrow
-    boundary, `image_ahash_features` on the stream — zero state
-    before the final rollup), explode to band keys and probe the
-    static index through a stream-static equi-join. Output identical
-    to the batch `image_screen` — the two registry entries share one
-    oracle string by construction (the twin guard in
-    ``plans/__init__``)."""
-    from ..operators.multimodal import (
-        image_band_index,
-        image_screen_from_index,
-    )
-    from ..sources.derived import BLOOM_SPLIT_SPARK
-
-    # Documents framed as 8x8 binary PPMs — the same expressions as
-    # plans.ext_multimodal._ppm_media, kept here in streaming form
-    # (that builder lives in the registration layer); divergence would
-    # fail the shared batch/streaming oracle.
-    def _media(docs):
-        raster = F.rpad(F.substring("text", 1, 192), 192, " ")
-        payload = F.encode(
-            F.concat(F.lit("P6\n8 8\n255\n"), raster), "utf-8"
-        )
-        return docs.select(
-            "doc_id",
-            payload.alias("payload"),
-        )
-
-    path = f"{sf_dir}/documents.parquet"
-    schema = spark.read.parquet(path).schema
-    docs_b = spark.read.parquet(path)
-    idx = image_band_index(
-        _media(docs_b.where(F.expr(BLOOM_SPLIT_SPARK) == 0))
-    )
-    incoming = _media(
-        spark.readStream.schema(schema)
-        .parquet(stage_source(path, "docs_imgscreen_stream_"))
-        .where(F.expr(BLOOM_SPLIT_SPARK) == 1)
-    )
-    probed = image_screen_from_index(idx, incoming, index_is_distinct=True)
-    name = f"stream_imgscreen_{uuid.uuid4().hex[:8]}"
-    query = (
-        probed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)

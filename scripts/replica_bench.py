@@ -2,7 +2,7 @@
 10x) into a parquet dir and time registered queries against it.
 
 This is the reproducible form of SCALE.md's "Measured scale-up" table:
-each replica copy offsets doc_id/vec_id by i*10^7 so ids stay unique
+each replica copy offsets doc_id by i*10^7 so ids stay unique
 AND the derived-corpus bands (+1e6/+2e6) stay inside their copy's block.
 
 Round 14 (VERDICT r13 item 3): document COPIES ARE PERTURBED — copy
@@ -68,25 +68,19 @@ def build_replica(spark, n: int, perturb: bool = True) -> str:
     from pyspark.sql import functions as F
 
     out = f"{REPLICA_DIR}_{n}x" + ("" if perturb else "_ident")
-    for table, key in [
-        ("documents", "doc_id"),
-        ("embeddings", "vec_id"),
-    ]:
-        src = spark.read.parquet(f"{SRC}/{table}.parquet")
-        parts = []
-        for i in range(n):
-            p = src.withColumn(key, F.col(key) + F.lit(i * 10_000_000))
-            if perturb and table == "documents":
-                p = p.withColumn(
-                    "text", perturb_text(F.col("text"), F.lit(i))
-                )
-            parts.append(p)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionAll(p)
-        df.repartition(32).write.mode("overwrite").parquet(
-            f"{out}/{table}.parquet"
-        )
+    src = spark.read.parquet(f"{SRC}/documents.parquet")
+    parts = []
+    for i in range(n):
+        p = src.withColumn("doc_id", F.col("doc_id") + F.lit(i * 10_000_000))
+        if perturb:
+            p = p.withColumn("text", perturb_text(F.col("text"), F.lit(i)))
+        parts.append(p)
+    df = parts[0]
+    for p in parts[1:]:
+        df = df.unionAll(p)
+    df.repartition(32).write.mode("overwrite").parquet(
+        f"{out}/documents.parquet"
+    )
     return out
 
 

@@ -5,15 +5,9 @@ operators do the *right thing* on planted structures).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import functions as F
 
-from cir_duplicate_detector_spark.operators import (
-    dedup,
-    multimodal,
-    textops,
-)
+from cir_duplicate_detector_spark.operators import dedup, textops
 from cir_duplicate_detector_spark.sources.derived import derive_near_dup_corpus
 from cir_duplicate_detector_spark.sources.tables import load_table
 
@@ -58,19 +52,6 @@ def test_simhash_identical_for_copies(spark):
     assert 0 <= sig[1] < (1 << 60)
 
 
-def test_multimodal_features_match_hashlib(spark):
-    docs = load_table(spark, SF_DIR, "documents").limit(5)
-    media = multimodal.to_media(docs)
-    feats = multimodal.extract_features(media).collect()
-    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-    assert len(feats) == 5
-    for r in feats:
-        raw = texts[r["doc_id"]].encode("utf-8")
-        assert r["n_bytes"] == len(raw)
-        assert r["content_md5"] == hashlib.md5(raw).hexdigest()
-        assert r["feature60"] == int(hashlib.md5(raw).hexdigest()[:15], 16)
-
-
 def test_lang_id_deterministic_ties(spark):
     docs = spark.createDataFrame(
         [(1, "the cat and the dog"), (2, "el perro y la casa de que"),
@@ -94,55 +75,6 @@ def test_fingerprint_shape(spark):
     ]
     hashes = [r["fp_hash"] for r in sorted(got, key=lambda r: r["fp_rank"])]
     assert hashes == sorted(hashes)
-
-
-def test_image_resize_box_filters_decoded_pixels(spark):
-    # 2x2 image with one bright and three dark pixels: the 2x resize
-    # must produce ONE pixel whose channels are the integer-floor block
-    # means of the DECODED values — and the output must be a valid,
-    # re-decodable P6 payload.
-    from cir_duplicate_detector_spark.operators.multimodal import decode_ppm
-
-    px = [(200, 100, 40), (0, 0, 0), (0, 0, 0), (0, 0, 2)]
-    payload = _ppm(2, 2, px, comment=b"bytes differ, pixels rule")
-    media = spark.createDataFrame(
-        [(1, "image/x-portable-pixmap", payload, len(payload))],
-        "doc_id bigint, media_type string, payload binary, n_bytes bigint",
-    )
-    got = multimodal.image_resize(media, factor=2).collect()[0]
-    assert (got.orig_width, got.orig_height) == (2, 2)
-    assert (got.width, got.height) == (1, 1)
-    out = bytes.fromhex(got.resized_hex)
-    arr = decode_ppm(out)
-    assert arr.shape == (1, 1, 3)
-    assert arr[0, 0].tolist() == [50, 25, 10]  # floor means incl. 42//4
-
-
-def test_video_frame_ahash_parses_and_strides(spark):
-    # Three concatenated 2x2 frames; stride 2 keeps frames 0 and 2.
-    # Frame hashes must match the single-image feature on the same
-    # pixels (shared rule), and frame 1 must be skipped.
-    bright = [(200, 200, 200)] * 2 + [(10, 10, 10)] * 2
-    frames = [
-        _ppm(2, 2, bright),
-        _ppm(2, 2, [(1, 2, 3)] * 4, comment=b"skipped"),
-        _ppm(2, 2, list(reversed(bright))),
-    ]
-    payload = b"".join(frames)
-    media = spark.createDataFrame(
-        [(7, "video/x-ppm-stream", payload, len(payload))],
-        "doc_id bigint, media_type string, payload binary, n_bytes bigint",
-    )
-    got = {
-        r.frame_no: r
-        for r in multimodal.video_frame_ahash(
-            media, stride=2, grid=2
-        ).collect()
-    }
-    assert sorted(got) == [0, 2]
-    assert got[0].width == 2 and got[0].height == 2
-    assert got[0].ahash_bits == "1100"
-    assert got[2].ahash_bits == "0011"
 
 
 def test_connected_components_transitive_closure(spark):
@@ -227,109 +159,6 @@ def test_normalized_exact_dedup_merges_reformatted(spark):
     assert dedup.exact_duplicates(docs).count() == 0
 
 
-def test_image_index_roundtrip_identical(spark, tmp_path):
-    # The persisted ahash band index must answer EXACTLY like the
-    # in-session build — the soundness claim behind the registered
-    # image_index_roundtrip identity guard (and copies must hit, fresh
-    # rasters may legitimately miss).
-    def media(rows):
-        return spark.createDataFrame(
-            [
-                (i, multimodal.PPM_MEDIA_TYPE, bytearray(p), len(p))
-                for i, p in rows
-            ],
-            "doc_id long, media_type string, payload binary, n_bytes long",
-        )
-
-    def raster(seed):
-        return _ppm(
-            8, 8, [((seed * (i + 3)) % 256,) * 3 for i in range(64)]
-        )
-
-    existing = media([(i, raster(i + 1)) for i in range(12)])
-    incoming = media(
-        [(100 + i, raster(i + 1)) for i in range(6)]  # exact copies
-        + [(200 + i, raster(97 + i)) for i in range(6)]  # fresh
-    )
-    idx = multimodal.image_band_index(existing)
-    direct = multimodal.image_screen_from_index(
-        idx, incoming, index_is_distinct=True
-    ).collect()
-    idx.write.parquet(str(tmp_path / "bands"))
-    served = multimodal.image_screen_from_index(
-        spark.read.parquet(str(tmp_path / "bands")),
-        incoming,
-        index_is_distinct=True,
-    ).collect()
-
-    def rows(rs):
-        return sorted((r.doc_id, r.n_bands_hit, r.img_hit) for r in rs)
-
-    assert rows(direct) == rows(served)
-    by_id = {r.doc_id: r for r in direct}
-    for i in range(6):  # every exact copy hits all 8 bands
-        assert by_id[100 + i].n_bands_hit == 8 and by_id[100 + i].img_hit
-    # And the composed image_screen agrees too.
-    composed = multimodal.image_screen(existing, incoming).collect()
-    assert rows(composed) == rows(direct)
-
-
-def test_ivf_assign_incoming_uses_base_structure_only(spark):
-    # Incoming vectors must land in the BASE corpus's cell structure:
-    # every fine id comes from the base (or -1), and an incoming vector
-    # identical to a base fine centroid resolves to exactly that
-    # centroid at distance 0 — no relearning from incoming data.
-    from cir_duplicate_detector_spark.operators import kmeans
-
-    base = spark.createDataFrame(
-        [(i * 2, [float(i)] * 64) for i in range(20)],  # even ids 0..38
-        "vec_id long, embedding array<double>",
-    )
-    # incoming: odd ids; id 101 duplicates base vector 20 (a fine
-    # candidate: 20 % 10 == 0)
-    incoming = spark.createDataFrame(
-        [(101, [10.0] * 64), (103, [3.3] * 64)],
-        "vec_id long, embedding array<double>",
-    )
-    out = {
-        r.vec_id: r
-        for r in kmeans.kmeans_ivf_assign_incoming(
-            base, incoming, k=2, sample_mod=1, fine_mod=10
-        ).collect()
-    }
-    assert set(out) == {101, 103}
-    base_ids = {i * 2 for i in range(20)}
-    for r in out.values():
-        assert r.fine == -1 or r.fine in base_ids
-    assert out[101].fine == 20 and out[101].d == 0.0
-
-
-def test_learned_float_ops_partitioning_invariant(spark):
-    # THE reproducibility claim of the sorted-fold machinery: iterative
-    # float learning (Lloyd means) must produce BIT-IDENTICAL doubles
-    # no matter how the input is partitioned or ordered — shuffle
-    # reordering is exactly what breaks naive double accumulation.
-    from cir_duplicate_detector_spark.operators import kmeans
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    variants = [
-        emb.repartition(1),
-        emb.repartition(13, "vec_id"),
-        emb.orderBy(F.col("vec_id").desc()),
-    ]
-
-    def km(df):
-        return sorted(
-            (r.cluster, tuple(r.c))
-            for r in kmeans.kmeans_centroids(df, k=4, iters=2).collect()
-        )
-
-    base_km = km(emb)
-    assert len(base_km) == 4
-    for v in variants:
-        assert km(v) == base_km  # exact double equality, no tolerance
-
-
 def test_chunk_documents_windows_and_overlap(spark):
     text100 = " ".join(f"w{i}" for i in range(100))
     docs = spark.createDataFrame(
@@ -374,27 +203,6 @@ def test_substring_dup_hot_key_bounded(spark):
     assert textops.substring_duplicates(docs, max_df=10).count() == 0
 
 
-def test_multimodal_audio_window_math(spark):
-    docs = spark.createDataFrame(
-        [(1, "abcd" * 20)], "doc_id long, text string"  # 80 samples
-    )
-    rows = sorted(
-        multimodal.audio_energy_windows(
-            multimodal.to_media(docs)
-        ).collect(),
-        key=lambda r: r.window_no,
-    )
-    # 80 samples, hop 32 -> windows at 0 (64), 32 (48), 64 (16)
-    assert [(r.window_no, r.n_samples) for r in rows] == [
-        (0, 64), (1, 48), (2, 16)
-    ]
-    # exact integer energy: sum of squared sample bytes
-    payload = b"abcd" * 20
-    for r in rows:
-        seg = payload[r.window_no * 32 : r.window_no * 32 + 64]
-        assert r.energy_sq == sum(b * b for b in seg)
-
-
 # ------------------------------------------------- real image codec
 
 def _ppm(w, h, pixels, comment=None):
@@ -409,7 +217,7 @@ def _ppm(w, h, pixels, comment=None):
 def test_decode_ppm_parses_header_comments_and_raster():
     import numpy as np
 
-    from cir_duplicate_detector_spark.operators.multimodal import decode_ppm
+    from cir_duplicate_detector_spark.operators.pdqimage import decode_ppm
 
     px = [(255, 0, 0), (0, 255, 0), (0, 0, 255), (9, 9, 9)]
     arr = decode_ppm(_ppm(2, 2, px, comment=b"made by a test"))
@@ -426,62 +234,6 @@ def test_decode_ppm_parses_header_comments_and_raster():
         decode_ppm(b"P5\n1 1\n255\n\x00")
 
 
-def test_extract_features_dispatches_any_image_media_type(spark):
-    # Round-9 advice: the dispatch is media_type.startswith("image/"),
-    # not an exact PPM-type match — the SAME PPM payload tagged with
-    # any image/* subtype decodes to the same perceptual feature, while
-    # a non-image type stays content-addressed (md5 of the bytes).
-    import hashlib
-
-    from cir_duplicate_detector_spark.operators import multimodal
-
-    px = [(i * 3 % 256, i % 256, (i * 7) % 256) for i in range(64)]
-    payload = _ppm(8, 8, px)
-    media = spark.createDataFrame(
-        [
-            (1, multimodal.PPM_MEDIA_TYPE, bytearray(payload)),
-            (2, "image/x-anything", bytearray(payload)),
-            (3, "application/octet-stream", bytearray(payload)),
-        ],
-        "doc_id bigint, media_type string, payload binary",
-    ).withColumn("n_bytes", F.lit(len(payload)).cast("bigint"))
-    rows = {
-        r["doc_id"]: r
-        for r in multimodal.extract_features(media).collect()
-    }
-    opaque = int(hashlib.md5(payload).hexdigest()[:15], 16)
-    assert rows[3]["feature60"] == opaque
-    assert rows[1]["feature60"] == rows[2]["feature60"]
-    assert rows[1]["feature60"] != opaque
-
-
-def test_image_ahash_is_content_addressed_not_byte_addressed(spark):
-    # Two byte-DIFFERENT payloads (one carries a header comment) with
-    # identical pixels must produce identical hashes — proof the path
-    # decodes the image rather than hashing the bytes. A pixel-level
-    # change must flip the hash.
-    from cir_duplicate_detector_spark.operators import multimodal
-
-    bright = [(200, 200, 200)] * 2 + [(10, 10, 10)] * 2
-    rows = [
-        (1, _ppm(2, 2, bright)),
-        (2, _ppm(2, 2, bright, comment=b"different bytes, same image")),
-        (3, _ppm(2, 2, list(reversed(bright)))),
-    ]
-    media = spark.createDataFrame(
-        [(i, "image/x-portable-pixmap", p, len(p)) for i, p in rows],
-        "doc_id bigint, media_type string, payload binary, n_bytes bigint",
-    )
-    out = {
-        r.doc_id: r
-        for r in multimodal.image_ahash_features(media, grid=2).collect()
-    }
-    assert out[1].width == 2 and out[1].height == 2
-    assert len(out[1].ahash_bits) == 4
-    assert out[1].ahash_bits == out[2].ahash_bits == "1100"
-    assert out[3].ahash_bits == "0011"
-
-
 def test_decode_image_pil_agrees_with_pure_decoder():
     import pytest as _pytest
 
@@ -491,7 +243,7 @@ def test_decode_image_pil_agrees_with_pure_decoder():
     import numpy as np
     from PIL import Image
 
-    from cir_duplicate_detector_spark.operators.multimodal import decode_ppm
+    from cir_duplicate_detector_spark.operators.pdqimage import decode_ppm
 
     px = [(255, 0, 0), (0, 255, 0), (0, 0, 255), (9, 9, 9)]
     payload = _ppm(2, 2, px)
@@ -503,10 +255,10 @@ def test_decode_image_pil_agrees_with_pure_decoder():
 def test_decode_image_routes_low_maxval_ppm_through_pure_decoder():
     # PIL RESCALES a maxval<255 raster to 8-bit (v * 255 // maxval);
     # the pure decoder returns raw bytes. decode_image must route every
-    # P6 payload through the pure decoder so the feature does not
+    # P6 payload through the pure decoder so the hash does not
     # depend on whether the optional PIL extra is installed (round-6
     # advice, re-flagged in VERDICT r7).
-    from cir_duplicate_detector_spark.operators.multimodal import (
+    from cir_duplicate_detector_spark.operators.pdqimage import (
         decode_image,
         decode_ppm,
     )
@@ -516,23 +268,6 @@ def test_decode_image_routes_low_maxval_ppm_through_pure_decoder():
     got = decode_image(payload)
     assert (got == decode_ppm(payload)).all()
     assert got[0, 0].tolist() == [100, 0, 0]  # raw bytes, NOT rescaled
-
-
-def test_ahash_raises_named_error_for_images_smaller_than_grid(spark):
-    # A 2x2 image under the default 8x8 grid used to die with an opaque
-    # ZeroDivisionError inside the block reshape (VERDICT r7); it must
-    # be a named ValueError carrying the doc_id and geometry.
-    import pytest as _pytest
-
-    from cir_duplicate_detector_spark.operators import multimodal
-
-    payload = _ppm(2, 2, [(1, 2, 3)] * 4)
-    media = spark.createDataFrame(
-        [(7, "image/x-portable-pixmap", payload, len(payload))],
-        "doc_id bigint, media_type string, payload binary, n_bytes bigint",
-    )
-    with _pytest.raises(Exception, match="doc_id 7 image 2x2 is smaller"):
-        multimodal.image_ahash_features(media, grid=8).collect()
 
 
 def test_lsh_screen_flags_copies_not_novel(spark):
@@ -922,77 +657,9 @@ def test_quality_classifier_is_zero_shuffle_and_exact(spark):
     assert "Exchange" not in plan
 
 
-def test_image_near_duplicates_banded_pairs(spark):
-    from cir_duplicate_detector_spark.operators import multimodal
-
-    # base raster: 192 bytes; near copy differs in ONE pixel byte
-    # (<= 6 ahash bits), far image is reversed (many bits).
-    base = bytes(range(64)) * 3
-    near = bytes([255]) + base[1:]
-    far = bytes(reversed(base))
-    rows = [
-        (1, multimodal.PPM_MEDIA_TYPE, bytearray(b"P6\n8 8\n255\n" + base)),
-        (2, multimodal.PPM_MEDIA_TYPE, bytearray(b"P6\n8 8\n255\n" + near)),
-        (3, multimodal.PPM_MEDIA_TYPE, bytearray(b"P6\n8 8\n255\n" + far)),
-    ]
-    media = spark.createDataFrame(
-        rows, "doc_id long, media_type string, payload binary"
-    ).withColumn("n_bytes", F.octet_length("payload").cast("bigint"))
-    got = {
-        (r.a, r.b): r.hamming
-        for r in multimodal.image_near_duplicates(media).collect()
-    }
-    assert (1, 2) in got and got[(1, 2)] <= 6
-    assert (1, 3) not in got and (2, 3) not in got
-    # layout must refuse a threshold the pigeonhole cannot guarantee
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="max_bits < bands"):
-        multimodal.image_near_duplicates(media, max_bits=8, bands=8)
-
-
-def test_image_near_duplicates_viral_group_cap(spark):
-    from cir_duplicate_detector_spark.operators import multimodal
-
-    # organic: base + one-pixel near copy. viral: ten identical copies
-    # of a third raster — a mega-group the cap must drop entirely,
-    # while the organic pair is untouched.
-    base = bytes(range(64)) * 3
-    near = bytes([255]) + base[1:]
-    viral = bytes(reversed(base))
-    rows = [
-        (1, multimodal.PPM_MEDIA_TYPE, bytearray(b"P6\n8 8\n255\n" + base)),
-        (2, multimodal.PPM_MEDIA_TYPE, bytearray(b"P6\n8 8\n255\n" + near)),
-    ] + [
-        (100 + i, multimodal.PPM_MEDIA_TYPE,
-         bytearray(b"P6\n8 8\n255\n" + viral))
-        for i in range(10)
-    ]
-    media = spark.createDataFrame(
-        rows, "doc_id long, media_type string, payload binary"
-    ).withColumn("n_bytes", F.octet_length("payload").cast("bigint"))
-    uncapped = {
-        (r.a, r.b)
-        for r in multimodal.image_near_duplicates(media).collect()
-    }
-    # the viral group contributes its 45 within pairs when uncapped
-    assert (100, 101) in uncapped and (1, 2) in uncapped
-    capped = {
-        (r.a, r.b)
-        for r in multimodal.image_near_duplicates(
-            media, max_group_size=5
-        ).collect()
-    }
-    assert capped == {(1, 2)}  # viral pairs gone, organic pair intact
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="max_group_size"):
-        multimodal.image_near_duplicates(media, max_group_size=0)
-
-
 def test_quality_classifier_agreement_floor(spark):
     # Pin the learned scorer's held-out agreement to a measured-minus-
-    # margin floor (VERDICT r10 item 7 — the ANN recall-floor
+    # margin floor (VERDICT r10 item 7 — the recall-floor
     # discipline): the oracle parity gate proves the confusion matrix
     # is COMPUTED right, but nothing stopped a featurization edit from
     # silently degrading the MODEL while staying oracle-green.
@@ -1092,7 +759,7 @@ def test_bm25_one_pass_relation_matches_two_pass(spark):
         + (F.lit(k1) * (F.lit(1.0 - b) + ((F.lit(b) * F.col("dl"))
            / (F.col("total_tokens") / F.col("n_docs")))))
     )
-    from cir_duplicate_detector_spark.operators.kmeans import _sorted_fold
+    from cir_duplicate_detector_spark.operators.textops import _sorted_fold
     from pyspark.sql import Window
 
     scored = (

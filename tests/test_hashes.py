@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cir_duplicate_detector_spark.functions.hashes import (
-    bits_hamming,
+    bits_hamming_sql,
     calculate_absolute_threshold,
     chunks_hamming,
     hex_to_bits,
@@ -81,9 +81,9 @@ def test_bits_hamming_mixed_lengths(spark):
     row = (
         spark.range(1)
         .select(
-            bits_hamming(F.lit("10101"), F.lit("101")).alias("d1"),
-            bits_hamming(F.lit("10101"), F.lit("10101")).alias("d2"),
-            bits_hamming(F.lit("111"), F.lit("000")).alias("d3"),
+            F.expr(bits_hamming_sql("'10101'", "'101'")).alias("d1"),
+            F.expr(bits_hamming_sql("'10101'", "'10101'")).alias("d2"),
+            F.expr(bits_hamming_sql("'111'", "'000'")).alias("d3"),
         )
         .first()
     )

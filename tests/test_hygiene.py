@@ -195,10 +195,12 @@ def _defined_names(node: ast.stmt) -> "list[str]":
 def test_every_module_name_is_referenced():
     """Each top-level ``def``/``class``/assignment in a package module
     must be referenced (as a name, an attribute or an import) by code
-    outside its own definition: in the package, ``tests/``,
-    ``scripts/``, ``perfbench/`` or ``__spark_entry__.py``. Dunders
-    (``__version__``) are exempt. A family's ``*_QUERIES`` dict is not:
-    one the registry aggregator does not merge is a bug.
+    outside its own definition: in the package, ``scripts/``,
+    ``perfbench/`` or ``__spark_entry__.py``. ``tests/`` do not count,
+    so a name that only a test reaches fails: tests check program code,
+    they are not a reason to keep it. Dunders (``__version__``) are
+    exempt. A family's ``*_QUERIES`` dict is not: one the registry
+    aggregator does not merge is a bug.
 
     Blind spot: names are matched by name alone, so two modules that
     define the same name hide each other — a reference to either one
@@ -206,7 +208,6 @@ def test_every_module_name_is_referenced():
     """
     sources = [
         *PKG.rglob("*.py"),
-        *(REPO / "tests").rglob("*.py"),
         *(REPO / "scripts").rglob("*.py"),
         *(REPO / "perfbench").rglob("*.py"),
         REPO / "__spark_entry__.py",

@@ -45,7 +45,7 @@ from .conftest import PARITY_SAMPLE_KEY
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 
-TABLES = ["documents", "embeddings"]
+TABLES = ["documents"]
 
 
 @pytest.fixture(scope="module")

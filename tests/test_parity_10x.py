@@ -6,21 +6,20 @@ suite + the driver gate) and at sf0.1 by the `PARITY_SF01` sample —
 but not at the 10x replica. This module closes that gap: a fixed
 ~15-query sample of
 the exact parity comparison runs against the 10x synthetic replica
-(`scripts/replica_bench.build_replica` — documents/embeddings
-replicated with per-copy id offsets; document copies per-copy
-PERTURBED since round 14 so duplicate families stay within-copy),
+(`scripts/replica_bench.build_replica` — documents replicated with
+per-copy id offsets; copies per-copy PERTURBED since round 14 so
+duplicate families stay within-copy),
 with DuckDB executing the same oracle over the same replica parquet.
 ``PARITY_10X_FULL=1`` widens the sample to the WHOLE eligible set —
 the one-time full sweep of VERDICT r13 item 4.
 
-Sample universe: every registered query (the replica holds both
-tables the queries read, documents and embeddings), minus the
-vector-chain families whose DuckDB oracles are corpus x centroid
-cross joins (sqrt-N-scaled k means ~600k x ~775 x 64d at 10x — hours
-in a single-threaded oracle, and the point of the oracle is value
-checking, not oracle-side scale). The exclusion is named below. Everything else —
-the dedup/text families whose banded/bucketed joins are the engine's
-scale story — is eligible.
+Sample universe: every registered query (the replica holds the one
+table the queries read, documents), minus the few rows whose DuckDB
+oracle is infeasible at 10x (hours in a single-threaded oracle, and
+the point of the oracle is value checking, not oracle-side scale).
+The exclusion is named below. Everything else — the dedup/text
+families whose banded/bucketed joins are the engine's scale story —
+is eligible.
 
 Opt-in (tens of minutes: DuckDB runs recursive-CTE closures over a
 600k-doc corpus):
@@ -49,18 +48,9 @@ REPO = Path(__file__).resolve().parents[1]
 REPLICA = "/tmp/scale_replica_10x"
 SAMPLE_SIZE = 15
 
-# Vector-chain families: oracle cost is corpus x sqrt(N) centroids —
-# DuckDB-side infeasible at 10x, so they stay out of this sample.
-_EXCLUDED_PREFIXES = (
-    "kmeans_",
-    "ivf_",
-    "semantic_",
-    "decon_cells",
-    "decontaminate_semantic",
-)
+# Rows whose oracle cost is DuckDB-side infeasible at 10x.
 _EXCLUDED_NAMES = {
     "dup_overlap",
-    "semantic_decon_recall",
     "fuzzy_decon_recall",  # exact cross-Jaccard truth side is O(N^2)/50
     "minhash_recall",  # same exact-truth shape
     "substring_dup",
@@ -88,7 +78,7 @@ def _eligible() -> list[str]:
     for n in sorted(entry_mod.queries()):
         if n not in oracles:
             continue
-        if n.startswith(_EXCLUDED_PREFIXES) or n in _EXCLUDED_NAMES:
+        if n in _EXCLUDED_NAMES:
             continue
         out.append(n)
     assert _READMITTED_R14 <= set(out)  # stay eligible (see above)
@@ -111,11 +101,10 @@ def _rotating_sample() -> list[str]:
 
 @pytest.fixture(scope="module")
 def replica_dir(spark):
-    # Gate on the LAST-written table's _SUCCESS marker (build order in
-    # replica_bench: documents, embeddings) so a partially built
-    # replica is repaired instead of half-trusted — a crash DURING the
-    # embeddings write leaves the directory present without the marker.
-    if not os.path.isfile(f"{REPLICA}/embeddings.parquet/_SUCCESS"):
+    # Gate on the table's _SUCCESS marker so a partially built replica
+    # is repaired instead of half-trusted — a crash DURING the write
+    # leaves the directory present without the marker.
+    if not os.path.isfile(f"{REPLICA}/documents.parquet/_SUCCESS"):
         sys.path.insert(0, str(REPO / "scripts"))
         from replica_bench import build_replica
 

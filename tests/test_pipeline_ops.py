@@ -1,5 +1,5 @@
 """Planted-input tests for the pipeline operators: decontamination
-screen, semantic decontamination, Bloom screen.
+screen, Bloom screen, BM25 search and routing.
 
 Each test constructs an input where the correct answer is computable by
 hand, so these pin SEMANTICS; engine parity with DuckDB is pinned
@@ -8,9 +8,7 @@ separately by tests/test_oracle_parity.py.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from cir_duplicate_detector_spark.operators import dedup, similarity, textops
+from cir_duplicate_detector_spark.operators import dedup, textops
 
 
 def _docs(spark, rows):
@@ -349,30 +347,6 @@ def test_dataset_split_cluster_members_share_split(spark):
     assert {r.split for r in out} == {"train", "val", "test"}
 
 
-# ----------------------------------------------- Lloyd k-means
-
-def test_kmeans_separates_planted_clusters(spark):
-    from cir_duplicate_detector_spark.operators import kmeans
-
-    # two tight blobs far apart in 64-dim: k=2 must split them exactly
-    rows = []
-    for i in range(8):
-        rows.append((i, [10.0 + 0.01 * i] * 64))
-        rows.append((100 + i, [-10.0 - 0.01 * i] * 64))
-    embs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    out = kmeans.kmeans_assign(embs, k=2, iters=2).collect()
-    by_blob = {}
-    for r in out:
-        by_blob.setdefault(r.vec_id < 100, set()).add(r.cluster)
-    assert len(out) == 16
-    assert by_blob[True].isdisjoint(by_blob[False])
-    assert len(by_blob[True]) == 1 and len(by_blob[False]) == 1
-    # converged assignment: every member sits near its own blob center
-    assert all(r.d < 64 * 0.1 for r in out)
-
-
 # --------------------------------------------- corpus drift
 
 def test_corpus_drift_planted_shift(spark):
@@ -422,129 +396,6 @@ def test_minhash_recall_floor_on_planted_corpus(spark):
     # stay >= 0.9 (found is a subset of truth by construction).
     assert all(0.0 <= r.recall <= 1.0 for r in rows)
     assert n_found / n_true >= 0.9
-
-
-def test_kmeans_ivf_assign_two_level_contract(spark):
-    from cir_duplicate_detector_spark.operators import kmeans
-
-    # two tight blobs far apart; sample_mod=2 learns coarse on half the
-    # corpus, fine_mod=4 makes every 4th vector a fine centroid of its
-    # coarse cell.
-    rows = []
-    for i in range(16):
-        rows.append((i, [10.0 + 0.01 * i] * 64))
-        rows.append((100 + i, [-10.0 - 0.01 * i] * 64))
-    embs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    out = kmeans.kmeans_ivf_assign(
-        embs, k=2, iters=2, sample_mod=2, fine_mod=4
-    ).collect()
-    assert len(out) == 32
-    # coarse assignment separates the blobs exactly
-    by_blob = {}
-    for r in out:
-        by_blob.setdefault(r.vec_id < 100, set()).add(r.coarse)
-    assert by_blob[True].isdisjoint(by_blob[False])
-    # fine centroids live in the SAME coarse cell as their members: a
-    # fine id of a +blob member must itself be a +blob vector (ids are
-    # disjoint across blobs), and d is the in-cell distance
-    coarse_of = {r.vec_id: r.coarse for r in out}
-    for r in out:
-        if r.fine == -1:
-            assert r.d is None
-            continue
-        assert coarse_of[r.fine] == r.coarse
-        assert r.fine % 4 == 0
-        assert r.d is not None and r.d < 64 * 0.1
-
-
-def test_kmeans_ivf_assign_prebuilt_coarse_identical(spark, tmp_path):
-    # The family-shared persisted coarse-centroid table
-    # (plans.ext_ann._shared_coarse_centroids) is sound only if
-    # assigning against a parquet round-trip of the learned table gives
-    # EXACTLY the in-session result (doubles serialize exactly).
-    from pyspark.sql import functions as F
-
-    from cir_duplicate_detector_spark.operators import kmeans
-
-    rows = []
-    for i in range(16):
-        rows.append((i, [10.0 + 0.01 * i] * 64))
-        rows.append((100 + i, [-10.0 - 0.01 * i] * 64))
-    embs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    sample = embs.where(F.col("vec_id") % 2 == 0)
-    cents = kmeans.kmeans_centroids(sample, k=2, iters=2).select(
-        F.col("cluster").alias("coarse"), "c"
-    )
-    direct = kmeans.kmeans_ivf_assign(
-        embs, k=2, iters=2, sample_mod=2, fine_mod=4
-    ).collect()
-    cents.write.parquet(str(tmp_path / "cents"))
-    reread = spark.read.parquet(str(tmp_path / "cents"))
-    served = kmeans.kmeans_ivf_assign(
-        embs, fine_mod=4, coarse=reread
-    ).collect()
-
-    def rows_of(rs):
-        return sorted((r.vec_id, r.coarse, r.fine, r.d) for r in rs)
-
-    assert rows_of(direct) == rows_of(served)
-
-
-def test_kmeans_ivf_assign_marks_fine_less_cells(spark):
-    from cir_duplicate_detector_spark.operators import kmeans
-
-    # Ids are chosen so one group carries fine samples (% 4 == 0) and
-    # the other carries none; whatever cells Lloyd lands on, the
-    # CONTRACT is: a row gets fine=-1 / d NULL iff its coarse cell
-    # contains no fine-sample vector, else a real in-cell fine id.
-    rows = [(i, [10.0] * 64) for i in (0, 4, 8, 12)]
-    rows += [(i, [-10.0] * 64) for i in (101, 102, 103)]
-    embs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    out = kmeans.kmeans_ivf_assign(
-        embs, k=2, iters=1, sample_mod=1, fine_mod=4
-    ).collect()
-    assert len(out) == 7
-    cells_with_fine = {
-        r.coarse for r in out if r.vec_id % 4 == 0
-    }
-    for r in out:
-        if r.coarse in cells_with_fine:
-            assert r.fine != -1 and r.fine % 4 == 0 and r.d is not None
-        else:
-            assert r.fine == -1 and r.d is None
-
-
-def test_kmeans_unrolled_iters_ceiling(spark):
-    import pytest as _pytest
-
-    from cir_duplicate_detector_spark.operators import kmeans
-
-    embs = spark.createDataFrame(
-        [(0, [0.0] * 64)], "vec_id long, embedding array<double>"
-    )
-    with _pytest.raises(ValueError, match="unrolled-plan ceiling"):
-        kmeans.kmeans_centroids(embs, iters=9)
-
-
-def test_kmeans_ivf_default_k_is_sqrt_scaled(spark):
-    from cir_duplicate_detector_spark.operators import kmeans
-
-    rows = [(i, [float(i % 7)] * 64) for i in range(64)]
-    embs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    # sample_mod=1 -> sample is the full corpus -> default k = isqrt(64) = 8
-    assert kmeans.sqrt_sample_k(embs) == 8
-    out = kmeans.kmeans_ivf_assign(embs, sample_mod=1, iters=1).collect()
-    coarse_ids = {r.coarse for r in out}
-    assert len(out) == 64
-    assert coarse_ids <= set(range(8)), "coarse ids must come from k=isqrt(N) seeds"
 
 
 # -------------------------------------------------------------- BM25
@@ -617,54 +468,7 @@ def test_lsh_index_roundtrip_identity(spark, tmp_path):
     assert live[10][1] and not live[11][1]  # exact copy hits, novel text misses
 
 
-# -------------------------------------- semantic decontamination
-
-def test_semantic_cross_decontaminate_planted(spark):
-    # Two orthogonal directions; eval doc 103 is a near-copy of train
-    # doc 1 (cosine ~ 1), eval doc 58 is orthogonal to everything in
-    # its cell's train side. Quantizer learns from train only.
-    def vec(axis, eps=0.0):
-        v = [0.0] * 64
-        v[axis] = 1.0
-        v[(axis + 1) % 64] = eps
-        return v
-
-    # eval split: vec_id % 11 == 3 -> 58 % 11 == 3, 103 % 11 == 4? No:
-    # choose ids explicitly below.
-    rows = [
-        (1, vec(0)),          # train, direction e0
-        (2, vec(0, 0.01)),    # train, direction e0
-        (7, vec(32)),         # train, direction e32
-        (9, vec(32, 0.01)),   # train, direction e32
-        (14, vec(0, 0.02)),   # eval (14 % 11 == 3): near train docs 1,2
-        (25, vec(16)),        # eval (25 % 11 == 3): orthogonal to all
-    ]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    pred = F.col("vec_id") % 11 == 3
-    # fine_mod > |train|: no fine sample, cells pair at the coarse
-    # level (fine = -1). With fine_mod=1 every train vector becomes a
-    # fine centroid and (1, 14) splits across fine cells — the
-    # SemDeDup blindness `semantic_decon_recall` measures, exercised
-    # deliberately in the second half below.
-    out = similarity.semantic_cross_decontaminate(
-        emb, pred, threshold=0.9, k=2, iters=1, sample_mod=1, fine_mod=1000
-    ).collect()
-    pairs = {(r.train_id, r.eval_id) for r in out}
-    assert (1, 14) in pairs and (2, 14) in pairs
-    assert all(e == 14 for _, e in pairs)  # 25 contaminates nothing
-    assert all(r.cosine >= 0.9 for r in out)
-    assert all(r.train_id % 11 != 3 for r in out)
-    # fine_mod=1: every train vector is a fine centroid, eval 14
-    # resolves to doc 2's cell — (1, 14) is now split across fine
-    # cells and invisible to the screen (the measured trade).
-    fine_out = similarity.semantic_cross_decontaminate(
-        emb, pred, threshold=0.9, k=2, iters=1, sample_mod=1, fine_mod=1
-    ).collect()
-    fine_pairs = {(r.train_id, r.eval_id) for r in fine_out}
-    assert fine_pairs == {(2, 14)}
-
+# ---------------------------------------------------- BM25 routing
 
 def test_bm25_route_static_stats_and_df0(spark):
     # Index side: 2 docs, term 'a' in one of them, 'q' in neither.

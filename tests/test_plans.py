@@ -349,15 +349,6 @@ def test_pdq_naive_grid_pins_shuffled_hash_build(spark):
     assert "BroadcastHashJoin [g_i" not in plan
 
 
-def test_kmeans_seed_pick_is_distributed_topk(spark):
-    # Seed selection must be TakeOrderedAndProject (local top-k per
-    # partition), never a single-partition global window over the
-    # corpus; assignment broadcasts the k-row centroid table.
-    plan = _plan(spark, "kmeans_embeddings")
-    assert "TakeOrderedAndProject" in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-
-
 def test_url_duplicates_capped_drops_planted_viral_group(spark):
     # The registered capped query plants one viral-URL row per document
     # (group size = corpus size >> cap); the cap's count pre-pass must
@@ -371,52 +362,6 @@ def test_url_duplicates_capped_drops_planted_viral_group(spark):
     ]
 
 
-def test_kmeans_ivf_fine_join_is_bucketed_not_broadcast(spark):
-    # The two-level quantizer's whole point: the fine-centroid table
-    # arrives via an equi-join on the coarse cell id, NOT a broadcast
-    # (the fine table scales past executor memory). The coarse
-    # assignment must be materialized once (both fine-stage branches
-    # consume it) — pinned as ExistingRDD scans in the executed plan.
-    plan = _plan(spark, "kmeans_ivf_assign")
-    assert plan.count("Scan ExistingRDD") >= 2
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    import re
-
-    fine_join = re.findall(r"(\w+Join) \[coarse", plan)
-    assert fine_join and all(j != "BroadcastHashJoin" for j in fine_join)
-
-
-def test_image_near_dup_is_banded_equi_join(spark):
-    # Candidates must arrive through the banded (band_id, band_key)
-    # equi-join — never an all-pairs scan. With auto-broadcast off
-    # (two 100 TB-sized sides) the plan must stay a shuffle equi-join.
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _plan(spark, "image_near_dup")
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-
-
-def test_image_near_dup_capped_stays_banded(spark):
-    # The cap adds a count pre-pass + semi-join; the candidate path
-    # must remain the banded equi-join — never an all-pairs scan —
-    # even with the planted corpus-sized viral group present.
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _plan(spark, "image_near_dup_capped")
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-
-
 def test_quality_classifier_learned_scoring_is_broadcast_only(spark):
     # Scoring = per-row features + a ONE-ROW broadcast model join: the
     # scored side must never shuffle. The only exchanges in the whole
@@ -428,24 +373,17 @@ def test_quality_classifier_learned_scoring_is_broadcast_only(spark):
 
 
 def test_shared_artifacts_build_once_and_serve_from_parquet(spark):
-    # The round-11 shared artifacts (shingle index, dup-label table,
-    # coarse centroids) must (a) memoize per (application, sf_dir) —
+    # The round-11 shared artifacts (shingle index, dup-label table)
+    # must (a) memoize per (application, sf_dir) —
     # the second call returns the SAME relation without rebuilding —
     # and (b) hand consumers a parquet scan, so every reference reads
     # the persisted index instead of re-running the build tree.
-    from cir_duplicate_detector_spark.plans.ext_ann import (
-        _shared_coarse_centroids,
-    )
     from cir_duplicate_detector_spark.plans.ext_dedup import (
         _shared_dup_labels,
         _shared_shingle_index,
     )
 
-    for builder in (
-        _shared_shingle_index,
-        _shared_dup_labels,
-        _shared_coarse_centroids,
-    ):
+    for builder in (_shared_shingle_index, _shared_dup_labels):
         first = builder(spark, SF)
         assert builder(spark, SF) is first, builder.__name__
         scan = first._jdf.queryExecution().executedPlan().toString()

@@ -17,7 +17,6 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from cir_duplicate_detector_spark.functions.hashes import (
-    bits_hamming,
     bits_hamming_sql,
     calculate_absolute_threshold,
     chunks_hamming,
@@ -160,12 +159,17 @@ def test_hex_to_bits_matches_reference_zfill(spark, hashes):
 )
 def test_bits_hamming_matches_reference_padding(spark, pairs):
     df = spark.createDataFrame(list(pairs), "a string, b string")
-    rows = df.select(
-        bits_hamming(hex_to_bits("a"), hex_to_bits("b")).alias("d"),
-        F.expr(
-            bits_hamming_sql(hex_to_bits_sql("a"), hex_to_bits_sql("b"))
-        ).alias("d_sql"),
-    ).collect()
+    rows = (
+        df.select(
+            hex_to_bits("a").alias("ba"),
+            hex_to_bits("b").alias("bb"),
+            F.expr(
+                bits_hamming_sql(hex_to_bits_sql("a"), hex_to_bits_sql("b"))
+            ).alias("d_sql"),
+        )
+        .select(F.expr(bits_hamming_sql("ba", "bb")).alias("d"), "d_sql")
+        .collect()
+    )
     for (a, b), r in zip(pairs, rows):
         want = model_hamming(model_hex_to_binary(a), model_hex_to_binary(b))
         assert r["d"] == r["d_sql"] == want, (a, b)
@@ -246,7 +250,7 @@ def test_ppm_encode_decode_roundtrip(w, h, comment, with_comment):
     # header comments; decode must reproduce the exact pixels
     import numpy as np
 
-    from cir_duplicate_detector_spark.operators.multimodal import decode_ppm
+    from cir_duplicate_detector_spark.operators.pdqimage import decode_ppm
 
     raster = bytes((i * 37 + 11) % 256 for i in range(w * h * 3))
     head = b"P6\n"
@@ -274,11 +278,11 @@ def test_ppm_encode_decode_roundtrip(w, h, comment, with_comment):
 )
 @settings(max_examples=50, deadline=None)
 def test_concat_ppm_stream_parses_every_frame(dims, seed):
-    # The concatenated-PPM "video" contract video_frame_ahash iterates
-    # on: frames of ARBITRARY mixed sizes (some with header comments)
+    # The concatenated-PPM stream contract of `_parse_ppm_at`'s
+    # next_pos: frames of ARBITRARY mixed sizes (some with header comments)
     # packed back-to-back must parse out one by one with exact pixels
     # and exact offsets, ending precisely at the payload's end.
-    from cir_duplicate_detector_spark.operators.multimodal import (
+    from cir_duplicate_detector_spark.operators.pdqimage import (
         _parse_ppm_at,
     )
 

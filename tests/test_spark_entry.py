@@ -14,10 +14,9 @@ REGISTERED = {
     "boilerplate_screen", "boilerplate_screen_streaming",
     "chunk_dedup", "cluster_representatives", "corpus_curation",
     "corpus_drift", "corpus_upsert", "corpus_upsert_streaming",
-    "curation_pipeline", "dataset_split", "decon_cells_roundtrip",
-    "decontaminate", "decontaminate_fuzzy",
-    "decontaminate_fuzzy_canonical", "decontaminate_scrub",
-    "decontaminate_scrub_streaming", "decontaminate_semantic",
+    "curation_pipeline", "dataset_split", "decontaminate",
+    "decontaminate_fuzzy", "decontaminate_fuzzy_canonical",
+    "decontaminate_scrub", "decontaminate_scrub_streaming",
     "decontamination_report", "dedup_containment",
     "dedup_containment_canonical", "dedup_exact",
     "dedup_exact_normalized", "dedup_exact_streaming",
@@ -28,31 +27,23 @@ REGISTERED = {
     "doc_repetition", "doc_topk_similar", "domain_mixture",
     "dsir_score", "dsir_score_streaming", "dsir_weights",
     "dup_clusters", "dup_labels_compact", "dup_labels_roundtrip",
-    "dup_labels_upsert", "dup_labels_upsert_streaming",
-    "dup_overlap", "dup_weighting", "fuzzy_decon_recall",
-    "hash_decode", "hash_explode_dedup", "image_index_roundtrip",
-    "image_near_dup", "image_near_dup_capped", "image_pdq_hashes",
-    "image_pdq_near_dup", "image_screen", "image_screen_streaming",
-    "ivf_index_roundtrip", "ivf_upsert_assign",
-    "ivf_upsert_assign_streaming", "ivf_upsert_drift",
-    "kmeans_embeddings", "kmeans_ivf_assign", "lang_id",
-    "lsh_index_merge", "lsh_index_roundtrip", "minhash_recall",
-    "multimodal_audio", "multimodal_features", "multimodal_frames",
-    "multimodal_image_ahash", "multimodal_resize", "ngram_topk",
-    "pack_sequences", "pdq_duplicates_banded",
-    "pdq_duplicates_naive", "pdq_duplicates_probed",
-    "pdq_duplicates_t08_probe30", "pdq_duplicates_t08_probed",
-    "pdq_pairs", "pii_redact", "quality_band", "quality_classifier",
+    "dup_labels_upsert", "dup_labels_upsert_streaming", "dup_overlap",
+    "dup_weighting", "fuzzy_decon_recall", "hash_decode",
+    "hash_explode_dedup", "image_pdq_hashes", "image_pdq_near_dup",
+    "lang_id", "lsh_index_merge", "lsh_index_roundtrip",
+    "minhash_recall", "ngram_topk", "pack_sequences",
+    "pdq_duplicates_banded", "pdq_duplicates_naive",
+    "pdq_duplicates_probed", "pdq_duplicates_t08_probe30",
+    "pdq_duplicates_t08_probed", "pdq_pairs", "pii_redact",
+    "quality_band", "quality_classifier",
     "quality_classifier_agreement", "quality_classifier_learned",
     "quality_classifier_learned_streaming",
-    "quality_classifier_streaming", "semantic_decon_recall",
-    "sentence_dedup", "sentence_screen",
-    "sentence_screen_streaming", "shard_assign",
+    "quality_classifier_streaming", "sentence_dedup",
+    "sentence_screen", "sentence_screen_streaming", "shard_assign",
     "stratified_sample", "substring_dup", "text_quality",
     "tfidf_topterms", "token_budget_sample", "token_count",
     "upsert_labels_agreement", "url_duplicates",
-    "url_duplicates_capped", "url_duplicates_probed",
-    "url_normalize",
+    "url_duplicates_capped", "url_duplicates_probed", "url_normalize",
 }
 
 
