@@ -6,8 +6,8 @@ Centre-for-Information-Resilience/cir-duplicate-detector (reference at
 table with (a) other entries whose normalized URL is identical and
 (b) other entries whose 256-bit PDQ perceptual hash is within a Hamming
 similarity threshold — plus the large-scale training-data-pipeline
-extensions (dedup, similarity search, text analysis, multimodal columns)
-the reference does not have. The extension modules live under
+extensions (text dedup, text analysis, PDQ hashing of image pixels) the
+reference does not have. The extension modules live under
 ``cir_duplicate_detector_spark.operators`` and are imported on demand;
 importing the package loads only the detector.
 

@@ -1079,91 +1079,3 @@ def corpus_upsert(
         .where(F.col("rn") == 1)
         .select(key, "version", "text_hash")
     )
-
-
-def cross_corpus_near_duplicates(
-    train: DataFrame,
-    eval_docs: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    bands: int = LSH_BANDS,
-) -> DataFrame:
-    """FUZZY decontamination: training documents NEAR-duplicating an
-    evaluation document at word-``n``-gram Jaccard >= ``threshold`` —
-    the screen GPT-3/PaLM-style pipelines run against benchmark sets,
-    where `textops.decontaminate`'s exact-8-gram overlap misses
-    paraphrased or lightly-edited contamination. Returns
-    ``(a, b, jaccard)`` with ``a`` the contaminated TRAIN doc and ``b``
-    the EVAL doc it matches (one row per matching pair — a train doc
-    contaminated by several eval docs appears once per match).
-
-    Same index machinery as :func:`minhash_near_duplicates`, joined
-    ACROSS corpora instead of self-joined: both sides band their
-    per-row MinHash signatures (:func:`banded_keys` — shuffle-free),
-    candidates come from the (band_id, band_key) equi-join of the
-    train banding against the eval banding (never all-pairs; the join
-    is |train bands| x |eval bands| bucket-local), and
-    :func:`jaccard_pairs` verifies exactly with its counted
-    broadcast-vs-shuffle gate. Doc ids must be disjoint across the two
-    inputs (they share one id space in the verify join).
-
-    Scale note: the eval side is small by nature (benchmarks), so its
-    banded index is typically broadcastable — but the candidate join is
-    left as a shuffle equi-join and AQE downgrades it to broadcast when
-    the eval side fits, the same posture as `lsh_screen`.
-    """
-    hashed_t = hashed_shingle_arrays(train, n)
-    hashed_e = hashed_shingle_arrays(eval_docs, n)
-    bt = banded_keys(minhash_signatures(hashed_t), bands).select(
-        F.col("doc_id").alias("a"), "band_id", "band_key"
-    )
-    be = banded_keys(minhash_signatures(hashed_e), bands).select(
-        F.col("doc_id").alias("b"), "band_id", "band_key"
-    )
-    cand = (
-        bt.join(be, ["band_id", "band_key"])
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-    )
-    return jaccard_pairs(
-        hashed_t.unionByName(hashed_e), cand, threshold
-    )
-
-
-def cross_corpus_near_duplicates_canonical(
-    train: DataFrame,
-    eval_docs: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    bands: int = LSH_BANDS,
-) -> DataFrame:
-    """:func:`cross_corpus_near_duplicates` behind an exact-dedup
-    pre-pass — the `dedup_containment_canonical` pipeline-ordering
-    lever pointed at decontamination: only one REPRESENTATIVE per
-    distinct train text (smallest doc_id) runs the banded screen and
-    the exact-Jaccard verify, and verdicts propagate back to every
-    train doc sharing the digest through one md5 equi-join. Output is
-    IDENTICAL to the unscreened form (same text ⇒ same shingle set ⇒
-    same signature, bands, candidates and jaccard), which the registry
-    identity guard pins by sharing its oracle string.
-
-    Why it matters at scale: the screen's verify stage prices banded
-    CANDIDATE PAIRS, and on a duplicate-heavy corpus (exactly the
-    corpus a decontamination pass meets first) candidates grow
-    superlinearly — the 10× replica measured 18.1 s for the raw screen
-    (SCALE.md round-8). Exact dedup collapses each duplicate family to one
-    representative BEFORE pairs form; the propagation join is linear
-    digest traffic."""
-    rep_docs = canonicalize_exact(train)
-    pairs = cross_corpus_near_duplicates(
-        rep_docs, eval_docs, threshold, n, bands
-    )
-    rep_th = rep_docs.select(
-        F.col("doc_id").alias("rep"), F.md5("text").alias("th")
-    )
-    members = train.select("doc_id", F.md5("text").alias("th"))
-    return (
-        pairs.join(rep_th, pairs["a"] == rep_th["rep"])
-        .join(members, "th")
-        .select(F.col("doc_id").alias("a"), "b", "jaccard")
-    )

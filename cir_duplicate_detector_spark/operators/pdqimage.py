@@ -57,18 +57,16 @@ from pyspark.sql import DataFrame
 PPM_MAGIC = b"P6"
 
 
-def _parse_ppm_at(payload: bytes, pos: int):
-    """Parse one binary PPM (P6, maxval ≤ 255) starting at ``pos``;
-    returns ``(pixels, next_pos)`` with pixels (h, w, 3) uint8 and
-    ``next_pos`` the first byte past this image's raster, so a caller
-    can walk a stream of concatenated images. Supports the full header
-    grammar: ``P6``, whitespace-separated width/height/maxval, ``#``
-    comments, single whitespace before the raster."""
+def decode_ppm(payload: bytes):
+    """Decode a binary PPM (P6, maxval ≤ 255) into an (h, w, 3) uint8
+    numpy array. Pure numpy — no image library. Supports the full
+    header grammar: ``P6``, whitespace-separated width/height/maxval,
+    ``#`` comments, single whitespace before the raster."""
     import numpy as np
 
-    if payload[pos : pos + len(PPM_MAGIC)] != PPM_MAGIC:
+    if not payload.startswith(PPM_MAGIC):
         raise ValueError("not a P6 PPM payload")
-    pos += len(PPM_MAGIC)
+    pos = len(PPM_MAGIC)
     fields: list[int] = []
     while len(fields) < 3:
         # skip whitespace and comments
@@ -91,17 +89,7 @@ def _parse_ppm_at(payload: bytes, pos: int):
         raise ValueError(
             f"truncated PPM raster: need {w * h * 3} bytes, got {len(raster)}"
         )
-    return (
-        np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3),
-        pos + w * h * 3,
-    )
-
-
-def decode_ppm(payload: bytes):
-    """Decode a binary PPM (P6, maxval ≤ 255) into an (h, w, 3) uint8
-    numpy array. Pure numpy — no image library."""
-    arr, _ = _parse_ppm_at(payload, 0)
-    return arr
+    return np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3)
 
 
 def decode_image(payload: bytes):

@@ -27,15 +27,7 @@ for _batch, _streaming in [
     ("bloom_dedup", "bloom_index_roundtrip"),
     # merged index shards == the one-shot index (distinct-of-union):
     ("dedup_lsh_screen", "lsh_index_merge"),
-    ("quality_classifier", "quality_classifier_streaming"),
     ("sentence_screen", "sentence_screen_streaming"),
-    ("boilerplate_screen", "boilerplate_screen_streaming"),
-    ("dsir_score", "dsir_score_streaming"),
-    ("bm25_route", "bm25_route_streaming"),
-    ("bm25_route", "bm25_index_roundtrip"),
-    ("decontaminate_scrub", "decontaminate_scrub_streaming"),
-    ("decontaminate_fuzzy", "decontaminate_fuzzy_canonical"),
-    ("quality_classifier_learned", "quality_classifier_learned_streaming"),
     ("dup_labels_upsert", "dup_labels_upsert_streaming"),
     ("dup_labels_upsert", "dup_labels_roundtrip"),
 ]:

@@ -1038,9 +1038,9 @@ def _shared_wave_labels(spark, sf_dir):
 
 def q_upsert_labels_agreement(spark, sf_dir):
     """The self-measuring row for the incremental labeler — every
-    approximation in this engine ships one (`minhash_recall`,
-    `fuzzy_decon_recall`, ...): per incoming doc, compare the
-    per-wave adoption (`dup_labels_upsert`) against the FULL closure
+    approximation in this engine ships one (`minhash_recall`, ...):
+    per incoming doc, compare the per-wave adoption
+    (`dup_labels_upsert`) against the FULL closure
     over existing ∪ incoming (`_shared_dup_labels` — the compaction the
     contract defers to). Output (doc_id, matched, label_equals_full,
     reaches_existing):
@@ -1293,10 +1293,10 @@ def q_lsh_index_roundtrip(spark, sf_dir):
 
 def q_bloom_index_roundtrip(spark, sf_dir):
     """The Bloom screen AS A PERSISTED INDEX — the last index family
-    without a round-trip row (LSH bands and BM25 stats already
-    persist): build the existing split's two servable relations
-    (`dedup.bloom_index` — the ≤ m set-bit positions and the exact
-    digest keys that confirm hits), WRITE both to parquet, READ them
+    without a round-trip row (LSH bands already persist): build the
+    existing split's two servable relations (`dedup.bloom_index` — the
+    ≤ m set-bit positions and the exact digest keys that confirm hits),
+    WRITE both to parquet, READ them
     back, and screen the incoming split purely from the on-disk
     relations (`dedup.bloom_screen_from_index`). Proof the screen is
     DATA, not session state: between crawl waves a pipeline persists
@@ -1600,13 +1600,12 @@ def q_sentence_dedup(spark, sf_dir):
     """C4-style cross-document SENTENCE dedup
     (`textops.sentence_dedup`): sentences whose exact trimmed content
     recurs in >= 2 distinct documents are dropped and every document is
-    rebuilt from its surviving sentences in order — the
-    sentence-granularity sibling of `boilerplate_removal`'s fixed
-    16-token windows (C4 removed repeated three-sentence spans; CCNet
-    repeated paragraphs). Runs over the SENTENCED nd corpus
-    (`_docs_sent` — the raw testdata has no terminators, which would
-    degenerate every doc to one giant sentence); truncation mutants
-    share their original's leading sentences, so recurrence is real.
+    rebuilt from its surviving sentences in order (C4 removed repeated
+    three-sentence spans; CCNet repeated paragraphs). Runs over the
+    SENTENCED nd corpus (`_docs_sent` — the raw testdata has no
+    terminators, which would degenerate every doc to one giant
+    sentence); truncation mutants share their original's leading
+    sentences, so recurrence is real.
     Linear: digest-keyed document frequency, the drop flag rides into
     one per-doc rebuild aggregation."""
     return textops.sentence_dedup(_docs_sent(spark, sf_dir))
@@ -1660,10 +1659,9 @@ def q_sentence_screen(spark, sf_dir):
     (`textops.sentence_screen`): the indexed split's repeated-sentence
     digest index (sentence DF >= 2 WITHIN the indexed split,
     `textops.sentence_index`) probes incoming documents' sentences
-    through one equi-join + one aggregation — the sentence-granularity
-    sibling of `boilerplate_screen`, and the exact plan the streaming
-    twin runs. Over the SENTENCED nd corpus (`_docs_sent`): the
-    indexed split's original+truncation-mutant families share leading
+    through one equi-join + one aggregation — the exact plan the
+    streaming twin runs. Over the SENTENCED nd corpus (`_docs_sent`):
+    the indexed split's original+truncation-mutant families share leading
     sentences (DF >= 2 within the split), and cross-split exact copies
     make incoming docs hit the index."""
     docs = _docs_sent(spark, sf_dir)

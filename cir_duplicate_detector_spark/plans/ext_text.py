@@ -1,7 +1,7 @@
 """Text-analysis extension queries: quality scoring,
 language id, token counts, fingerprints, PII redaction,
 sampling, packing, mixtures, shard assignment, dataset
-split, classifier scoring.
+split.
 
 Split out of the monolithic ``extension_queries.py`` (round-10
 modularity; VERDICT r9 item 6) with NO behavior change: same
@@ -579,164 +579,6 @@ SELECT doc_id, term, tf, df, score, rnk FROM (
 """
 
 
-def q_quality_classifier(spark, sf_dir):
-    """Deterministic hashed LINEAR quality scorer
-    (`textops.quality_classifier`) — the bit-reproducible stand-in for
-    a fastText-style model-scored quality filter: per-token integer
-    weight `hash60(lower(tok)) % 2001 - 1000`, per-doc exact bigint
-    sum folded IN THE ROW (zero shuffles), one final IEEE division.
-    Scores the odd-doc_id half so the streaming twin (which scores at
-    ingest) answers the identical question."""
-    docs = load_table(spark, sf_dir, "documents")
-    return textops.quality_classifier(docs.where("doc_id % 2 = 1"))
-
-
-def q_quality_classifier_streaming(spark, sf_dir):
-    """`streaming.windows.streaming_quality_classifier`: the identical
-    per-row fold on a file stream — append mode, NO state, no
-    aggregation (the reason the scorer is an in-row fold). One oracle
-    by the registry twin guard."""
-    from ..streaming.windows import streaming_quality_classifier
-
-    return streaming_quality_classifier(spark, sf_dir)
-
-
-def _sql_quality_classifier() -> str:
-    w = f"({hash60_sql('t', chr(39) + 'qcw' + chr(39))}) % {textops.QC_WEIGHT_MOD} - 1000"
-    return f"""
-WITH d AS (
-  SELECT doc_id, {_DUCK_WORDS.replace('text', 'lower(text)')} AS ws
-  FROM documents WHERE doc_id % 2 = 1
-),
-s AS (
-  SELECT doc_id, len(ws)::BIGINT AS n_tokens,
-         coalesce(list_sum(list_transform(ws, t -> {w})), 0)::BIGINT
-           AS score_sum
-  FROM d
-)
-SELECT doc_id, n_tokens, score_sum,
-       CASE WHEN n_tokens > 0 THEN score_sum / n_tokens ELSE 0.0 END
-         AS quality_lr
-FROM s
-"""
-
-
-def q_quality_classifier_learned(spark, sf_dir):
-    """LEARNED quality scorer (`textops.quality_classifier_model` +
-    `quality_classifier_learned`): a closed-form diagonal linear
-    discriminant trained in ONE aggregation pass on the deterministic
-    `doc_id % 4 == 0` split, labels distilled from the heuristic
-    quality band — the learned upgrade of the hash stand-in
-    (VERDICT r9 item 4). Training
-    aggregates are order-free bigint sums over exact ppm-integer
-    features; scoring is a PURE PROJECTION after a broadcast one-row
-    model join (zero shuffles — the same shape as the hashed
-    `quality_classifier` it upgrades). Scores the odd-doc_id half
-    (disjoint from training; the slice the streaming twin scores at
-    ingest). Held-out agreement vs the band labels: 0.96–0.98
-    (`quality_classifier_agreement`)."""
-    docs = load_table(spark, sf_dir, "documents")
-    model = textops.quality_classifier_model(docs)
-    return textops.quality_classifier_learned(
-        docs.where("doc_id % 2 = 1"), model
-    )
-
-
-def q_quality_classifier_learned_streaming(spark, sf_dir):
-    """Streaming twin: the one-row LEARNED model trains batch-side
-    once (the shipped-model-artifact posture, like `sentence_screen`'s
-    digest index); incoming odd-doc_id documents score through the
-    identical broadcast-model projection on a file stream —
-    append-mode, NO state — shared code and one oracle string by the
-    twin guard."""
-    from ..streaming.windows import streaming_quality_classifier_learned
-
-    return streaming_quality_classifier_learned(spark, sf_dir)
-
-
-def q_quality_classifier_agreement(spark, sf_dir):
-    """Held-out confusion matrix of the learned scorer vs the
-    heuristic band labels it distilled (`textops.
-    quality_classifier_agreement`) — the agreement diagnostic VERDICT
-    r9 item 4 requires, in the `minhash_recall` self-measuring
-    discipline: ≤4 exact bigint rows (label, predicted, n) over the docs training
-    never saw. Measured agreement 0.96–0.98 against a 0.56–0.58
-    majority base rate."""
-    docs = load_table(spark, sf_dir, "documents")
-    model = textops.quality_classifier_model(docs)
-    return textops.quality_classifier_agreement(docs, model)
-
-
-_DUCK_QCL_FEATURES = f"""
-  SELECT doc_id,
-         CASE WHEN ({_DUCK_QUALITY_EXPR}) >= {textops.QCL_LABEL_THRESHOLD}
-              THEN 1 ELSE 0 END AS label,
-         ({textops.QCL_RATIO_SCALE} * len(regexp_extract_all(text, '{_STOP_EN}')))
-           // len({_DUCK_WORDS}) AS f1,
-         len({_DUCK_WORDS})::BIGINT AS f2,
-         ({textops.QCL_RATIO_SCALE} * len(regexp_extract_all(text, '[.,;:!?]')))
-           // length(text) AS f3
-  FROM documents"""
-
-
-def _sql_qcl_model() -> str:
-    """Shared CTE chain: feat (exact-integer features + band label),
-    st (order-free bigint training sums), w (the one-row learned
-    model w1..w3 / m1..m3 — fixed-order double expressions)."""
-    return f"""
-feat AS ({_DUCK_QCL_FEATURES}),
-tr AS (SELECT * FROM feat WHERE doc_id % {textops.QCL_TRAIN_MOD} = 0),
-st AS (
-  SELECT sum(label)::BIGINT n1, sum(1-label)::BIGINT n0,
-         count(*)::BIGINT n,
-         sum(label*f1)::BIGINT s1f1, sum((1-label)*f1)::BIGINT s0f1,
-         sum(f1)::BIGINT sf1, sum(f1*f1)::BIGINT qf1,
-         sum(label*f2)::BIGINT s1f2, sum((1-label)*f2)::BIGINT s0f2,
-         sum(f2)::BIGINT sf2, sum(f2*f2)::BIGINT qf2,
-         sum(label*f3)::BIGINT s1f3, sum((1-label)*f3)::BIGINT s0f3,
-         sum(f3)::BIGINT sf3, sum(f3*f3)::BIGINT qf3
-  FROM tr
-),
-w AS (
-  SELECT
-    (s1f1/n1 - s0f1/n0) / ((qf1/n - (sf1/n)*(sf1/n)) + 1.0) AS w1,
-    (s1f2/n1 - s0f2/n0) / ((qf2/n - (sf2/n)*(sf2/n)) + 1.0) AS w2,
-    (s1f3/n1 - s0f3/n0) / ((qf3/n - (sf3/n)*(sf3/n)) + 1.0) AS w3,
-    (s1f1/n1 + s0f1/n0) / 2 AS m1,
-    (s1f2/n1 + s0f2/n0) / 2 AS m2,
-    (s1f3/n1 + s0f3/n0) / 2 AS m3
-  FROM st
-)"""
-
-
-def _sql_quality_classifier_learned() -> str:
-    return f"""
-WITH {_sql_qcl_model()}
-SELECT doc_id, f1, f2, f3,
-       w1*(f1 - m1) + w2*(f2 - m2) + w3*(f3 - m3) AS score,
-       w1*(f1 - m1) + w2*(f2 - m2) + w3*(f3 - m3) > 0 AS predicted_good
-FROM feat CROSS JOIN w
-WHERE doc_id % 2 = 1
-"""
-
-
-def _sql_quality_classifier_agreement() -> str:
-    return f"""
-WITH {_sql_qcl_model()},
-held AS (
-  SELECT * FROM feat WHERE doc_id % {textops.QCL_TRAIN_MOD} <> 0
-),
-sc AS (
-  SELECT label,
-         w1*(f1 - m1) + w2*(f2 - m2) + w3*(f3 - m3) AS score
-  FROM held CROSS JOIN w
-)
-SELECT label, CASE WHEN score > 0 THEN 1 ELSE 0 END AS predicted,
-       count(*)::BIGINT AS n
-FROM sc GROUP BY 1, 2
-"""
-
-
 def q_corpus_drift(spark, sf_dir):
     """Token-distribution drift between the doc_id-parity cohorts —
     integer-exact cross-product divergence, top-20 tokens."""
@@ -769,23 +611,6 @@ FROM scored ORDER BY score DESC, term LIMIT 20
 
 
 TEXT_QUERIES: dict[str, tuple] = {
-    "quality_classifier": (q_quality_classifier, _sql_quality_classifier()),
-    "quality_classifier_learned": (
-        q_quality_classifier_learned,
-        _sql_quality_classifier_learned(),
-    ),
-    "quality_classifier_learned_streaming": (
-        q_quality_classifier_learned_streaming,
-        _sql_quality_classifier_learned(),
-    ),
-    "quality_classifier_agreement": (
-        q_quality_classifier_agreement,
-        _sql_quality_classifier_agreement(),
-    ),
-    "quality_classifier_streaming": (
-        q_quality_classifier_streaming,
-        _sql_quality_classifier(),
-    ),
     "doc_chunks": (q_doc_chunks, _sql_doc_chunks()),
     "text_quality": (q_text_quality, SQL_TEXT_QUALITY),
     "token_count": (q_token_count, SQL_TOKEN_COUNT),

@@ -1,16 +1,15 @@
 """Extension query registry aggregator.
 
 The per-family modules (``ext_dedup``, ``ext_text``,
-``ext_pipeline``, ``ext_multimodal``, shared helpers in ``ext_common``)
-each export a ``*_QUERIES`` dict; this module merges
-them into ``EXTENSION_QUERIES`` in family order.
+``ext_multimodal``, shared helpers in ``ext_common``) each export a
+``*_QUERIES`` dict; this module merges them into ``EXTENSION_QUERIES``
+in family order.
 
 Floating-point discipline (everything here is checked by
 value-hash):
 * ratios/similarities are single divisions of exact integers;
-* double sums are sequential folds in a pinned order, which Spark's
-  aggregate() and DuckDB's list_sum() evaluate identically
-  (verified).
+* sums are over exact integers, so no result depends on the order
+  in which a double accumulates.
 """
 
 from __future__ import annotations
@@ -20,19 +19,16 @@ from __future__ import annotations
 from .ext_common import *  # noqa: F401,F403
 from .ext_dedup import *  # noqa: F401,F403
 from .ext_text import *  # noqa: F401,F403
-from .ext_pipeline import *  # noqa: F401,F403
 from .ext_multimodal import *  # noqa: F401,F403
 
 from . import (
     ext_dedup,
     ext_text,
-    ext_pipeline,
     ext_multimodal,
 )
 
 EXTENSION_QUERIES: dict[str, tuple] = {
     **ext_dedup.DEDUP_QUERIES,
     **ext_text.TEXT_QUERIES,
-    **ext_pipeline.PIPELINE_QUERIES,
     **ext_multimodal.MULTIMODAL_QUERIES,
 }

@@ -28,7 +28,7 @@ RECOMMENDED_CONFS: dict[str, str] = {
     # Pin the session zone so timestamp→epoch conversions are
     # deterministic regardless of host zone.
     "spark.sql.session.timeZone": "UTC",
-    # Arrow for pandas_udf / mapInPandas paths (multimodal stubs).
+    # Arrow for the mapInPandas pass of operators/pdqimage.py.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 

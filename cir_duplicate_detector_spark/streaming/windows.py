@@ -304,185 +304,6 @@ def streaming_corpus_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def streaming_boilerplate_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The boilerplate span screen AS A STREAM — the span-level sibling
-    of :func:`streaming_lsh_screen`: the existing split's boilerplate
-    span index (span digests with document frequency >= 2 WITHIN the
-    indexed split, `textops.boilerplate_index`) is built batch-side
-    ONCE; incoming documents arrive on a file stream, split into
-    non-overlapping spans per-row (posexplode — zero stream state
-    before the rollup) and probe the static index through a
-    stream-static equi-join, one aggregation. Output identical to the
-    batch `boilerplate_screen` entry — one oracle string by the
-    batch/streaming twin guard in ``plans/__init__``."""
-    from ..operators.textops import boilerplate_index, boilerplate_screen
-    from ..sources.derived import BLOOM_SPLIT_SPARK, derive_near_dup_corpus
-
-    docs_b = derive_near_dup_corpus(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-    )
-    idx = boilerplate_index(
-        docs_b.where(F.expr(BLOOM_SPLIT_SPARK) == 0), min_docs=2
-    )
-    incoming = _stream_near_dup_corpus(
-        spark, sf_dir, "docs_boiler_stream_"
-    ).where(F.expr(BLOOM_SPLIT_SPARK) == 1)
-    probed = boilerplate_screen(incoming, idx)
-    name = f"stream_boiler_{uuid.uuid4().hex[:8]}"
-    query = (
-        probed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
-
-
-def streaming_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR scoring AS A STREAM — importance scoring at ingest: the
-    likelihood-ratio table learns batch-side ONCE from the indexed half
-    of the raw documents (`textops.dsir_bucket_ratios`, target = the
-    English slice); incoming documents stream in, explode to
-    position-keyed token buckets (stateless), resolve ratios through a
-    broadcast stream-static join, and fold per document in ONE
-    aggregation (`textops.dsir_score` — the token-level shape exists
-    precisely because streaming allows a single aggregation). Output
-    identical to the batch `dsir_score` entry — one oracle string by
-    the twin guard."""
-    from ..operators.textops import dsir_bucket_ratios, dsir_score
-
-    path = f"{sf_dir}/documents.parquet"
-    docs_b = spark.read.parquet(path)
-    ratios, default = dsir_bucket_ratios(
-        docs_b.where("doc_id % 2 = 0"), F.col("lang") == "en"
-    )
-    schema = docs_b.schema
-    stage = stage_source(path, "docs_dsir_stream_")
-    incoming = (
-        spark.readStream.schema(schema).parquet(stage).where("doc_id % 2 = 1")
-    )
-    scored = dsir_score(incoming, ratios, default)
-    name = f"stream_dsir_{uuid.uuid4().hex[:8]}"
-    query = (
-        scored.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
-
-
-def streaming_bm25_route(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 percolation AS A STREAM — standing keyword queries, arriving
-    documents: corpus statistics (N, Σdl, per-term df) build batch-side
-    ONCE from the indexed half (`textops.bm25_index_stats`); incoming
-    documents stream in, take per-term tf from a stateless array-filter
-    projection after the broadcast panel join, and fold per (doc,
-    query) in ONE aggregation (`textops.bm25_route` — the
-    single-aggregation shape exists precisely so this twin can run it
-    unchanged). Output identical to the batch `bm25_route` entry — one
-    oracle string by the twin guard."""
-    from ..operators import textops
-    from ..operators.textops import bm25_index_stats, bm25_route
-
-    path = f"{sf_dir}/documents.parquet"
-    docs_b = spark.read.parquet(path)
-    panel = spark.createDataFrame(
-        textops.BM25_PANEL, "query_id bigint, term string"
-    )
-    stats, df_rel = bm25_index_stats(docs_b.where("doc_id % 2 = 0"), panel)
-    schema = docs_b.schema
-    stage = stage_source(path, "docs_bm25_stream_")
-    incoming = (
-        spark.readStream.schema(schema).parquet(stage).where("doc_id % 2 = 1")
-    )
-    routed = bm25_route(incoming, panel, stats, df_rel)
-    name = f"stream_bm25_{uuid.uuid4().hex[:8]}"
-    query = (
-        routed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
-
-
-def streaming_decontaminate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Surgical decontamination AS A STREAM — scrub-at-ingest: the eval
-    corpus's overlapping-span digest index builds batch-side ONCE
-    (`textops.eval_span_index`); incoming train documents stream in,
-    split to non-overlapping spans (stateless posexplode), flag
-    contaminated spans through one stream-static digest join, and
-    rebuild per document in ONE aggregation — the single-aggregation
-    shape `textops.decontaminate_scrub` was written in precisely so
-    this twin runs it unchanged. Output identical to the batch
-    `decontaminate_scrub` entry — one oracle string by the twin
-    guard."""
-    from ..operators.textops import decontaminate_scrub
-    from ..sources.derived import derive_near_dup_corpus
-
-    # Static side: the eval split's overlapping-span digest index input
-    # (the derived nd corpus, so planted near-dups straddle the split).
-    nd_b = derive_near_dup_corpus(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-    )
-    ev = nd_b.where("doc_id % 13 = 7")
-    # Stream side: the same derived-corpus branches applied stream-side.
-    incoming = _stream_near_dup_corpus(
-        spark, sf_dir, "docs_scrub_stream_"
-    ).where("doc_id % 13 <> 7")
-    scrubbed = decontaminate_scrub(incoming, ev)
-    name = f"stream_scrub_{uuid.uuid4().hex[:8]}"
-    query = (
-        scrubbed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
-
-
-def streaming_quality_classifier(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Hashed linear quality scoring AS A STREAM — model-scored
-    admission at ingest: `textops.quality_classifier` is a pure per-row
-    projection (tokenize → per-token weight → one in-row integer fold),
-    so the IDENTICAL expressions run under Structured Streaming with
-    NO state at all — append mode, no watermark, no aggregation; the
-    cheapest possible streaming shape, and the reason the scorer was
-    built as an in-row fold instead of an explode + groupBy. Scores
-    the odd-doc_id half (the batch twin scores the same slice) — one
-    oracle string by the registry twin guard."""
-    from ..operators.textops import quality_classifier
-
-    path = f"{sf_dir}/documents.parquet"
-    schema = spark.read.parquet(path).schema
-    stage = stage_source(path, "docs_qc_stream_")
-    incoming = (
-        spark.readStream.schema(schema).parquet(stage).where("doc_id % 2 = 1")
-    )
-    scored = quality_classifier(incoming)
-    name = f"stream_qc_{uuid.uuid4().hex[:8]}"
-    query = (
-        scored.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
-
-
 def streaming_sentence_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sentence-boilerplate screening AS A STREAM — the C4-granularity
     ingest gate: the indexed split's repeated-sentence digest index
@@ -513,46 +334,6 @@ def streaming_sentence_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         screened.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
-
-
-def streaming_quality_classifier_learned(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """LEARNED quality scoring AS A STREAM — the model-artifact
-    deployment: the ONE-ROW diagonal-LDA model trains batch-side once
-    (`textops.quality_classifier_model` on the deterministic
-    `doc_id % 4 == 0` split — on a live pipeline, a periodically
-    re-trained static artifact, exactly like
-    `streaming_sentence_screen`'s digest index); incoming odd-doc_id
-    documents score through the SHARED
-    `textops.quality_classifier_learned` code path — a broadcast
-    one-row stream-static join feeding a pure projection, so the
-    stream runs APPEND-mode with NO state at all (the cheapest
-    streaming shape, same as `streaming_quality_classifier`). One
-    oracle string with the batch twin by the registry guard."""
-    from ..operators.textops import (
-        quality_classifier_learned,
-        quality_classifier_model,
-    )
-
-    path = f"{sf_dir}/documents.parquet"
-    schema = spark.read.parquet(path).schema
-    model = quality_classifier_model(spark.read.parquet(path))
-    stage = stage_source(path, "docs_qcl_stream_")
-    incoming = (
-        spark.readStream.schema(schema).parquet(stage).where("doc_id % 2 = 1")
-    )
-    scored = quality_classifier_learned(incoming, model)
-    name = f"stream_qcl_{uuid.uuid4().hex[:8]}"
-    query = (
-        scored.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )

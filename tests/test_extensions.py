@@ -340,169 +340,6 @@ def test_dup_weighting_partitions_unit_mass_per_group(spark):
         assert all(m.group_size == len(members) for m in members)
 
 
-def test_boilerplate_removal_drops_shared_spans_keeps_unique(spark):
-    from cir_duplicate_detector_spark.operators import textops
-
-    shared = " ".join(f"b{i}" for i in range(16))  # one full shared span
-    docs = spark.createDataFrame(
-        [
-            (1, shared + " unique one tail"),
-            (2, shared + " different trailing words"),
-            (3, "entirely organic text with no repeats"),
-            (4, shared),  # fully boilerplate
-            (5, shared),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r.doc_id: r
-        for r in textops.boilerplate_removal(docs, min_docs=2).collect()
-    }
-    assert set(out) == {1, 2, 3, 4, 5}  # every input doc present
-    # The shared 16-token span is df=4 -> dropped; unique tails survive.
-    assert out[1].clean_text == "unique one tail"
-    assert out[1].n_tokens == 19 and out[1].n_kept_tokens == 3
-    assert out[2].clean_text == "different trailing words"
-    # Organic doc passes through whole (token-normalized).
-    assert out[3].clean_text == "entirely organic text with no repeats"
-    assert out[3].n_kept_tokens == out[3].n_tokens == 6
-    # Fully-boilerplate docs come back empty, not missing.
-    assert out[4].clean_text == "" and out[4].n_kept_tokens == 0
-
-
-def test_boilerplate_removal_rebuild_preserves_span_order(spark):
-    from cir_duplicate_detector_spark.operators import textops
-
-    # 40 tokens -> spans [0:16], [16:32], [32:40]; drop the MIDDLE one
-    # (shared with doc 2); rebuild must keep spans 0 and 2 in order.
-    w = [f"w{i}" for i in range(16)]
-    mid = [f"m{i}" for i in range(16)]
-    tail = ["t0", "t1"]
-    docs = spark.createDataFrame(
-        [
-            (1, " ".join(w + mid + tail)),
-            (2, " ".join(mid)),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r.doc_id: r
-        for r in textops.boilerplate_removal(docs, min_docs=2).collect()
-    }
-    assert out[1].clean_text == " ".join(w + tail)
-    assert out[1].n_kept_tokens == 18
-
-
-def test_dsir_weights_tilt_toward_target_profile(spark):
-    from pyspark.sql import functions as F
-
-    from cir_duplicate_detector_spark.operators import textops
-
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha alpha alpha beta", "en"),
-            (2, "alpha alpha gamma gamma", "xx"),
-            (3, "gamma gamma gamma delta", "xx"),
-            (4, "", "xx"),
-        ],
-        "doc_id long, text string, lang string",
-    )
-    out = {
-        r.doc_id: r
-        for r in textops.dsir_weights(
-            docs, F.col("lang") == "en"
-        ).collect()
-    }
-    assert set(out) == {1, 2, 3, 4}
-    # Target profile is alpha-heavy: the alpha-ish raw doc outscores
-    # the gamma-ish one (weights are mean likelihood-ratio per token
-    # scaled by count; compare per-token averages for size-fairness).
-    assert (
-        out[2].dsir_weight / out[2].n_tokens
-        > out[3].dsir_weight / out[3].n_tokens
-    )
-    assert out[4].n_tokens == 0 and out[4].dsir_weight == 0.0
-    assert out[1].n_tokens == 4
-
-
-def test_cross_corpus_near_duplicates_flags_straddling_pairs(spark):
-    from cir_duplicate_detector_spark.operators import dedup
-
-    base = " ".join(f"x{i}" for i in range(30))
-    train = spark.createDataFrame(
-        [
-            (1, base),  # exact copy of eval doc 100 -> jaccard 1.0
-            (2, " ".join(f"x{i}" for i in range(27))),  # truncated copy
-            (3, "totally unrelated content here entirely"),
-        ],
-        "doc_id long, text string",
-    )
-    ev = spark.createDataFrame(
-        [(100, base), (101, "other benchmark prompt words")],
-        "doc_id long, text string",
-    )
-    rows = dedup.cross_corpus_near_duplicates(
-        train, ev, threshold=0.5
-    ).collect()
-    got = {(r.a, r.b): r.jaccard for r in rows}
-    assert got[(1, 100)] == 1.0
-    assert (2, 100) in got and 0.5 <= got[(2, 100)] < 1.0
-    assert all(a != 3 for (a, _b) in got)  # unrelated doc not flagged
-    assert all(b != 101 for (_a, b) in got)
-
-
-def test_boilerplate_screen_counts_against_static_index(spark):
-    from cir_duplicate_detector_spark.operators import textops
-
-    shared = " ".join(f"s{i}" for i in range(16))
-    indexed = spark.createDataFrame(
-        [
-            (1, shared + " idx one"),
-            (2, shared + " idx two"),
-            (3, "unrepeated indexed content"),
-        ],
-        "doc_id long, text string",
-    )
-    incoming = spark.createDataFrame(
-        [
-            (10, shared + " fresh tail"),  # first span hits the index
-            (11, "clean incoming document"),
-        ],
-        "doc_id long, text string",
-    )
-    idx = textops.boilerplate_index(indexed, min_docs=2)
-    out = {
-        r.doc_id: r
-        for r in textops.boilerplate_screen(incoming, idx).collect()
-    }
-    assert out[10].n_spans == 2 and out[10].n_boiler_spans == 1
-    assert out[10].n_tokens == 18 and out[10].n_boiler_tokens == 16
-    assert out[11].n_boiler_spans == 0 and out[11].n_boiler_tokens == 0
-
-
-def test_zero_token_docs_never_poison_span_indexes(spark):
-    # Round-9 advice: _doc_spans emits one empty span per token-less
-    # doc (so screens count every input), but md5('') must NOT enter
-    # boilerplate_index or eval_span_index — three empty indexed docs
-    # would otherwise brand every future empty doc "boilerplate" and
-    # every empty train doc "contaminated".
-    from cir_duplicate_detector_spark.operators import textops
-
-    empties = [(i, "   ") for i in range(1, 4)]  # >= min_docs empty docs
-    indexed = spark.createDataFrame(
-        empties + [(4, "real indexed content")], "doc_id long, text string"
-    )
-    assert textops.boilerplate_index(indexed, min_docs=3).count() == 0
-    assert textops.eval_span_index(indexed).where(
-        F.col("whash") == F.md5(F.lit(""))
-    ).count() == 0
-    # An empty incoming doc still gets a screen row, with zero hits.
-    incoming = spark.createDataFrame([(10, "")], "doc_id long, text string")
-    idx = textops.boilerplate_index(indexed, min_docs=3)
-    row = textops.boilerplate_screen(incoming, idx).collect()[0]
-    assert row.n_spans == 1 and row.n_boiler_spans == 0
-
-
 def test_lsh_screen_from_index_dedupes_malformed_index(spark):
     # Round-9 advice: the serving path must tolerate a hand-built /
     # multiply-appended index with repeated (band_id, band_key) rows —
@@ -526,83 +363,6 @@ def test_lsh_screen_from_index_dedupes_malformed_index(spark):
     assert clean == dirty
 
 
-def test_dsir_score_uses_default_ratio_for_unseen_buckets(spark):
-    from pyspark.sql import functions as F
-
-    from cir_duplicate_detector_spark.operators import textops
-
-    indexed = spark.createDataFrame(
-        [(1, "alpha alpha beta", "en"), (2, "beta gamma gamma", "xx")],
-        "doc_id long, text string, lang string",
-    )
-    incoming = spark.createDataFrame(
-        [
-            (10, "alpha alpha", "xx"),  # target-heavy profile
-            (11, "zzznovel zzznovel", "xx"),  # unseen buckets
-            (12, "gamma gamma", "xx"),  # raw-only profile
-        ],
-        "doc_id long, text string, lang string",
-    )
-    ratios, default = textops.dsir_bucket_ratios(
-        indexed, F.col("lang") == "en"
-    )
-    out = {
-        r.doc_id: r
-        for r in textops.dsir_score(incoming, ratios, default).collect()
-    }
-    # The unseen token takes exactly the default ratio (tc=rc=0
-    # Laplace smoothing: (0+1)/(0+1) factor == unseen).
-    rd = default.collect()[0].r_default
-    assert abs(out[11].dsir_score - 2 * rd) < 1e-12
-    # gamma is raw-heavy (rc=2, tc=0) -> ratio below default; alpha is
-    # target-exclusive (tc=rc=2) -> factor 1, equal to default. The
-    # ordering the sampler acts on: target-ish >= unseen > raw-only.
-    assert out[12].dsir_score < out[11].dsir_score
-    assert abs(out[10].dsir_score - out[11].dsir_score) < 1e-12
-    assert out[10].n_tokens == out[12].n_tokens == 2
-
-
-def test_fuzzy_decon_recall_counts_found_over_truth(spark):
-    # The recall diagnostic must be 1.0 when the banded screen finds
-    # every true pair (exact copies always share all bands).
-    import __spark_entry__ as entry_mod
-
-    rows = entry_mod.queries()["fuzzy_decon_recall"](
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    assert rows, "no eval doc with a true contaminating pair"
-    for r in rows:
-        assert r.n_true >= 1 and 0.0 <= r.recall <= 1.0
-        assert r.n_found <= r.n_true
-
-
-def test_bm25_scores_partitioning_invariant(spark):
-    # The term-ordered fold claim for the retrieval family: BM25 scores
-    # must be BIT-IDENTICAL no matter how the corpus is partitioned or
-    # ordered (shuffle reordering is what breaks naive double sums).
-    from cir_duplicate_detector_spark.operators import textops
-
-    docs = load_table(spark, SF_DIR, "documents")
-    panel = spark.createDataFrame(
-        textops.BM25_PANEL, "query_id bigint, term string"
-    )
-
-    def run(df):
-        return sorted(
-            (r.query_id, r.doc_id, r.rank, r.n_terms_hit, r.score)
-            for r in textops.bm25_search(df, panel).collect()
-        )
-
-    base = run(docs)
-    assert base  # non-empty at any sf
-    for v in (
-        docs.repartition(1),
-        docs.repartition(13, "doc_id"),
-        docs.orderBy(F.col("doc_id").desc()),
-    ):
-        assert run(v) == base  # exact double equality, no tolerance
-
-
 # ------------------------------------------------------ round-9 wave
 
 def test_sentence_dedup_drops_repeated_sentence_keeps_order(spark):
@@ -624,61 +384,6 @@ def test_sentence_dedup_drops_repeated_sentence_keeps_order(spark):
     assert out[2].n_kept_sentences == 1
     assert out[3].n_kept_sentences == out[3].n_sentences
     assert out[3].clean_text == "entirely original text without repeats."
-
-
-def test_quality_classifier_is_zero_shuffle_and_exact(spark):
-    from cir_duplicate_detector_spark.operators import textops
-    from cir_duplicate_detector_spark.functions.text import hash60
-
-    docs = spark.createDataFrame(
-        [(1, "Alpha beta ALPHA"), (2, "   ")],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: r for r in textops.quality_classifier(docs).collect()}
-    # hand-fold the weights through the engine's own hash
-    ws = spark.createDataFrame([("alpha",), ("beta",)], "t string").select(
-        F.col("t"),
-        (hash60(F.col("t"), seed="qcw") % textops.QC_WEIGHT_MOD - 1000).alias(
-            "w"
-        ),
-    )
-    w = {r.t: r.w for r in ws.collect()}
-    expected = 2 * w["alpha"] + w["beta"]
-    assert out[1].score_sum == expected
-    assert out[1].quality_lr == expected / 3
-    assert out[2].n_tokens == 0 and out[2].quality_lr == 0.0
-    # pure projection: the plan must contain no exchange at all
-    plan = (
-        textops.quality_classifier(docs)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
-
-
-def test_quality_classifier_agreement_floor(spark):
-    # Pin the learned scorer's held-out agreement to a measured-minus-
-    # margin floor (VERDICT r10 item 7 — the recall-floor
-    # discipline): the oracle parity gate proves the confusion matrix
-    # is COMPUTED right, but nothing stopped a featurization edit from
-    # silently degrading the MODEL while staying oracle-green.
-    # Measured at sf0.001: 0.9813 (held-out n=375, majority base rate
-    # 0.56-0.58); sf0.01 measures 0.9573 — floor 0.93 allows corpus
-    # wiggle while still failing on any real regression toward the
-    # base rate.
-    from cir_duplicate_detector_spark.operators import textops
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    model = textops.quality_classifier_model(docs)
-    rows = textops.quality_classifier_agreement(docs, model).collect()
-    total = sum(r["n"] for r in rows)
-    agree = sum(r["n"] for r in rows if r["label"] == r["predicted"])
-    assert total > 300  # held-out split sanity (375 of 500 docs)
-    assert agree / total >= 0.93, (
-        f"held-out agreement collapsed: {agree}/{total} = "
-        f"{agree / total:.4f} (floor 0.93, measured 0.9813)"
-    )
 
 
 def test_simhash_pairs_prebuilt_sigs_identical(spark, tmp_path):
@@ -708,85 +413,3 @@ def test_simhash_pairs_prebuilt_sigs_identical(spark, tmp_path):
         ).collect()
     )
     assert served == inline and len(inline) > 0
-
-
-def test_bm25_one_pass_relation_matches_two_pass(spark):
-    # Round 15 (guide §2.3): bm25_search's single materialized
-    # relation (null-term stats markers + panel postings from one
-    # corpus pass) must reproduce the two-pass form's exact output —
-    # pinned here against an inline reimplementation of the r14 shape.
-    from pyspark.sql import functions as F
-
-    from cir_duplicate_detector_spark.operators import textops
-
-    docs = load_table(spark, SF_DIR, "documents")
-    panel = spark.createDataFrame(
-        textops.BM25_PANEL, "query_id bigint, term string"
-    )
-    new = sorted(
-        tuple(r) for r in textops.bm25_search(docs, panel).collect()
-    )
-    # r14 two-pass reference: tf via broadcast panel fan-out, stats
-    # from an independent toked aggregation.
-    toked = docs.select(
-        "doc_id", textops.tokens("text").alias("toks"),
-        F.lit(1).alias("one"),
-    ).withColumn("dl", F.size("toks").cast("bigint")).where("dl > 0")
-    stats = toked.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("dl").cast("bigint").alias("total_tokens"),
-    )
-    terms = panel.select("term").dropDuplicates()
-    tf = (
-        toked.join(F.broadcast(terms.withColumn("one", F.lit(1))), "one")
-        .select(
-            "doc_id", "term", "dl",
-            (F.size("toks")
-             - F.size(F.array_remove(F.col("toks"), F.col("term"))))
-            .cast("bigint").alias("tf"),
-        )
-        .where(F.col("tf") > 0)
-    )
-    df_rel = tf.groupBy("term").agg(
-        F.count("*").cast("bigint").alias("df")
-    )
-    k1, b = textops.BM25_K1, textops.BM25_B
-    idf = ((F.col("n_docs") - F.col("df")) + F.lit(0.5)) / (
-        F.col("df") + F.lit(0.5)
-    )
-    tfnorm = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + (F.lit(k1) * (F.lit(1.0 - b) + ((F.lit(b) * F.col("dl"))
-           / (F.col("total_tokens") / F.col("n_docs")))))
-    )
-    from cir_duplicate_detector_spark.operators.textops import _sorted_fold
-    from pyspark.sql import Window
-
-    scored = (
-        tf.join(F.broadcast(df_rel), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", "term", (idf * tfnorm).alias("s"))
-    )
-    per = (
-        F.broadcast(panel).join(scored, "term")
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_terms_hit"),
-            _sorted_fold(
-                F.collect_list(F.struct("term", "s")), "s"
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    old = sorted(
-        tuple(r)
-        for r in per.withColumn(
-            "rank", F.row_number().over(w).cast("bigint")
-        )
-        .where(F.col("rank") <= textops.BM25_TOPK)
-        .select("query_id", "doc_id", "rank", "n_terms_hit", "score")
-        .collect()
-    )
-    assert new == old

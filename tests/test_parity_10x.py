@@ -51,8 +51,7 @@ SAMPLE_SIZE = 15
 # Rows whose oracle cost is DuckDB-side infeasible at 10x.
 _EXCLUDED_NAMES = {
     "dup_overlap",
-    "fuzzy_decon_recall",  # exact cross-Jaccard truth side is O(N^2)/50
-    "minhash_recall",  # same exact-truth shape
+    "minhash_recall",  # exact-Jaccard truth side is O(N^2)/50
     "substring_dup",
 }
 # Rows excluded through round 13 ONLY because the byte-identical

@@ -1,5 +1,5 @@
 """Planted-input tests for the pipeline operators: decontamination
-screen, Bloom screen, BM25 search and routing.
+screen, Bloom screen, sampling, packing, sharding and label upserts.
 
 Each test constructs an input where the correct answer is computable by
 hand, so these pin SEMANTICS; engine parity with DuckDB is pinned
@@ -398,44 +398,6 @@ def test_minhash_recall_floor_on_planted_corpus(spark):
     assert n_found / n_true >= 0.9
 
 
-# -------------------------------------------------------------- BM25
-
-def test_bm25_rational_idf_rare_term_outranks(spark):
-    # d3 matches BOTH query terms (and the rarer one twice); docs
-    # matching only the common term 'a' score below it.
-    docs = _docs(
-        spark,
-        [(1, "a b"), (2, "a"), (3, "a c c"), (4, "b b")],
-    )
-    panel = spark.createDataFrame(
-        [(1, "a"), (1, "c")], "query_id long, term string"
-    )
-    out = textops.bm25_search(docs, panel, topk=10).collect()
-    by_rank = {r.rank: r for r in out}
-    assert by_rank[1].doc_id == 3 and by_rank[1].n_terms_hit == 2
-    assert all(r.score > 0 for r in out)
-    assert sorted(r.rank for r in out) == list(range(1, len(out) + 1))
-
-
-def test_bm25_score_matches_hand_formula(spark):
-    # One query term, hand-replicated expression tree: the engine
-    # score must equal the Python float EXACTLY (the bit-reproducible
-    # claim of the rational-idf form).
-    docs = _docs(spark, [(1, "a a b"), (2, "b c")])
-    panel = spark.createDataFrame([(7, "a")], "query_id long, term string")
-    out = {r.doc_id: r for r in textops.bm25_search(docs, panel).collect()}
-    n_docs, total = 2, 5
-    tf, dl, df_ = 2, 3, 1
-    k1, b = textops.BM25_K1, textops.BM25_B
-    idf = ((n_docs - df_) + 0.5) / (df_ + 0.5)
-    tfnorm = (tf * (k1 + 1.0)) / (
-        tf + (k1 * ((1.0 - b) + ((b * dl) / (total / n_docs))))
-    )
-    assert out[1].score == idf * tfnorm
-    assert out[1].rank == 1 and out[1].n_terms_hit == 1
-    assert 2 not in out  # no query term -> absent, not zero-scored
-
-
 # ------------------------------------------- LSH index round-trip
 
 def test_lsh_index_roundtrip_identity(spark, tmp_path):
@@ -468,66 +430,7 @@ def test_lsh_index_roundtrip_identity(spark, tmp_path):
     assert live[10][1] and not live[11][1]  # exact copy hits, novel text misses
 
 
-# ---------------------------------------------------- BM25 routing
-
-def test_bm25_route_static_stats_and_df0(spark):
-    # Index side: 2 docs, term 'a' in one of them, 'q' in neither.
-    # Incoming doc matches both panel terms; 'q' takes the df=0
-    # maximum-rarity idf. Scores must equal the hand formula exactly.
-    index = _docs(spark, [(2, "a b b"), (4, "b c")])
-    incoming = _docs(spark, [(1, "a q q")])
-    panel = spark.createDataFrame(
-        [(1, "a"), (1, "q")], "query_id long, term string"
-    )
-    stats, df_rel = textops.bm25_index_stats(index, panel)
-    out = textops.bm25_route(incoming, panel, stats, df_rel).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r.doc_id, r.query_id, r.n_terms_hit) == (1, 1, 2)
-    k1, b = textops.BM25_K1, textops.BM25_B
-    n_docs, total = 2, 5  # index side only
-    dl = 3  # incoming doc's own length
-
-    def s(tf, df):
-        idf = ((n_docs - df) + 0.5) / (df + 0.5)
-        return idf * (
-            (tf * (k1 + 1.0))
-            / (tf + (k1 * ((1.0 - b) + ((b * dl) / (total / n_docs)))))
-        )
-
-    assert r.score == s(1, 1) + s(2, 0)  # term order: 'a' then 'q'
-
-
-def test_decontaminate_scrub_removes_aligned_and_offset_spans(spark):
-    # Train doc 1's FIRST 4-token span appears verbatim inside the eval
-    # doc at an OFFSET alignment (eval side indexes overlapping spans);
-    # its second span is clean and survives. Doc 2 is untouched.
-    train = _docs(
-        spark,
-        [
-            (1, "w x y z keep these four words"),
-            (2, "totally clean text here"),
-        ],
-    )
-    ev = _docs(spark, [(100, "lead-in w x y z trailing")])
-    out = {
-        r.doc_id: r
-        for r in textops.decontaminate_scrub(train, ev, window=4).collect()
-    }
-    assert out[1].n_tokens == 8 and out[1].n_kept_tokens == 4
-    assert out[1].clean_text == "keep these four words"
-    assert out[2].n_kept_tokens == out[2].n_tokens == 4
-    assert out[2].clean_text == "totally clean text here"
-
-
-def test_decontaminate_scrub_fully_contaminated_doc_kept_empty(spark):
-    train = _docs(spark, [(1, "a b c d")])
-    ev = _docs(spark, [(100, "a b c d")])
-    out = textops.decontaminate_scrub(train, ev, window=4).collect()
-    assert [(r.doc_id, r.n_kept_tokens, r.clean_text) for r in out] == [
-        (1, 0, "")
-    ]
-
+# ---------------------------------------------------- cluster labels
 
 def test_label_upsert_adopts_existing_labels(spark):
     # Incoming near-dups adopt the EXISTING cluster's label (min-label,

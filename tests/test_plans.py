@@ -262,8 +262,25 @@ def test_bloom_bitset_is_broadcast_and_bounded(spark):
 
 def test_decontaminate_is_equijoin(spark):
     # The gram match must be an equi-join on the hash (shuffle or
-    # AQE-broadcast), never a nested-loop/cartesian product.
-    plan = _plan(spark, "decontaminate")
+    # AQE-broadcast), never a nested-loop/cartesian product. Train and
+    # eval are disjoint slices of the near-dup corpus, so copies and
+    # mutants straddle the split.
+    from pyspark.sql import functions as F
+
+    from cir_duplicate_detector_spark.operators import textops
+    from cir_duplicate_detector_spark.sources.derived import (
+        derive_near_dup_corpus,
+    )
+    from cir_duplicate_detector_spark.sources.tables import load_table
+
+    docs = derive_near_dup_corpus(load_table(spark, SF, "documents"))
+    split = F.expr("(doc_id div 1000000 * 7 + doc_id) % 10")
+    plan = (
+        textops.decontaminate(docs.where(split != 7), docs.where(split == 7))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -360,16 +377,6 @@ def test_url_duplicates_capped_drops_planted_viral_group(spark):
     assert not [
         r for r in rows if "VG" in (r["url_duplicates"] or "")
     ]
-
-
-def test_quality_classifier_learned_scoring_is_broadcast_only(spark):
-    # Scoring = per-row features + a ONE-ROW broadcast model join: the
-    # scored side must never shuffle. The only exchanges in the whole
-    # plan belong to the training aggregation (which reduces to one
-    # row); the scoring join is a broadcast nested-loop (cross) join.
-    plan = _plan(spark, "quality_classifier_learned")
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
 def test_shared_artifacts_build_once_and_serve_from_parquet(spark):

@@ -262,43 +262,3 @@ def test_ppm_encode_decode_roundtrip(w, h, comment, with_comment):
     assert arr.shape == (h, w, 3)
     assert bytes(arr.tobytes()) == raster
     assert arr.dtype == np.uint8
-
-
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=6),
-            st.integers(min_value=1, max_value=6),
-            st.booleans(),
-        ),
-        min_size=1,
-        max_size=5,
-    ),
-    st.integers(min_value=0, max_value=200),
-)
-@settings(max_examples=50, deadline=None)
-def test_concat_ppm_stream_parses_every_frame(dims, seed):
-    # The concatenated-PPM stream contract of `_parse_ppm_at`'s
-    # next_pos: frames of ARBITRARY mixed sizes (some with header comments)
-    # packed back-to-back must parse out one by one with exact pixels
-    # and exact offsets, ending precisely at the payload's end.
-    from cir_duplicate_detector_spark.operators.pdqimage import (
-        _parse_ppm_at,
-    )
-
-    frames, payload = [], b""
-    for fno, (w, h, comment) in enumerate(dims):
-        raster = bytes(
-            (i * 31 + seed + fno) % 256 for i in range(w * h * 3)
-        )
-        head = b"P6\n"
-        if comment:
-            head += b"# frame %d\n" % fno
-        payload += head + f"{w} {h}\n255\n".encode() + raster
-        frames.append((w, h, raster))
-    pos = 0
-    for w, h, raster in frames:
-        arr, pos = _parse_ppm_at(payload, pos)
-        assert arr.shape == (h, w, 3)
-        assert bytes(arr.tobytes()) == raster
-    assert pos == len(payload)

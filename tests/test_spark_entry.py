@@ -9,15 +9,10 @@ import __spark_entry__ as entry_mod
 # names here too, so the removal is explicit.
 REGISTERED = {
     "bigram_novelty", "bloom_dedup", "bloom_dedup_streaming",
-    "bloom_index_roundtrip", "bm25_index_roundtrip", "bm25_route",
-    "bm25_route_streaming", "bm25_search", "boilerplate_removal",
-    "boilerplate_screen", "boilerplate_screen_streaming",
-    "chunk_dedup", "cluster_representatives", "corpus_curation",
-    "corpus_drift", "corpus_upsert", "corpus_upsert_streaming",
-    "curation_pipeline", "dataset_split", "decontaminate",
-    "decontaminate_fuzzy", "decontaminate_fuzzy_canonical",
-    "decontaminate_scrub", "decontaminate_scrub_streaming",
-    "decontamination_report", "dedup_containment",
+    "bloom_index_roundtrip", "chunk_dedup",
+    "cluster_representatives", "corpus_curation", "corpus_drift",
+    "corpus_upsert", "corpus_upsert_streaming", "curation_pipeline",
+    "dataset_split", "dedup_containment",
     "dedup_containment_canonical", "dedup_exact",
     "dedup_exact_normalized", "dedup_exact_streaming",
     "dedup_incremental", "dedup_lsh_screen",
@@ -25,25 +20,22 @@ REGISTERED = {
     "dedup_ngram_jaccard", "dedup_simhash", "dedup_simhash_pairs",
     "detect_duplicates", "doc_chunks", "doc_fingerprint",
     "doc_repetition", "doc_topk_similar", "domain_mixture",
-    "dsir_score", "dsir_score_streaming", "dsir_weights",
     "dup_clusters", "dup_labels_compact", "dup_labels_roundtrip",
-    "dup_labels_upsert", "dup_labels_upsert_streaming", "dup_overlap",
-    "dup_weighting", "fuzzy_decon_recall", "hash_decode",
+    "dup_labels_upsert", "dup_labels_upsert_streaming",
+    "dup_overlap", "dup_weighting", "hash_decode",
     "hash_explode_dedup", "image_pdq_hashes", "image_pdq_near_dup",
     "lang_id", "lsh_index_merge", "lsh_index_roundtrip",
     "minhash_recall", "ngram_topk", "pack_sequences",
     "pdq_duplicates_banded", "pdq_duplicates_naive",
     "pdq_duplicates_probed", "pdq_duplicates_t08_probe30",
     "pdq_duplicates_t08_probed", "pdq_pairs", "pii_redact",
-    "quality_band", "quality_classifier",
-    "quality_classifier_agreement", "quality_classifier_learned",
-    "quality_classifier_learned_streaming",
-    "quality_classifier_streaming", "sentence_dedup",
-    "sentence_screen", "sentence_screen_streaming", "shard_assign",
+    "quality_band", "sentence_dedup", "sentence_screen",
+    "sentence_screen_streaming", "shard_assign",
     "stratified_sample", "substring_dup", "text_quality",
     "tfidf_topterms", "token_budget_sample", "token_count",
     "upsert_labels_agreement", "url_duplicates",
-    "url_duplicates_capped", "url_duplicates_probed", "url_normalize",
+    "url_duplicates_capped", "url_duplicates_probed",
+    "url_normalize",
 }
 
 
