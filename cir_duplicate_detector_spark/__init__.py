@@ -14,13 +14,15 @@ importing the package loads only the detector.
 Each detector call is one lazy SQL statement (``operators/statement.py``);
 the only eager steps are the optional input validation (`validate=True`),
 mirroring the reference's eager ValueError behavior, and the documented
-auto-tuning scans.
+auto-tuning scans. The validation action runs on its own thread while the
+statement builds; the call returns only once it has finished.
 """
 
 from __future__ import annotations
 
 import warnings
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame
 
 from .functions.hashes import (
@@ -90,13 +92,16 @@ def detect_duplicates(
     replicate the reference API (SURVEY §2.6).
 
     ``validate=True`` runs one eager guard action (a fused index-uniqueness
-    and emptiness aggregate) with the reference's ValueError/warning;
-    pass ``False`` to keep the plan fully lazy on very large inputs.
+    and emptiness aggregate) with the reference's ValueError/warning.
+    The action runs concurrently with the statement build, and the call
+    waits for it; its ValueError wins over any error of the build (an
+    invalid threshold, say). Pass ``False`` to keep the plan fully lazy
+    on very large inputs.
 
     ``indexes_to_check`` may be a list (one bound array parameter — the
-    reference shape, for small probe sets) or a DataFrame (broadcast
-    semi-join — for probe sets that are query outputs; no driver
-    round-trip).
+    reference shape, for small probe sets) or a DataFrame (a broadcast
+    semi-join — for probe sets that are query outputs; see
+    :mod:`operators.probes`).
 
     ``max_hex_len`` defaults to ``64`` (standard 256-bit PDQ hashes) so
     no hash-length detection scan runs; longer hashes raise at row time
@@ -118,36 +123,36 @@ def detect_duplicates(
     if "index" not in cols:
         raise ValueError("dataframe needs an `index` column (unique entry id)")
 
-    if validate:
-        top = Statement(views={"work": df}).run(_GUARD).head(1)
-        if top and top[0]["c"] > 1:
-            raise ValueError("`index` values must be unique")
-        if not top:
-            warnings.warn("input dataframe is empty; returning empty result")
-
-    probe = Probe(indexes_to_check)
-    stmt = probe.statement(df)
-    if has_url:
-        add_url_groups(stmt, probe)
-    if has_pdq:
-        plan = resolve_plan(
-            df,
-            probe,
-            pqd_hash_similarity_threshold,
-            pdq_duplicate_detection_method,
-            max_hex_len,
-            "detect_duplicates",
-        )
-        add_pdq_duplicates(stmt, probe, plan)
-    if has_url and has_pdq:
-        return stmt.run(
-            "SELECT coalesce(u.index, p.index) AS index, u.url_duplicates,"
-            " p.pdq_hash_duplicates, p.pdq_hash_similarities"
-            " FROM url_result u FULL OUTER JOIN pdq_result p ON u.index = p.index"
-        )
-    if has_url:
-        return stmt.run("SELECT index, url_duplicates FROM url_result")
-    return stmt.run("SELECT * FROM pdq_result")
+    guard = _Guard(df) if validate else None
+    try:
+        probe = Probe(indexes_to_check)
+        stmt = probe.statement(df)
+        if has_url:
+            add_url_groups(stmt, probe)
+        if has_pdq:
+            plan = resolve_plan(
+                df,
+                probe,
+                pqd_hash_similarity_threshold,
+                pdq_duplicate_detection_method,
+                max_hex_len,
+                "detect_duplicates",
+            )
+            add_pdq_duplicates(stmt, probe, plan)
+        if has_url and has_pdq:
+            return stmt.run(
+                "SELECT coalesce(u.index, p.index) AS index, u.url_duplicates,"
+                " p.pdq_hash_duplicates, p.pdq_hash_similarities"
+                " FROM url_result u FULL OUTER JOIN pdq_result p"
+                " ON u.index = p.index"
+            )
+        if has_url:
+            return stmt.run("SELECT index, url_duplicates FROM url_result")
+        return stmt.run("SELECT * FROM pdq_result")
+    finally:
+        # A guard error raised here replaces any error of the build.
+        if guard is not None:
+            guard.check()
 
 
 # The fused guard, one action: the largest row count under one index
@@ -155,4 +160,38 @@ def detect_duplicates(
 # for an empty input. ORDER BY ... LIMIT 1 takes the top row of each
 # aggregated partition and merges them on the driver, so the action
 # runs two jobs (the aggregation's map stage and the result stage).
+# `_Guard` runs them while the caller builds the statement.
 _GUARD = "SELECT count(1) AS c FROM {work} GROUP BY index ORDER BY c DESC LIMIT 1"
+
+
+class _Guard:
+    """The :data:`_GUARD` action over ``df``, started on its own thread
+    so that its two jobs run while the caller builds the statement.
+
+    An ``InheritableThread`` carries the caller's Spark local
+    properties (job group, description, scheduler pool) to the guard's
+    jobs; a plain thread would submit them outside the caller's group.
+    """
+
+    def __init__(self, df: DataFrame):
+        self._top: list | None = None
+        self._error: Exception | None = None
+        self._thread = InheritableThread(target=self._run, args=(df,), daemon=True)
+        self._thread.start()
+
+    def _run(self, df: DataFrame) -> None:
+        try:
+            self._top = Statement(views={"work": df}).run(_GUARD).head(1)
+        except Exception as e:  # re-raised on the caller's thread
+            self._error = e
+
+    def check(self) -> None:
+        """Wait for the action, then raise or warn as the reference
+        does."""
+        self._thread.join()
+        if self._error is not None:
+            raise self._error
+        if self._top and self._top[0]["c"] > 1:
+            raise ValueError("`index` values must be unique")
+        if not self._top:
+            warnings.warn("input dataframe is empty; returning empty result")

@@ -21,8 +21,8 @@ Shuffles per layer:
 * decode: none — the per-row hash dedup
   (``explode(array_distinct(filter(...)))``) and the decode run in the
   scan tasks;
-* naive, no probe set: a round-robin repartition of the probe side,
-  then both sides of the ``(g_i, g_j)`` shuffled hash join;
+* naive, no probe set: both sides of the ``(g_i, g_j)`` shuffled hash
+  join;
 * naive, probed: a round-robin repartition of the corpus; the probe
   rows broadcast;
 * banded: both band sides hash-partition on ``(band_id, band_val)``;
@@ -221,7 +221,7 @@ def _grid_size(parallelism: int) -> int:
     return max(2, math.isqrt(parallelism * 8))
 
 
-def _grid_sql(p: str, c: str, grid: int, slices: int) -> str:
+def _grid_sql(p: str, c: str, grid: int) -> str:
     """Distributed block-nested-loop over SELECT texts ``p`` (columns
     ``p_index``, ...) and ``c`` (``c_index``, ...): every probe row
     meets every corpus row exactly once, with NO broadcast of either
@@ -235,11 +235,11 @@ def _grid_sql(p: str, c: str, grid: int, slices: int) -> str:
     ever ships to the driver or an executor's broadcast memory, so the
     O(N·M) scan distributes at any corpus size.
 
-    The probe side is repartitioned into ``slices`` BEFORE the ×grid
-    explode (narrow from there on): a single small parquet file is one
-    scan partition, which would pin the whole O(N·M) probe work to one
-    task when the optimizer broadcasts the small grid side instead of
-    shuffling.
+    Neither side is repartitioned first, even when a small parquet file
+    is one scan partition: the join's own ``(g_i, g_j)`` exchange, which
+    the SHUFFLE_HASH hint below keeps, already spreads the O(N·M) work
+    over the grid's cells. Only a broadcast of the grid side would leave
+    the probe rows in their scan partitions.
 
     The SHUFFLE_HASH hint pins a shuffled hash join building the corpus
     cell (it wins over AQE's size estimate). Letting AQE broadcast the
@@ -257,7 +257,7 @@ def _grid_sql(p: str, c: str, grid: int, slices: int) -> str:
         "SELECT /*+ SHUFFLE_HASH(cg) */ * FROM"
         f" (SELECT *, CAST(pmod(crc32(p_index), {grid}) AS INT) AS g_i,"
         f" explode(sequence(0, {grid - 1})) AS g_j"
-        f" FROM (SELECT /*+ REPARTITION({slices}) */ * FROM ({p}))) pg"
+        f" FROM ({p})) pg"
         f" JOIN (SELECT *, CAST(pmod(crc32(c_index), {grid}) AS INT) AS g_j,"
         f" explode(sequence(0, {grid - 1})) AS g_i FROM ({c})) cg"
         " USING (g_i, g_j)"
@@ -267,7 +267,9 @@ def _grid_sql(p: str, c: str, grid: int, slices: int) -> str:
 def _scan_sql(p: str, c: str, slices: int) -> str:
     """Probe-restricted scan over SELECT texts ``p`` and ``c``: the
     probe rows broadcast and the corpus streams (the reference's
-    asymmetric probe/corpus shape, P9)."""
+    asymmetric probe/corpus shape, P9). The corpus is repartitioned into
+    ``slices`` first: it is never shuffled on this path, so a corpus
+    read as one scan partition would otherwise stream through one task."""
     return (
         "SELECT /*+ BROADCAST(pb) */ * FROM"
         f" (SELECT /*+ REPARTITION({slices}) */ * FROM ({c})) cs"
@@ -303,13 +305,12 @@ def _naive_sql(
     terms (at n=26 the first word alone kills ~92% of random pairs;
     measured 4.2 s -> 3.2 s on the 30k-hash grid scan).
     """
-    slices = parallelism * 2
     ps = f"SELECT {_prefixed('p')} FROM {p}"
     cs = f"SELECT {_prefixed('c')} FROM {c}"
     if broadcast_probe:
-        joined = _scan_sql(ps, cs, slices)
+        joined = _scan_sql(ps, cs, 2 * parallelism)
     else:
-        joined = _grid_sql(ps, cs, _grid_size(parallelism), slices)
+        joined = _grid_sql(ps, cs, _grid_size(parallelism))
     cascade = " AND ".join(
         " + ".join(_HAMMING_TERMS[: j + 1]) + " <= :n_bits"
         for j in range(NUM_CHUNKS64)
@@ -328,13 +329,12 @@ def _bits_sql(p: str, c: str, broadcast_probe: bool, parallelism: int) -> str:
     with the padded Hamming kernel. Slower than the chunked fast path;
     only selected when long hashes are actually present.
     """
-    slices = parallelism * 2
     ps = f"SELECT index AS p_index, bits AS p_bits FROM {p}"
     cs = f"SELECT index AS c_index, bits AS c_bits FROM {c}"
     if broadcast_probe:
-        joined = _scan_sql(ps, cs, slices)
+        joined = _scan_sql(ps, cs, 2 * parallelism)
     else:
-        joined = _grid_sql(ps, cs, _grid_size(parallelism), slices)
+        joined = _grid_sql(ps, cs, _grid_size(parallelism))
     dist = bits_hamming_sql("p_bits", "c_bits")
     return (
         "SELECT index, dup, dist FROM (SELECT p_index AS index, c_index AS dup,"
@@ -601,9 +601,9 @@ def find_pdq_hash_duplicates(
 
     ``indexes_to_check``: list → one bound array parameter (reference
     shape, small probe sets); DataFrame → broadcast semi-join (probe
-    sets that are query outputs; no driver round-trip). Either way the
-    restricted probe side is the broadcast side of the similarity join
-    (P9).
+    sets that are query outputs; see ``operators/probes.py``). Either
+    way the restricted probe side is the broadcast side of the
+    similarity join (P9).
 
     Defaults mirror the reference's inner function
     (``pdq_hash.py:76-81``: t=0.2, method "bk-tree"); note the top-level

@@ -6,8 +6,9 @@ one array parameter, which is the cheapest shape for the reference's
 interactive probe sizes. At cluster scale a probe set can itself be the
 output of a query (millions of ids); a driver-side list then bloats the
 plan and serializes through the driver. For that case both operators
-also accept a DataFrame, which joins as a broadcast semi-join —
-distributed end to end, no driver round-trip.
+also accept a DataFrame, which joins as a broadcast semi-join. The
+broadcast does gather the ids on the driver, once per call, but inside
+the statement's own jobs: they never reach the plan or the SQL text.
 """
 
 from __future__ import annotations
@@ -26,9 +27,11 @@ class Probe:
     * A list: bound as the ``:probes`` array parameter. An empty list
       warns like the reference, and the statement returns no rows.
     * A DataFrame: bound as the ``{probe}`` view behind one ``probe_ids``
-      CTE of distinct string ids. Every layer of the statement reads
-      that CTE; the identical subtrees share one exchange, so the probe
-      frame is evaluated once per call.
+      CTE of its non-null ids as strings, duplicates kept (a semi-join
+      and an ``EXISTS`` ignore them, so no DISTINCT shuffle runs). Every
+      layer of the statement reads that CTE through the same broadcast;
+      Spark plans it once and reuses it (``ReusedExchange``), so the
+      probe frame is evaluated once per call.
     """
 
     def __init__(self, indexes_to_check: list[str] | DataFrame | None):
@@ -52,8 +55,8 @@ class Probe:
         if self.frame is not None:
             stmt.views["probe"] = self.frame
             stmt.ctes.append(
-                "probe_ids AS (SELECT DISTINCT CAST(index AS STRING) AS index"
-                " FROM {probe})"
+                "probe_ids AS (SELECT CAST(index AS STRING) AS index"
+                " FROM {probe} WHERE index IS NOT NULL)"
             )
         elif self.ids is not None:
             stmt.args["probes"] = self.ids
@@ -74,8 +77,9 @@ class Probe:
         ``probed`` (a probe set must be given)."""
         if self.frame is not None:
             return (
-                "SELECT /*+ BROADCAST(pi) */ r.*, pi.index IS NOT NULL AS probed"
-                f" FROM {rows} r LEFT JOIN probe_ids pi ON r.index = pi.index"
+                "SELECT r.*, EXISTS (SELECT /*+ BROADCAST(pi) */ 1"
+                " FROM probe_ids pi WHERE pi.index = r.index) AS probed"
+                f" FROM {rows} r"
             )
         return f"SELECT *, array_contains(:probes, index) AS probed FROM {rows}"
 

@@ -20,7 +20,7 @@ How the plan is built: :func:`add_url_groups` returns the layer as CTE
 text (see ``operators/statement.py``); :func:`find_url_duplicates` runs
 it alone and ``detect_duplicates`` composes it with the PDQ layer.
 Shuffles: the window's hash partitioning on ``base_url``; a DataFrame
-probe set adds a broadcast of its distinct ids; ``max_group_size`` adds
+probe set adds a broadcast of its ids; ``max_group_size`` adds
 the count pre-pass's aggregation.
 
 Scale notes (100 TB): the window shuffle partitions by ``base_url``; a
@@ -120,7 +120,7 @@ def find_url_duplicates(
     ``indexes_to_check``: a list binds as one array parameter (reference
     shape, right for small interactive probe sets); a DataFrame joins as
     a broadcast semi-join (right for probe sets that are themselves
-    query outputs — no driver round-trip). Requires unique ``index``
+    query outputs; see ``operators/probes.py``). Requires unique ``index``
     values: the standalone function removes ALL occurrences of a row's
     own index from its group (``array_remove``); ``detect_duplicates``
     enforces uniqueness when ``validate=True``.

@@ -99,3 +99,17 @@ def golden_df(spark):
 
 def rows_by_index(df) -> dict:
     return {r["index"]: r.asDict() for r in df.collect()}
+
+
+def job_ids_in_group(spark, group: str, fn) -> list[int]:
+    """Ids of the Spark jobs that ``fn()`` submits under job group
+    ``group`` (a name no other call uses)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    # The status tracker is filled from the listener bus, asynchronously.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))

@@ -13,7 +13,13 @@ import pytest
 
 from cir_duplicate_detector_spark import detect_duplicates
 
-from .conftest import BACKENDS, ENTRIES_SCHEMA, GOLDEN_EXPECTED, rows_by_index
+from .conftest import (
+    BACKENDS,
+    ENTRIES_SCHEMA,
+    GOLDEN_EXPECTED,
+    job_ids_in_group,
+    rows_by_index,
+)
 
 
 @pytest.mark.parametrize("method", BACKENDS)
@@ -65,6 +71,26 @@ def test_non_unique_index_raises(spark, golden_df):
         detect_duplicates(dup)
 
 
+def test_non_unique_index_wins_over_build_error(golden_df):
+    # The guard runs while the statement builds; its error is still the
+    # one raised when the build fails too (here: threshold out of range).
+    dup = golden_df.union(golden_df.limit(1))
+    with pytest.raises(ValueError, match="unique"):
+        detect_duplicates(dup, pqd_hash_similarity_threshold=1.5)
+
+
+def test_guard_jobs_run_in_callers_job_group(spark, golden_df):
+    # Without an action on the result, the guard's two jobs are the
+    # call's only jobs. Run from another thread, they must still carry
+    # the caller's job group.
+    jobs = job_ids_in_group(
+        spark,
+        "detect-guard",
+        lambda: detect_duplicates(golden_df, pqd_hash_similarity_threshold=0.9),
+    )
+    assert len(jobs) == 2, jobs
+
+
 def test_empty_input_warns_and_returns_empty(spark):
     empty = spark.createDataFrame([], ENTRIES_SCHEMA)
     with warnings.catch_warnings(record=True) as w:
@@ -107,6 +133,24 @@ def test_indexes_to_check_bidirectional(golden_df):
     assert set(got) == {"UW0004", "UW0005"}
     assert got["UW0005"]["pdq_hash_duplicates"] == ["UW0004"]
     assert got["UW0004"]["pdq_hash_duplicates"] == ["UW0005"]
+
+
+def test_probe_frame_duplicate_and_null_ids(spark, golden_df):
+    # The probe ids are neither deduplicated nor null-free in the frame;
+    # a repeated id must not repeat rows, and a null id matches nothing.
+    probe = spark.createDataFrame(
+        [("UW0005",), ("UW0007",), ("UW0005",), (None,)], "index string"
+    )
+    by_frame = rows_by_index(
+        detect_duplicates(golden_df, probe, pqd_hash_similarity_threshold=0.9)
+    )
+    by_list = rows_by_index(
+        detect_duplicates(
+            golden_df, ["UW0005", "UW0007"], pqd_hash_similarity_threshold=0.9
+        )
+    )
+    assert by_frame == by_list
+    assert {"UW0004", "UW0005", "UW0007"} <= set(by_frame)
 
 
 def test_input_not_mutated(golden_df):

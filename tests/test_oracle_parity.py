@@ -5,8 +5,8 @@ parquet tables, then compares row counts and order-insensitive values —
 the same comparison shape the driver performs (row-count + schema +
 value-hash).
 
-Default profile vs full sweep: the full 182-query sweep takes ~50 min,
-so the default run checks every duplicate-detector row (the 13
+Default profile vs full sweep: the full sweep takes about 6 min on 4
+cores, so the default run checks every duplicate-detector row (the 13
 ``CORE_QUERIES``) plus a fixed ~15-query extension sample (chosen by
 ``sha256("parity:{PARITY_SAMPLE_KEY}:{name}")`` — the `test_parity_sf01`
 pattern, salted differently so the two samples cover different rows),

@@ -39,6 +39,48 @@ def test_pdq_naive_self_join_never_broadcasts_corpus(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
 
 
+def _final_plan(df) -> str:
+    """AQE's final physical plan of ``df``, after running it."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
+
+
+def test_pdq_naive_round_robin_only_when_probed(spark, golden_df):
+    # The grid join's SHUFFLE_HASH exchange already spreads the
+    # self-join's cells, so its probe side is not repartitioned. The
+    # probed scan broadcasts the probe rows and never shuffles the
+    # corpus, so its one repartition stays.
+    from cir_duplicate_detector_spark.operators.pdq import (
+        find_pdq_hash_duplicates,
+    )
+
+    plain = _final_plan(find_pdq_hash_duplicates(golden_df, None, 0.9, "naive"))
+    assert "RoundRobinPartitioning" not in plain
+    probed = _final_plan(
+        find_pdq_hash_duplicates(golden_df, ["UW0001"], 0.9, "naive")
+    )
+    assert probed.count("RoundRobinPartitioning") == 1
+
+
+def test_detect_scans_probe_frame_once(spark, golden_df):
+    # Both layers read the probe frame through one broadcast, planned
+    # once and reused, with no aggregate (DISTINCT) over the ids. The
+    # probe frame is the plan's only one-column scan; the symmetrize
+    # aggregate is an ObjectHashAggregate.
+    import re
+
+    import cir_duplicate_detector_spark as cds
+
+    probe = spark.createDataFrame([("UW0001",), ("UW0004",)], "index string")
+    plan = _final_plan(
+        cds.detect_duplicates(golden_df, probe, pqd_hash_similarity_threshold=0.9)
+    )
+    assert len(re.findall(r"Scan ExistingRDD\[index#\d+\]", plan)) == 1
+    assert plan.count("ReusedExchange") == 1
+    assert re.search(r"ReusedExchange \[index#\d+\], BroadcastExchange", plan)
+    assert re.search(r"(?<!Object)HashAggregate", plan) is None
+
+
 def test_grid_join_covers_all_pairs(spark):
     from pyspark.sql import functions as F
 
@@ -46,7 +88,7 @@ def test_grid_join_covers_all_pairs(spark):
 
     p = spark.range(37).select(F.col("id").cast("string").alias("p_index"))
     c = spark.range(41).select(F.col("id").cast("string").alias("c_index"))
-    grid = _grid_sql("SELECT * FROM {p}", "SELECT * FROM {c}", 4, 8)
+    grid = _grid_sql("SELECT * FROM {p}", "SELECT * FROM {c}", 4)
     got = spark.sql(f"SELECT p_index, c_index FROM ({grid})", p=p, c=c)
     # Every (probe, corpus) pair exactly once — the BNL contract.
     assert got.count() == 37 * 41

@@ -10,7 +10,14 @@ from cir_duplicate_detector_spark import detect_duplicates
 from cir_duplicate_detector_spark.operators.pdq import find_pdq_hash_duplicates
 from cir_duplicate_detector_spark.operators.url_dedup import find_url_duplicates
 
-from .conftest import ENTRIES_SCHEMA, HASH_A, HASH_B1, HASH_B1_NEAR, rows_by_index
+from .conftest import (
+    ENTRIES_SCHEMA,
+    HASH_A,
+    HASH_B1,
+    HASH_B1_NEAR,
+    job_ids_in_group,
+    rows_by_index,
+)
 
 # Index values that would break, or change, a statement if they reached
 # its SQL text or its str.format template.
@@ -103,3 +110,24 @@ def test_validate_runs_one_guard_action(golden_df, monkeypatch):
         monkeypatch.setattr(cls, name, wrapped)
     detect_duplicates(golden_df, pqd_hash_similarity_threshold=0.9)
     assert actions == ["collect"]
+
+
+@pytest.mark.parametrize("probe_mode, jobs", [("none", 8), ("frame", 9)])
+def test_call_runs_pinned_job_count(spark, golden_df, probe_mode, jobs):
+    # Jobs of one validated call plus collect(): the guard's two, then
+    # one per query stage of the statement (a DataFrame probe set adds
+    # its broadcast). A new exchange, broadcast or eager step shows up
+    # here as one more job.
+    probe = (
+        spark.createDataFrame([("UW0001",), ("UW0004",)], "index string")
+        if probe_mode == "frame"
+        else None
+    )
+    got = job_ids_in_group(
+        spark,
+        f"detect-jobs-{probe_mode}",
+        lambda: detect_duplicates(
+            golden_df, probe, pqd_hash_similarity_threshold=0.9
+        ).collect(),
+    )
+    assert len(got) == jobs, got
