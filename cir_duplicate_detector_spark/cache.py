@@ -25,9 +25,7 @@ from __future__ import annotations
 
 import atexit
 import shutil
-import sys
 import tempfile
-import time
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,73 +44,10 @@ def _cleanup_shared_dirs() -> None:
 atexit.register(_cleanup_shared_dirs)
 
 
-# Latest per-invocation dir per roundtrip family (keyed by prefix),
-# plus the one before it: re-invoking the same roundtrip query evicts
-# the family's GRAND-previous dir, so a long-lived session (bench
-# min-of-2 loops, 10x sweeps) holds at most two parquet copies per
-# family instead of one per invocation (ADVICE r12). Retaining one
-# superseded generation (VERDICT r13 item 5 / ADVICE r13) means the
-# common overlap — a caller still holding the previous invocation's
-# lazy result while the next invocation builds — reads intact parquet;
-# only a result held across TWO re-invocations can dangle, and its dir
-# is left as a tombstone (`TOMBSTONE` marker file in an otherwise-empty
-# dir) so the failure is a plan-time "path does not exist" naming the
-# evicted dir, not a FileNotFoundException from deep inside a task.
-_FAMILY_DIRS: dict[str, str] = {}
-_FAMILY_PREV: dict[str, str] = {}
-
-TOMBSTONE = "TOMBSTONE_EVICTED_BY_REINVOKE"
-
 # Every family cache dict ever passed to `shared_artifact`, so the
 # stale-application sweep can evict superseded dirs for families the
 # new application never re-touches (ADVICE r12).
 _FAMILY_CACHES: list[dict] = []
-
-# Per-prefix seconds spent INSIDE `shared_artifact` builds (round 15,
-# VERDICT r14 item 3): the memoized build runs once per (application,
-# corpus), so later calls time serve-only and the cold build cost is
-# recorded here (and printed to stderr) instead. Accumulates across
-# applications in one process; keyed by prefix.
-ARTIFACT_BUILD_SECONDS: dict[str, float] = {}
-
-
-def tracked_mkdtemp(prefix: str) -> str:
-    """``tempfile.mkdtemp`` registered for atexit removal — for the
-    per-invocation roundtrip queries (build → parquet → read → serve),
-    which deliberately stay OFF the memoized `shared_artifact` path
-    (their build cost is the thing on the clock) but must not leak a
-    /tmp dir per bench run (review r12). Within-session usage is
-    bounded to TWO live dirs per ``prefix`` family (current + previous
-    — VERDICT r13 item 5): a lazy result held across one re-invoke
-    still reads intact parquet; the grand-previous dir is emptied down
-    to a ``TOMBSTONE`` marker so a result held across two re-invokes
-    fails with the evicted path named at plan time."""
-    import os
-
-    old = _FAMILY_PREV.pop(prefix, None)
-    if old is not None:
-        shutil.rmtree(old, ignore_errors=True)
-        # Recreate as a tombstone: the dir exists (listable, marker
-        # names the cause) but holds no data, so a stale lazy reader
-        # of `{old}/<part>` fails at plan time with the path in the
-        # message. The dir stays in _SHARED_DIRS for atexit removal.
-        try:
-            os.makedirs(old, exist_ok=True)
-            with open(os.path.join(old, TOMBSTONE), "w") as f:
-                f.write(
-                    f"evicted by a later tracked_mkdtemp({prefix!r}): "
-                    "roundtrip results must be consumed within two "
-                    "re-invocations of their family\n"
-                )
-        except OSError:
-            pass
-    prev = _FAMILY_DIRS.pop(prefix, None)
-    if prev is not None:
-        _FAMILY_PREV[prefix] = prev
-    d = tempfile.mkdtemp(prefix=prefix)
-    _SHARED_DIRS.append(d)
-    _FAMILY_DIRS[prefix] = d
-    return d
 
 
 def shared_artifact(
@@ -153,13 +88,7 @@ def shared_artifact(
                 _SHARED_DIRS.remove(old_dir)
     d = tempfile.mkdtemp(prefix=prefix)
     _SHARED_DIRS.append(d)
-    t0 = time.perf_counter()
     val = build(d)
-    elapsed = time.perf_counter() - t0
-    ARTIFACT_BUILD_SECONDS[prefix] = (
-        ARTIFACT_BUILD_SECONDS.get(prefix, 0.0) + elapsed
-    )
-    print(f"# artifact {prefix}: {elapsed:.3f}s", file=sys.stderr)
     cache[key] = (d, val)
     return val
 

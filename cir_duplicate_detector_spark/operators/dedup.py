@@ -171,17 +171,13 @@ def shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    hashed: DataFrame, k: int = MINHASH_K, keep: "tuple[str, ...]" = ()
-) -> DataFrame:
-    """(doc_id, *keep, m0..m{k-1}): k-way minhash signature, computed
+def minhash_signatures(hashed: DataFrame, k: int = MINHASH_K) -> DataFrame:
+    """(doc_id, m0..m{k-1}): k-way minhash signature, computed
     entirely per-row — each lane is an ``array_min`` over an arithmetic
     rehash of the shingle-hash array (:func:`hashed_shingle_arrays`).
     No explode, no aggregation: signature construction is shuffle-free
     regardless of corpus size, which is what lets the LSH band join be
-    the FIRST shuffle of the whole pipeline. ``keep`` passes extra
-    columns through (the streaming label-upsert twin carries ``hs``
-    alongside its lanes — a stream cannot self-join it back).
+    the FIRST shuffle of the whole pipeline.
 
     NOTE the one-arg lambda: ``F.transform`` passes the ARRAY INDEX as
     a second argument to two-arg lambdas, which would silently replace
@@ -193,22 +189,13 @@ def minhash_signatures(
         ).alias(f"m{j}")
         for j in range(k)
     ]
-    return hashed.select("doc_id", *keep, *lanes)
+    return hashed.select("doc_id", *lanes)
 
 
-def banded_keys(
-    signatures: DataFrame,
-    bands: int = LSH_BANDS,
-    keep: "tuple[str, ...]" = (),
-) -> DataFrame:
-    """``(doc_id, *keep, band_id, band_key)`` — one row per LSH band per
+def banded_keys(signatures: DataFrame, bands: int = LSH_BANDS) -> DataFrame:
+    """``(doc_id, band_id, band_key)`` — one row per LSH band per
     doc; band key = md5 of the band's signature rows. Pure per-row
-    projection + explode (streaming-safe: no shuffle, no state), shared
-    by :func:`lsh_candidates` (self-join both sides) and
-    :func:`lsh_screen` (stream-static probe side). ``keep`` passes
-    extra columns through the explode — the streaming label-upsert twin
-    carries the per-row shingle array alongside its band keys because a
-    stream cannot self-join to fetch it back."""
+    projection + explode (no shuffle)."""
     rows = MINHASH_K // bands
     band_cols = []
     for b in range(bands):
@@ -219,8 +206,8 @@ def banded_keys(
         )
         band_cols.append(F.struct(F.lit(b).alias("band_id"), key.alias("band_key")))
     return signatures.select(
-        "doc_id", *keep, F.explode(F.array(*band_cols)).alias("band")
-    ).select("doc_id", *keep, "band.band_id", "band.band_key")
+        "doc_id", F.explode(F.array(*band_cols)).alias("band")
+    ).select("doc_id", "band.band_id", "band.band_key")
 
 
 def lsh_candidates(signatures: DataFrame, bands: int = LSH_BANDS) -> DataFrame:
@@ -262,7 +249,6 @@ def jaccard_pairs(
     *,
     candidate_count: int | None = None,
     broadcast_max_pairs: int = JACCARD_BROADCAST_MAX_PAIRS,
-    hashed_b: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard verification of candidate pairs.
 
@@ -294,11 +280,6 @@ def jaccard_pairs(
 
     Jaccard = i / (|A| + |B| - i) over exact ints — bitwise equal to the
     DuckDB oracle.
-
-    ``hashed_b`` supplies a SEPARATE relation for the ``b`` side — the
-    cross-corpus case (:func:`label_upsert`: incoming ``a`` vs existing
-    ``b``). Default ``None`` keeps the self-join form; the join shapes
-    and the broadcast gate are identical either way.
     """
     cand = candidates.select("a", "b")
     if candidate_count is None:
@@ -311,7 +292,7 @@ def jaccard_pairs(
     with_a = hashed.select(
         F.col("doc_id").alias("a"), F.col("hs").alias("hs_a")
     ).join(hint(cand), "a")
-    full = (hashed if hashed_b is None else hashed_b).select(
+    full = hashed.select(
         F.col("doc_id").alias("b"), F.col("hs").alias("hs_b")
     ).join(hint(with_a), "b")
     i = F.size(F.array_intersect("hs_a", "hs_b"))
@@ -355,466 +336,6 @@ def minhash_near_duplicates(
     cands = materialize(lsh_candidates(sigs), checkpoint_dir)
     return jaccard_pairs(
         hashed, cands, threshold, candidate_count=cands.count()
-    )
-
-
-def lsh_screen(
-    existing: DataFrame, incoming: DataFrame, bands: int = LSH_BANDS
-) -> DataFrame:
-    """MinHash-LSH membership screen for continuous ingest — the
-    NEAR-duplicate analogue of :func:`bloom_filter_dedup`: the existing
-    corpus is indexed ONCE into its distinct ``(band_id, band_key)``
-    set; each incoming document computes its signature per-row (no
-    shuffle, no state — :func:`minhash_signatures` is a pure
-    projection) and probes the index with an equi-join. Returns
-    ``(doc_id, n_bands_hit, lsh_hit)`` per incoming doc: how many of
-    its bands collide with ANY indexed document, and the boolean
-    screen verdict.
-
-    This is the screen a 100 TB ingest pipeline runs BEFORE the
-    expensive verify: band collision ⊇ near-duplicates at the banding
-    operating point (no false negatives the banding itself wouldn't
-    have), so the downstream exact-Jaccard verify only prices
-    ``lsh_hit`` rows. Scale shape: the index is one distinct-key
-    relation (≤ bands × |corpus| rows, shrinking with duplication),
-    the probe side joins by equi-key — both sides shuffle-partitioned,
-    nothing broadcast by construction. The streaming twin
-    (`streaming.windows.streaming_lsh_screen`) runs the identical
-    expressions stream-side against the static index and shares this
-    operator's oracle by construction.
-    """
-    return lsh_screen_from_index(
-        lsh_band_index(existing, bands),
-        incoming,
-        bands,
-        index_is_distinct=True,
-    )
-
-
-def lsh_band_index(existing: DataFrame, bands: int = LSH_BANDS) -> DataFrame:
-    """The LSH membership index AS A RELATION: the existing corpus's
-    distinct ``(band_id, band_key)`` set — what :func:`lsh_screen`
-    builds in-session and what `lsh_index_roundtrip` persists to
-    parquet (two small deterministic columns, lossless on disk). At
-    most ``bands × |corpus|`` rows, shrinking with duplication; the
-    only structure continuous NEAR-dup ingest needs to keep."""
-    return (
-        banded_keys(minhash_signatures(hashed_shingle_arrays(existing)), bands)
-        .select("band_id", "band_key")
-        .dropDuplicates(["band_id", "band_key"])
-    )
-
-
-def lsh_screen_from_index(
-    index: DataFrame,
-    incoming: DataFrame,
-    bands: int = LSH_BANDS,
-    index_is_distinct: bool = False,
-) -> DataFrame:
-    """Probe half of :func:`lsh_screen`, serving from a prebuilt
-    ``(band_id, band_key)`` index relation — in-session
-    (:func:`lsh_band_index`) or read back from disk
-    (`lsh_index_roundtrip`'s serving path). Incoming signatures stay a
-    pure per-row projection; the probe is one equi-join, nothing
-    broadcast by construction.
-
-    The index is re-deduplicated defensively (round-9 advice): a
-    hand-built or multiply-appended parquet with repeated
-    ``(band_id, band_key)`` rows would otherwise multiply join rows
-    and silently inflate ``n_bands_hit``. Callers that PROVABLY hold
-    :func:`lsh_band_index` output (which is already distinct) pass
-    ``index_is_distinct=True`` to skip the redundant aggregation —
-    the in-session :func:`lsh_screen` composition does (a second
-    distinct on the hot path measured 2.4 → 4.2 s at sf0.1); unknown
-    relations (parquet reads, hand-built indexes) keep the guard."""
-    idx = index.select("band_id", "band_key")
-    if not index_is_distinct:
-        idx = idx.dropDuplicates(["band_id", "band_key"])
-    idx = idx.withColumn("hit", F.lit(1))
-    inc = banded_keys(
-        minhash_signatures(hashed_shingle_arrays(incoming)), bands
-    )
-    return (
-        inc.join(idx, ["band_id", "band_key"], "left")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_bands_hit")
-        )
-        .withColumn("lsh_hit", F.col("n_bands_hit") > 0)
-    )
-
-
-def incremental_dedup(
-    corpus: DataFrame,
-    batch: DataFrame,
-    k: int = 8,
-    bottom: int = 4,
-    min_shared: int = 2,
-) -> DataFrame:
-    """Admit only the genuinely-new documents of ``batch`` against an
-    existing ``corpus`` — the incremental form of dedup a continuously-
-    ingesting pipeline needs (the corpus is never re-clustered; only
-    the new batch is screened). Two stages, both anti-joins:
-
-    1. exact: drop batch docs whose md5(text) exists in the corpus —
-       a hash equi-join keyed on the 128-bit digest (the corpus side
-       reduces to distinct digests, so at 100 TB this is a compact
-       join against the digest index, not the text);
-    2. near: drop batch docs sharing >= ``min_shared`` of their
-       bottom-``bottom`` fingerprint hashes with any corpus doc
-       (`textops.doc_fingerprint` winnowing screen) — both fingerprint
-       indexes are bounded at ``bottom`` rows/doc, so the equi-join on
-       fp_hash shuffles O(bottom*N) regardless of text size.
-
-    Returns the admitted batch keys ``(doc_id)``.
-    """
-    from .textops import doc_fingerprint
-
-    exact_keys = corpus.select(F.md5("text").alias("text_hash")).dropDuplicates()
-    surv = (
-        batch.withColumn("text_hash", F.md5("text"))
-        .join(exact_keys, "text_hash", "anti")
-        .drop("text_hash")
-    )
-    fp_corpus = doc_fingerprint(corpus, k, bottom).select(
-        F.col("doc_id").alias("c"), "fp_hash"
-    )
-    fp_batch = doc_fingerprint(surv, k, bottom).select(
-        F.col("doc_id").alias("b"), "fp_hash"
-    )
-    near = (
-        fp_batch.join(fp_corpus, "fp_hash")
-        .groupBy("b", "c")
-        .agg(F.count("*").alias("n"))
-        .where(F.col("n") >= min_shared)
-        .select(F.col("b").alias("doc_id"))
-        .dropDuplicates()
-    )
-    return surv.join(near, "doc_id", "anti").select("doc_id")
-
-
-def label_upsert(
-    existing: DataFrame,
-    incoming: DataFrame,
-    labels: DataFrame | None = None,
-    threshold: float = 0.5,
-    bands: int = LSH_BANDS,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Incremental duplicate-CLUSTER maintenance — the label-table
-    analogue of :func:`incremental_dedup`: a new crawl wave adopts the
-    existing corpus's cluster labels without re-running the full
-    MinHash + connected-components closure (`connected_components` over
-    100 TB per wave is exactly what a production pipeline amortizes
-    away). Returns ``(doc_id, label, matched)`` for each INCOMING doc:
-
-    * incoming signatures compute per-row (shuffle-free), their band
-      keys probe the existing corpus's banded keys through one
-      equi-join (the `lsh_screen` posture, but keeping the matched
-      existing doc_id instead of collapsing to a membership bit);
-    * candidates verify by exact Jaccard ≥ ``threshold`` over the two
-      per-row shingle-hash arrays (the `jaccard_pairs` size-gated
-      broadcast-vs-shuffle strategy, applied cross-corpus);
-    * each matched incoming doc adopts the MIN existing cluster label
-      among its verified matches (existing singletons label as their
-      own doc_id); unmatched docs self-label.
-
-    ``labels`` supplies the existing corpus's ``(node, label)`` table —
-    e.g. read back from the persisted snapshot the full closure wrote;
-    ``None`` computes it from ``existing`` with the standard pipeline.
-
-    Approximation contract (the one every incremental labeler signs):
-    batch-INTERNAL duplicate pairs and cross-cluster merges that a new
-    doc would induce are deferred to the next full-closure compaction —
-    within a wave, each incoming doc links to existing clusters only.
-    Deterministic end to end (exact Jaccard, min-label adoption), so
-    the output is value-hash stable.
-    """
-    ex_hashed = hashed_shingle_arrays(existing)
-    inc_hashed = hashed_shingle_arrays(incoming)
-    ex_bands = banded_keys(minhash_signatures(ex_hashed), bands)
-    inc_bands = banded_keys(minhash_signatures(inc_hashed), bands)
-    if labels is None:
-        pairs = minhash_near_duplicates(
-            existing, threshold, checkpoint_dir
-        ).select("a", "b")
-        labels = connected_components(pairs, check_every=2)
-    cand = (
-        inc_bands.select(F.col("doc_id").alias("a"), "band_id", "band_key")
-        .join(
-            ex_bands.select(
-                F.col("doc_id").alias("b"), "band_id", "band_key"
-            ),
-            ["band_id", "band_key"],
-        )
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-    )
-    cand = materialize(cand, checkpoint_dir)
-    # Cross-corpus exact-Jaccard verify: jaccard_pairs' size-gated
-    # broadcast-vs-shuffle strategy (and its OOM-guard rationale) is
-    # the single definition; only the b side's relation differs here.
-    verified = jaccard_pairs(
-        inc_hashed,
-        cand,
-        threshold,
-        candidate_count=cand.count(),
-        hashed_b=ex_hashed,
-    ).select("a", "b")
-    lab = labels.select(
-        F.col("node").alias("b"), F.col("label").alias("ex_label")
-    )
-    adopted = (
-        verified.join(lab, "b", "left")
-        .select(
-            "a",
-            F.coalesce(F.col("ex_label"), F.col("b")).alias("cand_label"),
-        )
-        .groupBy("a")
-        .agg(F.min("cand_label").alias("m"))
-        .withColumnRenamed("a", "doc_id")
-    )
-    return (
-        incoming.select("doc_id")
-        .join(adopted, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("m"), F.col("doc_id")).alias("label"),
-            F.col("m").isNotNull().alias("matched"),
-        )
-    )
-
-
-def label_compact(
-    existing: DataFrame,
-    incoming: DataFrame,
-    old_labels: DataFrame | None = None,
-    wave_labels: DataFrame | None = None,
-    full_labels: DataFrame | None = None,
-    threshold: float = 0.5,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Full-closure label-table compaction — the OTHER half of
-    :func:`label_upsert`'s approximation contract: the per-wave
-    labeler defers batch-internal pairs and cross-cluster merges "to
-    the next full-closure compaction"; this IS that compaction. Runs
-    the complete MinHash + connected-components closure over
-    ``existing ∪ incoming`` (the weekly/periodic job a production
-    pipeline amortizes the per-wave path against) and returns the new
-    snapshot WITH a per-document churn report:
-
-    ``(doc_id, is_incoming, old_label, label, churn)`` where
-    ``old_label`` is the pre-compaction view (existing docs: the prior
-    snapshot's label; incoming docs: the wave's adopted label) and
-    ``churn`` classifies what the full closure changed:
-
-    * ``unchanged`` — old and new label agree (incl. true singletons);
-    * ``merged`` — the label moved: for a wave-MATCHED incoming doc
-      this is a deferred cross-cluster merge (or a smaller min id via
-      a bridge doc) realized; for an existing doc, clusters united by
-      incoming bridge docs (full-closure labels only ever move DOWN —
-      the union graph is a supergraph, so components grow and min ids
-      shrink);
-    * ``adopted_existing`` — a wave-UNMATCHED incoming doc whose full
-      cluster reaches the existing corpus only through other incoming
-      docs (the deferred TRANSITIVE adoption the wave deliberately
-      skips);
-    * ``adopted_internal`` — a wave-unmatched incoming doc in an
-      all-incoming cluster (a batch-internal pair realized).
-
-    The churn categories reconcile 1:1 with the agreement diagnostic's
-    predictions (``upsert_labels_agreement``): ``matched AND NOT
-    label_equals_full`` ↔ incoming ``merged``; ``NOT matched AND
-    reaches_existing`` ↔ ``adopted_existing`` — pinned by
-    ``tests/test_extensions.py``. Optional prebuilt tables
-    (``old_labels``, ``wave_labels``, ``full_labels``) let callers
-    serve the three relations from persisted snapshots; ``None``
-    computes each with the standard pipeline. Everything is id
-    comparison over label relations — no floats, value-hash exact."""
-    if old_labels is None:
-        pairs = minhash_near_duplicates(
-            existing, threshold, checkpoint_dir
-        ).select("a", "b")
-        old_labels = connected_components(pairs, check_every=2)
-    if wave_labels is None:
-        wave_labels = label_upsert(
-            existing,
-            incoming,
-            labels=old_labels,
-            threshold=threshold,
-            checkpoint_dir=checkpoint_dir,
-        )
-    if full_labels is None:
-        union = existing.select("doc_id", "text").unionByName(
-            incoming.select("doc_id", "text")
-        )
-        pairs = minhash_near_duplicates(
-            union, threshold, checkpoint_dir
-        ).select("a", "b")
-        full_labels = connected_components(pairs, check_every=2)
-    fl = full_labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("_fl")
-    )
-    # Cluster ids (post-compaction) that contain >= 1 existing doc —
-    # the membership test behind `adopted_existing`. Closure output
-    # only lists docs with edges, so singletons never appear here.
-    excl = (
-        fl.join(
-            existing.select("doc_id"), "doc_id"
-        )
-        .select("_fl")
-        .dropDuplicates()
-        .withColumn("_re", F.lit(True))
-    )
-    ex_side = (
-        existing.select("doc_id")
-        .join(
-            old_labels.select(
-                F.col("node").alias("doc_id"), F.col("label").alias("_ol")
-            ),
-            "doc_id",
-            "left",
-        )
-        .select(
-            "doc_id",
-            F.lit(False).alias("is_incoming"),
-            F.coalesce("_ol", F.col("doc_id")).alias("old_label"),
-            F.lit(None).cast("boolean").alias("_matched"),
-        )
-    )
-    inc_side = wave_labels.select(
-        "doc_id",
-        F.lit(True).alias("is_incoming"),
-        F.col("label").alias("old_label"),
-        F.col("matched").alias("_matched"),
-    )
-    out = (
-        ex_side.unionByName(inc_side)
-        .join(fl, "doc_id", "left")
-        .withColumn("_in_cc", F.col("_fl").isNotNull())
-        .withColumn("label", F.coalesce("_fl", F.col("doc_id")))
-        .join(excl, "_fl", "left")
-        .withColumn("_re", F.coalesce("_re", F.lit(False)))
-    )
-    same = F.col("label") == F.col("old_label")
-    churn = (
-        F.when(
-            ~F.col("is_incoming"),
-            F.when(same, F.lit("unchanged")).otherwise(F.lit("merged")),
-        )
-        .when(
-            F.col("_matched"),
-            F.when(same, F.lit("unchanged")).otherwise(F.lit("merged")),
-        )
-        .when(F.col("_re"), F.lit("adopted_existing"))
-        .when(F.col("_in_cc"), F.lit("adopted_internal"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return out.select(
-        "doc_id", "is_incoming", "old_label", "label", churn.alias("churn")
-    )
-
-
-# Bloom parameters for the membership screen. m = 2^14 bits / k = 3
-# hashes holds ~2.7k keys at sf0.1 with a measurable-but-small false-
-# positive rate (the demonstration point); production sizes m from the
-# corpus cardinality (m ≈ -n·ln(p)/ln(2)² bits for target FP rate p).
-BLOOM_M = 1 << 14
-BLOOM_K = 3
-
-
-def bloom_bit_positions(key, m: int = BLOOM_M, k: int = BLOOM_K):
-    """The k bit positions of ``key`` as an array column: position j =
-    hash60("bloom{j}:" + key) % m. hash60 is nonnegative, so ``%`` agrees
-    between Spark and DuckDB (no sign-of-modulo divergence)."""
-    from ..functions.text import hash60
-
-    return F.array(*[hash60(key, seed=f"bloom{j}") % m for j in range(k)])
-
-
-def bloom_filter_dedup(
-    existing: DataFrame,
-    incoming: DataFrame,
-    m: int = BLOOM_M,
-    k: int = BLOOM_K,
-) -> DataFrame:
-    """Bloom-filter membership screen for incremental exact dedup:
-    flag each ``incoming`` doc whose md5(text) is POSSIBLY in
-    ``existing`` (``bloom_hit``), alongside ground truth (``is_dup``)
-    so the false-positive behavior is visible.
-
-    Why a Bloom screen at 100 TB: the exact anti-join against a
-    petabyte corpus shuffles the full digest index every batch. The
-    bloom bitset is ≤ m rows NO MATTER how large the corpus is — build
-    it once (a partial-aggregated distinct over bit positions: at most
-    m keys survive map-side combine), broadcast it, and the incoming
-    batch is screened map-side with zero shuffle. Docs with
-    ``bloom_hit = false`` are DEFINITELY new (no false negatives) and
-    skip the expensive exact join entirely; only the hit fraction needs
-    the real lookup. The ``is_dup`` column here computes that real
-    lookup for every doc so the oracle can check both; production would
-    compute it only for hits.
-
-    Returns ``(doc_id, bloom_hit, is_dup)``.
-    """
-    bits, seen = bloom_index(existing, m, k)
-    return bloom_screen_from_index(incoming, bits, seen, m, k)
-
-
-def bloom_index(
-    existing: DataFrame, m: int = BLOOM_M, k: int = BLOOM_K
-) -> "tuple[DataFrame, DataFrame]":
-    """The two persistable relations of the Bloom screen — what a
-    pipeline actually writes between crawl waves (the `lsh_band_index`
-    posture): ``bits`` (bit,) — the ≤ m set bit
-    positions of the bitset, corpus-size-independent — and ``seen``
-    (key,) — the exact digest index that confirms hits. Both are
-    deterministic functions of the corpus, so the persisted-and-reread
-    forms answer identically (`bloom_index_roundtrip`'s registry
-    identity guard)."""
-    key = F.md5("text")
-    bits = existing.select(
-        F.explode(bloom_bit_positions(key, m, k)).alias("bit")
-    ).distinct()
-    seen = existing.select(key.alias("key")).distinct()
-    return bits, seen
-
-
-def bloom_screen_from_index(
-    incoming: DataFrame,
-    bits: DataFrame,
-    seen: DataFrame,
-    m: int = BLOOM_M,
-    k: int = BLOOM_K,
-) -> DataFrame:
-    """Probe phase of :func:`bloom_filter_dedup` against a pre-built
-    (possibly parquet-reread) index pair from :func:`bloom_index`."""
-    key = F.md5("text")
-    present = bits.withColumn("present", F.lit(1))
-    probed = (
-        incoming.select("doc_id", key.alias("key"))
-        .select(
-            "doc_id",
-            "key",
-            F.explode(bloom_bit_positions(F.col("key"), m, k)).alias("bit"),
-        )
-        .join(F.broadcast(present), "bit", "left")
-        .groupBy("doc_id", "key")
-        .agg(
-            (F.sum(F.coalesce(F.col("present"), F.lit(0))) == k).alias(
-                "bloom_hit"
-            )
-        )
-    )
-    return (
-        probed.join(seen.withColumn("seen", F.lit(1)), "key", "left")
-        .select(
-            "doc_id",
-            "bloom_hit",
-            F.col("seen").isNotNull().alias("is_dup"),
-        )
     )
 
 
@@ -1043,39 +564,4 @@ def simhash_near_duplicates(
         .where(F.col("dist") <= max_bits)
         .dropDuplicates(["a", "b"])
         .select("a", "b", "dist")
-    )
-
-
-def corpus_upsert(
-    base: DataFrame, updates: DataFrame, key: str = "doc_id"
-) -> DataFrame:
-    """Snapshot maintenance: merge an update batch into the corpus with
-    latest-version-wins semantics — the upsert a recurring crawl runs
-    before each re-curation. Returns one row per key: the surviving
-    ``(key, version, text_hash)``.
-
-    Shape: union (narrow) + one window shuffle on the key — the
-    standard merge-on-read resolve. Deterministic tie-break: equal
-    versions resolve to the lexically larger text hash (stable across
-    engines; a production pipeline carries an ingest sequence number
-    instead). At 100 TB the union's scan dominates and the window
-    partitions on the corpus key — no skew beyond key duplication
-    count, which upserts bound by design (a handful of versions per
-    key, not a hot key).
-    """
-    from pyspark.sql import Window
-
-    both = base.unionByName(updates)
-    hashed = both.select(
-        key,
-        "version",
-        F.md5("text").alias("text_hash"),
-    )
-    w = Window.partitionBy(key).orderBy(
-        F.col("version").desc(), F.col("text_hash").desc()
-    )
-    return (
-        hashed.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(key, "version", "text_hash")
     )

@@ -811,144 +811,3 @@ def corpus_drift(docs: DataFrame, k: int = 20) -> DataFrame:
         .withColumn("rank", F.row_number().over(w).cast("bigint"))
         .select("term", "cnt_a", "cnt_b", "score", "rank")
     )
-
-
-# Sentence regex shared with the DuckDB oracle: runs of non-terminators
-# plus an optional trailing terminator. No lookarounds (RE2-safe), so
-# Java regex and DuckDB's RE2 tokenize identically.
-SENTENCE_PATTERN = "[^.!?]+[.!?]?"
-SENT_MIN_DOCS = 2  # a sentence in >= this many docs is removed
-
-
-def _doc_sentences(docs: DataFrame) -> DataFrame:
-    """(doc_id, sent_id, stext, stok): each document's sentences in
-    order — trimmed, empty ones dropped. Pure per-row scan (regex
-    extract + posexplode), zero shuffles at any corpus size."""
-    sents = F.regexp_extract_all(
-        F.col("text"), F.lit(SENTENCE_PATTERN), F.lit(0)
-    )
-    return (
-        docs.select(
-            "doc_id", F.posexplode(sents).alias("sent_id", "raw")
-        )
-        .select(
-            "doc_id",
-            F.col("sent_id").cast("bigint").alias("sent_id"),
-            F.trim(F.col("raw")).alias("stext"),
-        )
-        .where(F.col("stext") != "")
-        .withColumn("stok", F.size(tokens(F.col("stext"))).cast("bigint"))
-    )
-
-
-def sentence_dedup(
-    docs: DataFrame, min_docs: int = SENT_MIN_DOCS
-) -> DataFrame:
-    """C4-style cross-document SENTENCE dedup (Raffel et al. C4 §2.2
-    removed any three-sentence span occurring more than once; CCNet
-    does the same at paragraph granularity): a sentence whose exact trimmed
-    content appears in >= ``min_docs`` DISTINCT documents is dropped,
-    and every document is REBUILT from its surviving sentences in
-    order. Returns ``(doc_id, n_sentences, n_kept_sentences,
-    clean_text)`` for every input document (fully-boilerplate docs keep
-    ``n_kept_sentences = 0`` and ``clean_text = ''``).
-
-    Scale shape: sentence split is a pure scan; document frequency keys
-    on the 128-bit sentence digest (~48-byte shuffle rows, never text);
-    the drop decision rides into ONE per-document rebuild aggregation as
-    a flag (no anti-join + back-join) — linear end-to-end where pairwise
-    dedup is quadratic.
-    """
-    sp = _doc_sentences(docs).withColumn("shash", F.md5("stext"))
-    common = (
-        sp.groupBy("shash")
-        .agg(F.count_distinct("doc_id").alias("n_docs"))
-        .where(F.col("n_docs") >= min_docs)
-        .select("shash")
-        .withColumn("drop", F.lit(True))
-    )
-    flagged = sp.join(common, "shash", "left").withColumn(
-        "dropped", F.coalesce(F.col("drop"), F.lit(False))
-    )
-    rebuilt = flagged.groupBy("doc_id").agg(
-        F.count("*").alias("n_sentences"),
-        F.sum(F.when(F.col("dropped"), 0).otherwise(1))
-        .cast("bigint")
-        .alias("n_kept_sentences"),
-        F.array_join(
-            F.transform(
-                F.filter(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct("sent_id", "dropped", "stext")
-                        )
-                    ),
-                    lambda s: ~s["dropped"],
-                ),
-                lambda s: s["stext"],
-            ),
-            " ",
-        ).alias("clean_text"),
-    )
-    return (
-        docs.select("doc_id")
-        .join(rebuilt, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("n_sentences"), F.lit(0))
-            .cast("bigint")
-            .alias("n_sentences"),
-            F.coalesce(F.col("n_kept_sentences"), F.lit(0))
-            .cast("bigint")
-            .alias("n_kept_sentences"),
-            F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
-        )
-    )
-
-
-def sentence_index(
-    docs_indexed: DataFrame, min_docs: int = SENT_MIN_DOCS
-) -> DataFrame:
-    """(shash): distinct digests of sentences recurring in >=
-    ``min_docs`` distinct documents of the INDEXED corpus — the static
-    index :func:`sentence_screen` (and its streaming twin) probes. One
-    digest-keyed aggregation; ~36-byte rows."""
-    return (
-        _doc_sentences(docs_indexed)
-        .groupBy(F.md5("stext").alias("shash"))
-        .agg(F.count_distinct("doc_id").alias("n_docs"))
-        .where(F.col("n_docs") >= min_docs)
-        .select("shash")
-    )
-
-
-def sentence_screen(docs_incoming: DataFrame, index: DataFrame) -> DataFrame:
-    """Sentence-boilerplate SCREEN for continuous ingest: incoming
-    documents' sentences probe a static digest ``index``
-    (:func:`sentence_index`, built once from the existing corpus).
-    Returns per-incoming-doc counts ``(doc_id, n_sentences,
-    n_boiler_sentences, n_tokens, n_boiler_tokens)`` — the
-    decide-before-you-pay numbers an ingest pipeline thresholds on.
-    ONE aggregation after a stream-static equi-join, so the identical
-    plan runs under Structured Streaming (the registered streaming
-    twin shares this code and the batch oracle). Token-less incoming
-    docs emit no sentences and so no row — the screen prices text, and
-    a no-text doc has nothing to screen."""
-    sp = _doc_sentences(docs_incoming).withColumn("shash", F.md5("stext"))
-    hit = index.withColumn("hit", F.lit(1))
-    return (
-        sp.join(hit, "shash", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_sentences"),
-            F.sum(F.when(F.col("hit").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_boiler_sentences"),
-            F.sum("stok").alias("n_tokens"),
-            F.sum(
-                F.when(F.col("hit").isNotNull(), F.col("stok")).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_boiler_tokens"),
-        )
-    )

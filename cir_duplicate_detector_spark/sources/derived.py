@@ -1,4 +1,5 @@
-"""Derived near-duplicate corpus over `documents` (both dialects).
+"""Derived corpora over `documents`: the near-duplicate corpus (both
+dialects) and the planted-PII corpus.
 
 The driver testdata has no duplicate texts (verified), so dedup
 operators are exercised against a deterministically derived corpus:
@@ -12,6 +13,9 @@ operators are exercised against a deterministically derived corpus:
 Spark and DuckDB expressions are kept side by side; list_slice /
 slice and regexp splits behave identically on this corpus (verified:
 no double/leading/trailing whitespace in the testdata texts).
+
+The testdata carries no PII either, so `PII_CORPUS_SQL` appends
+deterministic e-mail, phone and IP spans for the redaction rows.
 """
 
 from __future__ import annotations
@@ -49,16 +53,6 @@ def derive_near_dup_corpus(documents: DataFrame) -> DataFrame:
     return spark.sql(near_dup_corpus_sql("spark")).repartition(width)
 
 
-# Existing/incoming split for the Bloom membership screen (batch AND
-# streaming twins — one definition so they cannot drift): div 2000000
-# flips the parity of the EXACT-COPY band (+2000000, doc_id % 11 == 0
-# originals) so copies land opposite their original; a plain doc_id % 2
-# split keeps every exact-dup group on one side and the screen's
-# ground-truth column is vacuously false.
-BLOOM_SPLIT_SPARK = "(doc_id div 2000000 + doc_id) % 2"
-BLOOM_SPLIT_DUCK = "(doc_id // 2000000 + doc_id) % 2"
-
-
 # Deterministic planted PII over `documents` (the synthetic texts carry
 # none). Single dialect-neutral SQL: `||`, CASE, CAST(AS STRING) and
 # `%` behave identically in Spark SQL and DuckDB.
@@ -84,49 +78,3 @@ def derive_pii_corpus(documents: DataFrame) -> DataFrame:
     spark = documents.sparkSession
     documents.createOrReplaceTempView("documents")
     return spark.sql(PII_CORPUS_SQL)
-
-
-SENT_CHUNK_TOKENS = 12  # tokens per synthesized sentence
-
-
-def derive_sentenced_corpus(docs: DataFrame) -> DataFrame:
-    """Rewrite each document as PUNCTUATED text — a '.'-terminated
-    sentence every :data:`SENT_CHUNK_TOKENS` tokens — because the
-    synthetic testdata carries no sentence terminators at all (measured:
-    0 of 500 sf0.01 docs contain '.'), which would make every document
-    one giant "sentence" and the sentence-granularity operators
-    vacuously exact-dedup. Same fixture stance as `_pdq_media` framing
-    docs as images: derive the structure the operator family needs,
-    deterministically, on BOTH engines. Pure per-row projection
-    (tokenize → fixed-size slices → rejoin), zero shuffles; truncation
-    mutants of a document share its leading sentences by construction,
-    so cross-document sentence recurrence is real, not planted."""
-    from pyspark.sql import functions as F
-
-    from ..functions.text import tokens
-
-    ws = tokens("text")
-    n = F.size(ws)
-    k = SENT_CHUNK_TOKENS
-    chunks = F.transform(
-        F.sequence(F.lit(1), F.floor((n + k - 1) / k).cast("int")),
-        lambda i: F.concat(
-            F.array_join(F.slice(ws, (i - 1) * k + 1, k), " "), F.lit(".")
-        ),
-    )
-    return docs.withColumn(
-        "text", F.when(n > 0, F.array_join(chunks, " ")).otherwise(F.lit(""))
-    )
-
-
-def sentenced_sql(words_expr: str) -> str:
-    """DuckDB twin of :func:`derive_sentenced_corpus`'s text rewrite,
-    as an expression over ``words_expr`` (the tokenized text)."""
-    k = SENT_CHUNK_TOKENS
-    return (
-        f"CASE WHEN len({words_expr}) = 0 THEN '' ELSE "
-        f"array_to_string(list_transform("
-        f"range(1, (len({words_expr}) + {k - 1}) // {k} + 1), "
-        f"i -> array_to_string(list_slice({words_expr}, (i - 1) * {k} + 1,"
-        f" (i - 1) * {k} + {k}), ' ') || '.'), ' ') END"
-    )

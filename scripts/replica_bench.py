@@ -54,7 +54,6 @@ def perturb_text(text_col, rep_col):
     return F.when(rep_col == 0, text_col).otherwise(swapped)
 
 DEFAULT_QUERIES = [
-    "bloom_dedup",
     "chunk_dedup",
     "token_budget_sample",
     "quality_band",

@@ -54,45 +54,6 @@ def test_materialize_durable_checkpoint(spark, tmp_path):
     release_cached(spark)
 
 
-def test_tracked_mkdtemp_bounds_two_dirs_per_family():
-    # ADVICE r12 + VERDICT r13 item 5: a long-lived session re-invoking
-    # the same roundtrip query holds at most TWO live dirs per family
-    # (current + previous, so a lazy result held across one re-invoke
-    # still reads intact parquet); the grand-previous dir is emptied
-    # down to a TOMBSTONE marker naming the eviction cause.
-    import os
-
-    from cir_duplicate_detector_spark import cache
-
-    d1 = cache.tracked_mkdtemp("cache_test_fam_")
-    open(f"{d1}/marker", "w").close()
-    d2 = cache.tracked_mkdtemp("cache_test_fam_")
-    assert d2 != d1
-    # one-generation retention: previous dir's data survives one re-invoke
-    assert os.path.exists(f"{d1}/marker")
-    d3 = cache.tracked_mkdtemp("cache_test_fam_")
-    # two re-invokes later: d1 is a tombstone (dir exists, data gone,
-    # marker file names the cause), d2/d3 both intact
-    assert not os.path.exists(f"{d1}/marker")
-    assert os.path.isfile(os.path.join(d1, cache.TOMBSTONE))
-    assert os.path.isdir(d2) and os.path.isdir(d3)
-    # distinct families never evict each other
-    other = cache.tracked_mkdtemp("cache_test_other_")
-    assert os.path.isdir(d3) and os.path.isdir(other)
-    import shutil
-
-    for d in (d1, d2, d3, other):
-        if d in cache._SHARED_DIRS:
-            cache._SHARED_DIRS.remove(d)
-        shutil.rmtree(d, ignore_errors=True)
-    cache._FAMILY_DIRS = {
-        k: v for k, v in cache._FAMILY_DIRS.items() if v not in (d3, other)
-    }
-    cache._FAMILY_PREV = {
-        k: v for k, v in cache._FAMILY_PREV.items() if v != d2
-    }
-
-
 def test_shared_artifact_sweeps_all_family_caches(spark):
     # ADVICE r12: superseded-application dirs are evicted for EVERY
     # registered family on the first new-app build, not only for the
@@ -129,37 +90,3 @@ def test_shared_artifact_sweeps_all_family_caches(spark):
         cache._FAMILY_CACHES[:] = [
             x for x in cache._FAMILY_CACHES if x is not c
         ]
-
-
-def test_shared_artifact_records_build_seconds(spark):
-    # Round 15 (VERDICT r14 item 3): every shared_artifact build is
-    # timed into cache.ARTIFACT_BUILD_SECONDS (keyed by prefix,
-    # accumulating), recording the cold-build cost that memoized serves
-    # hide. Serves (memoized hits) add nothing.
-    from cir_duplicate_detector_spark import cache
-
-    fam: dict = {}
-    sf = "/root/testdata/sf0.001"
-    cache.ARTIFACT_BUILD_SECONDS.pop("cache_test_t_", None)
-
-    def build(d):
-        open(f"{d}/artifact", "w").close()
-        return d
-
-    cache.shared_artifact(fam, spark, sf, "cache_test_t_", build)
-    first = cache.ARTIFACT_BUILD_SECONDS["cache_test_t_"]
-    assert first >= 0.0
-    # a second call is a memoized serve: no additional build time
-    cache.shared_artifact(fam, spark, sf, "cache_test_t_", build)
-    assert cache.ARTIFACT_BUILD_SECONDS["cache_test_t_"] == first
-    import shutil
-
-    for d, _ in fam.values():
-        if d in cache._SHARED_DIRS:
-            cache._SHARED_DIRS.remove(d)
-        shutil.rmtree(d, ignore_errors=True)
-    fam.clear()
-    cache._FAMILY_CACHES[:] = [
-        x for x in cache._FAMILY_CACHES if x is not fam
-    ]
-    cache.ARTIFACT_BUILD_SECONDS.pop("cache_test_t_", None)

@@ -5,8 +5,6 @@ operators do the *right thing* on planted structures).
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from cir_duplicate_detector_spark.operators import dedup, textops
 from cir_duplicate_detector_spark.sources.derived import derive_near_dup_corpus
 from cir_duplicate_detector_spark.sources.tables import load_table
@@ -126,22 +124,6 @@ def test_ngram_topk_ranking(spark):
     assert en[1] == ("a b", 4)
     assert en[2] == ("b a", 2)
     assert {r["gram"] for r in got if r["lang"] == "de"} == {"x y", "y x"}
-
-
-def test_incremental_dedup_admits_only_new(spark):
-    corpus = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog today"),
-         (2, "an entirely different corpus document body here")],
-        DOCS_SCHEMA,
-    )
-    batch = spark.createDataFrame(
-        [(10, "the quick brown fox jumps over the lazy dog today"),  # exact
-         (11, "the quick brown fox jumps over the lazy dog"),        # near
-         (12, "zq wv zq xk pj completely novel content mn bb")],     # new
-        DOCS_SCHEMA,
-    )
-    kept = {r["doc_id"] for r in dedup.incremental_dedup(corpus, batch).collect()}
-    assert kept == {12}
 
 
 def test_normalized_exact_dedup_merges_reformatted(spark):
@@ -270,59 +252,6 @@ def test_decode_image_routes_low_maxval_ppm_through_pure_decoder():
     assert got[0, 0].tolist() == [100, 0, 0]  # raw bytes, NOT rescaled
 
 
-def test_lsh_screen_flags_copies_not_novel(spark):
-    from cir_duplicate_detector_spark.operators import dedup
-
-    base = "the quick brown fox jumps over the lazy dog " * 4
-    existing = spark.createDataFrame(
-        [(1, base), (2, "completely different corpus text here " * 4)],
-        "doc_id bigint, text string",
-    )
-    incoming = spark.createDataFrame(
-        [(10, base), (11, "unrelated novel document nothing shared " * 4)],
-        "doc_id bigint, text string",
-    )
-    out = {r.doc_id: r for r in dedup.lsh_screen(existing, incoming).collect()}
-    # an exact copy shares the full signature -> every band collides
-    assert out[10].lsh_hit and out[10].n_bands_hit == dedup.LSH_BANDS
-    assert not out[11].lsh_hit and out[11].n_bands_hit == 0
-
-
-def test_lsh_screen_has_no_false_negatives_vs_banding(spark):
-    # Cross-operator invariant: the screen's candidate space IS the
-    # banding's candidate space, so any (existing, incoming) pair the
-    # full minhash pipeline emits (band collision + exact verify) must
-    # have its incoming side flagged lsh_hit — the screen can only
-    # over-approximate, never miss what the banding would find.
-    from pyspark.sql import functions as F
-
-    from cir_duplicate_detector_spark.operators import dedup
-    from cir_duplicate_detector_spark.sources.derived import (
-        BLOOM_SPLIT_SPARK,
-        derive_near_dup_corpus,
-    )
-
-    docs = derive_near_dup_corpus(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    )
-    split = F.expr(BLOOM_SPLIT_SPARK)
-    existing, incoming = docs.where(split == 0), docs.where(split == 1)
-    screen = {
-        r.doc_id: r.lsh_hit
-        for r in dedup.lsh_screen(existing, incoming).collect()
-    }
-    ex_ids = {r.doc_id for r in existing.select("doc_id").collect()}
-    pairs = dedup.minhash_near_duplicates(docs, threshold=0.5).collect()
-    crossing = [
-        (p.a, p.b) for p in pairs
-        if (p.a in ex_ids) != (p.b in ex_ids)
-    ]
-    assert crossing, "derived corpus must produce cross-split near-dups"
-    for a, b in crossing:
-        inc = b if a in ex_ids else a
-        assert screen[inc], f"screen missed banding-found pair ({a},{b})"
-
-
 def test_dup_weighting_partitions_unit_mass_per_group(spark):
     from cir_duplicate_detector_spark.plans import ALL_QUERIES
 
@@ -338,52 +267,6 @@ def test_dup_weighting_partitions_unit_mass_per_group(spark):
         assert len(ws) == 1  # equal weight within a family
         assert abs(sum(m.weight for m in members) - 1.0) < 1e-9
         assert all(m.group_size == len(members) for m in members)
-
-
-def test_lsh_screen_from_index_dedupes_malformed_index(spark):
-    # Round-9 advice: the serving path must tolerate a hand-built /
-    # multiply-appended index with repeated (band_id, band_key) rows —
-    # duplicates would multiply join rows and inflate n_bands_hit.
-    from cir_duplicate_detector_spark.operators import dedup
-
-    corpus = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string",
-    )
-    idx = dedup.lsh_band_index(corpus)
-    doubled = idx.unionAll(idx)
-    clean = {
-        r.doc_id: r.n_bands_hit
-        for r in dedup.lsh_screen_from_index(idx, corpus).collect()
-    }
-    dirty = {
-        r.doc_id: r.n_bands_hit
-        for r in dedup.lsh_screen_from_index(doubled, corpus).collect()
-    }
-    assert clean == dirty
-
-
-# ------------------------------------------------------ round-9 wave
-
-def test_sentence_dedup_drops_repeated_sentence_keeps_order(spark):
-    from cir_duplicate_detector_spark.operators import textops
-
-    boiler = "subscribe to our newsletter today!"
-    docs = spark.createDataFrame(
-        [
-            (1, f"unique alpha. {boiler} unique beta?"),
-            (2, f"{boiler} other words here."),
-            (3, "entirely original text without repeats."),
-        ],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: r for r in textops.sentence_dedup(docs).collect()}
-    assert out[1].n_sentences == 3 and out[1].n_kept_sentences == 2
-    # surviving sentences keep original order
-    assert out[1].clean_text == "unique alpha. unique beta?"
-    assert out[2].n_kept_sentences == 1
-    assert out[3].n_kept_sentences == out[3].n_sentences
-    assert out[3].clean_text == "entirely original text without repeats."
 
 
 def test_simhash_pairs_prebuilt_sigs_identical(spark, tmp_path):

@@ -30,7 +30,9 @@ call time.
 
 Every top-level name a package module defines must be referenced by
 some other code, so deleting a feature cannot leave its helpers
-behind.
+behind. Every module must be imported by some other code, and every
+subpackage must hold a module besides ``__init__.py``: a module that
+defines no names, or an emptied subpackage, escapes the name check.
 """
 
 from __future__ import annotations
@@ -192,6 +194,17 @@ def _defined_names(node: ast.stmt) -> "list[str]":
     return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
 
 
+def _program_sources() -> "list[Path]":
+    """The program's own code: the package, ``scripts/``, ``perfbench/``
+    and ``__spark_entry__.py`` (not ``tests/``)."""
+    return [
+        *PKG.rglob("*.py"),
+        *(REPO / "scripts").rglob("*.py"),
+        *(REPO / "perfbench").rglob("*.py"),
+        REPO / "__spark_entry__.py",
+    ]
+
+
 def test_every_module_name_is_referenced():
     """Each top-level ``def``/``class``/assignment in a package module
     must be referenced (as a name, an attribute or an import) by code
@@ -206,13 +219,7 @@ def test_every_module_name_is_referenced():
     define the same name hide each other — a reference to either one
     keeps both alive.
     """
-    sources = [
-        *PKG.rglob("*.py"),
-        *(REPO / "scripts").rglob("*.py"),
-        *(REPO / "perfbench").rglob("*.py"),
-        REPO / "__spark_entry__.py",
-    ]
-    trees = {path: ast.parse(path.read_text()) for path in sources}
+    trees = {path: ast.parse(path.read_text()) for path in _program_sources()}
     refs = Counter(
         name
         for tree in trees.values()
@@ -233,3 +240,43 @@ def test_every_module_name_is_referenced():
     assert not unreferenced, "unreferenced top-level names:\n" + "\n".join(
         unreferenced
     )
+
+
+def _imported_modules(path: Path, tree: ast.AST) -> "set[str]":
+    """Dotted names of every module ``tree`` imports, resolving relative
+    imports against ``path``'s package. ``from a import b`` yields both
+    ``a`` and ``a.b``: ``b`` may be a submodule."""
+    parts = path.relative_to(REPO).with_suffix("").parts
+    package = ".".join(parts[:-1])
+    found = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            found.update(alias.name for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            target = importlib.util.resolve_name(
+                "." * node.level + (node.module or ""), package
+            )
+            found.add(target)
+            found.update(f"{target}.{alias.name}" for alias in node.names)
+    return found
+
+
+def test_every_module_is_imported_and_no_subpackage_is_empty():
+    imported = set()
+    for path in _program_sources():
+        imported |= _imported_modules(path, ast.parse(path.read_text()))
+    orphans = [
+        str(path.relative_to(REPO))
+        for path in sorted(PKG.rglob("*.py"))
+        if path.name != "__init__.py"
+        and ".".join(path.relative_to(REPO).with_suffix("").parts)
+        not in imported
+    ]
+    empty = [
+        str(init.parent.relative_to(REPO))
+        for init in sorted(PKG.rglob("__init__.py"))
+        if init.parent != PKG
+        and not any(p.name != "__init__.py" for p in init.parent.glob("*.py"))
+    ]
+    assert not orphans, "modules nothing imports:\n" + "\n".join(orphans)
+    assert not empty, "subpackages with no module:\n" + "\n".join(empty)

@@ -5,7 +5,7 @@ parquet tables, then compares row counts and order-insensitive values —
 the same comparison shape the driver performs (row-count + schema +
 value-hash).
 
-Default profile vs full sweep: the full sweep takes about 6 min on 4
+Default profile vs full sweep: the full sweep takes about 3 min on 4
 cores, so the default run checks every duplicate-detector row (the 13
 ``CORE_QUERIES``) plus a fixed ~15-query extension sample (chosen by
 ``sha256("parity:{PARITY_SAMPLE_KEY}:{name}")`` — the `test_parity_sf01`

@@ -8,13 +8,24 @@ from cir_duplicate_detector_spark.plans import ALL_QUERIES
 SF = "/root/testdata/sf0.001"
 
 
+def _query(spark, name: str):
+    return ALL_QUERIES[name][0](spark, SF)
+
+
 def _plan(spark, name: str) -> str:
-    fn, _ = ALL_QUERIES[name]
-    return ALL_QUERIES[name][0](spark, SF)._jdf.queryExecution().executedPlan().toString()
+    """The physical plan of a registered query, before it runs (AQE's
+    initial plan)."""
+    return _query(spark, name)._jdf.queryExecution().executedPlan().toString()
+
+
+def _final_plan(df) -> str:
+    """AQE's final physical plan of ``df``, after running it."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
 
 
 def test_pdq_probed_broadcasts_probe_side(spark):
-    plan = _plan(spark, "pdq_duplicates_probed")
+    plan = _final_plan(_query(spark, "pdq_duplicates_probed"))
     # Probe-set pushdown: the restricted probe side is broadcast and the
     # corpus streams (reference P9's asymmetric shape).
     assert "BroadcastNestedLoopJoin" in plan
@@ -30,19 +41,13 @@ def test_pdq_naive_self_join_never_broadcasts_corpus(spark):
     threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = _plan(spark, "pdq_duplicates_naive")
+        plan = _final_plan(_query(spark, "pdq_duplicates_naive"))
         assert "BroadcastExchange" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-
-
-def _final_plan(df) -> str:
-    """AQE's final physical plan of ``df``, after running it."""
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
 
 
 def test_pdq_naive_round_robin_only_when_probed(spark, golden_df):
@@ -96,7 +101,7 @@ def test_grid_join_covers_all_pairs(spark):
 
 
 def test_pdq_banded_is_equijoin(spark):
-    plan = _plan(spark, "pdq_duplicates_banded")
+    plan = _final_plan(_query(spark, "pdq_duplicates_banded"))
     # The banded candidate join must be hash-partitioned (scale-out),
     # never a nested-loop cross join.
     assert "BroadcastNestedLoopJoin" not in plan
@@ -135,38 +140,6 @@ def test_minhash_signatures_shuffle_free(spark):
     assert "Exchange" not in plan
 
 
-def test_incremental_dedup_anti_joins_scale_shape(spark):
-    # The two screens (exact digest, fingerprint overlap) must stay
-    # anti-joins, and with auto-broadcast off (emulating corpus stats
-    # past the threshold — the 100 TB case) neither may broadcast the
-    # corpus-derived side: the plan must fall back to shuffle joins, not
-    # a nested-loop or cartesian shape (VERDICT r2 item 6).
-    from cir_duplicate_detector_spark.operators.dedup import incremental_dedup
-    from cir_duplicate_detector_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    corpus = docs.where("doc_id % 2 = 0")
-    batch = docs.where("doc_id % 2 = 1")
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = (
-            incremental_dedup(corpus, batch)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        # >= 2: the exact screen and the near screen. (The exact-screen
-        # subtree is evaluated in two branches — the output side and the
-        # fingerprint side — so it may appear twice in the plan.)
-        assert plan.count("LeftAnti") >= 2
-        assert "BroadcastExchange" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "CartesianProduct" not in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-
-
 def test_probed_queries_have_no_driver_collect(spark):
     # Registered probe queries ship the probe set as a broadcast
     # semi-join (or a probe-derived broadcast), never a driver-side
@@ -177,7 +150,7 @@ def test_probed_queries_have_no_driver_collect(spark):
         "pdq_duplicates_probed",
         "pdq_duplicates_t08_probed",
     ):
-        plan = _plan(spark, name)
+        plan = _final_plan(_query(spark, name))
         assert "LocalTableScan" not in plan, name
         assert " INSET " not in plan and " IN (" not in plan, name
 
@@ -273,33 +246,6 @@ def test_jaccard_verify_broadcast_gate(spark):
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-
-
-def test_bloom_bitset_is_broadcast_and_bounded(spark):
-    # The Bloom screen's whole point at 100 TB: the bitset side of the
-    # bit join must be a BROADCAST (<= m rows by construction), so the
-    # incoming batch is screened map-side — never a shuffle of the
-    # incoming stream keyed on bit.
-    from pyspark.sql import functions as F
-
-    from cir_duplicate_detector_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    out = dedup.bloom_filter_dedup(
-        docs.where("doc_id % 2 = 0"), docs.where("doc_id % 2 = 1")
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # BOTH static joins broadcast: the bitset (on bit) AND the
-    # ground-truth key set — asserting >= 2 so dropping the bitset
-    # broadcast (the screen's whole point) cannot hide behind the other.
-    assert plan.count("BroadcastHashJoin") >= 2
-    # Bitset cardinality is bounded by m regardless of corpus size.
-    bits = docs.select(
-        F.explode(dedup.bloom_bit_positions(F.md5("text"), m=64)).alias("b")
-    ).distinct()
-    assert bits.count() <= 64
 
 
 def test_decontaminate_is_equijoin(spark):
@@ -403,7 +349,7 @@ def test_pdq_naive_grid_pins_shuffled_hash_build(spark):
     # a shuffled hash build of one corpus cell per task (round-5 fix —
     # the broadcast degenerated to grid² mega-chains and is grid× the
     # corpus at scale).
-    plan = _plan(spark, "pdq_duplicates_naive")
+    plan = _final_plan(_query(spark, "pdq_duplicates_naive"))
     assert "ShuffledHashJoin" in plan
     assert "BroadcastHashJoin [g_i" not in plan
 
@@ -447,26 +393,6 @@ def test_ngram_jaccard_serves_index_scan_no_explode(spark):
     plan = _plan(spark, "dedup_ngram_jaccard")
     assert "Generate" not in plan, plan[:600]
     assert plan.count("FileScan parquet") >= 3
-
-
-def test_dup_labels_upsert_shape(spark):
-    # The incremental labeler must serve labels from the persisted
-    # snapshot (a parquet scan, not an inline closure) and contain no
-    # cartesian product anywhere — the band probe and verify are
-    # equi-joins by construction.
-    plan = _plan(spark, "dup_labels_upsert")
-    assert "CartesianProduct" not in plan
-    assert "FileScan parquet" in plan
-    # the closure's iterative label propagation never appears in the
-    # registered per-wave plan (no localCheckpoint scan of CC rounds
-    # re-running: the snapshot is read, not recomputed)
-    from cir_duplicate_detector_spark.plans.ext_dedup import (
-        _shared_existing_labels,
-    )
-    lab_scan = _shared_existing_labels(
-        spark, SF
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan parquet" in lab_scan
 
 
 def test_coverage_counts_match_registry():

@@ -8,34 +8,23 @@ import __spark_entry__ as entry_mod
 # Every registered query, by name. Removing a query family removes its
 # names here too, so the removal is explicit.
 REGISTERED = {
-    "bigram_novelty", "bloom_dedup", "bloom_dedup_streaming",
-    "bloom_index_roundtrip", "chunk_dedup",
-    "cluster_representatives", "corpus_curation", "corpus_drift",
-    "corpus_upsert", "corpus_upsert_streaming", "curation_pipeline",
-    "dataset_split", "dedup_containment",
-    "dedup_containment_canonical", "dedup_exact",
-    "dedup_exact_normalized", "dedup_exact_streaming",
-    "dedup_incremental", "dedup_lsh_screen",
-    "dedup_lsh_screen_streaming", "dedup_minhash",
+    "bigram_novelty", "chunk_dedup", "cluster_representatives",
+    "corpus_curation", "corpus_drift", "curation_pipeline",
+    "dataset_split", "dedup_containment", "dedup_containment_canonical",
+    "dedup_exact", "dedup_exact_normalized", "dedup_minhash",
     "dedup_ngram_jaccard", "dedup_simhash", "dedup_simhash_pairs",
     "detect_duplicates", "doc_chunks", "doc_fingerprint",
     "doc_repetition", "doc_topk_similar", "domain_mixture",
-    "dup_clusters", "dup_labels_compact", "dup_labels_roundtrip",
-    "dup_labels_upsert", "dup_labels_upsert_streaming",
-    "dup_overlap", "dup_weighting", "hash_decode",
+    "dup_clusters", "dup_overlap", "dup_weighting", "hash_decode",
     "hash_explode_dedup", "image_pdq_hashes", "image_pdq_near_dup",
-    "lang_id", "lsh_index_merge", "lsh_index_roundtrip",
-    "minhash_recall", "ngram_topk", "pack_sequences",
+    "lang_id", "minhash_recall", "ngram_topk", "pack_sequences",
     "pdq_duplicates_banded", "pdq_duplicates_naive",
     "pdq_duplicates_probed", "pdq_duplicates_t08_probe30",
     "pdq_duplicates_t08_probed", "pdq_pairs", "pii_redact",
-    "quality_band", "sentence_dedup", "sentence_screen",
-    "sentence_screen_streaming", "shard_assign",
-    "stratified_sample", "substring_dup", "text_quality",
-    "tfidf_topterms", "token_budget_sample", "token_count",
-    "upsert_labels_agreement", "url_duplicates",
-    "url_duplicates_capped", "url_duplicates_probed",
-    "url_normalize",
+    "quality_band", "shard_assign", "stratified_sample",
+    "substring_dup", "text_quality", "tfidf_topterms",
+    "token_budget_sample", "token_count", "url_duplicates",
+    "url_duplicates_capped", "url_duplicates_probed", "url_normalize",
 }
 
 
